@@ -325,10 +325,9 @@ def decode_flac(content: bytes) -> tuple[np.ndarray, int]:
 
     channels_out: list[list[int]] = [[] for _ in range(info["channels"])]
     total = 0
-    # ONE reader for the whole stream (r14): BitReader's init converts
-    # the buffer to its int view once — constructing a fresh reader per
-    # frame would redo that O(file) conversion every frame (quadratic
-    # over multi-frame files); seeking via `pos` is free.
+    # ONE reader for the whole stream, repositioned per frame by
+    # assigning the byte-aligned `pos`; each read() slices only the bytes
+    # it spans, so seeking costs nothing.
     br = BitReader(content, pos)
     while pos < len(content):
         frame_start = pos

@@ -15,6 +15,38 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries in the JVM-wide cache of generated (Janino-compiled) classes.
+# Spark's default of 100 is smaller than the set of classes one pass of
+# this engine cycles through, and an LRU cache smaller than a repeating
+# cycle never hits: every steady pass recompiled 245-287 classes on the
+# star-schema reads and 258 on the ETL write, and each fresh class went
+# back through the JIT. First-visit compile counts with an unbounded
+# cache: star-schema reads 270-276, ETL write ~212, corpus curation 545
+# (+~67 new classes on each repeat), media decode 64, all four in one
+# session ~1,100, the 36-query bench.py headline at sf0.1 984 (+50-54 on
+# the repeat pass). 2048 is about twice the largest of these; each
+# resident class costs ~0.13 MB of JVM non-heap memory. Static conf: it
+# only takes effect if set before the first codegen creates the cache.
+CODEGEN_CACHE_ENTRIES = 2048
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap for this host: half of ``MemTotal``, capped at 32g.
+
+    In local mode the driver JVM is the only executor, so its heap is the
+    cluster memory; half of RAM leaves the rest to JVM non-heap, Python
+    workers and the page cache. Falls back to the 32g cap when
+    ``meminfo`` has no ``MemTotal`` line (no /proc on this platform)."""
+    cap_mb = 32 * 1024
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{min(cap_mb, int(line.split()[1]) // 2 // 1024)}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
 
 def get_spark(
     app_name: str = "rta_engine",
@@ -40,9 +72,12 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # Local mode: the driver JVM is the only executor, so its heap is
-        # the cluster memory. Overridable for constrained environments.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # Sized from the host; the env var overrides it for deployments.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(),
+        )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: runtime partition coalescing, skew-join splitting, and
         # sort-merge->broadcast conversion. This subsumes the reference's
