@@ -9,12 +9,13 @@ notebook) accumulates cached plans until memory pressure.
 
 ``tracked_persist`` is a drop-in ``df.persist()`` that records the frame;
 ``release_tracked`` unpersists everything recorded, plus any registered
-cleanup hooks (e.g. the pipeline memo). Call it when a batch of query
-invocations is done — bench.py does so after every full pass.
+cleanup hooks (e.g. the similarity index memos). Call it when a batch
+of query invocations is done — bench.py does so after every full pass.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 from contextlib import contextmanager
 
@@ -24,7 +25,16 @@ from pyspark.sql import DataFrame
 
 _LIVE: list[DataFrame] = []
 _HOOKS: list[Callable[[], None]] = []
-_RECORDINGS: list[list[DataFrame]] = []
+
+
+class _Recordings(threading.local):
+    """Per-thread stack of open ``record_persists`` recordings."""
+
+    def __init__(self) -> None:
+        self.stack: list[list[DataFrame]] = []
+
+
+_RECORDINGS = _Recordings()
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -37,7 +47,7 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     stack a second registration and a ``CacheManager: Asked to cache
     already cached data`` warning. Whoever persisted first (tracked or
     caller-owned) keeps release ownership."""
-    for rec in _RECORDINGS:
+    for rec in _RECORDINGS.stack:
         rec.append(df)
     lvl = df.storageLevel
     if lvl.useMemory or lvl.useDisk:
@@ -57,13 +67,14 @@ def record_persists():
     lifecycle is indistinguishable from a fresh build. Nested
     recordings each capture every persist made while they are open
     (a memoized query may wrap a memoized sub-build; both must be able
-    to re-arm independently)."""
+    to re-arm independently). Recordings are per thread: a build on
+    another thread never lands in this one's recording."""
     rec: list[DataFrame] = []
-    _RECORDINGS.append(rec)
+    _RECORDINGS.stack.append(rec)
     try:
         yield rec
     finally:
-        _RECORDINGS.pop()
+        _RECORDINGS.stack.pop()
 
 
 def register_release_hook(hook: Callable[[], None]) -> None:

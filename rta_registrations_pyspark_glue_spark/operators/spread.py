@@ -32,58 +32,41 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: (applicationId, analyzed-plan semanticHash, schema discriminator,
-#: target) -> needs_spread. The partition-count probe
-#: (``df.rdd.getNumPartitions()``) runs full physical planning —
-#: measured ~25-55 ms per FRESH DataFrame, and the multimodal union
-#: probes ~26 semantically identical (doc_id) selects per build.
-#: Semantically equal plans scan the same (static) files, so the
-#: decision is a pure function of the analyzed plan within one
-#: application; the semanticHash lookup costs ~7 ms. Values are bools —
-#: a few bytes per distinct plan, dropped when the application changes.
-#:
-#: Known windows, accepted and documented (ADVICE r13): (a) the
-#: 32-bit semanticHash can collide across DISTINCT plans — the column
-#: tuple folded into the key discriminates the plausible collisions
-#: (different operators' probe frames differ in schema) for one extra
-#: py4j call, but two same-schema colliding plans would still share a
-#: decision (perf-only either way: the guard is widen-only, so the
-#: worst outcome is a missing or redundant round-robin exchange);
-#: (b) if the same path's file count GROWS within one application, a
-#: stale True re-widens an already-wide frame — repartition(target)
-#: with cur > target would coalesce, so callers of this module rely on
-#: the engine-wide static-input contract (sources/testdata.py: inputs
-#: are immutable within an application; ``clear_decision_memo`` is the
-#: invalidation hook for tools/tests that rewrite inputs in-process).
-_DECISION_MEMO: dict[tuple[str, int, tuple, int], bool] = {}
-
-
-def clear_decision_memo() -> None:
-    """Invalidate every memoized widen decision (for tools/tests that
-    regenerate input files within one application)."""
-    _DECISION_MEMO.clear()
+from rta_registrations_pyspark_glue_spark.plans.planmemo import memoized
 
 
 def _needs_spread(df: DataFrame, target: int) -> bool:
-    app_id = df.sparkSession.sparkContext.applicationId
+    """Whether ``df`` has fewer than ``target`` partitions. The probe
+    (``df.rdd.getNumPartitions()``) runs full physical planning — ~25-55
+    ms per FRESH DataFrame, and the multimodal union probes ~26
+    semantically identical (doc_id) selects per build — so the decision
+    is memoized (plans/planmemo.py) per (analyzed-plan semanticHash,
+    columns, target); the semanticHash lookup costs ~7 ms.
+
+    Known windows, accepted (ADVICE r13): (a) the 32-bit semanticHash
+    can collide across DISTINCT plans — the column tuple discriminates
+    the plausible collisions (different operators' probe frames differ
+    in schema), and two same-schema colliding plans sharing a decision
+    is perf-only (the guard is widen-only: at worst a missing or
+    redundant round-robin exchange); (b) the key carries no input
+    fingerprint, so a path whose file count GROWS within one application
+    keeps its stale decision — the static-input contract of the plan
+    memo."""
     try:
-        key = (
-            app_id,
+        inputs = (
             int(df._jdf.queryExecution().analyzed().semanticHash()),
             tuple(df.columns),
             target,
         )
     except Exception:  # non-classic DataFrame impls: fall through, no memo
         return df.rdd.getNumPartitions() < target
-    hit = _DECISION_MEMO.get(key)
-    if hit is not None:
-        return hit
-    if any(k[0] != app_id for k in _DECISION_MEMO):
-        for k in [k for k in _DECISION_MEMO if k[0] != app_id]:
-            del _DECISION_MEMO[k]
-    need = df.rdd.getNumPartitions() < target
-    _DECISION_MEMO[key] = need
-    return need
+    return memoized(
+        df.sparkSession,
+        "spread._needs_spread",
+        inputs,
+        lambda: df.rdd.getNumPartitions() < target,
+        stat_inputs=False,
+    )
 
 
 def spread_ids(df: DataFrame) -> DataFrame:

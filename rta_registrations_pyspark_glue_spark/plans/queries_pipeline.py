@@ -1,4 +1,4 @@
-"""End-to-end registration pipeline queries, hash-verified against a
+"""End-to-end registration pipeline query, hash-verified against a
 DuckDB CTE oracle that re-expresses the whole dataflow — bronze
 synthesis (sources/bronze.py), ETL1 clean/stage (operators/cleaning.py,
 reference etl1_clean_and_stage.py:32-137), and ETL2 star assembly with
@@ -14,10 +14,10 @@ is true for a known nonzero subset, hash-verified end-to-end (and the
 fuzzy operator is additionally verified in isolation as
 fuzzy_resolution_parts).
 
-The two registry entries share ONE pipeline run per (session, sf_dir):
-run_pipeline persists a pruned 19-column stage projection, and the memo
-below hands the same StarOutput to both queries, so the gate pays the
-bronze->star compute once instead of once per query.
+rta_pipeline_star's build runs no Spark action, so it is memoized as
+an unexecuted plan (plans/planmemo.py); a memo hit re-arms the
+persists run_pipeline makes (the pruned stage projection and the
+deduplicated dim_vehicle, each read by several plan branches).
 """
 
 from __future__ import annotations
@@ -25,52 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rta_registrations_pyspark_glue_spark.caching import record_persists, tracked_persist
-from rta_registrations_pyspark_glue_spark.plans.pipeline import StarOutput, run_pipeline
+from rta_registrations_pyspark_glue_spark.plans.pipeline import run_pipeline
 from rta_registrations_pyspark_glue_spark.plans.planmemo import plan_memo
 from rta_registrations_pyspark_glue_spark.plans.registry import register
 from rta_registrations_pyspark_glue_spark.sources.bronze import synthesize_bronze
-
-#: Unexecuted-plan memo per (applicationId, sf_dir) — r14 (VERDICT r13
-#: next-round #1). build_star runs NO action (pure DataFrame chatter),
-#: yet rebuilding its DAG costs ~1.5 s of driver time (~2,600 py4j
-#: round trips through the cleaning/resolve chains). The memo now
-#: SURVIVES caching.release_tracked: releasing caches drops the
-#: PERSISTED DATA (so every invocation still recomputes bronze→star
-#: from the parquet input — nothing is result-cached across runs, the
-#: same plan-memo precedent as sources/testdata._PLAN_MEMO and
-#: plans/planmemo), while the immutable plan objects stay valid.
-#: _pipeline re-arms the recorded tracked persists on a memo hit so the
-#: persist lifecycle is exactly what a fresh build would set up;
-#: entries die with the application and stale-application keys are
-#: dropped on first touch of a new one. Static-input assumption: within
-#: one application the sf_dir's parquet files must not be rewritten
-#: (they never are — testdata is immutable; the same contract
-#: load_table's memo documents).
-_MEMO: dict[tuple[str, str], tuple[StarOutput, tuple]] = {}
-
-
-def _pipeline(spark: SparkSession, sf_dir: str) -> StarOutput:
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    hit = _MEMO.get(key)
-    if hit is not None:
-        out, persisted = hit
-        # Memo hit after a release: the persisted data was dropped but
-        # the plans are intact — re-persist (and re-register for
-        # release) the same frames. tracked_persist is a no-op when the
-        # plan is still cached, so double re-arming never stacks.
-        for df in persisted:
-            tracked_persist(df)
-        return out
-    if any(k[0] != app_id for k in _MEMO):
-        for k in [k for k in _MEMO if k[0] != app_id]:
-            del _MEMO[k]
-    with record_persists() as rec:
-        out = run_pipeline(synthesize_bronze(spark, sf_dir))
-    _MEMO[key] = (out, tuple(rec))
-    return out
-
 
 # DuckDB oracle: the full bronze->stage->star chain as CTEs. Stage names
 # mirror the Spark operators they reproduce.
@@ -311,7 +269,7 @@ def rta_pipeline_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('dim_vehicle' rows, schema per starschema_dw.txt:9-21) under a
     single gate slot — columns absent from a row kind are NULL, exactly
     as in the oracle's UNION ALL BY NAME."""
-    out = _pipeline(spark, sf_dir)
+    out = run_pipeline(synthesize_bronze(spark, sf_dir))
     fact = out.fact.withColumn("row_kind", F.lit("fact"))
     dim = out.dim_vehicle.withColumn("row_kind", F.lit("dim_vehicle"))
     return fact.unionByName(dim, allowMissingColumns=True)

@@ -12,6 +12,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType
 
+from rta_registrations_pyspark_glue_spark.plans.planmemo import memoized
+
 TABLES = (
     "region",
     "nation",
@@ -28,44 +30,10 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-#: Unexecuted-plan memo per (applicationId, sf_dir, name, file
-#: fingerprint) — r13, staleness-keyed r14 (VERDICT r13 #7 / ADVICE).
-#: Every registered query calls load_table per invocation, and each call
-#: paid a fresh spark.read.parquet (footer read + schema inference +
-#: py4j, tens of ms; the events nanos/micros type probe several times
-#: that). The memoized value is an IMMUTABLE DataFrame plan, not data:
-#: every action on it still scans the parquet, so nothing is cached
-#: across runs — this is the same plan-memo precedent as
-#: plans/queries_pipeline._MEMO. Keyed by applicationId so a new session
-#: never reuses a dead session's plan; entries of older applications are
-#: dropped on first touch of a new one.
-#:
-#: Staleness: the r13 memo pinned the first read's InMemoryFileIndex for
-#: the application's lifetime, so a table REGENERATED mid-application
-#: was served a stale file listing. The key now folds in a local-stat
-#: fingerprint (st_mtime_ns, st_size — ~1 µs, negligible next to the
-#: ~1 ms memo hit), so rewriting the file yields a fresh plan. For
-#: non-local paths (no os.stat) the fingerprint is None and the static-
-#: input contract applies: inputs must not change within an application
-#: — call ``clear_plan_memo`` after rewriting them in-process.
-_PLAN_MEMO: dict[tuple[str, str, str, tuple | None], DataFrame] = {}
-
-
-def clear_plan_memo() -> None:
-    """Invalidate every memoized table plan (for tools/tests that
-    regenerate testdata within one application)."""
-    _PLAN_MEMO.clear()
-
-
-def _fingerprint(path: str) -> tuple | None:
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (st.st_mtime_ns, st.st_size)
-
-
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+    """The table's parquet scan. Memoized per path (plans/planmemo.py):
+    each fresh read costs a footer read + schema inference + py4j, tens
+    of ms, and the events nanos/micros probe several times that."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     # The driver may call queries() on a session we didn't build (its own
     # timezone / parser policy). Results must be oracle-comparable (DuckDB
@@ -77,50 +45,40 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     # expands yy->yyyy in-string with a fixed pivot).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.timeParserPolicy", "CORRECTED")
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name, _fingerprint(path))
-    memo = _PLAN_MEMO.get(key)
-    if memo is not None:
-        return memo
-    if any(k[0] != app_id for k in _PLAN_MEMO):
-        stale = [k for k in _PLAN_MEMO if k[0] != app_id]
-        for k in stale:
-            del _PLAN_MEMO[k]
     if name == "events":
-        # events.ts has shipped as both TIMESTAMP(NANOS) — which the Spark
-        # parquet reader rejects — and TIMESTAMP(MICROS), depending on the
-        # generator version. Enable the nanos-as-long fallback, then adapt
-        # to whatever type actually came back: a long is a nanos epoch to
-        # rebuild (integer DIV, not / — ns values exceed double's 2^53); a
-        # timestamp is already correct.
-        prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if isinstance(df.schema["ts"].dataType, LongType):
-            # Genuine NANOS file: the conf must stay set — the scan checks
-            # it again at action time, and this session evidently reads
-            # nanos-shipped data by design.
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        else:
-            # MICROS file: the fallback never engaged — restore the prior
-            # conf so a later read of a true NANOS column on this session
-            # still errors loudly instead of silently yielding LongType.
-            if prior is None:
-                spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-            else:
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
-            # timestamp[us] parquet reads back as TIMESTAMP_NTZ; interpret
-            # the wall-clock as UTC explicitly (to_utc_timestamp(ntz,'UTC')
-            # is timezone-INDEPENDENT — a bare cast to timestamp resolves
-            # with whatever session tz is in effect at action time, so a
-            # driver mutating spark.sql.session.timeZone between load and
-            # action would shift values).
-            df = df.withColumn("ts", F.expr("to_utc_timestamp(ts, 'UTC')"))
-        _PLAN_MEMO[key] = df
-        return df
+        return memoized(spark, "load_table", path, lambda: _read_events(spark, path))
+    return memoized(spark, "load_table", path, lambda: spark.read.parquet(path))
+
+
+def _read_events(spark: SparkSession, path: str) -> DataFrame:
+    # events.ts has shipped as both TIMESTAMP(NANOS) — which the Spark
+    # parquet reader rejects — and TIMESTAMP(MICROS), depending on the
+    # generator version. Enable the nanos-as-long fallback, then adapt
+    # to whatever type actually came back: a long is a nanos epoch to
+    # rebuild (integer DIV, not / — ns values exceed double's 2^53); a
+    # timestamp is already correct.
+    prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
-    _PLAN_MEMO[key] = df
-    return df
+    if isinstance(df.schema["ts"].dataType, LongType):
+        # Genuine NANOS file: the conf must stay set — the scan checks
+        # it again at action time, and this session evidently reads
+        # nanos-shipped data by design.
+        return df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
+    # MICROS file: the fallback never engaged — restore the prior
+    # conf so a later read of a true NANOS column on this session
+    # still errors loudly instead of silently yielding LongType.
+    if prior is None:
+        spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    else:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
+    # timestamp[us] parquet reads back as TIMESTAMP_NTZ; interpret
+    # the wall-clock as UTC explicitly (to_utc_timestamp(ntz,'UTC')
+    # is timezone-INDEPENDENT — a bare cast to timestamp resolves
+    # with whatever session tz is in effect at action time, so a
+    # driver mutating spark.sql.session.timeZone between load and
+    # action would shift values).
+    return df.withColumn("ts", F.expr("to_utc_timestamp(ts, 'UTC')"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

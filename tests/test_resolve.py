@@ -98,53 +98,25 @@ def test_asof_join_numeric_tiebreak_orders_natively(spark):
 
 
 def test_release_tracked_unpersists_but_pipeline_memo_survives(spark):
-    """caching.release_tracked drops every tracked persist; the pipeline
-    PLAN memo survives the release (r14: it holds an unexecuted plan, so
-    only the persisted data is dropped — a later _pipeline call re-arms
-    the persists instead of paying the ~1.5 s DAG rebuild)."""
+    """caching.release_tracked drops every tracked persist; the plan memo
+    (plans/planmemo.py, which holds rta_pipeline_star's plan) survives
+    the release: it holds unexecuted plans, so only the persisted data is
+    dropped and a later call re-arms the persists instead of rebuilding
+    the DAG."""
     from rta_registrations_pyspark_glue_spark import caching
-    from rta_registrations_pyspark_glue_spark.plans import queries_pipeline
+    from rta_registrations_pyspark_glue_spark.plans import planmemo
+
+    @planmemo.plan_memo
+    def fake_pipeline(spark, sf_dir):
+        return spark.range(3)
 
     df = caching.tracked_persist(spark.range(10))
     df.count()
     assert df.storageLevel.useMemory
-    queries_pipeline._MEMO[("app", "dir")] = object()
+    plan = fake_pipeline(spark, "dir")
     try:
         caching.release_tracked()
         assert not df.storageLevel.useMemory
-        assert ("app", "dir") in queries_pipeline._MEMO
+        assert fake_pipeline(spark, "dir") is plan
     finally:
-        queries_pipeline._MEMO.clear()
-
-
-def test_pipeline_memo_rearms_persists_after_release(spark, sf_dir):
-    """A _pipeline memo hit after release_tracked must return the SAME
-    plan objects (no driver rebuild) with the tracked persists re-armed
-    — the persist lifecycle is indistinguishable from a fresh build."""
-    from rta_registrations_pyspark_glue_spark import caching
-    from rta_registrations_pyspark_glue_spark.plans import queries_pipeline
-
-    queries_pipeline._MEMO.clear()
-    first = queries_pipeline._pipeline(spark, sf_dir)
-    (_, persisted), = queries_pipeline._MEMO.values()
-    assert persisted, "the build must record its tracked frames"
-    assert all(
-        df.storageLevel.useMemory or df.storageLevel.useDisk for df in persisted
-    )
-    caching.release_tracked()
-    assert all(
-        not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-        for df in persisted
-    )
-    second = queries_pipeline._pipeline(spark, sf_dir)
-    assert second is first  # plan memo hit — no rebuild
-    # persists re-armed and re-registered for the next release
-    assert all(
-        df.storageLevel.useMemory or df.storageLevel.useDisk for df in persisted
-    )
-    caching.release_tracked()
-    assert all(
-        not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-        for df in persisted
-    )
-    queries_pipeline._MEMO.clear()
+        planmemo.clear_plan_memo()

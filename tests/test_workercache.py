@@ -10,6 +10,8 @@ cloudpickled by value and provably never shared)."""
 
 from __future__ import annotations
 
+import pytest
+
 from rta_registrations_pyspark_glue_spark.operators import workercache
 
 
@@ -130,45 +132,65 @@ def test_load_table_memo_invalidates_on_rewrite(spark, tmp_path):
     assert second.count() == 9
 
 
-def test_clear_hooks_exist_and_clear():
-    """The documented in-process invalidation hooks for tools/tests that
-    rewrite inputs mid-application."""
+def test_clear_hooks_exist_and_clear(spark, sf_dir):
+    """planmemo.clear_plan_memo is the one in-process invalidation hook
+    for tools/tests that rewrite inputs mid-application: it empties the
+    single store that load_table, plan_memo and the spread guard share."""
     from rta_registrations_pyspark_glue_spark.operators import spread
+    from rta_registrations_pyspark_glue_spark.plans import planmemo
     from rta_registrations_pyspark_glue_spark.sources import testdata
 
-    testdata._PLAN_MEMO[("app", "dir", "t", None)] = object()
-    testdata.clear_plan_memo()
-    assert testdata._PLAN_MEMO == {}
-    spread._DECISION_MEMO[("app", 1, ("c",), 8)] = True
-    spread.clear_decision_memo()
-    assert spread._DECISION_MEMO == {}
+    @planmemo.plan_memo
+    def fake_query(spark, sf_dir):
+        return spark.range(3)
+
+    planmemo.clear_plan_memo()
+    spread.spread_ids(testdata.load_table(spark, "documents", sf_dir))
+    fake_query(spark, sf_dir)
+    names = {name for name, _ in planmemo._MEMO}
+    assert {"load_table", "spread._needs_spread"} <= names
+    assert any(n.endswith("fake_query") for n in names)
+    planmemo.clear_plan_memo()
+    assert planmemo._MEMO == {}
 
 
-def test_plan_memo_reuses_plan_and_rearms_persists(spark, sf_dir):
-    """r14 planmemo: a decorated action-free query build returns the
-    IDENTICAL plan object on re-invocation (no driver rebuild), its
-    recorded internal persists are re-armed after release_tracked, and
-    the results of pass 1 and pass 2 are frame-equal (the plan is a
-    plan — every action recomputes from parquet)."""
+@pytest.mark.parametrize("name", ["simhash_suite", "rta_pipeline_star"])
+def test_plan_memo_reuses_plan_and_rearms_persists(spark, sf_dir, name):
+    """A decorated action-free query build returns the IDENTICAL plan
+    object on re-invocation (no driver rebuild), its recorded internal
+    persists are re-armed after release_tracked and registered for the
+    next release, and the results of pass 1 and pass 2 are equal (the
+    plan is a plan — every action recomputes from parquet)."""
     from rta_registrations_pyspark_glue_spark import caching
     from rta_registrations_pyspark_glue_spark.plans import planmemo, registry
 
-    qs = registry.queries()
+    def armed(frames):
+        return [f.storageLevel.useMemory or f.storageLevel.useDisk for f in frames]
+
+    query = registry.queries()[name]
     planmemo.clear_plan_memo()
-    a = qs["simhash_suite"](spark, sf_dir)
+    a = query(spark, sf_dir)
     rows_a = sorted(map(str, a.collect()))
+    ((_, fp, plan, persisted),) = [
+        e for (n, _), e in planmemo._MEMO.items() if n.endswith(f".{name}")
+    ]
+    assert plan is a
+    # the key's input is sf_dir and the entry carries its fingerprint, so
+    # rewriting an input invalidates the entry
+    assert fp is not None
+    if name == "rta_pipeline_star":
+        assert persisted, "the build must record its tracked frames"
+    assert all(armed(persisted))
     caching.release_tracked()
-    b = qs["simhash_suite"](spark, sf_dir)
+    assert not any(armed(persisted))
+    b = query(spark, sf_dir)
     assert b is a  # memo hit: same unexecuted plan object
+    assert all(armed(persisted))  # persists re-armed
     rows_b = sorted(map(str, b.collect()))
     assert rows_a == rows_b
     caching.release_tracked()
-    # memo keys carry the input-dir fingerprint: rewriting inputs
-    # invalidates (dir fingerprint covers every *.parquet in sf_dir)
-    key_fps = {k[2] for k in planmemo._MEMO}
-    assert key_fps and all(fp is not None for fp in key_fps)
+    assert not any(armed(persisted))  # re-registered for release
     planmemo.clear_plan_memo()
-    assert planmemo._MEMO == {}
 
 
 def test_plan_memo_invalidates_on_input_rewrite(spark, tmp_path):
@@ -197,3 +219,171 @@ def test_plan_memo_invalidates_on_input_rewrite(spark, tmp_path):
     spark.range(0, 6).selectExpr("id as doc_id").write.mode("overwrite").parquet(path)
     fake_query(spark, sf)
     assert len(calls) == 2  # fingerprint change -> rebuild
+
+
+def test_pipeline_star_rebuilds_after_input_rewrite(spark, tmp_path):
+    """Rewriting an input mid-application rebuilds rta_pipeline_star:
+    the rebuilt result matches the DuckDB oracle on the NEW files (no
+    stale plan or stale persisted stage is served)."""
+    import os
+    import shutil
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from rta_registrations_pyspark_glue_spark import caching
+    from rta_registrations_pyspark_glue_spark.plans import registry
+    from rta_registrations_pyspark_glue_spark.sources.testdata import TABLES
+
+    src = "/root/testdata/sf0.001"
+    sf = str(tmp_path)
+    for t in TABLES:
+        shutil.copyfile(f"{src}/{t}.parquet", f"{sf}/{t}.parquet")
+    query = registry.queries()["rta_pipeline_star"]
+    oracle = registry.oracle_sql()["rta_pipeline_star"]
+
+    def spark_rows():
+        df = query(spark, sf)
+        cols = sorted(df.columns)
+        return sorted(repr(tuple(r[c] for c in cols)) for r in df.collect())
+
+    def oracle_rows():
+        con = duckdb.connect()
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+        cur = con.execute(oracle)
+        names = [d[0] for d in cur.description]
+        order = sorted(range(len(names)), key=names.__getitem__)
+        return sorted(repr(tuple(r[i] for i in order)) for r in cur.fetchall())
+
+    try:
+        before = spark_rows()
+        assert before == oracle_rows()
+        orders = pq.read_table(os.path.join(sf, "orders.parquet"))
+        pq.write_table(
+            orders.slice(0, orders.num_rows // 2), os.path.join(sf, "orders.parquet")
+        )
+        after = spark_rows()
+        assert len(after) < len(before)
+        assert after == oracle_rows()
+    finally:
+        caching.release_tracked()
+
+
+def test_memo_size_constant_under_repeated_rewrites(spark, tmp_path):
+    """Superseded fingerprints are evicted: rewriting one input 20 times
+    rebuilds every time yet leaves the memo at one entry per (name,
+    inputs) — the plan_memo query's and load_table's."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rta_registrations_pyspark_glue_spark.plans import planmemo
+    from rta_registrations_pyspark_glue_spark.sources import testdata
+
+    builds = []
+
+    @planmemo.plan_memo
+    def fake_query(spark, sf_dir):
+        builds.append(sf_dir)
+        return testdata.load_table(spark, "region", sf_dir)
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "region.parquet")
+    planmemo.clear_plan_memo()
+    sizes = []
+    for i in range(20):
+        pq.write_table(pa.table({"r_regionkey": list(range(i + 1))}), path)
+        fake_query(spark, sf)
+        assert testdata.load_table(spark, "region", sf).count() == i + 1
+        sizes.append(len(planmemo._MEMO))
+    assert len(builds) == 20  # every rewrite was seen
+    assert sizes == [2] * 20
+    planmemo.clear_plan_memo()
+
+
+def test_record_persists_is_per_thread(spark):
+    """Two threads with record_persists open at the same time each
+    capture only their own thread's tracked_persist calls; nested
+    recordings on one thread still each capture everything."""
+    import threading
+
+    from rta_registrations_pyspark_glue_spark import caching
+
+    frames = [spark.range(0, 10 + i) for i in range(2)]
+    barrier = threading.Barrier(2, timeout=60)
+    recorded: list = [None, None]
+    errors: list = []
+
+    def build(i):
+        try:
+            with caching.record_persists() as rec:
+                barrier.wait()  # both recordings are open
+                caching.tracked_persist(frames[i])
+                barrier.wait()  # both persists happened before either closes
+            recorded[i] = rec
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=build, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert not errors
+        for i in range(2):
+            assert len(recorded[i]) == 1 and recorded[i][0] is frames[i]
+
+        nested = spark.range(0, 13)
+        with caching.record_persists() as outer:
+            with caching.record_persists() as inner:
+                caching.tracked_persist(nested)
+        assert len(outer) == len(inner) == 1
+        assert outer[0] is nested and inner[0] is nested
+    finally:
+        caching.release_tracked()
+
+
+def test_memo_concurrent_inserts_keep_every_entry():
+    """Threads inserting into the one memo store at once (more threads
+    than cores, a tiny switch interval) lose no entry and never trip
+    over each other's insert-time eviction scan."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    from rta_registrations_pyspark_glue_spark.plans import planmemo
+
+    fake_spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
+    n_threads, per_thread = 16, 200
+    errors: list = []
+
+    def insert(t):
+        try:
+            for i in range(per_thread):
+                planmemo.memoized(
+                    fake_spark, "stress", (t, i), lambda: i, stat_inputs=False
+                )
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    planmemo.clear_plan_memo()
+    prior = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=insert, args=(t,)) for t in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prior)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        assert not errors
+        assert len(planmemo._MEMO) == n_threads * per_thread
+    finally:
+        planmemo.clear_plan_memo()
