@@ -221,7 +221,7 @@ def test_plan_memo_invalidates_on_input_rewrite(spark, tmp_path):
     assert len(calls) == 2  # fingerprint change -> rebuild
 
 
-def test_pipeline_star_rebuilds_after_input_rewrite(spark, tmp_path):
+def test_pipeline_star_rebuilds_after_input_rewrite(spark, sf_dir, tmp_path):
     """Rewriting an input mid-application rebuilds rta_pipeline_star:
     the rebuilt result matches the DuckDB oracle on the NEW files (no
     stale plan or stale persisted stage is served)."""
@@ -235,10 +235,9 @@ def test_pipeline_star_rebuilds_after_input_rewrite(spark, tmp_path):
     from rta_registrations_pyspark_glue_spark.plans import registry
     from rta_registrations_pyspark_glue_spark.sources.testdata import TABLES
 
-    src = "/root/testdata/sf0.001"
     sf = str(tmp_path)
     for t in TABLES:
-        shutil.copyfile(f"{src}/{t}.parquet", f"{sf}/{t}.parquet")
+        shutil.copyfile(f"{sf_dir}/{t}.parquet", f"{sf}/{t}.parquet")
     query = registry.queries()["rta_pipeline_star"]
     oracle = registry.oracle_sql()["rta_pipeline_star"]
 
