@@ -46,7 +46,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 
 
 def decode_wav(content: bytes) -> tuple[np.ndarray, int]:
@@ -862,29 +862,14 @@ def synthesize_wav_docs(docs: DataFrame, n: int = 64) -> DataFrame:
     ANALYTIC (the DuckDB oracle computes them from the formula without
     parsing RIFF)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rta_registrations_pyspark_glue_spark.operators.workercache import (
-            cache_put,
-            worker_cache,
-        )
+    def encode(base: int) -> bytes:
+        i = np.arange(n, dtype=np.int64)
+        s = ((base + i * 17) % 4096 - 2048) * 16
+        return encode_wav(s.astype(np.int32), 8000)
 
-        cache = worker_cache(f"wav_synth_{n}")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                base = (d * 11) % 4096
-                val = cache.get(base)
-                if val is None:
-                    i = np.arange(n, dtype=np.int64)
-                    s = ((base + i * 17) % 4096 - 2048) * 16
-                    val = cache_put(cache, base, encode_wav(s.astype(np.int32), 8000))
-                payloads.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
-
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(
+        docs, encode, key=lambda d: (d * 11) % 4096, cache=f"wav_synth_{n}"
+    )
 
 
 def synthesize_flac_docs(docs: DataFrame, n: int = 96) -> DataFrame:
@@ -902,44 +887,19 @@ def synthesize_flac_docs(docs: DataFrame, n: int = 96) -> DataFrame:
     prediction, mid/side reconstruction, frame CRC-16."""
     from rta_registrations_pyspark_glue_spark.operators.flac import encode_flac
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rta_registrations_pyspark_glue_spark.operators.workercache import (
-            cache_put,
-            worker_cache,
+    def encode(key: tuple) -> bytes:
+        a0, b0, a1, b1 = key
+        i = np.arange(n, dtype=np.int64)
+        sig = np.stack([a0 + b0 * i, a1 + b1 * i], axis=-1)
+        return encode_flac(
+            sig, 16000, bps=16, blocksize=n, mode="fixed2", stereo="mid_side"
         )
 
-        cache = worker_cache(f"flac_synth_{n}")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                key = ((d * 37) % 2000 - 1000, d % 7 - 3,
-                       (d * 53) % 1600 - 800, (d * 3) % 5 - 2)
-                val = cache.get(key)
-                if val is None:
-                    a0, b0, a1, b1 = key
-                    i = np.arange(n, dtype=np.int64)
-                    sig = np.stack([a0 + b0 * i, a1 + b1 * i], axis=-1)
-                    val = cache_put(cache, key, encode_flac(
-                        sig, 16000, bps=16, blocksize=n,
-                        mode="fixed2", stereo="mid_side",
-                    ))
-                payloads.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
+    def key(d: int) -> tuple:
+        return ((d * 37) % 2000 - 1000, d % 7 - 3,
+                (d * 53) % 1600 - 800, (d * 3) % 5 - 2)
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
-
-
-#: fixture-encode memos: ≤4096 tiny WAVs per (base, samples_per_block) —
-#: deterministic bytes, so sharing across partitions/passes is safe and
-#: keeps the bench leg measuring DECODE. r13: the memos moved into
-#: workercache.worker_cache resolved INSIDE the ops — these module
-#: globals, referenced by closure, were cloudpickled BY VALUE into every
-#: task, so workers never actually shared them (each task warmed a copy
-#: and threw it away; the msadpcm leg re-encoded ~1k fixtures per
-#: invocation, 2.2s warm on the sf0.1 bench).
+    return synth_leg(docs, encode, key=key, cache=f"flac_synth_{n}")
 
 
 def synthesize_adpcm_docs(docs: DataFrame, n: int = 64) -> DataFrame:
@@ -952,37 +912,13 @@ def synthesize_adpcm_docs(docs: DataFrame, n: int = 64) -> DataFrame:
     fact-chunk trim, and fmt-extension parse byte-for-byte; the moving
     state machine is pinned by the hand-vector pytest."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # worker-process memo resolved at call time (workercache.py): the
-        # 4096 bases spread across partitions made a task-local cache
-        # always miss, so the leg's bench time measured the fixture
-        # ENCODER instead of the decode operator (r10 per-leg
-        # decomposition; r13 found the closure-referenced module global
-        # was cloudpickled by value and never shared either)
-        from rta_registrations_pyspark_glue_spark.operators.workercache import (
-            cache_put,
-            worker_cache,
-        )
+    def encode(key: tuple) -> bytes:
+        sig = np.full(n, (key[0] - 2048) * 13, dtype=np.int32)
+        return encode_ima_adpcm_wav(sig, 8000, samples_per_block=n)
 
-        cache = worker_cache("ima_synth")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                base = (d * 29) % 4096
-                val = cache.get((base, n))
-                if val is None:
-                    c = (base - 2048) * 13
-                    sig = np.full(n, c, dtype=np.int32)
-                    val = cache_put(cache, (base, n), encode_ima_adpcm_wav(
-                        sig, 8000, samples_per_block=n
-                    ))
-                payloads.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
-
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(
+        docs, encode, key=lambda d: ((d * 29) % 4096, n), cache="ima_synth"
+    )
 
 
 def synthesize_msadpcm_docs(docs: DataFrame, n: int = 64) -> DataFrame:
@@ -996,32 +932,13 @@ def synthesize_msadpcm_docs(docs: DataFrame, n: int = 64) -> DataFrame:
     and the fact-chunk trim byte-for-byte; the moving two-tap state
     machine is pinned by the hand-computed pytest vector."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # worker-process memo: see synthesize_adpcm_docs
-        from rta_registrations_pyspark_glue_spark.operators.workercache import (
-            cache_put,
-            worker_cache,
-        )
+    def encode(key: tuple) -> bytes:
+        sig = np.full(n, (key[0] - 2048) * 11, dtype=np.int32)
+        return encode_ms_adpcm_wav(sig, 8000, samples_per_block=n)
 
-        cache = worker_cache("ms_synth")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                base = (d * 31) % 4096
-                val = cache.get((base, n))
-                if val is None:
-                    c = (base - 2048) * 11
-                    sig = np.full(n, c, dtype=np.int32)
-                    val = cache_put(cache, (base, n), encode_ms_adpcm_wav(
-                        sig, 8000, samples_per_block=n
-                    ))
-                payloads.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
-
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(
+        docs, encode, key=lambda d: ((d * 31) % 4096, n), cache="ms_synth"
+    )
 
 
 def decode_audio(content: bytes) -> tuple[np.ndarray, int]:
@@ -1036,6 +953,20 @@ def decode_audio(content: bytes) -> tuple[np.ndarray, int]:
     return decode_wav(content)
 
 
+def audio_features(content: bytes) -> dict:
+    """AUDIO_SCHEMA features of one audio payload (decode_audio)."""
+    frames, rate = decode_audio(content)
+    f64 = frames.astype(np.float64)
+    return {
+        "n_samples": frames.shape[0],
+        "sample_rate": rate,
+        "channels": frames.shape[1],
+        "sample_sum": int(round(float(f64.sum()))),
+        "sum_sq": int(round(float((f64 * f64).sum()))),
+        "n_clipped": int((np.abs(f64) >= CLIP_THRESHOLD).sum()),
+    }
+
+
 def decode_audio_features(df: DataFrame) -> DataFrame:
     """Decode the binary column with the REAL audio parsers (WAV via
     decode_wav, FLAC via operators/flac.py — dispatched on magic) and
@@ -1045,43 +976,7 @@ def decode_audio_features(df: DataFrame) -> DataFrame:
     damaged-audio detection); float payloads round-half-even to int64.
     Undecodable rows come back decode_ok=false with NULL features —
     a mixed-media corpus never kills the job."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ns, rates, chs, sums, sqs, clips, oks = [], [], [], [], [], [], []
-            for content in pdf["content"]:
-                try:
-                    frames, rate = decode_audio(bytes(content))
-                    f64 = frames.astype(np.float64)
-                    ns.append(frames.shape[0])
-                    rates.append(rate)
-                    chs.append(frames.shape[1])
-                    sums.append(int(round(float(f64.sum()))))
-                    sqs.append(int(round(float((f64 * f64).sum()))))
-                    clips.append(int((np.abs(f64) >= CLIP_THRESHOLD).sum()))
-                    oks.append(True)
-                except (ValueError, NotImplementedError):
-                    ns.append(None)
-                    rates.append(None)
-                    chs.append(None)
-                    sums.append(None)
-                    sqs.append(None)
-                    clips.append(None)
-                    oks.append(False)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_samples": pd.array(ns, dtype="Int64"),
-                    "sample_rate": pd.array(rates, dtype="Int32"),
-                    "channels": pd.array(chs, dtype="Int32"),
-                    "sample_sum": pd.array(sums, dtype="Int64"),
-                    "sum_sq": pd.array(sqs, dtype="Int64"),
-                    "n_clipped": pd.array(clips, dtype="Int64"),
-                    "decode_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, AUDIO_SCHEMA)
+    return decode_leg(df, audio_features, AUDIO_SCHEMA)
 
 
 # ------------------------------------------------------------------ ID3

@@ -31,14 +31,12 @@ parallelism = partition parallelism, nothing driver-side.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 
 # ---------------------------------------------------------------------------
 # T.81 Annex K "typical" Huffman tables, as a ready-to-splice DHT
@@ -520,6 +518,44 @@ AVI_SCHEMA = (
 )
 
 
+def clip_features(clip: dict, codec_key: str) -> dict:
+    """AVI_SCHEMA features of one demuxed clip (the MP4 and MKV legs
+    share the schema): dimensions, frame count, the codec under
+    ``codec_key``, exact RGB pixel sum over all frames, audio sample
+    count and sum (NULL without an audio track)."""
+    audio = clip["audio"]
+    return {
+        "width": clip["width"],
+        "height": clip["height"],
+        "n_frames": len(clip["frames"]),
+        "codec": clip[codec_key],
+        "pix_sum": sum(int(f.astype(np.int64).sum()) for f in clip["frames"]),
+        "n_audio": None if audio is None else int(audio.shape[0]),
+        "audio_sum": None if audio is None else int(audio.astype(np.int64).sum()),
+    }
+
+
+def av_fixture(d: int, size: int, n_frames: int) -> tuple[list, np.ndarray]:
+    """Doc ``d``'s closed-form frames and audio, shared by the AVI, MP4
+    and MKV synth legs: even ``d`` → ``n_frames`` solid-gray
+    ``size``×``size`` frames ``v_f = (d·37 + f·11) % 256``; odd ``d`` →
+    RGB frames ``(d·7 + f·11 + p·3 + c) % 256``; audio is 64 mono
+    16-bit samples ``((d·3 + s) % 256 − 128)·4``."""
+    s = np.arange(64, dtype=np.int64)
+    audio = (((d * 3 + s) % 256 - 128) * 4).astype(np.int16)
+    if d % 2 == 0:
+        return [
+            np.full((size, size), (d * 37 + f * 11) % 256, np.uint8)
+            for f in range(n_frames)
+        ], audio
+    p = np.arange(size * size, dtype=np.int64)[:, None]
+    c = np.arange(3, dtype=np.int64)[None, :]
+    return [
+        ((d * 7 + f * 11 + p * 3 + c) % 256).astype(np.uint8).reshape(size, size, 3)
+        for f in range(n_frames)
+    ], audio
+
+
 def synthesize_avi_docs(
     docs: DataFrame, size: int = 16, n_frames: int = 2
 ) -> DataFrame:
@@ -538,40 +574,11 @@ def synthesize_avi_docs(
     64 = ``((doc_id·3 + s) % 256 − 128)·4`` — the demux must route
     ``01wb`` chunks through the WAV sample decoders."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                s = np.arange(64, dtype=np.int64)
-                aud = (((d * 3 + s) % 256 - 128) * 4).astype(np.int16)
-                if d % 2 == 0:
-                    frames = [
-                        np.full(
-                            (size, size), (d * 37 + f * 11) % 256, np.uint8
-                        )
-                        for f in range(n_frames)
-                    ]
-                    payloads.append(
-                        encode_avi(frames, codec="MJPG", audio=aud)
-                    )
-                else:
-                    p = np.arange(size * size, dtype=np.int64)[:, None]
-                    c = np.arange(3, dtype=np.int64)[None, :]
-                    frames = [
-                        ((d * 7 + f * 11 + p * 3 + c) % 256)
-                        .astype(np.uint8)
-                        .reshape(size, size, 3)
-                        for f in range(n_frames)
-                    ]
-                    payloads.append(
-                        encode_avi(frames, codec="DIB ", audio=aud)
-                    )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
+    def encode(d: int) -> bytes:
+        frames, aud = av_fixture(d, size, n_frames)
+        return encode_avi(frames, codec="MJPG" if d % 2 == 0 else "DIB ", audio=aud)
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(docs, encode)
 
 
 def decode_avi_features(df: DataFrame) -> DataFrame:
@@ -579,51 +586,6 @@ def decode_avi_features(df: DataFrame) -> DataFrame:
     emit container-level features: dimensions, frame count, codec
     fourcc, exact RGB pixel sum over all frames, audio sample count and
     sum. Undecodable rows come back decode_ok=false with NULLs."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, nfs, codecs, psums, nas, asums, oks = (
-                [], [], [], [], [], [], [], [],
-            )
-            for content in pdf["content"]:
-                try:
-                    clip = decode_avi(bytes(content))
-                except (ValueError, NotImplementedError, TypeError):
-                    for col in (ws, hs, nfs, codecs, psums, nas, asums):
-                        col.append(None)
-                    oks.append(False)
-                else:
-                    ws.append(clip["width"])
-                    hs.append(clip["height"])
-                    nfs.append(len(clip["frames"]))
-                    codecs.append(clip["codec"])
-                    psums.append(
-                        int(
-                            sum(
-                                int(f.astype(np.int64).sum())
-                                for f in clip["frames"]
-                            )
-                        )
-                    )
-                    if clip["audio"] is None:
-                        nas.append(None)
-                        asums.append(None)
-                    else:
-                        nas.append(int(clip["audio"].shape[0]))
-                        asums.append(int(clip["audio"].astype(np.int64).sum()))
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "n_frames": pd.array(nfs, dtype="Int32"),
-                    "codec": pd.Series(codecs, dtype="object"),
-                    "pix_sum": pd.array(psums, dtype="Int64"),
-                    "n_audio": pd.array(nas, dtype="Int64"),
-                    "audio_sum": pd.array(asums, dtype="Int64"),
-                    "decode_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, AVI_SCHEMA)
+    return decode_leg(
+        df, lambda b: clip_features(decode_avi(b), "codec"), AVI_SCHEMA
+    )

@@ -38,13 +38,10 @@ from __future__ import annotations
 import re
 import struct
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 
 # ---------------------------------------------------------------------------
 # PDF object model
@@ -1168,87 +1165,33 @@ def synthesize_document_docs(docs: DataFrame) -> DataFrame:
     closed-form in doc_id (the 'doctext' oracle in
     plans/queries_similarity.py mirrors each residue)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                r = d % 4
-                if r in (0, 1):
-                    n_pages = 1 + d % 3
-                    pages = [
-                        f"Doc {d} page {p} alpha {(d * 13 + p) % 997}"
-                        for p in range(n_pages)
-                    ]
-                    payloads.append(
-                        encode_minimal_pdf(
-                            pages,
-                            title=f"T{d % 100}",
-                            author=f"A{d % 10}",
-                            xref_stream=(r == 1),
-                            objstm=(r == 1),
-                        )
-                    )
-                elif r == 2:
-                    n_paras = 1 + d % 4
-                    paras = [
-                        f"Doc {d} para {p} beta {(d * 17 + p) % 997}"
-                        for p in range(n_paras)
-                    ]
-                    payloads.append(
-                        encode_minimal_docx(
-                            paras, title=f"T{d % 100}", author=f"A{d % 10}"
-                        )
-                    )
-                else:
-                    n_chaps = 1 + d % 2
-                    chaps = [
-                        f"Doc {d} chap {p} delta {(d * 23 + p) % 997}"
-                        for p in range(n_chaps)
-                    ]
-                    payloads.append(
-                        encode_minimal_epub(
-                            chaps, title=f"T{d % 100}", author=f"A{d % 10}"
-                        )
-                    )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
+    def encode(d: int) -> bytes:
+        r = d % 4
+        meta = {"title": f"T{d % 100}", "author": f"A{d % 10}"}
+        if r in (0, 1):
+            pages = [
+                f"Doc {d} page {p} alpha {(d * 13 + p) % 997}"
+                for p in range(1 + d % 3)
+            ]
+            return encode_minimal_pdf(
+                pages, xref_stream=(r == 1), objstm=(r == 1), **meta
             )
+        if r == 2:
+            paras = [
+                f"Doc {d} para {p} beta {(d * 17 + p) % 997}"
+                for p in range(1 + d % 4)
+            ]
+            return encode_minimal_docx(paras, **meta)
+        chaps = [
+            f"Doc {d} chap {p} delta {(d * 23 + p) % 997}"
+            for p in range(1 + d % 2)
+        ]
+        return encode_minimal_epub(chaps, **meta)
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(docs, encode)
 
 
 def extract_document_features(df: DataFrame) -> DataFrame:
     """Extract text + metadata from the binary column with the REAL
     document parsers; undecodable rows come back parse_ok=false."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fmts, nps, texts, titles, authors, oks = [], [], [], [], [], []
-            for content in pdf["content"]:
-                try:
-                    m = extract_document_text(bytes(content))
-                except (ValueError, NotImplementedError, TypeError):
-                    for col in (fmts, nps, texts, titles, authors):
-                        col.append(None)
-                    oks.append(False)
-                else:
-                    fmts.append(m["fmt"])
-                    nps.append(m["n_pages"])
-                    texts.append(m["text"])
-                    titles.append(m["title"])
-                    authors.append(m["author"])
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "fmt": pd.Series(fmts, dtype="object"),
-                    "n_pages": pd.array(nps, dtype="Int32"),
-                    "text": pd.Series(texts, dtype="object"),
-                    "title": pd.Series(titles, dtype="object"),
-                    "author": pd.Series(authors, dtype="object"),
-                    "parse_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, DOCTEXT_SCHEMA)
+    return decode_leg(df, extract_document_text, DOCTEXT_SCHEMA)

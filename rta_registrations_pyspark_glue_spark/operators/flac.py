@@ -305,6 +305,8 @@ def decode_flac(content: bytes) -> tuple[np.ndarray, int]:
         last = hdr >> 7
         btype = hdr & 0x7F
         (size,) = struct.unpack(">I", b"\x00" + content[pos + 1:pos + 4])
+        if pos + 4 + size > len(content):
+            raise FlacError("metadata truncated")
         body = content[pos + 4:pos + 4 + size]
         if btype == 0:
             if size < 34:
@@ -369,6 +371,8 @@ def decode_flac(content: bytes) -> tuple[np.ndarray, int]:
         if bps is None:
             raise FlacError("reserved sample size code")
         br.align()
+        if br.pos >= len(content):
+            raise FlacError("truncated frame header CRC")
         hdr_crc = content[br.pos]
         if crc8(content[frame_start:br.pos]) != hdr_crc:
             raise FlacError("frame header CRC-8 mismatch")
@@ -403,6 +407,8 @@ def decode_flac(content: bytes) -> tuple[np.ndarray, int]:
             raise FlacError(f"reserved channel assignment {ch_code}")
 
         br.align()
+        if br.pos + 2 > len(content):
+            raise FlacError("truncated frame CRC")
         fcrc = (content[br.pos] << 8) | content[br.pos + 1]
         if crc16(content[frame_start:br.pos]) != fcrc:
             raise FlacError("frame CRC-16 mismatch")
@@ -413,6 +419,8 @@ def decode_flac(content: bytes) -> tuple[np.ndarray, int]:
         total += blocksize
         if info["total"] and total >= info["total"]:
             break
+    if total < info["total"]:
+        raise FlacError("stream truncated before its STREAMINFO sample count")
 
     n = info["total"] or total
     frames = np.array(channels_out, dtype=np.int64).T[:n]

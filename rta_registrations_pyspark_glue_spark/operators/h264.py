@@ -36,15 +36,13 @@ leg; the gate pins every recovered field against closed forms.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 from rta_registrations_pyspark_glue_spark.operators.mediameta import _mp4_boxes
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
 
 #: profile_idc -> name (ITU-T H.264 Annex A; the common subset)
 PROFILES = {
@@ -569,115 +567,42 @@ def synthesize_h264_docs(docs: DataFrame) -> DataFrame:
     the oracle pins)."""
     from rta_registrations_pyspark_glue_spark.operators import mp4 as mp4mod
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                width = 16 * (4 + d % 5) - 2 * (d % 3)
-                height = 16 * (3 + d % 4) - 2 * (d % 2)
-                profile = [66, 77, 100][d % 3]
-                sps = write_sps(width, height, profile_idc=profile,
-                                level_idc=30 + d % 3)
-                pps = write_pps()
-                n_samples = 2 + d % 3
+    def encode(d: int) -> bytes:
+        width = 16 * (4 + d % 5) - 2 * (d % 3)
+        height = 16 * (3 + d % 4) - 2 * (d % 2)
+        profile = [66, 77, 100][d % 3]
+        sps = write_sps(width, height, profile_idc=profile, level_idc=30 + d % 3)
+        pps = write_pps()
 
-                def slice_nal(ntype: int, s: int) -> bytes:
-                    size = 8 + (11 * d + 5 * s) % 16
-                    i = np.arange(size, dtype=np.int64)
-                    body = ((d + 7 * s + i) % 256).astype(np.uint8).tobytes()
-                    return bytes([ntype & 0x1F | 0x60]) + body
+        def slice_nal(ntype: int, s: int) -> bytes:
+            size = 8 + (11 * d + 5 * s) % 16
+            i = np.arange(size, dtype=np.int64)
+            body = ((d + 7 * s + i) % 256).astype(np.uint8).tobytes()
+            return bytes([ntype & 0x1F | 0x60]) + body
 
-                samples = []
-                for s in range(n_samples):
-                    nals = []
-                    if s == 0:
-                        nals += [sps, pps, slice_nal(5, s)]
-                    else:
-                        nals.append(slice_nal(6, s))
-                        nals.append(slice_nal(5 if s % 2 == 0 else 1, s))
-                    samples.append(
-                        b"".join(
-                            struct.pack(">I", len(n)) + n for n in nals
-                        )
-                    )
-                payloads.append(
-                    mp4mod.encode_mp4_av(
-                        samples, codec="avc1",
-                        frame_size=(height, width),
-                        avcc=build_avcc(sps, pps),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": pd.Series(payloads, dtype="object"),
-                }
-            )
+        samples = []
+        for s in range(2 + d % 3):
+            if s == 0:
+                nals = [sps, pps, slice_nal(5, s)]
+            else:
+                nals = [slice_nal(6, s), slice_nal(5 if s % 2 == 0 else 1, s)]
+            samples.append(b"".join(struct.pack(">I", len(n)) + n for n in nals))
+        return mp4mod.encode_mp4_av(
+            samples, codec="avc1", frame_size=(height, width),
+            avcc=build_avcc(sps, pps),
+        )
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(
-        op, "doc_id bigint, content binary"
-    )
+    return synth_leg(docs, encode)
+
+
+def _h264_features(content: bytes) -> dict:
+    info = extract_h264_track(content)
+    nc = info["nal_counts"]
+    return {**info, "n_idr": nc["idr"], "n_sei": nc["sei"]}
 
 
 def extract_h264_features(df: DataFrame) -> DataFrame:
     """Run the structural AVC walk over the binary column. Rows whose
     container/avcC/SPS fail to parse come back parse_ok=false with
     NULLs; the decode boundary is never hit (no slice is decoded)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "profile", "level_idc", "width", "height", "n_samples",
-                    "n_nals", "n_idr", "n_sei", "keyframes", "nal_bytes",
-                    "nal_byte_sum", "slice_byte_sum",
-                )
-            }
-            oks = []
-            for content in pdf["content"]:
-                try:
-                    info = extract_h264_track(bytes(content))
-                except (ValueError, NotImplementedError, TypeError):
-                    for v in cols.values():
-                        v.append(None)
-                    oks.append(False)
-                else:
-                    cols["profile"].append(info["profile"])
-                    cols["level_idc"].append(info["level_idc"])
-                    cols["width"].append(info["width"])
-                    cols["height"].append(info["height"])
-                    cols["n_samples"].append(info["n_samples"])
-                    cols["n_nals"].append(info["n_nals"])
-                    cols["n_idr"].append(info["nal_counts"]["idr"])
-                    cols["n_sei"].append(info["nal_counts"]["sei"])
-                    cols["keyframes"].append(info["keyframes"])
-                    cols["nal_bytes"].append(info["nal_bytes"])
-                    cols["nal_byte_sum"].append(info["nal_byte_sum"])
-                    cols["slice_byte_sum"].append(info["slice_byte_sum"])
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "profile": pd.Series(cols["profile"], dtype="object"),
-                    "level_idc": pd.array(cols["level_idc"], dtype="Int32"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "n_samples": pd.array(cols["n_samples"], dtype="Int32"),
-                    "n_nals": pd.array(cols["n_nals"], dtype="Int32"),
-                    "n_idr": pd.array(cols["n_idr"], dtype="Int32"),
-                    "n_sei": pd.array(cols["n_sei"], dtype="Int32"),
-                    "keyframes": pd.array(cols["keyframes"], dtype="Int32"),
-                    "nal_bytes": pd.array(cols["nal_bytes"], dtype="Int64"),
-                    "nal_byte_sum": pd.array(
-                        cols["nal_byte_sum"], dtype="Int64"
-                    ),
-                    "slice_byte_sum": pd.array(
-                        cols["slice_byte_sum"], dtype="Int64"
-                    ),
-                    "parse_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, H264_SCHEMA)
+    return decode_leg(df, _h264_features, H264_SCHEMA)

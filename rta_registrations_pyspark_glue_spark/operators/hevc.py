@@ -21,10 +21,8 @@ headers, IRAP keyframe detection)."""
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
@@ -34,8 +32,8 @@ from rta_registrations_pyspark_glue_spark.operators.h264 import (
     insert_emulation,
     strip_emulation,
 )
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 from rta_registrations_pyspark_glue_spark.operators.mediameta import _mp4_boxes
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
 
 #: general_profile_idc -> name (H.265 Annex A subset)
 PROFILES = {1: "Main", 2: "Main 10", 3: "Main Still Picture",
@@ -488,118 +486,49 @@ def synthesize_hevc_docs(docs: DataFrame) -> DataFrame:
     boundary; the STRUCTURE is what the oracle pins)."""
     from rta_registrations_pyspark_glue_spark.operators import mp4 as mp4mod
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                width = 8 * (8 + d % 5) - 2 * (d % 4)
-                height = 8 * (6 + d % 4) - 2 * (d % 2)
-                vps, pps = write_hevc_vps(), write_hevc_pps()
-                sps = write_hevc_sps(
-                    width, height, profile_idc=1 + d % 2,
-                    level_idc=90 + d % 4, tier=(d // 2) % 2,
-                )
+    def encode(d: int) -> bytes:
+        width = 8 * (8 + d % 5) - 2 * (d % 4)
+        height = 8 * (6 + d % 4) - 2 * (d % 2)
+        vps, pps = write_hevc_vps(), write_hevc_pps()
+        sps = write_hevc_sps(
+            width, height, profile_idc=1 + d % 2,
+            level_idc=90 + d % 4, tier=(d // 2) % 2,
+        )
 
-                def nal(ntype: int, s: int) -> bytes:
-                    size = 8 + (11 * d + 5 * s) % 16
-                    i = np.arange(size, dtype=np.int64)
-                    body = ((d + 7 * s + i) % 256).astype(np.uint8)
-                    return bytes([ntype << 1, 1]) + body.tobytes()
+        def nal(ntype: int, s: int) -> bytes:
+            size = 8 + (11 * d + 5 * s) % 16
+            i = np.arange(size, dtype=np.int64)
+            body = ((d + 7 * s + i) % 256).astype(np.uint8)
+            return bytes([ntype << 1, 1]) + body.tobytes()
 
-                n_samples = 2 + d % 3
-                samples = []
-                for s in range(n_samples):
-                    if s == 0:
-                        nals = [vps, sps, pps, nal(19, s)]
-                    else:
-                        nals = [nal(39, s), nal(21 if s % 2 == 0 else 1, s)]
-                    samples.append(
-                        b"".join(
-                            struct.pack(">I", len(n)) + n for n in nals
-                        )
-                    )
-                payloads.append(
-                    mp4mod.encode_mp4_av(
-                        samples, codec="hvc1",
-                        frame_size=(height, width),
-                        avcc=build_hvcc(vps, sps, pps),
-                        config_fourcc=b"hvcC",
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": pd.Series(payloads, dtype="object"),
-                }
-            )
+        samples = []
+        for s in range(2 + d % 3):
+            if s == 0:
+                nals = [vps, sps, pps, nal(19, s)]
+            else:
+                nals = [nal(39, s), nal(21 if s % 2 == 0 else 1, s)]
+            samples.append(b"".join(struct.pack(">I", len(n)) + n for n in nals))
+        return mp4mod.encode_mp4_av(
+            samples, codec="hvc1", frame_size=(height, width),
+            avcc=build_hvcc(vps, sps, pps), config_fourcc=b"hvcC",
+        )
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(
-        op, "doc_id bigint, content binary"
-    )
+    return synth_leg(docs, encode)
+
+
+def _hevc_features(content: bytes) -> dict:
+    info = extract_hevc_track(content)
+    nc = info["nal_counts"]
+    return {
+        **info,
+        "n_idr": nc["idr_w_radl"] + nc["idr_n_lp"],
+        "n_cra": nc["cra"],
+        "n_sei": nc["sei_prefix"] + nc["sei_suffix"],
+    }
 
 
 def extract_hevc_features(df: DataFrame) -> DataFrame:
     """Run the structural HEVC walk over the binary column. Rows whose
     container/hvcC/SPS fail to parse come back parse_ok=false with
     NULLs; the decode boundary is never hit (no CTU is decoded)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "profile", "tier", "level_idc", "width", "height",
-                    "n_samples", "n_nals", "n_idr", "n_cra", "n_sei",
-                    "keyframes", "slice_byte_sum",
-                )
-            }
-            oks = []
-            for content in pdf["content"]:
-                try:
-                    info = extract_hevc_track(bytes(content))
-                except (ValueError, NotImplementedError, TypeError):
-                    for v in cols.values():
-                        v.append(None)
-                    oks.append(False)
-                else:
-                    nc = info["nal_counts"]
-                    cols["profile"].append(info["profile"])
-                    cols["tier"].append(info["tier"])
-                    cols["level_idc"].append(info["level_idc"])
-                    cols["width"].append(info["width"])
-                    cols["height"].append(info["height"])
-                    cols["n_samples"].append(info["n_samples"])
-                    cols["n_nals"].append(info["n_nals"])
-                    cols["n_idr"].append(
-                        nc["idr_w_radl"] + nc["idr_n_lp"]
-                    )
-                    cols["n_cra"].append(nc["cra"])
-                    cols["n_sei"].append(
-                        nc["sei_prefix"] + nc["sei_suffix"]
-                    )
-                    cols["keyframes"].append(info["keyframes"])
-                    cols["slice_byte_sum"].append(info["slice_byte_sum"])
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "profile": pd.Series(cols["profile"], dtype="object"),
-                    "tier": pd.Series(cols["tier"], dtype="object"),
-                    "level_idc": pd.array(cols["level_idc"], dtype="Int32"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "n_samples": pd.array(cols["n_samples"], dtype="Int32"),
-                    "n_nals": pd.array(cols["n_nals"], dtype="Int32"),
-                    "n_idr": pd.array(cols["n_idr"], dtype="Int32"),
-                    "n_cra": pd.array(cols["n_cra"], dtype="Int32"),
-                    "n_sei": pd.array(cols["n_sei"], dtype="Int32"),
-                    "keyframes": pd.array(cols["keyframes"], dtype="Int32"),
-                    "slice_byte_sum": pd.array(
-                        cols["slice_byte_sum"], dtype="Int64"
-                    ),
-                    "parse_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, HEVC_SCHEMA)
+    return decode_leg(df, _hevc_features, HEVC_SCHEMA)

@@ -442,6 +442,8 @@ def decode_jpeg(content: bytes) -> "np.ndarray":
             raise ValueError("JPEG segment length truncated")
         seg_len = struct.unpack_from(">H", content, pos)[0]
         seg_end = pos + seg_len
+        if seg_end > len(content):
+            raise ValueError("JPEG segment truncated")
         body = content[pos + 2 : seg_end]
         if marker == 0xDB:  # DQT
             i = 0

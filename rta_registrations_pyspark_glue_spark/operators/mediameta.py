@@ -36,14 +36,12 @@ the batch, parallelism = partition parallelism, nothing driver-side.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 
 # ---------------------------------------------------------------------------
 # MP4 / ISO-BMFF
@@ -356,30 +354,70 @@ def _ogg_crc(data: bytes) -> int:
     return crc
 
 
-def _parse_ogg(buf: bytes) -> dict:
+def iter_ogg_pages(buf: bytes):
+    """Walk the pages of an Ogg stream, yielding ``(flags, granule,
+    segment table, body)`` per page. Each page's capture pattern,
+    length and CRC are checked, and the stream must end on a page
+    boundary (ValueError otherwise)."""
     pos = 0
-    codec = None
-    channels = None
-    rate = None
-    pre_skip = 0
-    last_granule = 0
     n = len(buf)
-    while pos + 27 <= n:
+    while pos < n:
+        if pos + 27 > n:
+            raise ValueError("truncated Ogg page header")
         if buf[pos : pos + 4] != b"OggS":
             raise ValueError(f"bad Ogg capture pattern at {pos}")
+        flags = buf[pos + 5]
         (granule,) = struct.unpack_from("<q", buf, pos + 6)
         (crc_stored,) = struct.unpack_from("<I", buf, pos + 22)
         n_segs = buf[pos + 26]
         seg_table = buf[pos + 27 : pos + 27 + n_segs]
-        body_len = sum(seg_table)
-        page_end = pos + 27 + n_segs + body_len
+        body_start = pos + 27 + n_segs
+        page_end = body_start + sum(seg_table)
         if page_end > n:
             raise ValueError("truncated Ogg page")
         page = bytearray(buf[pos:page_end])
         page[22:26] = b"\x00\x00\x00\x00"
         if _ogg_crc(bytes(page)) != crc_stored:
             raise ValueError("Ogg page CRC mismatch")
-        body = buf[pos + 27 + n_segs : page_end]
+        yield flags, granule, seg_table, buf[body_start:page_end]
+        pos = page_end
+
+
+def ogg_page(
+    serial: int, bodies: list[bytes], granule: int, seq: int, flags: int
+) -> bytes:
+    """One spec-shaped Ogg page: 255-run lacing of ``bodies`` into the
+    segment table, real CRC over the zero-CRC'd header+body — the
+    writer twin of iter_ogg_pages, shared by the Ogg fixture encoders."""
+    segs = bytearray()
+    for b in bodies:
+        n = len(b)
+        while n >= 255:
+            segs.append(255)
+            n -= 255
+        segs.append(n)
+    hdr = (
+        b"OggS\x00"
+        + bytes([flags])
+        + struct.pack("<q", granule)
+        + struct.pack("<I", serial)
+        + struct.pack("<I", seq)
+        + b"\x00\x00\x00\x00"
+        + bytes([len(segs)])
+        + bytes(segs)
+    )
+    body = b"".join(bodies)
+    crc = _ogg_crc(hdr + body)
+    return hdr[:22] + struct.pack("<I", crc) + hdr[26:] + body
+
+
+def _parse_ogg(buf: bytes) -> dict:
+    codec = None
+    channels = None
+    rate = None
+    pre_skip = 0
+    last_granule = 0
+    for _, granule, _, body in iter_ogg_pages(buf):
         if codec is None:
             if body[:8] == b"OpusHead":
                 codec = "opus"
@@ -392,7 +430,6 @@ def _parse_ogg(buf: bytes) -> dict:
                 (rate,) = struct.unpack_from("<I", body, 12)
         if granule >= 0:
             last_granule = max(last_granule, granule)
-        pos = page_end
     if codec is None:
         raise ValueError("Ogg stream with no recognized codec header")
     effective = last_granule - (pre_skip if codec == "opus" else 0)
@@ -637,30 +674,14 @@ def encode_ogg_opus(
 ) -> bytes:
     """OpusHead BOS page + one EOS data page whose granule encodes the
     duration; every page carries a REAL Ogg CRC."""
-
-    def page(body: bytes, granule: int, seq: int, flags: int) -> bytes:
-        segs = []
-        rem = len(body)
-        while rem >= 255:
-            segs.append(255)
-            rem -= 255
-        segs.append(rem)
-        hdr = (
-            b"OggS\x00" + bytes([flags]) + struct.pack("<q", granule)
-            + struct.pack("<I", 0x1234) + struct.pack("<I", seq)
-            + b"\x00\x00\x00\x00" + bytes([len(segs)]) + bytes(segs)
-        )
-        crc = _ogg_crc(hdr + body)
-        hdr = hdr[:22] + struct.pack("<I", crc) + hdr[26:]
-        return hdr + body
-
     opus_head = (
         b"OpusHead" + bytes([1, channels]) + struct.pack("<H", pre_skip)
         + struct.pack("<I", 48000) + struct.pack("<h", 0) + b"\x00"
     )
-    p0 = page(opus_head, 0, 0, 0x02)  # BOS
-    p1 = page(b"OpusTags\x00\x00\x00\x00\x00\x00\x00\x00", 0, 1, 0)
-    p2 = page(b"\x00", duration_samples + pre_skip, 2, 0x04)  # EOS
+    serial = 0x1234
+    p0 = ogg_page(serial, [opus_head], 0, 0, 0x02)  # BOS
+    p1 = ogg_page(serial, [b"OpusTags\x00\x00\x00\x00\x00\x00\x00\x00"], 0, 1, 0)
+    p2 = ogg_page(serial, [b"\x00"], duration_samples + pre_skip, 2, 0x04)  # EOS
     return p0 + p1 + p2
 
 
@@ -680,43 +701,27 @@ def synthesize_media_docs(docs: DataFrame) -> DataFrame:
     every metadata field a closed-form function of doc_id (see the
     'mediameta' oracle in plans/queries_similarity.py)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                r = d % 4
-                if r == 0:
-                    payloads.append(
-                        encode_minimal_mp4(
-                            duration_ms=(d * 7) % 5000 + 1000,
-                            width=320 + (d % 16) * 8,
-                            height=240 + (d % 9) * 16,
-                        )
-                    )
-                elif r == 1:
-                    payloads.append(
-                        encode_minimal_mkv(
-                            duration_ms=float((d * 11) % 9000 + 500),
-                            width=160 + (d % 32) * 4,
-                            height=120 + (d % 20) * 8,
-                            doc_type="webm" if d % 8 == 1 else "matroska",
-                        )
-                    )
-                elif r == 2:
-                    kbps = (64, 96, 128, 192)[(d // 4) % 4]
-                    payloads.append(
-                        encode_mp3_cbr(n_frames=10 + d % 20, bitrate_kbps=kbps)
-                    )
-                else:
-                    payloads.append(
-                        encode_ogg_opus(duration_samples=4800 + (d % 100) * 480)
-                    )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
+    def encode(d: int) -> bytes:
+        r = d % 4
+        if r == 0:
+            return encode_minimal_mp4(
+                duration_ms=(d * 7) % 5000 + 1000,
+                width=320 + (d % 16) * 8,
+                height=240 + (d % 9) * 16,
             )
+        if r == 1:
+            return encode_minimal_mkv(
+                duration_ms=float((d * 11) % 9000 + 500),
+                width=160 + (d % 32) * 4,
+                height=120 + (d % 20) * 8,
+                doc_type="webm" if d % 8 == 1 else "matroska",
+            )
+        if r == 2:
+            kbps = (64, 96, 128, 192)[(d // 4) % 4]
+            return encode_mp3_cbr(n_frames=10 + d % 20, bitrate_kbps=kbps)
+        return encode_ogg_opus(duration_samples=4800 + (d % 100) * 480)
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(docs, encode)
 
 
 def extract_media_meta_features(df: DataFrame) -> DataFrame:
@@ -724,46 +729,4 @@ def extract_media_meta_features(df: DataFrame) -> DataFrame:
     container parsers. Unrecognized/malformed rows come back
     parse_ok=false with NULL fields — filter-first semantics for a
     curation pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "container", "brand", "duration_ms", "width", "height",
-                    "video_codec", "audio_codec", "n_tracks", "sample_rate",
-                    "bitrate_kbps", "parse_ok",
-                )
-            }
-            for content in pdf["content"]:
-                try:
-                    m = extract_media_meta(bytes(content))
-                except (ValueError, NotImplementedError, TypeError):
-                    for k in cols:
-                        cols[k].append(None)
-                    cols["parse_ok"][-1] = False
-                else:
-                    for k in cols:
-                        if k != "parse_ok":
-                            cols[k].append(m.get(k))
-                    cols["parse_ok"].append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "container": pd.Series(cols["container"], dtype="object"),
-                    "brand": pd.Series(cols["brand"], dtype="object"),
-                    "duration_ms": pd.array(cols["duration_ms"], dtype="Int64"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "video_codec": pd.Series(cols["video_codec"], dtype="object"),
-                    "audio_codec": pd.Series(cols["audio_codec"], dtype="object"),
-                    "n_tracks": pd.array(cols["n_tracks"], dtype="Int32"),
-                    "sample_rate": pd.array(cols["sample_rate"], dtype="Int32"),
-                    "bitrate_kbps": pd.array(
-                        cols["bitrate_kbps"], dtype="Int32"
-                    ),
-                    "parse_ok": pd.array(cols["parse_ok"], dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, MEDIA_META_SCHEMA)
+    return decode_leg(df, extract_media_meta, MEDIA_META_SCHEMA)

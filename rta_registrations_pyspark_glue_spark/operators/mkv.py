@@ -32,16 +32,19 @@ parallel per file and touches only the clusters it reads.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 
-from rta_registrations_pyspark_glue_spark.operators.avi import _ensure_dht, _to_rgb
+from rta_registrations_pyspark_glue_spark.operators.avi import (
+    _ensure_dht,
+    _to_rgb,
+    av_fixture,
+    clip_features,
+)
 from rta_registrations_pyspark_glue_spark.operators.jpeg import (
     decode_jpeg,
     encode_baseline_jpeg,
@@ -839,94 +842,26 @@ def synthesize_mkv_docs(
     identical to the AVI/MP4 legs: a container bug is distinguishable
     from a decoder bug across all three."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                s = np.arange(64, dtype=np.int64)
-                aud = (((d * 3 + s) % 256 - 128) * 4).astype(np.int16)
-                if d % 2 == 0:
-                    frames = [
-                        np.full((size, size), (d * 37 + f * 11) % 256, np.uint8)
-                        for f in range(n_frames)
-                    ]
-                    payloads.append(
-                        encode_mkv_av(
-                            frames, codec="V_MJPEG", audio=aud,
-                            audio_codec="A_PCM/INT/LIT", audio_lacing="fixed",
-                        )
-                    )
-                else:
-                    p = np.arange(size * size, dtype=np.int64)[:, None]
-                    c = np.arange(3, dtype=np.int64)[None, :]
-                    frames = [
-                        ((d * 7 + f * 11 + p * 3 + c) % 256)
-                        .astype(np.uint8)
-                        .reshape(size, size, 3)
-                        for f in range(n_frames)
-                    ]
-                    payloads.append(
-                        encode_mkv_av(
-                            frames, codec="V_UNCOMPRESSED", audio=aud,
-                            audio_codec="A_PCM/INT/BIG",
-                            audio_lacing="xiph" if d % 4 == 1 else "ebml",
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": pd.Series(payloads, dtype="object"),
-                }
+    def encode(d: int) -> bytes:
+        frames, aud = av_fixture(d, size, n_frames)
+        if d % 2 == 0:
+            return encode_mkv_av(
+                frames, codec="V_MJPEG", audio=aud,
+                audio_codec="A_PCM/INT/LIT", audio_lacing="fixed",
             )
+        return encode_mkv_av(
+            frames, codec="V_UNCOMPRESSED", audio=aud,
+            audio_codec="A_PCM/INT/BIG",
+            audio_lacing="xiph" if d % 4 == 1 else "ebml",
+        )
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(docs, encode)
 
 
 def demux_mkv_features(df: DataFrame) -> DataFrame:
     """Demux + route the binary column with the REAL Matroska walker
     and emit container-level features (the avi/mp4 schema). Undecodable
     rows come back decode_ok=false with NULLs."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, nfs, codecs, psums, nas, asums, oks = (
-                [], [], [], [], [], [], [], [],
-            )
-            for content in pdf["content"]:
-                try:
-                    clip = demux_mkv(bytes(content))
-                except (ValueError, NotImplementedError, TypeError):
-                    for col in (ws, hs, nfs, codecs, psums, nas, asums):
-                        col.append(None)
-                    oks.append(False)
-                else:
-                    ws.append(clip["width"])
-                    hs.append(clip["height"])
-                    nfs.append(len(clip["frames"]))
-                    codecs.append(clip["video_codec"])
-                    psums.append(
-                        int(sum(int(f.astype(np.int64).sum()) for f in clip["frames"]))
-                    )
-                    if clip["audio"] is None:
-                        nas.append(None)
-                        asums.append(None)
-                    else:
-                        nas.append(int(clip["audio"].shape[0]))
-                        asums.append(int(clip["audio"].astype(np.int64).sum()))
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "n_frames": pd.array(nfs, dtype="Int32"),
-                    "codec": pd.Series(codecs, dtype="object"),
-                    "pix_sum": pd.array(psums, dtype="Int64"),
-                    "n_audio": pd.array(nas, dtype="Int64"),
-                    "audio_sum": pd.array(asums, dtype="Int64"),
-                    "decode_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, MKV_SCHEMA)
+    return decode_leg(
+        df, lambda b: clip_features(demux_mkv(b), "video_codec"), MKV_SCHEMA
+    )

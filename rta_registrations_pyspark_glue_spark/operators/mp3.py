@@ -52,14 +52,12 @@ embarrassingly parallel per file and touches only the bytes it reads.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 
 from rta_registrations_pyspark_glue_spark.operators.mediameta import _mp3_frame
 
@@ -437,32 +435,28 @@ def synthesize_mp3_docs(docs: DataFrame) -> DataFrame:
     - CRC frames when doc_id % 3 == 0; ID3v2 prefix when doc_id % 5 == 0
     """
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(
-                    encode_mp3_silent(
-                        2 + d % 3,
-                        bitrate_kbps=(128, 160, 192)[d % 3],
-                        sample_rate=(44100, 48000, 32000)[d % 3],
-                        channels=1 + d % 2,
-                        gg=lambda i, gr, ch, d=d: (d * 13 + 7 * i + 3 * gr + ch)
-                        % 256,
-                        sfc=lambda i, gr, ch, d=d: (d * 5 + i + gr + ch) % 16,
-                        protected=d % 3 == 0,
-                        id3_pad=64 if d % 5 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": pd.Series(payloads, dtype="object"),
-                }
-            )
+    def encode(d: int) -> bytes:
+        return encode_mp3_silent(
+            2 + d % 3,
+            bitrate_kbps=(128, 160, 192)[d % 3],
+            sample_rate=(44100, 48000, 32000)[d % 3],
+            channels=1 + d % 2,
+            gg=lambda i, gr, ch: (d * 13 + 7 * i + 3 * gr + ch) % 256,
+            sfc=lambda i, gr, ch: (d * 5 + i + gr + ch) % 16,
+            protected=d % 3 == 0,
+            id3_pad=64 if d % 5 == 0 else 0,
+        )
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(docs, encode)
+
+
+def _mp3_features(content: bytes) -> dict:
+    clip = decode_mp3(content)
+    return {
+        **clip,
+        "n_samples": int(clip["pcm"].shape[0]),
+        "pcm_sum": int(clip["pcm"].astype(np.int64).sum()),
+    }
 
 
 def decode_mp3_features(df: DataFrame) -> DataFrame:
@@ -470,40 +464,4 @@ def decode_mp3_features(df: DataFrame) -> DataFrame:
     frame/sample counts, channel mode, sample rate, the exact PCM sum
     (0 for silent fixtures — the exactness claim), and the side-info
     field sums that pin the 59-bit granule layout bit-for-bit."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            nfs, chs, srs, nss, psums, ggs, sfcs, oks = (
-                [], [], [], [], [], [], [], [],
-            )
-            for content in pdf["content"]:
-                try:
-                    clip = decode_mp3(bytes(content))
-                except (ValueError, NotImplementedError, struct.error):
-                    for col in (nfs, chs, srs, nss, psums, ggs, sfcs):
-                        col.append(None)
-                    oks.append(False)
-                else:
-                    nfs.append(clip["n_frames"])
-                    chs.append(clip["channels"])
-                    srs.append(clip["sample_rate"])
-                    nss.append(int(clip["pcm"].shape[0]))
-                    psums.append(int(clip["pcm"].astype(np.int64).sum()))
-                    ggs.append(clip["gg_sum"])
-                    sfcs.append(clip["sfc_sum"])
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_frames": pd.array(nfs, dtype="Int32"),
-                    "channels": pd.array(chs, dtype="Int32"),
-                    "sample_rate": pd.array(srs, dtype="Int32"),
-                    "n_samples": pd.array(nss, dtype="Int64"),
-                    "pcm_sum": pd.array(psums, dtype="Int64"),
-                    "gg_sum": pd.array(ggs, dtype="Int64"),
-                    "sfc_sum": pd.array(sfcs, dtype="Int64"),
-                    "decode_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, MP3_SCHEMA)
+    return decode_leg(df, _mp3_features, MP3_SCHEMA)

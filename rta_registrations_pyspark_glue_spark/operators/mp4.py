@@ -44,16 +44,19 @@ sample at a time beyond the decoded frames requested.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 
-from rta_registrations_pyspark_glue_spark.operators.avi import _ensure_dht, _to_rgb
+from rta_registrations_pyspark_glue_spark.operators.avi import (
+    _ensure_dht,
+    _to_rgb,
+    av_fixture,
+    clip_features,
+)
 from rta_registrations_pyspark_glue_spark.operators.jpeg import (
     decode_jpeg,
     encode_baseline_jpeg,
@@ -1023,45 +1026,13 @@ def synthesize_mp4_docs(
     % 256 − 128)·4`` — identical to the AVI leg, so a routing bug in
     either container is distinguishable from a decoder bug."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                s = np.arange(64, dtype=np.int64)
-                aud = (((d * 3 + s) % 256 - 128) * 4).astype(np.int16)
-                if d % 2 == 0:
-                    frames = [
-                        np.full((size, size), (d * 37 + f * 11) % 256, np.uint8)
-                        for f in range(n_frames)
-                    ]
-                    payloads.append(
-                        encode_mp4_av(
-                            frames, codec="jpeg", audio=aud, audio_codec="sowt"
-                        )
-                    )
-                else:
-                    p = np.arange(size * size, dtype=np.int64)[:, None]
-                    c = np.arange(3, dtype=np.int64)[None, :]
-                    frames = [
-                        ((d * 7 + f * 11 + p * 3 + c) % 256)
-                        .astype(np.uint8)
-                        .reshape(size, size, 3)
-                        for f in range(n_frames)
-                    ]
-                    payloads.append(
-                        encode_mp4_av(
-                            frames, codec="raw ", audio=aud, audio_codec="twos"
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": pd.Series(payloads, dtype="object"),
-                }
-            )
+    def encode(d: int) -> bytes:
+        frames, aud = av_fixture(d, size, n_frames)
+        if d % 2 == 0:
+            return encode_mp4_av(frames, codec="jpeg", audio=aud, audio_codec="sowt")
+        return encode_mp4_av(frames, codec="raw ", audio=aud, audio_codec="twos")
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(docs, encode)
 
 
 def demux_mp4_features(df: DataFrame) -> DataFrame:
@@ -1069,49 +1040,9 @@ def demux_mp4_features(df: DataFrame) -> DataFrame:
     and emit container-level features: dimensions, frame count, video
     codec, exact RGB pixel sum over all frames, audio sample count and
     sum. Undecodable rows come back decode_ok=false with NULLs."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, nfs, codecs, psums, nas, asums, oks = (
-                [], [], [], [], [], [], [], [],
-            )
-            for content in pdf["content"]:
-                try:
-                    clip = demux_mp4(bytes(content))
-                except (ValueError, NotImplementedError, TypeError, struct.error):
-                    for col in (ws, hs, nfs, codecs, psums, nas, asums):
-                        col.append(None)
-                    oks.append(False)
-                else:
-                    ws.append(clip["width"])
-                    hs.append(clip["height"])
-                    nfs.append(len(clip["frames"]))
-                    codecs.append(clip["video_codec"])
-                    psums.append(
-                        int(sum(int(f.astype(np.int64).sum()) for f in clip["frames"]))
-                    )
-                    if clip["audio"] is None:
-                        nas.append(None)
-                        asums.append(None)
-                    else:
-                        nas.append(int(clip["audio"].shape[0]))
-                        asums.append(int(clip["audio"].astype(np.int64).sum()))
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "n_frames": pd.array(nfs, dtype="Int32"),
-                    "codec": pd.Series(codecs, dtype="object"),
-                    "pix_sum": pd.array(psums, dtype="Int64"),
-                    "n_audio": pd.array(nas, dtype="Int64"),
-                    "audio_sum": pd.array(asums, dtype="Int64"),
-                    "decode_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, MP4_SCHEMA)
+    return decode_leg(
+        df, lambda b: clip_features(demux_mp4(b), "video_codec"), MP4_SCHEMA
+    )
 
 
 AAC_SCHEMA = (
@@ -1133,34 +1064,24 @@ def synthesize_aac_docs(docs: DataFrame) -> DataFrame:
     the structural walk must recover exactly. A one-frame JPEG video
     track rides along so the fixture stays a well-formed two-track MP4."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n_aus = 3 + d % 5
-                aus = []
-                for k in range(n_aus):
-                    size = 16 + (d * 13 + k * 7) % 32
-                    i = np.arange(size, dtype=np.int64)
-                    aus.append(((d + 3 * k + i) % 256).astype(np.uint8).tobytes())
-                frame = np.full((8, 8), (d * 37) % 256, np.uint8)
-                payloads.append(
-                    encode_mp4_av(
-                        [frame], codec="jpeg", audio=aus, audio_codec="mp4a",
-                        aac_freq_index=d % 13, aac_channels=1 + d % 2,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": pd.Series(payloads, dtype="object"),
-                }
-            )
+    def encode(d: int) -> bytes:
+        aus = []
+        for k in range(3 + d % 5):
+            size = 16 + (d * 13 + k * 7) % 32
+            i = np.arange(size, dtype=np.int64)
+            aus.append(((d + 3 * k + i) % 256).astype(np.uint8).tobytes())
+        frame = np.full((8, 8), (d * 37) % 256, np.uint8)
+        return encode_mp4_av(
+            [frame], codec="jpeg", audio=aus, audio_codec="mp4a",
+            aac_freq_index=d % 13, aac_channels=1 + d % 2,
+        )
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(
-        op, "doc_id bigint, content binary"
-    )
+    return synth_leg(docs, encode)
+
+
+def _aac_features(content: bytes) -> dict:
+    info = extract_aac_track(content)
+    return {**info, "n_aus": info["n_access_units"]}
 
 
 def extract_aac_features(df: DataFrame) -> DataFrame:
@@ -1169,51 +1090,4 @@ def extract_aac_features(df: DataFrame) -> DataFrame:
     whose container or descriptors fail to parse come back
     parse_ok=false with NULLs — the decode boundary itself is never hit
     here because no PCM is synthesized."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "profile", "sample_rate", "channels", "frame_length",
-                    "n_aus", "au_bytes", "au_byte_sum", "duration_samples",
-                )
-            }
-            oks = []
-            for content in pdf["content"]:
-                try:
-                    info = extract_aac_track(bytes(content))
-                except (ValueError, NotImplementedError, TypeError):
-                    for v in cols.values():
-                        v.append(None)
-                    oks.append(False)
-                else:
-                    cols["profile"].append(info["profile"])
-                    cols["sample_rate"].append(info["sample_rate"])
-                    cols["channels"].append(info["channels"])
-                    cols["frame_length"].append(info["frame_length"])
-                    cols["n_aus"].append(info["n_access_units"])
-                    cols["au_bytes"].append(info["au_bytes"])
-                    cols["au_byte_sum"].append(info["au_byte_sum"])
-                    cols["duration_samples"].append(info["duration_samples"])
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "profile": pd.Series(cols["profile"], dtype="object"),
-                    "sample_rate": pd.array(cols["sample_rate"], dtype="Int32"),
-                    "channels": pd.array(cols["channels"], dtype="Int32"),
-                    "frame_length": pd.array(
-                        cols["frame_length"], dtype="Int32"
-                    ),
-                    "n_aus": pd.array(cols["n_aus"], dtype="Int32"),
-                    "au_bytes": pd.array(cols["au_bytes"], dtype="Int64"),
-                    "au_byte_sum": pd.array(cols["au_byte_sum"], dtype="Int64"),
-                    "duration_samples": pd.array(
-                        cols["duration_samples"], dtype="Int64"
-                    ),
-                    "parse_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, AAC_SCHEMA)
+    return decode_leg(df, _aac_features, AAC_SCHEMA)

@@ -28,11 +28,12 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 from pyspark.sql import functions as F
 
 BINARY_DOC_SCHEMA = "doc_id bigint, content binary, media_type string, n_chars bigint"
@@ -289,19 +290,12 @@ def synthesize_ppm_docs(docs: DataFrame) -> DataFrame:
     independently cross-checking the real decoder's header parse and
     raster offset)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 4 + d % 5, 3 + d % 4
-                raster = bytes((d * 31 + i) % 256 for i in range(w * h * 3))
-                payloads.append(b"P6\n%d %d\n255\n" % (w, h) + raster)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
+    def encode(d: int) -> bytes:
+        w, h = 4 + d % 5, 3 + d % 4
+        raster = bytes((d * 31 + i) % 256 for i in range(w * h * 3))
+        return b"P6\n%d %d\n255\n" % (w, h) + raster
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(docs, encode)
 
 
 def synthesize_jpeg_docs(docs: DataFrame, size: int = 16) -> DataFrame:
@@ -321,30 +315,12 @@ def synthesize_jpeg_docs(docs: DataFrame, size: int = 16) -> DataFrame:
         encode_baseline_jpeg,
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def encode(v: int) -> bytes:
+        return encode_baseline_jpeg(np.full((size, size), v, dtype=np.uint8))
 
-        from rta_registrations_pyspark_glue_spark.operators.workercache import (
-            cache_put,
-            worker_cache,
-        )
-
-        cache = worker_cache(f"jpeg_synth_{size}")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                v = (int(doc_id) * 37) % 256
-                val = cache.get(v)
-                if val is None:
-                    val = cache_put(cache, v, encode_baseline_jpeg(
-                        np.full((size, size), v, dtype=np.uint8)
-                    ))
-                payloads.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
-
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(
+        docs, encode, key=lambda d: (d * 37) % 256, cache=f"jpeg_synth_{size}"
+    )
 
 
 def synthesize_gif_docs(docs: DataFrame, size: int = 16) -> DataFrame:
@@ -356,32 +332,16 @@ def synthesize_gif_docs(docs: DataFrame, size: int = 16) -> DataFrame:
     ANALYTIC: ``3·Σ_p (doc_id·5 + p) % 256``."""
     from rta_registrations_pyspark_glue_spark.operators.gif import encode_gif
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    pal = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
 
-        from rta_registrations_pyspark_glue_spark.operators.workercache import (
-            cache_put,
-            worker_cache,
-        )
+    def encode(base: int) -> bytes:
+        p = np.arange(size * size, dtype=np.int64)
+        idx = ((base + p) % 256).astype(np.uint8).reshape(size, size)
+        return encode_gif(idx, pal)
 
-        pal = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-        cache = worker_cache(f"gif_synth_{size}")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                base = (d * 5) % 256
-                val = cache.get(base)
-                if val is None:
-                    p = np.arange(size * size, dtype=np.int64)
-                    idx = ((base + p) % 256).astype(np.uint8).reshape(size, size)
-                    val = cache_put(cache, base, encode_gif(idx, pal))
-                payloads.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
-
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(
+        docs, encode, key=lambda d: (d * 5) % 256, cache=f"gif_synth_{size}"
+    )
 
 
 def synthesize_tiff_docs(docs: DataFrame, size: int = 16) -> DataFrame:
@@ -391,33 +351,14 @@ def synthesize_tiff_docs(docs: DataFrame, size: int = 16) -> DataFrame:
     pixel sum is ANALYTIC: Σ_p (doc_id·3 + p) % 256."""
     from rta_registrations_pyspark_glue_spark.operators.tiff import encode_tiff
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def encode(base: int) -> bytes:
+        p = np.arange(size * size, dtype=np.int64)
+        img = ((base + p) % 256).astype(np.uint8).reshape(size, size, 1)
+        return encode_tiff(img, compression=5, rows_per_strip=size // 2)
 
-        from rta_registrations_pyspark_glue_spark.operators.workercache import (
-            cache_put,
-            worker_cache,
-        )
-
-        cache = worker_cache(f"tiff_synth_{size}")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                base = (d * 3) % 256
-                val = cache.get(base)
-                if val is None:
-                    p = np.arange(size * size, dtype=np.int64)
-                    img = ((base + p) % 256).astype(np.uint8).reshape(size, size, 1)
-                    val = cache_put(cache, base, encode_tiff(
-                        img, compression=5, rows_per_strip=size // 2
-                    ))
-                payloads.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
-
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(
+        docs, encode, key=lambda d: (d * 3) % 256, cache=f"tiff_synth_{size}"
+    )
 
 
 def synthesize_webp_docs(docs: DataFrame, size: int = 16) -> DataFrame:
@@ -431,37 +372,15 @@ def synthesize_webp_docs(docs: DataFrame, size: int = 16) -> DataFrame:
     4th channel of 255s)."""
     from rta_registrations_pyspark_glue_spark.operators.webp import encode_webp
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def encode(base: int) -> bytes:
+        colors = (base + 40 * np.arange(4, dtype=np.int64)) % 256
+        p = np.arange(size * size, dtype=np.int64)
+        img = colors[p % 4].astype(np.uint8).repeat(3).reshape(size, size, 3)
+        return encode_webp(img, palette=True)
 
-        from rta_registrations_pyspark_glue_spark.operators.workercache import (
-            cache_put,
-            worker_cache,
-        )
-
-        cache = worker_cache(f"webp_synth_{size}")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                base = (d * 5) % 256
-                val = cache.get(base)
-                if val is None:
-                    colors = (base + 40 * np.arange(4, dtype=np.int64)) % 256
-                    p = np.arange(size * size, dtype=np.int64)
-                    img = (
-                        colors[p % 4]
-                        .astype(np.uint8)
-                        .repeat(3)
-                        .reshape(size, size, 3)
-                    )
-                    val = cache_put(cache, base, encode_webp(img, palette=True))
-                payloads.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
-
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(
+        docs, encode, key=lambda d: (d * 5) % 256, cache=f"webp_synth_{size}"
+    )
 
 
 def synthesize_vp8_docs(docs: DataFrame) -> DataFrame:
@@ -478,27 +397,12 @@ def synthesize_vp8_docs(docs: DataFrame) -> DataFrame:
         wrap_webp,
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rta_registrations_pyspark_glue_spark.operators.workercache import (
-            cache_put,
-            worker_cache,
-        )
-
-        cache = worker_cache("vp8_synth")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                key = (1 + d % 11, 1 + (d * 3) % 7, 1 + (d * 7) % 5)
-                val = cache.get(key)
-                if val is None:
-                    val = cache_put(cache, key, wrap_webp(synthesize_vp8_stream(40, *key)))
-                payloads.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
-
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(
+        docs,
+        lambda key: wrap_webp(synthesize_vp8_stream(40, *key)),
+        key=lambda d: (1 + d % 11, 1 + (d * 3) % 7, 1 + (d * 7) % 5),
+        cache="vp8_synth",
+    )
 
 
 def synthesize_png_docs(docs: DataFrame, size: int = 16) -> DataFrame:
@@ -512,33 +416,25 @@ def synthesize_png_docs(docs: DataFrame, size: int = 16) -> DataFrame:
     oracle computes it from the formula without decoding anything."""
     from rta_registrations_pyspark_glue_spark.operators.png import encode_png
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def encode(base: int) -> bytes:
+        rows = (base + 13 * np.arange(size, dtype=np.int64)) % 256
+        img = np.repeat(rows, size * 3).reshape(size, size, 3)
+        return encode_png(img.astype(np.uint8), filters=[0, 1, 2, 3, 4])
 
-        from rta_registrations_pyspark_glue_spark.operators.workercache import (
-            cache_put,
-            worker_cache,
-        )
+    return synth_leg(
+        docs, encode, key=lambda d: (d * 7) % 256, cache=f"png_synth_{size}"
+    )
 
-        cache = worker_cache(f"png_synth_{size}")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                base = (d * 7) % 256
-                val = cache.get(base)
-                if val is None:
-                    rows = (base + 13 * np.arange(size, dtype=np.int64)) % 256
-                    img = np.repeat(rows, size * 3).reshape(size, size, 3)
-                    val = cache_put(cache, base, encode_png(
-                        img.astype(np.uint8), filters=[0, 1, 2, 3, 4]
-                    ))
-                payloads.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+def image_features(content: bytes) -> dict:
+    """DECODE_SCHEMA features of one image payload (decode_image)."""
+    arr = decode_image(content)
+    return {
+        "width": arr.shape[1],
+        "height": arr.shape[0],
+        "channels": arr.shape[2],
+        "pixel_sum": int(arr.sum()),
+    }
 
 
 def decode_image_features(df: DataFrame) -> DataFrame:
@@ -548,36 +444,7 @@ def decode_image_features(df: DataFrame) -> DataFrame:
     with ``decode_ok=false`` and NULL features — a mixed-media corpus
     never kills the job. Arrow-batched mapInPandas; decode parallelism
     is partition parallelism."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, cs, sums, oks = [], [], [], [], []
-            for content in pdf["content"]:
-                try:
-                    arr = decode_image(bytes(content))
-                    hs.append(arr.shape[0])
-                    ws.append(arr.shape[1])
-                    cs.append(arr.shape[2])
-                    sums.append(int(arr.sum()))
-                    oks.append(True)
-                except (ValueError, NotImplementedError):
-                    ws.append(None)
-                    hs.append(None)
-                    cs.append(None)
-                    sums.append(None)
-                    oks.append(False)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "channels": pd.array(cs, dtype="Int32"),
-                    "pixel_sum": pd.array(sums, dtype="Int64"),
-                    "decode_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, DECODE_SCHEMA)
+    return decode_leg(df, image_features, DECODE_SCHEMA)
 
 
 EXIF_SCHEMA = (

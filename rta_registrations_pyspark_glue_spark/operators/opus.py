@@ -24,15 +24,16 @@ multimodal extension surface.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from rta_registrations_pyspark_glue_spark.operators.mediameta import _ogg_crc
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
+from rta_registrations_pyspark_glue_spark.operators.mediameta import (
+    iter_ogg_pages,
+    ogg_page,
+)
 
 #: config -> (mode, bandwidth, frame duration in 48 kHz samples) —
 #: RFC 6716 Table 2. Structural constants of the bitstream format.
@@ -323,38 +324,20 @@ def _ogg_packets(buf: bytes):
     """Reassemble the logical packet stream of a (single-stream) Ogg
     file: segments of 255 continue a packet, a segment < 255 ends it;
     a packet may span pages (continuation flag 0x01 on the next page).
-    Pages are CRC-checked with the real Ogg polynomial."""
-    pos = 0
-    n = len(buf)
+    Pages come from mediameta.iter_ogg_pages (CRC-checked)."""
     current = bytearray()
-    while pos + 27 <= n:
-        if buf[pos : pos + 4] != b"OggS":
-            raise ValueError(f"bad Ogg capture pattern at {pos}")
-        flags = buf[pos + 5]
-        (crc_stored,) = struct.unpack_from("<I", buf, pos + 22)
-        n_segs = buf[pos + 26]
-        seg_table = buf[pos + 27 : pos + 27 + n_segs]
-        body_start = pos + 27 + n_segs
-        body_len = sum(seg_table)
-        page_end = body_start + body_len
-        if page_end > n:
-            raise ValueError("truncated Ogg page")
-        page = bytearray(buf[pos:page_end])
-        page[22:26] = b"\x00\x00\x00\x00"
-        if _ogg_crc(bytes(page)) != crc_stored:
-            raise ValueError("Ogg page CRC mismatch")
+    for flags, _, seg_table, body in iter_ogg_pages(buf):
         if not (flags & 0x01) and current:
             # a fresh (non-continuation) page while a packet is open:
             # the spec says the open packet ended with the last page
             raise ValueError("unterminated Ogg packet before new page")
-        at = body_start
+        at = 0
         for seg in seg_table:
-            current += buf[at : at + seg]
+            current += body[at : at + seg]
             at += seg
             if seg < 255:
                 yield bytes(current)
                 current = bytearray()
-        pos = page_end
     if current:
         raise ValueError("Ogg stream ends mid-packet")
 
@@ -429,35 +412,6 @@ def _doc_packets(d: int) -> list[bytes]:
     return out
 
 
-def ogg_page(
-    serial: int, bodies: list[bytes], granule: int, seq: int, flags: int
-) -> bytes:
-    """One spec-shaped Ogg page: 255-run lacing of ``bodies`` into the
-    segment table, real CRC over the zero-CRC'd header+body. Shared by
-    the Opus and Vorbis fixture encoders (r13) — the exact writer twin
-    of _ogg_packets' reader."""
-    segs = bytearray()
-    for b in bodies:
-        n = len(b)
-        while n >= 255:
-            segs.append(255)
-            n -= 255
-        segs.append(n)
-    hdr = (
-        b"OggS\x00"
-        + bytes([flags])
-        + struct.pack("<q", granule)
-        + struct.pack("<I", serial)
-        + struct.pack("<I", seq)
-        + b"\x00\x00\x00\x00"
-        + bytes([len(segs)])
-        + bytes(segs)
-    )
-    body = b"".join(bodies)
-    crc = _ogg_crc(hdr + body)
-    return hdr[:22] + struct.pack("<I", crc) + hdr[26:] + body
-
-
 def encode_ogg_opus_packets(
     packets: list[bytes],
     channels: int = 1,
@@ -501,75 +455,20 @@ def synthesize_opus_docs(docs: DataFrame) -> DataFrame:
     doc id (channels ``1 + d%2``, pre-skip ``312 + d%100``, input rate
     rotating 48k/44.1k/16k/8k, Q7.8 gain ``(d%41) - 20``)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(
-                    encode_ogg_opus_packets(
-                        _doc_packets(d),
-                        channels=1 + d % 2,
-                        pre_skip=312 + d % 100,
-                        input_rate=[48000, 44100, 16000, 8000][d % 4],
-                        gain_q8=(d % 41) - 20,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": pd.Series(payloads, dtype="object"),
-                }
-            )
+    def encode(d: int) -> bytes:
+        return encode_ogg_opus_packets(
+            _doc_packets(d),
+            channels=1 + d % 2,
+            pre_skip=312 + d % 100,
+            input_rate=[48000, 44100, 16000, 8000][d % 4],
+            gain_q8=(d % 41) - 20,
+        )
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(
-        op, "doc_id bigint, content binary"
-    )
+    return synth_leg(docs, encode)
 
 
 def extract_opus_features(df: DataFrame) -> DataFrame:
     """Run the structural Ogg Opus walk over the binary column. Rows
     whose pages/head/packets fail to parse come back parse_ok=false
     with NULLs; no SILK/CELT frame is ever decoded."""
-    fields = (
-        "channels", "pre_skip", "input_sample_rate", "output_gain_q8",
-        "n_packets", "n_frames", "duration_samples", "frame_bytes",
-        "frame_byte_sum", "padding_bytes", "n_silk", "n_hybrid",
-        "n_celt", "stereo_packets",
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in fields}
-            oks = []
-            for content in pdf["content"]:
-                try:
-                    info = extract_ogg_opus(bytes(content))
-                except (ValueError, NotImplementedError, TypeError):
-                    for v in cols.values():
-                        v.append(None)
-                    oks.append(False)
-                else:
-                    for k in fields:
-                        cols[k].append(info[k])
-                    oks.append(True)
-            ints = {
-                k: pd.array(cols[k], dtype="Int32")
-                for k in fields
-                if k not in ("duration_samples", "frame_bytes",
-                             "frame_byte_sum")
-            }
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    **{
-                        k: ints.get(
-                            k, pd.array(cols[k], dtype="Int64")
-                        )
-                        for k in fields
-                    },
-                    "parse_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, OPUS_SCHEMA)
+    return decode_leg(df, extract_ogg_opus, OPUS_SCHEMA)

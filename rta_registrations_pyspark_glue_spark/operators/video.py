@@ -27,6 +27,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from rta_registrations_pyspark_glue_spark.operators.legs import (
+    DECODE_ERRORS,
+    decode_leg,
+    synth_leg,
+)
+
 _MAGIC = b"YUV4MPEG2"
 
 #: chroma tag → (x_div, y_div) subsampling divisors for Cb/Cr planes
@@ -151,39 +157,28 @@ def synthesize_y4m_docs(
     the decoded Y sum is ANALYTIC: ``Σ_f Σ_p (doc_id·13+f·7+p) % 256``
     and the DuckDB oracle computes it without parsing anything."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from rta_registrations_pyspark_glue_spark.operators.workercache import (
-            cache_put,
-            worker_cache,
-        )
+    def encode(base: int) -> bytes:
+        p = np.arange(size * size, dtype=np.int64)
+        c = np.full((size // 2, size // 2), 128, dtype=np.uint8)
+        return encode_y4m([
+            (((base + f * 7 + p) % 256).astype(np.uint8).reshape(size, size), c, c)
+            for f in range(n_frames)
+        ])
 
-        cache = worker_cache(f"y4m_synth_{size}_{n_frames}")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                base = (d * 13) % 256
-                val = cache.get(base)
-                if val is None:
-                    p = np.arange(size * size, dtype=np.int64)
-                    c = np.full((size // 2, size // 2), 128, dtype=np.uint8)
-                    frames = [
-                        (
-                            ((base + f * 7 + p) % 256)
-                            .astype(np.uint8)
-                            .reshape(size, size),
-                            c,
-                            c,
-                        )
-                        for f in range(n_frames)
-                    ]
-                    val = cache_put(cache, base, encode_y4m(frames))
-                payloads.append(val)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
-            )
+    return synth_leg(
+        docs, encode, key=lambda d: (d * 13) % 256,
+        cache=f"y4m_synth_{size}_{n_frames}",
+    )
 
-    return docs.select("doc_id").mapInPandas(op, "doc_id bigint, content binary")
+
+def _y4m_features(content: bytes) -> dict:
+    clip = decode_y4m(content)
+    return {
+        "width": clip["width"],
+        "height": clip["height"],
+        "n_frames": len(clip["frames"]),
+        "y_sum": sum(int(y.astype(np.int64).sum()) for y, _, _ in clip["frames"]),
+    }
 
 
 def decode_video_features(df: DataFrame) -> DataFrame:
@@ -191,44 +186,7 @@ def decode_video_features(df: DataFrame) -> DataFrame:
     clip-level features: dimensions, frame count, exact Y-plane sum
     over all frames. Undecodable rows come back decode_ok=false with
     NULL features."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, nfs, sums, oks = [], [], [], [], []
-            for content in pdf["content"]:
-                try:
-                    clip = decode_y4m(bytes(content))
-                except (ValueError, NotImplementedError, TypeError):
-                    ws.append(None)
-                    hs.append(None)
-                    nfs.append(None)
-                    sums.append(None)
-                    oks.append(False)
-                else:
-                    ws.append(clip["width"])
-                    hs.append(clip["height"])
-                    nfs.append(len(clip["frames"]))
-                    sums.append(
-                        int(
-                            sum(
-                                int(y.astype(np.int64).sum())
-                                for y, _, _ in clip["frames"]
-                            )
-                        )
-                    )
-                    oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "n_frames": pd.array(nfs, dtype="Int32"),
-                    "y_sum": pd.array(sums, dtype="Int64"),
-                    "decode_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select("doc_id", "content").mapInPandas(op, VIDEO_SCHEMA)
+    return decode_leg(df, _y4m_features, VIDEO_SCHEMA)
 
 
 def sample_video_frames(df: DataFrame, every_k: int = 2) -> DataFrame:
@@ -286,8 +244,8 @@ def sample_video_frames(df: DataFrame, every_k: int = 2) -> DataFrame:
                         clip = {"frames": frames}
                     else:
                         clip = decode_y4m(b)
-                except (ValueError, NotImplementedError, TypeError):
-                    continue  # TypeError: NULL content
+                except DECODE_ERRORS:
+                    continue
                 for i in range(0, len(clip["frames"]), every_k):
                     y = clip["frames"][i][0]
                     ids.append(doc_id)

@@ -20,8 +20,8 @@ Vorbis packs bits LSB-FIRST within bytes (spec §2) — the opposite of
 every other bit reader in this package (flac/h264/hevc are MSB-first),
 so the reader/writer pair lives here.
 
-Containers: Ogg Vorbis (the page/lacing machinery is shared with
-opus.py — _ogg_packets reads, ogg_page writes, real CRCs both ways)
+Containers: Ogg Vorbis (the page/lacing machinery is shared —
+opus._ogg_packets reads, mediameta.ogg_page writes, real CRCs both ways)
 and Matroska ``A_VORBIS`` (CodecPrivate is the Xiph lacing of the
 three header packets; block frames are raw audio packets — routed
 from mkv.extract_mkv_codec_config).
@@ -33,17 +33,11 @@ multimodal extension surface.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 
-from rta_registrations_pyspark_glue_spark.operators.opus import (
-    _ogg_packets,
-    ogg_page,
-)
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
+from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
+from rta_registrations_pyspark_glue_spark.operators.mediameta import ogg_page
+from rta_registrations_pyspark_glue_spark.operators.opus import _ogg_packets
 
 
 def _ilog(x: int) -> int:
@@ -611,7 +605,7 @@ def build_vorbis_audio_packet(
 def encode_ogg_vorbis_packets(
     ident: bytes, comment: bytes, setup: bytes, audio: list[bytes]
 ) -> bytes:
-    """Spec-shaped Ogg Vorbis writer reusing opus.ogg_page: the
+    """Spec-shaped Ogg Vorbis writer reusing mediameta.ogg_page: the
     identification header on its own BOS page, comment + setup laced
     onto one page (the layout §4.2.1 prescribes), audio packets two
     per page with cumulative-duration granules."""
@@ -733,63 +727,11 @@ def synthesize_vorbis_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, content): a deterministic Ogg Vorbis file per doc —
     the closed-form plan of _doc_plan inside real CRC'd pages with
     comment+setup sharing one laced page."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [_doc_ogg(int(doc_id)) for doc_id in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "content": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    return spread_ids(docs.select("doc_id")).mapInPandas(
-        op, "doc_id bigint, content binary"
-    )
+    return synth_leg(docs, _doc_ogg)
 
 
 def extract_vorbis_features(df: DataFrame) -> DataFrame:
     """Run the structural Ogg Vorbis walk over the binary column. Rows
     whose pages/headers/packets fail to parse come back parse_ok=false
     with NULLs; no MDCT or floor curve is ever synthesized."""
-    fields = (
-        "channels", "sample_rate", "bitrate_nominal", "blocksize_0",
-        "blocksize_1", "codebook_count", "codebook_entries_total",
-        "floor_count", "residue_count", "mapping_count", "mode_count",
-        "n_audio_packets", "n_long_blocks", "n_short_blocks",
-        "audio_bytes", "duration_samples",
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in fields}
-            oks = []
-            for content in pdf["content"]:
-                try:
-                    info = extract_ogg_vorbis(bytes(content))
-                except (ValueError, NotImplementedError, TypeError):
-                    for v in cols.values():
-                        v.append(None)
-                    oks.append(False)
-                else:
-                    for k in fields:
-                        cols[k].append(info[k])
-                    oks.append(True)
-            ints = {
-                k: pd.array(cols[k], dtype="Int32")
-                for k in fields
-                if k not in ("audio_bytes", "duration_samples")
-            }
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    **{
-                        k: ints.get(k, pd.array(cols[k], dtype="Int64"))
-                        for k in fields
-                    },
-                    "parse_ok": oks,
-                }
-            )
-
-    return df.mapInPandas(op, VORBIS_SCHEMA)
+    return decode_leg(df, extract_ogg_vorbis, VORBIS_SCHEMA)

@@ -43,7 +43,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from rta_registrations_pyspark_glue_spark.operators.spread import spread_ids
+from rta_registrations_pyspark_glue_spark.operators.legs import DECODE_ERRORS, synth_leg
 
 # ---------------------------------------------------------------------------
 # WARC container
@@ -358,39 +358,26 @@ def synthesize_warc_docs(docs: DataFrame, pages_per_doc: int = 2) -> DataFrame:
     the transfer shape: d %% 3 == 0 plain, == 1 chunked, == 2 gzip
     Content-Encoding — all three HTTP paths run inside the gate."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                pages = []
-                for p in range(pages_per_doc):
-                    links = "".join(
-                        f'<a href="/l{i}">link {i}</a> '
-                        for i in range((d + p) % 3)
-                    )
-                    html = (
-                        f"<html><head><title>Page {d}-{p}</title>"
-                        f"<script>var x = {d};</script></head>"
-                        f"<body><h1>Doc {d} page {p}</h1>"
-                        f"<p>Gamma {(d * 19 + p) % 997} text body.</p>"
-                        f"<div>{links}</div>"
-                        f"</body></html>"
-                    )
-                    pages.append((f"http://example.com/{d}/{p}", html))
-                payloads.append(
-                    encode_warc(
-                        pages,
-                        gzip_records=True,
-                        chunked=(d % 3 == 1),
-                        content_gzip=(d % 3 == 2),
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "content": pd.Series(payloads, dtype="object")}
+    def encode(d: int) -> bytes:
+        pages = []
+        for p in range(pages_per_doc):
+            links = "".join(
+                f'<a href="/l{i}">link {i}</a> ' for i in range((d + p) % 3)
             )
+            html = (
+                f"<html><head><title>Page {d}-{p}</title>"
+                f"<script>var x = {d};</script></head>"
+                f"<body><h1>Doc {d} page {p}</h1>"
+                f"<p>Gamma {(d * 19 + p) % 997} text body.</p>"
+                f"<div>{links}</div>"
+                f"</body></html>"
+            )
+            pages.append((f"http://example.com/{d}/{p}", html))
+        return encode_warc(
+            pages, gzip_records=True, chunked=(d % 3 == 1), content_gzip=(d % 3 == 2)
+        )
 
-    return spread_ids(docs.select("doc_id")).mapInPandas(op, "doc_id bigint, content binary")
+    return synth_leg(docs, encode)
 
 
 def extract_warc_features(df: DataFrame) -> DataFrame:
@@ -416,7 +403,7 @@ def extract_warc_features(df: DataFrame) -> DataFrame:
                             decode_html_bytes(body, h.get("content-type"))
                         )
                         rows.append((rec["url"], status, got))
-                except (ValueError, NotImplementedError, TypeError, OSError):
+                except DECODE_ERRORS:
                     ids.append(doc_id)
                     idxs.append(None)
                     urls.append(None)

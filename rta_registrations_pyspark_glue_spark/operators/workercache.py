@@ -1,33 +1,25 @@
 """Worker-process-persistent fixture caches for mapInPandas ops.
 
-The multimodal/codec synth legs memoize their deterministic fixture
-payloads (a few hundred to a few thousand distinct byte strings, keyed
-by small modular bases of doc_id). Through round 12 those memos were
-either local dicts inside the op (rebuilt per task) or module-level
-dicts referenced by closure — and the closure form silently never
-worked across tasks: cloudpickle serializes a nested function's
-referenced globals BY VALUE, so every task deserialized a *copy* of the
-driver's (empty) dict instead of sharing the worker module's one.
-Measured on the sf0.1 bench: the msadpcm leg re-encoded its ~1k unique
-fixtures on every invocation (2.2s warm) even though Python workers are
-reused across jobs (same PIDs) and the encode is fully memoizable.
+``legs.synth_leg`` is the one caller: a synth leg that passes a
+``cache`` name memoizes its deterministic fixture payloads (a few
+hundred to a few thousand distinct byte strings, keyed by small modular
+bases of doc_id) in the dict registered under that name.
 
-The fix is the pattern the optimization guide (§4.5) prescribes for
-heavyweight per-worker state: resolve the cache **at call time through
-an import executed inside the op**, so a reused worker
-(``spark.python.worker.reuse=true``, the default) hands every task the
-same process-level dict. Fixture bytes are pure functions of their key,
-so sharing across tasks/jobs is semantics-free; each bench/oracle
-process still starts cold (fresh workers), so nothing is cached across
-runs.
+The dict is resolved **at call time through an import executed inside
+the op**, so a reused Python worker (``spark.python.worker.reuse=true``,
+the default) hands every task the same process-level dict. A
+module-level dict referenced by closure would not work: cloudpickle
+serializes a nested function's referenced globals by value, so every
+task would get its own empty copy. Fixture bytes are pure functions of
+their key, so sharing across tasks and jobs is semantics-free; each
+bench or oracle process still starts cold (fresh workers), so nothing
+is cached across runs.
 
 ``cap`` bounds memory in long-lived workers: at the cap the cache stops
-admitting new entries (callers fall back to computing the payload —
-correct, just unmemoized). r14 (ADVICE r13): every synth site now
-actually routes its writes through ``cache_put`` (they previously wrote
-``cache[key] = ...`` directly, leaving the documented cap unenforced).
-The synth key spaces are all modular (≤4096 for most; flac's joint key
-space is ~56k per worker), at or below the default cap.
+admitting new entries (the leg falls back to computing the payload —
+correct, just unmemoized). The synth key spaces are all modular (≤4096
+for most; flac's joint key space is ~56k per worker), at or below the
+default cap.
 """
 
 from __future__ import annotations
