@@ -1045,6 +1045,16 @@ def encode_minimal_pdf(
     return bytes(buf)
 
 
+def _zip_entry(name: str):
+    """A deflated zip entry dated 1980-01-01: ``writestr`` with a bare
+    name stamps the wall clock, so fixture bytes would vary by run."""
+    import zipfile
+
+    info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+    info.compress_type = zipfile.ZIP_DEFLATED
+    return info
+
+
 def encode_minimal_docx(
     paragraphs: list[str], *, title: str | None = None,
     author: str | None = None,
@@ -1090,10 +1100,10 @@ def encode_minimal_docx(
     )
     out = io.BytesIO()
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("[Content_Types].xml", ctypes)
-        zf.writestr("_rels/.rels", rels)
-        zf.writestr("word/document.xml", document)
-        zf.writestr("docProps/core.xml", core)
+        zf.writestr(_zip_entry("[Content_Types].xml"), ctypes)
+        zf.writestr(_zip_entry("_rels/.rels"), rels)
+        zf.writestr(_zip_entry("word/document.xml"), document)
+        zf.writestr(_zip_entry("docProps/core.xml"), core)
     return out.getvalue()
 
 
@@ -1136,11 +1146,11 @@ def encode_minimal_epub(
             zipfile.ZipInfo("mimetype"), "application/epub+zip",
             zipfile.ZIP_STORED,
         )
-        zf.writestr("META-INF/container.xml", container)
-        zf.writestr("OEBPS/content.opf", opf)
+        zf.writestr(_zip_entry("META-INF/container.xml"), container)
+        zf.writestr(_zip_entry("OEBPS/content.opf"), opf)
         for i, ch in enumerate(chapters):
             zf.writestr(
-                f"OEBPS/chap{i}.xhtml",
+                _zip_entry(f"OEBPS/chap{i}.xhtml"),
                 '<?xml version="1.0" encoding="utf-8"?>'
                 '<html xmlns="http://www.w3.org/1999/xhtml"><head>'
                 f"<title>c{i}</title></head><body><p>{escape(ch)}</p>"

@@ -36,154 +36,17 @@ import struct
 
 import numpy as np
 
+from rta_registrations_pyspark_glue_spark.operators.bitio import (
+    MsbReader,
+    MsbWriter,
+    Truncated,
+    crc8,
+    crc16,
+)
+
 
 class FlacError(ValueError):
     pass
-
-
-# ----------------------------------------------------------- bit io
-
-
-class BitReader:
-    """MSB-first bit reader over bytes. r14: ``read(n)`` gathers just
-    the ≤(n//8)+2 bytes the value spans in ONE int.from_bytes — the old
-    per-bit byte-indexing loop was the FLAC decoder's hottest profile
-    line (≈400 read calls per frame) — and ``unary()`` skips zero bits
-    a byte at a time via bit_length. O(1) per read regardless of file
-    size (a whole-buffer int view was tried first and is quadratic on
-    multi-megabyte streams). ``pos``/``bit`` keep their original
-    byte/bit meaning — decode_flac reads and assigns ``pos`` at
-    BYTE-ALIGNED points for CRC slicing (the setter assumes alignment,
-    which every call site guarantees via ``align()``)."""
-
-    __slots__ = ("buf", "_nbits", "_bp")
-
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf = buf
-        self._nbits = 8 * len(buf)
-        self._bp = pos * 8
-
-    @property
-    def pos(self) -> int:
-        return self._bp >> 3
-
-    @pos.setter
-    def pos(self, v: int) -> None:
-        self._bp = v * 8
-
-    @property
-    def bit(self) -> int:
-        return self._bp & 7
-
-    def read(self, n: int) -> int:
-        bp = self._bp
-        if bp + n > self._nbits:
-            raise FlacError("bitstream truncated")
-        self._bp = bp + n
-        start = bp >> 3
-        end = (bp + n + 7) >> 3
-        chunk = int.from_bytes(self.buf[start:end], "big")
-        return (chunk >> (8 * (end - start) - (bp - 8 * start) - n)) & (
-            (1 << n) - 1
-        )
-
-    def read_signed(self, n: int) -> int:
-        v = self.read(n)
-        return v - (1 << n) if v >> (n - 1) else v
-
-    def unary(self) -> int:
-        buf = self.buf
-        bp = self._bp
-        nbits = self._nbits
-        q = 0
-        while True:
-            if bp >= nbits:
-                raise FlacError("bitstream truncated")
-            # unread bits of the current byte are its LOW (8 - bit) bits
-            window = buf[bp >> 3] & ((1 << (8 - (bp & 7))) - 1)
-            if window:
-                zeros = (8 - (bp & 7)) - window.bit_length()
-                self._bp = bp + zeros + 1
-                return q + zeros
-            skipped = 8 - (bp & 7)
-            q += skipped
-            bp += skipped
-
-    def align(self):
-        self._bp = (self._bp + 7) & ~7
-
-
-class BitWriter:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int):
-        v &= (1 << n) - 1
-        self.acc = (self.acc << n) | v
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.out.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_unary(self, q: int):
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)
-
-    def align(self):
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0
-        return bytes(self.out)
-
-
-# --------------------------------------------------------------- crc
-
-
-def _crc_tables():
-    t8, t16 = [], []
-    for b in range(256):
-        c = b
-        for _ in range(8):
-            c = ((c << 1) ^ 0x07) & 0xFF if c & 0x80 else (c << 1) & 0xFF
-        t8.append(c)
-        c = b << 8
-        for _ in range(8):
-            c = ((c << 1) ^ 0x8005) & 0xFFFF if c & 0x8000 else (c << 1) & 0xFFFF
-        t16.append(c)
-    return t8, t16
-
-
-#: table-driven CRCs (r14): the bit-at-a-time loops cost ~0.2 ms per
-#: decoded frame; the 256-entry tables are computed once per process
-#: and produce identical values (standard CRC table construction).
-_CRC8_TABLE, _CRC16_TABLE = _crc_tables()
-
-
-def crc8(data: bytes) -> int:
-    """CRC-8, polynomial 0x07, init 0 (the FLAC frame-header CRC)."""
-    crc = 0
-    table = _CRC8_TABLE
-    for b in data:
-        crc = table[crc ^ b]
-    return crc
-
-
-def crc16(data: bytes) -> int:
-    """CRC-16, polynomial 0x8005, init 0 (the FLAC frame CRC)."""
-    crc = 0
-    table = _CRC16_TABLE
-    for b in data:
-        crc = ((crc << 8) & 0xFFFF) ^ table[((crc >> 8) ^ b) & 0xFF]
-    return crc
 
 
 # ----------------------------------------------------------- decoder
@@ -199,7 +62,7 @@ _SIZE_CODES = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 _FIXED_COEFS = {0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1], 4: [4, -6, 4, -1]}
 
 
-def _read_utf8_number(br: BitReader) -> int:
+def _read_utf8_number(br: MsbReader) -> int:
     """FLAC's UTF-8-style variable-length frame/sample number (up to
     7 bytes / 36 significant bits)."""
     b0 = br.read(8)
@@ -221,7 +84,7 @@ def _read_utf8_number(br: BitReader) -> int:
     return v
 
 
-def _read_residual(br: BitReader, blocksize: int, pred_order: int):
+def _read_residual(br: MsbReader, blocksize: int, pred_order: int):
     method = br.read(2)
     if method > 1:
         raise FlacError(f"reserved residual method {method}")
@@ -248,7 +111,7 @@ def _read_residual(br: BitReader, blocksize: int, pred_order: int):
     return out
 
 
-def _read_subframe(br: BitReader, blocksize: int, bps: int):
+def _read_subframe(br: MsbReader, blocksize: int, bps: int):
     if br.read(1):
         raise FlacError("subframe pad bit set")
     t = br.read(6)
@@ -293,7 +156,14 @@ def _read_subframe(br: BitReader, blocksize: int, bps: int):
 def decode_flac(content: bytes) -> tuple[np.ndarray, int]:
     """Decode a FLAC stream to (frames int32 array of shape
     (n_samples, channels), sample_rate). Verifies every frame's
-    header CRC-8 and footer CRC-16."""
+    header CRC-8 and footer CRC-16. Malformed input raises FlacError."""
+    try:
+        return _decode_flac(content)
+    except Truncated as e:
+        raise FlacError(str(e)) from None
+
+
+def _decode_flac(content: bytes) -> tuple[np.ndarray, int]:
     if content[:4] != b"fLaC":
         raise FlacError("not a FLAC stream (no fLaC marker)")
     pos = 4
@@ -330,7 +200,7 @@ def decode_flac(content: bytes) -> tuple[np.ndarray, int]:
     # ONE reader for the whole stream, repositioned per frame by
     # assigning the byte-aligned `pos`; each read() slices only the bytes
     # it spans, so seeking costs nothing.
-    br = BitReader(content, pos)
+    br = MsbReader(content, pos)
     while pos < len(content):
         frame_start = pos
         br.pos = pos
@@ -371,12 +241,8 @@ def decode_flac(content: bytes) -> tuple[np.ndarray, int]:
         if bps is None:
             raise FlacError("reserved sample size code")
         br.align()
-        if br.pos >= len(content):
-            raise FlacError("truncated frame header CRC")
-        hdr_crc = content[br.pos]
-        if crc8(content[frame_start:br.pos]) != hdr_crc:
+        if crc8(content[frame_start:br.pos]) != br.read(8):
             raise FlacError("frame header CRC-8 mismatch")
-        br.pos += 1
 
         if ch_code < 8:
             nch = ch_code + 1
@@ -430,7 +296,7 @@ def decode_flac(content: bytes) -> tuple[np.ndarray, int]:
 # ---------------------------------------------------- fixture encoder
 
 
-def _write_utf8_number(bw: BitWriter, v: int):
+def _write_utf8_number(bw: MsbWriter, v: int):
     if v < 0x80:
         bw.write(v, 8)
         return
@@ -445,7 +311,7 @@ def _write_utf8_number(bw: BitWriter, v: int):
         bw.write(0b10 << 6 | ((v >> (6 * i)) & 0x3F), 8)
 
 
-def _write_residual(bw: BitWriter, resid: list[int], pred_order: int,
+def _write_residual(bw: MsbWriter, resid: list[int], pred_order: int,
                     blocksize: int, param: int, partition_order: int = 0,
                     escape_raw: int | None = None):
     bw.write(0, 2)  # rice method 0 (4-bit params)
@@ -469,7 +335,7 @@ def _write_residual(bw: BitWriter, resid: list[int], pred_order: int,
         idx += n
 
 
-def _write_subframe(bw: BitWriter, samples: list[int], bps: int,
+def _write_subframe(bw: MsbWriter, samples: list[int], bps: int,
                     mode: str, rice_param: int = 4,
                     partition_order: int = 0,
                     lpc: tuple[list[int], int, int] | None = None,
@@ -564,7 +430,7 @@ def encode_flac(frames: np.ndarray, rate: int, bps: int = 16,
     for start in range(0, n, blocksize):
         block = frames[start:start + blocksize]
         bs = block.shape[0]
-        bw = BitWriter()
+        bw = MsbWriter()
         bw.write(0b11111111111110, 14)
         bw.write(0, 1)
         bw.write(0, 1)  # fixed blocking strategy

@@ -34,6 +34,8 @@ import struct
 
 import numpy as np
 
+from rta_registrations_pyspark_glue_spark.operators.bitio import LsbWriter
+
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 
 
@@ -110,27 +112,15 @@ def lzw_encode(min_code_size: int, indices: bytes) -> bytes:
     code_size = min_code_size + 1
     table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
     next_code = end + 1
-    bits = bytearray()
-    acc = 0
-    nacc = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nacc
-        acc |= code << nacc
-        nacc += code_size
-        while nacc >= 8:
-            bits.append(acc & 0xFF)
-            acc >>= 8
-            nacc -= 8
-
-    emit(clear)
+    bits = LsbWriter()
+    bits.write(clear, code_size)
     w = b""
     for k in indices:
         wk = w + bytes([k])
         if wk in table:
             w = wk
             continue
-        emit(table[w])
+        bits.write(table[w], code_size)
         if next_code < 4096:
             table[wk] = next_code
             next_code += 1
@@ -141,11 +131,9 @@ def lzw_encode(min_code_size: int, indices: bytes) -> bytes:
                 code_size += 1
         w = bytes([k])
     if w:
-        emit(table[w])
-    emit(end)
-    if nacc:
-        bits.append(acc & 0xFF)
-    return bytes(bits)
+        bits.write(table[w], code_size)
+    bits.write(end, code_size)
+    return bits.getvalue()
 
 
 # ------------------------------------------------------------------ decode

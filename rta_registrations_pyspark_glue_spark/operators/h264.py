@@ -16,7 +16,7 @@ Implemented here, all pure Python over bytes:
 
 - RBSP handling: emulation-prevention-byte strip (00 00 03 -> 00 00)
   and insertion, both directions pinned by roundtrip tests;
-- MSB-first bit reader/writer with ue(v)/se(v) Exp-Golomb;
+- ue(v)/se(v) Exp-Golomb fields through bitio's MSB-first pair;
 - ``parse_sps`` / ``write_sps``: profile/constraint/level, the
   high-profile chroma/bit-depth/scaling-list branch, all three
   pic_order_cnt_type arms, frame cropping with the chroma-dependent
@@ -41,6 +41,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
+from rta_registrations_pyspark_glue_spark.operators.bitio import MsbReader, MsbWriter
 from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 from rta_registrations_pyspark_glue_spark.operators.mediameta import _mp4_boxes
 
@@ -93,67 +94,7 @@ def insert_emulation(rbsp: bytes) -> bytes:
     return bytes(out)
 
 
-class BitReader:
-    """MSB-first bit cursor with Exp-Golomb (H.264 §9.1)."""
-
-    def __init__(self, data: bytes):
-        self.data, self.pos = data, 0
-
-    def u(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte = self.data[self.pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
-
-    def ue(self) -> int:
-        zeros = 0
-        while self.u(1) == 0:
-            zeros += 1
-            if zeros > 32:
-                raise ValueError("Exp-Golomb run over 32 zeros")
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
-
-
-class BitWriter:
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def u(self, val: int, n: int) -> "BitWriter":
-        for i in range(n - 1, -1, -1):
-            self.bits.append((val >> i) & 1)
-        return self
-
-    def ue(self, val: int) -> "BitWriter":
-        code = val + 1
-        n = code.bit_length()
-        self.u(0, n - 1)
-        self.u(code, n)
-        return self
-
-    def se(self, val: int) -> "BitWriter":
-        return self.ue(2 * val - 1 if val > 0 else -2 * val)
-
-    def rbsp(self) -> bytes:
-        """Close with the rbsp_stop_one_bit + alignment zeros."""
-        bits = self.bits + [1]
-        while len(bits) % 8:
-            bits.append(0)
-        out = bytearray()
-        for i in range(0, len(bits), 8):
-            byte = 0
-            for b in bits[i : i + 8]:
-                byte = (byte << 1) | b
-            out.append(byte)
-        return bytes(out)
-
-
-def _skip_scaling_list(r: BitReader, size: int) -> None:
+def _skip_scaling_list(r: MsbReader, size: int) -> None:
     """Advance past one scaling_list() (§7.3.2.1.1.1) — the VALUES are
     codec data this module never interprets; only the cursor math is
     structural."""
@@ -174,17 +115,10 @@ def parse_sps(nal: bytes) -> dict:
         raise ValueError("empty NAL")
     if nal[0] & 0x1F != 7:
         raise ValueError(f"not an SPS NAL (type {nal[0] & 0x1F})")
-    r = BitReader(strip_emulation(nal[1:]))
-    try:
-        return _parse_sps_bits(r)
-    except IndexError:
-        raise ValueError("truncated SPS") from None
-
-
-def _parse_sps_bits(r: BitReader) -> dict:
-    profile_idc = r.u(8)
-    constraints = r.u(8)
-    level_idc = r.u(8)
+    r = MsbReader(strip_emulation(nal[1:]))
+    profile_idc = r.read(8)
+    constraints = r.read(8)
+    level_idc = r.read(8)
     sps_id = r.ue()
     chroma_format_idc = 1
     separate_colour_plane = 0
@@ -192,21 +126,21 @@ def _parse_sps_bits(r: BitReader) -> dict:
     if profile_idc in _HIGH_PROFILES:
         chroma_format_idc = r.ue()
         if chroma_format_idc == 3:
-            separate_colour_plane = r.u(1)
+            separate_colour_plane = r.read(1)
         bit_depth_luma = 8 + r.ue()
         bit_depth_chroma = 8 + r.ue()
-        r.u(1)  # qpprime_y_zero_transform_bypass
-        if r.u(1):  # seq_scaling_matrix_present
+        r.read(1)  # qpprime_y_zero_transform_bypass
+        if r.read(1):  # seq_scaling_matrix_present
             n_lists = 8 if chroma_format_idc != 3 else 12
             for i in range(n_lists):
-                if r.u(1):
+                if r.read(1):
                     _skip_scaling_list(r, 16 if i < 6 else 64)
     log2_max_frame_num = 4 + r.ue()
     poc_type = r.ue()
     if poc_type == 0:
         r.ue()  # log2_max_pic_order_cnt_lsb_minus4
     elif poc_type == 1:
-        r.u(1)
+        r.read(1)
         r.se()
         r.se()
         for _ in range(r.ue()):
@@ -214,16 +148,16 @@ def _parse_sps_bits(r: BitReader) -> dict:
     elif poc_type > 2:
         raise ValueError(f"pic_order_cnt_type {poc_type}")
     max_num_ref_frames = r.ue()
-    r.u(1)  # gaps_in_frame_num_value_allowed
+    r.read(1)  # gaps_in_frame_num_value_allowed
     pic_width_in_mbs = r.ue() + 1
     pic_height_in_map_units = r.ue() + 1
-    frame_mbs_only = r.u(1)
+    frame_mbs_only = r.read(1)
     if not frame_mbs_only:
-        r.u(1)  # mb_adaptive_frame_field
-    r.u(1)  # direct_8x8_inference
+        r.read(1)  # mb_adaptive_frame_field
+    r.read(1)  # direct_8x8_inference
     width = pic_width_in_mbs * 16
     height = pic_height_in_map_units * 16 * (2 - frame_mbs_only)
-    if r.u(1):  # frame_cropping
+    if r.read(1):  # frame_cropping
         left, right, top, bottom = r.ue(), r.ue(), r.ue(), r.ue()
         chroma_array = 0 if separate_colour_plane else chroma_format_idc
         sub_w = {1: 2, 2: 2, 3: 1}.get(chroma_array, 1)
@@ -234,7 +168,7 @@ def _parse_sps_bits(r: BitReader) -> dict:
         )
         width -= unit_x * (left + right)
         height -= unit_y * (top + bottom)
-    vui_present = r.u(1)
+    vui_present = r.read(1)
     return {
         "profile_idc": profile_idc,
         "profile": PROFILES.get(profile_idc, f"profile {profile_idc}"),
@@ -274,48 +208,50 @@ def write_sps(
     mbs_h = (height + 15) // 16
     crop_r = (mbs_w * 16 - width) // 2
     crop_b = (mbs_h * 16 - height) // 2
-    w = BitWriter()
-    w.u(profile_idc, 8)
-    w.u(0, 8)  # constraint flags + reserved
-    w.u(level_idc, 8)
+    w = MsbWriter()
+    w.write(profile_idc, 8)
+    w.write(0, 8)  # constraint flags + reserved
+    w.write(level_idc, 8)
     w.ue(0)  # sps_id
     if profile_idc in _HIGH_PROFILES:
         w.ue(1)  # chroma_format_idc 4:2:0
         w.ue(0).ue(0)  # bit depths 8/8
-        w.u(0, 1)  # qpprime
-        w.u(0, 1)  # no scaling matrix
+        w.write(0, 1)  # qpprime
+        w.write(0, 1)  # no scaling matrix
     w.ue(0)  # log2_max_frame_num_minus4
     w.ue(0)  # poc_type 0
     w.ue(0)  # log2_max_pic_order_cnt_lsb_minus4
     w.ue(max_num_ref_frames)
-    w.u(0, 1)  # gaps_in_frame_num
+    w.write(0, 1)  # gaps_in_frame_num
     w.ue(mbs_w - 1)
     w.ue(mbs_h - 1)
-    w.u(1, 1)  # frame_mbs_only
-    w.u(1, 1)  # direct_8x8_inference
+    w.write(1, 1)  # frame_mbs_only
+    w.write(1, 1)  # direct_8x8_inference
     if crop_r or crop_b:
-        w.u(1, 1)
+        w.write(1, 1)
         w.ue(0).ue(crop_r).ue(0).ue(crop_b)
     else:
-        w.u(0, 1)
-    w.u(0, 1)  # vui_parameters_present
-    return b"\x67" + insert_emulation(w.rbsp())
+        w.write(0, 1)
+    w.write(0, 1)  # vui_parameters_present
+    w.write(1, 1).align()  # rbsp_trailing_bits
+    return b"\x67" + insert_emulation(w.bytes())
 
 
 def write_pps() -> bytes:
     """Minimal fixture PPS NAL (the extractor only counts it)."""
-    w = BitWriter()
+    w = MsbWriter()
     w.ue(0)  # pps_id
     w.ue(0)  # sps_id
-    w.u(0, 1)  # entropy_coding_mode (CAVLC)
-    w.u(0, 1)  # bottom_field_pic_order
+    w.write(0, 1)  # entropy_coding_mode (CAVLC)
+    w.write(0, 1)  # bottom_field_pic_order
     w.ue(0)  # num_slice_groups_minus1
     w.ue(0).ue(0)  # num_ref_idx defaults
-    w.u(0, 3)  # weighted pred flags
+    w.write(0, 3)  # weighted pred flags
     w.se(0).se(0).se(0)  # qp deltas
-    w.u(0, 2)  # deblocking/constrained intra
-    w.u(0, 1)  # redundant_pic_cnt_present
-    return b"\x68" + insert_emulation(w.rbsp())
+    w.write(0, 2)  # deblocking/constrained intra
+    w.write(0, 1)  # redundant_pic_cnt_present
+    w.write(1, 1).align()  # rbsp_trailing_bits
+    return b"\x68" + insert_emulation(w.bytes())
 
 
 def parse_avcc(body: bytes) -> dict:

@@ -6,8 +6,8 @@ the AAC work in mp4.py): the hvcC configuration record
 HEVC SPS (ITU-T H.265 §7.3.2.2) carry everything a curation pass
 filters scraped video on — profile/tier/level, exact conformance-
 cropped dimensions, chroma format, bit depth — and both are
-Exp-Golomb/fixed-width STRUCTURAL syntax (the h264.BitReader /
-BitWriter machinery applies unchanged; HEVC adds the two-byte NAL
+Exp-Golomb/fixed-width STRUCTURAL syntax (read and written through
+bitio's MSB-first pair, as in h264.py; HEVC adds the two-byte NAL
 header and the profile_tier_level block). CTU/slice decode stays the
 documented external-codec boundary.
 
@@ -26,9 +26,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
+from rta_registrations_pyspark_glue_spark.operators.bitio import MsbReader, MsbWriter
 from rta_registrations_pyspark_glue_spark.operators.h264 import (
-    BitReader,
-    BitWriter,
     insert_emulation,
     strip_emulation,
 )
@@ -47,30 +46,30 @@ NAL_TYPES = {
 }
 
 
-def _parse_profile_tier_level(r: BitReader, max_sub_layers: int) -> dict:
+def _parse_profile_tier_level(r: MsbReader, max_sub_layers: int) -> dict:
     """profile_tier_level(1, max_sub_layers) — §7.3.3. Sub-layer
     blocks are parsed only to advance the cursor."""
-    profile_space = r.u(2)
-    tier = r.u(1)
-    profile_idc = r.u(5)
-    r.u(32)  # compatibility flags
-    r.u(48)  # constraint indicator flags
-    level_idc = r.u(8)
+    profile_space = r.read(2)
+    tier = r.read(1)
+    profile_idc = r.read(5)
+    r.read(32)  # compatibility flags
+    r.read(48)  # constraint indicator flags
+    level_idc = r.read(8)
     if max_sub_layers > 0:
         prof_present = []
         lvl_present = []
         for _ in range(max_sub_layers):
-            prof_present.append(r.u(1))
-            lvl_present.append(r.u(1))
+            prof_present.append(r.read(1))
+            lvl_present.append(r.read(1))
         for _ in range(max_sub_layers, 8):
-            r.u(2)  # reserved_zero_2bits
+            r.read(2)  # reserved_zero_2bits
         for i in range(max_sub_layers):
             if prof_present[i]:
-                r.u(2 + 1 + 5)
-                r.u(32)
-                r.u(48)
+                r.read(2 + 1 + 5)
+                r.read(32)
+                r.read(48)
             if lvl_present[i]:
-                r.u(8)
+                r.read(8)
     return {
         "profile_space": profile_space,
         "tier": "High" if tier else "Main",
@@ -90,28 +89,25 @@ def parse_hevc_sps(nal: bytes) -> dict:
     ntype = (nal[0] >> 1) & 0x3F
     if ntype != 33:
         raise ValueError(f"not an HEVC SPS NAL (type {ntype})")
-    r = BitReader(strip_emulation(nal[2:]))
-    try:
-        r.u(4)  # sps_video_parameter_set_id
-        max_sub = r.u(3)
-        r.u(1)  # temporal_id_nesting
-        ptl = _parse_profile_tier_level(r, max_sub)
-        sps_id = r.ue()
-        chroma_format_idc = r.ue()
-        separate = r.u(1) if chroma_format_idc == 3 else 0
-        width = r.ue()
-        height = r.ue()
-        if r.u(1):  # conformance_window_flag
-            left, right, top, bottom = r.ue(), r.ue(), r.ue(), r.ue()
-            chroma_array = 0 if separate else chroma_format_idc
-            sub_w = {1: 2, 2: 2, 3: 1}.get(chroma_array, 1)
-            sub_h = {1: 2, 2: 1, 3: 1}.get(chroma_array, 1)
-            width -= sub_w * (left + right)
-            height -= sub_h * (top + bottom)
-        bit_depth_luma = 8 + r.ue()
-        bit_depth_chroma = 8 + r.ue()
-    except IndexError:
-        raise ValueError("truncated HEVC SPS") from None
+    r = MsbReader(strip_emulation(nal[2:]))
+    r.read(4)  # sps_video_parameter_set_id
+    max_sub = r.read(3)
+    r.read(1)  # temporal_id_nesting
+    ptl = _parse_profile_tier_level(r, max_sub)
+    sps_id = r.ue()
+    chroma_format_idc = r.ue()
+    separate = r.read(1) if chroma_format_idc == 3 else 0
+    width = r.ue()
+    height = r.ue()
+    if r.read(1):  # conformance_window_flag
+        left, right, top, bottom = r.ue(), r.ue(), r.ue(), r.ue()
+        chroma_array = 0 if separate else chroma_format_idc
+        sub_w = {1: 2, 2: 2, 3: 1}.get(chroma_array, 1)
+        sub_h = {1: 2, 2: 1, 3: 1}.get(chroma_array, 1)
+        width -= sub_w * (left + right)
+        height -= sub_h * (top + bottom)
+    bit_depth_luma = 8 + r.ue()
+    bit_depth_chroma = 8 + r.ue()
     return {
         **ptl,
         "sps_id": sps_id,
@@ -142,87 +138,90 @@ def write_hevc_sps(
     pad_h = (height + 7) // 8 * 8
     win_r = (pad_w - width) // 2
     win_b = (pad_h - height) // 2
-    w = BitWriter()
-    w.u(0, 4)  # vps id
-    w.u(0, 3)  # max_sub_layers_minus1
-    w.u(1, 1)  # temporal_id_nesting
+    w = MsbWriter()
+    w.write(0, 4)  # vps id
+    w.write(0, 3)  # max_sub_layers_minus1
+    w.write(1, 1)  # temporal_id_nesting
     # profile_tier_level(1, 0)
-    w.u(0, 2).u(tier, 1).u(profile_idc, 5)
-    w.u(1 << (31 - profile_idc) if profile_idc < 32 else 0, 32)
-    w.u(0, 48)
-    w.u(level_idc, 8)
+    w.write(0, 2).write(tier, 1).write(profile_idc, 5)
+    w.write(1 << (31 - profile_idc) if profile_idc < 32 else 0, 32)
+    w.write(0, 48)
+    w.write(level_idc, 8)
     w.ue(0)  # sps id
     w.ue(1)  # chroma 4:2:0
     w.ue(pad_w)
     w.ue(pad_h)
     if win_r or win_b:
-        w.u(1, 1)
+        w.write(1, 1)
         w.ue(0).ue(win_r).ue(0).ue(win_b)
     else:
-        w.u(0, 1)
+        w.write(0, 1)
     w.ue(0).ue(0)  # bit depths 8/8
     # ---- the rest, simplest legal values ----
     w.ue(0)  # log2_max_pic_order_cnt_lsb_minus4
-    w.u(0, 1)  # sps_sub_layer_ordering_info_present
+    w.write(0, 1)  # sps_sub_layer_ordering_info_present
     w.ue(1).ue(0).ue(0)  # one ordering-info triplet (i = maxSub only)
     w.ue(0)  # log2_min_luma_coding_block_size_minus3 -> MinCbSizeY 8
     w.ue(3)  # log2_diff_max_min_luma_coding_block_size -> CTU 64
     w.ue(0)  # log2_min_luma_transform_block_size_minus2
     w.ue(2)  # log2_diff_max_min_luma_transform_block_size
     w.ue(0).ue(0)  # max_transform_hierarchy_depth inter/intra
-    w.u(0, 1)  # scaling_list_enabled
-    w.u(0, 1)  # amp_enabled
-    w.u(0, 1)  # sample_adaptive_offset_enabled
-    w.u(0, 1)  # pcm_enabled
+    w.write(0, 1)  # scaling_list_enabled
+    w.write(0, 1)  # amp_enabled
+    w.write(0, 1)  # sample_adaptive_offset_enabled
+    w.write(0, 1)  # pcm_enabled
     w.ue(0)  # num_short_term_ref_pic_sets
-    w.u(0, 1)  # long_term_ref_pics_present
-    w.u(0, 1)  # sps_temporal_mvp_enabled
-    w.u(0, 1)  # strong_intra_smoothing_enabled
-    w.u(0, 1)  # vui_parameters_present
-    w.u(0, 1)  # sps_extension_present
+    w.write(0, 1)  # long_term_ref_pics_present
+    w.write(0, 1)  # sps_temporal_mvp_enabled
+    w.write(0, 1)  # strong_intra_smoothing_enabled
+    w.write(0, 1)  # vui_parameters_present
+    w.write(0, 1)  # sps_extension_present
     # NAL header: type 33, layer 0, tid+1 = 1
-    return bytes([33 << 1, 1]) + insert_emulation(w.rbsp())
+    w.write(1, 1).align()  # rbsp_trailing_bits
+    return bytes([33 << 1, 1]) + insert_emulation(w.bytes())
 
 
 def write_hevc_vps() -> bytes:
     """Minimal fixture VPS NAL (counted, never decoded)."""
-    w = BitWriter()
-    w.u(0, 4).u(3, 2).u(0, 6).u(0, 3).u(1, 1).u(0xFFFF, 16)
-    w.u(0, 2).u(0, 1).u(1, 5)
-    w.u(0, 32)
-    w.u(0, 48)
-    w.u(93, 8)
-    w.u(0, 1)  # sub_layer_ordering_info_present
+    w = MsbWriter()
+    w.write(0, 4).write(3, 2).write(0, 6).write(0, 3).write(1, 1).write(0xFFFF, 16)
+    w.write(0, 2).write(0, 1).write(1, 5)
+    w.write(0, 32)
+    w.write(0, 48)
+    w.write(93, 8)
+    w.write(0, 1)  # sub_layer_ordering_info_present
     w.ue(1).ue(0).ue(0)
-    w.u(0, 6)  # max_layer_id
+    w.write(0, 6)  # max_layer_id
     w.ue(0)  # num_layer_sets_minus1
-    w.u(0, 1)  # timing_info_present
-    w.u(0, 1)  # extension
-    return bytes([32 << 1, 1]) + insert_emulation(w.rbsp())
+    w.write(0, 1)  # timing_info_present
+    w.write(0, 1)  # extension
+    w.write(1, 1).align()  # rbsp_trailing_bits
+    return bytes([32 << 1, 1]) + insert_emulation(w.bytes())
 
 
 def write_hevc_pps() -> bytes:
     """Minimal fixture PPS NAL (counted, never decoded)."""
-    w = BitWriter()
+    w = MsbWriter()
     w.ue(0).ue(0)  # pps id, sps id
-    w.u(0, 1).u(0, 1)  # dependent_slice, output_flag_present
-    w.u(0, 3)  # num_extra_slice_header_bits
-    w.u(0, 1).u(0, 1)  # sign_data_hiding, cabac_init_present
+    w.write(0, 1).write(0, 1)  # dependent_slice, output_flag_present
+    w.write(0, 3)  # num_extra_slice_header_bits
+    w.write(0, 1).write(0, 1)  # sign_data_hiding, cabac_init_present
     w.ue(0).ue(0)  # num_ref_idx defaults
     w.se(0)  # init_qp_minus26
-    w.u(0, 1).u(0, 1).u(0, 1)  # constrained_intra, transform_skip, cu_qp
+    w.write(0, 1).write(0, 1).write(0, 1)  # constrained_intra, transform_skip, cu_qp
     w.se(0).se(0)  # cb/cr offsets
-    w.u(0, 1).u(0, 1)  # slice_chroma_qp, weighted_pred
-    w.u(0, 1).u(0, 1)  # weighted_bipred, transquant_bypass
-    w.u(0, 1).u(0, 1)  # tiles_enabled, entropy_coding_sync
-    w.u(0, 1)  # loop_filter_across_slices
-    w.u(0, 1)  # deblocking_filter_control_present
-    w.u(0, 1)  # scaling_list_data_present
-    w.u(0, 1)  # lists_modification_present
+    w.write(0, 1).write(0, 1)  # slice_chroma_qp, weighted_pred
+    w.write(0, 1).write(0, 1)  # weighted_bipred, transquant_bypass
+    w.write(0, 1).write(0, 1)  # tiles_enabled, entropy_coding_sync
+    w.write(0, 1)  # loop_filter_across_slices
+    w.write(0, 1)  # deblocking_filter_control_present
+    w.write(0, 1)  # scaling_list_data_present
+    w.write(0, 1)  # lists_modification_present
     w.ue(0)  # log2_parallel_merge_level_minus2
-    w.u(0, 1)  # slice_segment_header_extension
-    w.u(0, 1)  # pps_extension
-    return bytes([34 << 1, 1]) + insert_emulation(w.rbsp())
+    w.write(0, 1)  # slice_segment_header_extension
+    w.write(0, 1)  # pps_extension
+    w.write(1, 1).align()  # rbsp_trailing_bits
+    return bytes([34 << 1, 1]) + insert_emulation(w.bytes())
 
 
 def parse_hvcc(body: bytes) -> dict:

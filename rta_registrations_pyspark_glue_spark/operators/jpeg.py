@@ -441,6 +441,8 @@ def decode_jpeg(content: bytes) -> "np.ndarray":
         if pos + 2 > len(content):
             raise ValueError("JPEG segment length truncated")
         seg_len = struct.unpack_from(">H", content, pos)[0]
+        if seg_len < 2:
+            raise ValueError(f"JPEG segment length {seg_len} under 2")
         seg_end = pos + seg_len
         if seg_end > len(content):
             raise ValueError("JPEG segment truncated")
@@ -465,6 +467,8 @@ def decode_jpeg(content: bytes) -> "np.ndarray":
                 qtables[tq] = vals  # zigzag order, as transmitted
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 prog.
             progressive = marker == 0xC2
+            if len(body) < 6 or len(body) < 6 + 3 * body[5]:
+                raise ValueError("JPEG SOF segment shorter than its components")
             precision = body[0]
             if precision != 8:
                 raise NotImplementedError(
@@ -530,6 +534,8 @@ def decode_jpeg(content: bytes) -> "np.ndarray":
         elif marker == 0xDA:  # SOS
             if not comps:
                 raise ValueError("JPEG SOS before SOF")
+            if not body or len(body) < 4 + 2 * body[0]:
+                raise ValueError("JPEG SOS segment shorter than its components")
             ns = body[0]
             scan_comps = []
             by_id = {c.cid: c for c in comps}

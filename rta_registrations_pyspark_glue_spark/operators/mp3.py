@@ -57,6 +57,12 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
+from rta_registrations_pyspark_glue_spark.operators.bitio import (
+    MsbReader,
+    MsbWriter,
+    Truncated,
+    crc16,
+)
 from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 
 from rta_registrations_pyspark_glue_spark.operators.mediameta import _mp3_frame
@@ -66,67 +72,11 @@ class Mp3Error(ValueError):
     pass
 
 
-class _Bits:
-    """MSB-first bit reader."""
-
-    __slots__ = ("buf", "pos", "bit")
-
-    def __init__(self, buf: bytes, pos: int = 0):
-        self.buf, self.pos, self.bit = buf, pos, 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            if self.pos >= len(self.buf):
-                raise Mp3Error("bitstream truncated")
-            v = (v << 1) | ((self.buf[self.pos] >> (7 - self.bit)) & 1)
-            self.bit += 1
-            if self.bit == 8:
-                self.bit, self.pos = 0, self.pos + 1
-        return v
-
-
-class _BitsW:
-    """MSB-first bit writer."""
-
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out, self.acc, self.nbits = bytearray(), 0, 0
-
-    def write(self, v: int, n: int):
-        v &= (1 << n) - 1
-        self.acc = (self.acc << n) | v
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.out.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def bytes(self) -> bytes:
-        if self.nbits:
-            raise Mp3Error("unaligned side info")
-        return bytes(self.out)
-
-
-def _crc16(data: bytes, init: int = 0xFFFF) -> int:
-    """MPEG audio CRC-16: polynomial 0x8005, MSB-first."""
-    crc = init
-    for b in data:
-        for i in range(7, -1, -1):
-            bit = (b >> i) & 1
-            hi = (crc >> 15) & 1
-            crc = (crc << 1) & 0xFFFF
-            if hi ^ bit:
-                crc ^= 0x8005
-    return crc
-
-
 # ---------------------------------------------------------------------------
 # Side information (MPEG-1 Layer III): 59 bits per (granule, channel)
 
 
-def _read_granule(bits: _Bits) -> dict:
+def _read_granule(bits: MsbReader) -> dict:
     g = {
         "part2_3_length": bits.read(12),
         "big_values": bits.read(9),
@@ -151,7 +101,7 @@ def _read_granule(bits: _Bits) -> dict:
     return g
 
 
-def _write_granule(w: _BitsW, g: dict) -> None:
+def _write_granule(w: MsbWriter, g: dict) -> None:
     w.write(g["part2_3_length"], 12)
     w.write(g["big_values"], 9)
     w.write(g["global_gain"], 8)
@@ -177,7 +127,7 @@ def _write_granule(w: _BitsW, g: dict) -> None:
 def parse_side_info(data: bytes, n_channels: int) -> dict:
     """Unpack a complete MPEG-1 Layer III side-information block
     (17 bytes mono, 32 stereo)."""
-    bits = _Bits(data)
+    bits = MsbReader(data)
     si = {"main_data_begin": bits.read(9)}
     bits.read(5 if n_channels == 1 else 3)  # private_bits
     si["scfsi"] = [bits.read(4) for _ in range(n_channels)]
@@ -197,10 +147,10 @@ def parse_mp3_frames(content: bytes) -> list[dict]:
     the parsed header, the VERIFIED side info, and the frame's
     main-data bytes for reservoir assembly. Declared failure envelope:
     Mp3Error (a ValueError) / NotImplementedError — truncated
-    fixed-width reads are converted at this boundary."""
+    fixed-width and bit reads are converted at this boundary."""
     try:
         return _parse_mp3_frames_inner(content)
-    except struct.error as e:
+    except (struct.error, Truncated) as e:
         raise Mp3Error(f"truncated MP3 structure: {e}") from None
 
 
@@ -242,7 +192,7 @@ def _parse_mp3_frames_inner(content: bytes) -> list[dict]:
             raise Mp3Error("frame truncated inside side info")
         side_bytes = buf[body : body + side_len]
         if protected:
-            calc = _crc16(buf[pos + 2 : pos + 4] + side_bytes)
+            calc = crc16(buf[pos + 2 : pos + 4] + side_bytes, 0xFFFF)
             if calc != crc_stored:
                 raise Mp3Error(
                     f"frame CRC mismatch: stored {crc_stored:04x} != "
@@ -368,7 +318,7 @@ def encode_mp3_silent(
             | (br_idx << 12) | (sr_idx << 10) | (padding << 9) | (mode << 6)
         )
         header = struct.pack(">I", h)
-        w = _BitsW()
+        w = MsbWriter()
         w.write(0, 9)  # main_data_begin: silent frames keep no reservoir
         w.write(0, 5 if channels == 1 else 3)
         for _ch in range(channels):
@@ -400,7 +350,7 @@ def encode_mp3_silent(
         length = 1152 // 8 * bitrate_kbps * 1000 // sample_rate + padding
         frame = bytearray(header)
         if protected:
-            frame += struct.pack(">H", _crc16(header[2:4] + side))
+            frame += struct.pack(">H", crc16(header[2:4] + side, 0xFFFF))
         frame += side
         if len(frame) > length:
             raise Mp3Error("side info exceeds frame length")

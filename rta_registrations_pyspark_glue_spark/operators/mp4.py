@@ -49,6 +49,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
+from rta_registrations_pyspark_glue_spark.operators.bitio import MsbReader, MsbWriter
 from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 
 from rta_registrations_pyspark_glue_spark.operators.avi import (
@@ -215,26 +216,6 @@ def _read_desc(buf: bytes, pos: int) -> tuple[int, int, int]:
     return tag, ln, pos
 
 
-class _Bits:
-    """MSB-first bit cursor over bytes (the ASC is bit-packed)."""
-
-    def __init__(self, data: bytes):
-        self.data, self.pos = data, 0
-
-    def take(self, n: int) -> int:
-        if self.pos + n > len(self.data) * 8:
-            # surface truncation as the parse-error class every caller
-            # already catches (an AOT-31 escape on a 2-byte ASC used to
-            # leak IndexError past demux_mkv_features' envelope)
-            raise ValueError("bitstream truncated mid-field")
-        v = 0
-        for _ in range(n):
-            byte = self.data[self.pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
-
-
 def parse_audio_specific_config(asc: bytes) -> dict:
     """Decode an AudioSpecificConfig (ISO/IEC 14496-3 §1.6.2.1):
     audioObjectType (with the 31-escape), samplingFrequencyIndex (with
@@ -243,22 +224,22 @@ def parse_audio_specific_config(asc: bytes) -> dict:
     1024- vs 960-sample access units."""
     if len(asc) < 2:
         raise ValueError("AudioSpecificConfig under 2 bytes")
-    bits = _Bits(asc)
-    aot = bits.take(5)
+    bits = MsbReader(asc)
+    aot = bits.read(5)
     if aot == 31:
-        aot = 32 + bits.take(6)
-    fi = bits.take(4)
+        aot = 32 + bits.read(6)
+    fi = bits.read(4)
     if fi == 15:
-        rate = bits.take(24)
+        rate = bits.read(24)
     elif fi < len(_AAC_SAMPLE_RATES):
         rate = _AAC_SAMPLE_RATES[fi]
     else:
         raise ValueError(f"reserved samplingFrequencyIndex {fi}")
-    channels = bits.take(4)
+    channels = bits.read(4)
     frame_length = 1024
     if aot in (1, 2, 3, 4, 6, 7, 17, 19, 20, 21, 22, 23):
         # GASpecificConfig starts with frameLengthFlag
-        if bits.take(1):
+        if bits.read(1):
             frame_length = 960
     return {
         "object_type": aot,
@@ -395,20 +376,13 @@ def encode_adts(
     out = bytearray()
     hdr = 9 if protected else 7
     for au in aus:
-        flen = hdr + len(au)
-        b = bytearray(hdr)
-        b[0] = 0xFF
-        b[1] = 0xF0 | (0 << 3) | (0 << 1) | (0 if protected else 1)
-        b[2] = (
-            ((object_type - 1) & 0x3) << 6
-            | (freq_index & 0xF) << 2
-            | ((channels >> 2) & 0x1)
-        )
-        b[3] = ((channels & 0x3) << 6) | ((flen >> 11) & 0x3)
-        b[4] = (flen >> 3) & 0xFF
-        b[5] = ((flen & 0x7) << 5) | 0x1F  # buffer fullness high bits
-        b[6] = 0xFC  # fullness low + 0 extra raw data blocks
-        out += b + au
+        w = MsbWriter().write(0xFFF, 12).write(0, 3)  # sync, MPEG-4, layer 0
+        w.write(0 if protected else 1, 1)  # protection_absent
+        w.write(object_type - 1, 2).write(freq_index, 4).write(0, 1)
+        w.write(channels, 3).write(0, 4)  # + original/home/copyright bits
+        w.write(hdr + len(au), 13).write(0x7FF, 11)  # length, VBR fullness
+        w.write(0, 18 if protected else 2)  # no extra raw blocks, zero CRC
+        out += w.bytes() + au
     return bytes(out)
 
 
@@ -434,7 +408,7 @@ def extract_aac_track(content: bytes) -> dict:
     except struct.error as e:
         raise ValueError(f"truncated MP4 structure: {e}") from None
     except IndexError:
-        # bytes indexing in the descriptor/ASC bit walk ran off the end
+        # bytes indexing in the descriptor walk ran off the end
         # (descriptor lengths lie on corrupted input) — same envelope
         raise ValueError("truncated esds descriptor chain") from None
 

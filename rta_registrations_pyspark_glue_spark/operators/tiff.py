@@ -34,6 +34,8 @@ import zlib
 
 import numpy as np
 
+from rta_registrations_pyspark_glue_spark.operators.bitio import MsbWriter
+
 # TIFF tag ids (public constants from the spec)
 WIDTH, HEIGHT = 256, 257
 BITS_PER_SAMPLE, COMPRESSION, PHOTOMETRIC = 258, 259, 262
@@ -196,26 +198,15 @@ def tiff_lzw_encode(data: bytes) -> bytes:
     width = 9
     table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
     next_code = 258
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-
-    emit(CLEAR)
+    out = MsbWriter()
+    out.write(CLEAR, width)
     w = b""
     for b in data:
         wb = w + bytes([b])
         if wb in table:
             w = wb
             continue
-        emit(table[w])
+        out.write(table[w], width)
         if next_code < 4094:
             table[wb] = next_code
             next_code += 1
@@ -227,11 +218,8 @@ def tiff_lzw_encode(data: bytes) -> bytes:
                 width += 1
         w = bytes([b])
     if w:
-        emit(table[w])
-    emit(EOI)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
+        out.write(table[w], width)
+    return out.write(EOI, width).align().bytes()
 
 
 def packbits_decode(data: bytes, expected: int) -> bytes:

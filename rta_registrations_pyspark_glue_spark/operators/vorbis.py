@@ -16,9 +16,8 @@ blocksize[p]) / 4 samples per boundary) follow. MDCT/floor-curve
 synthesis stays the external-codec boundary, exactly like SILK/CELT,
 AAC PCM, and AVC/HEVC slices.
 
-Vorbis packs bits LSB-FIRST within bytes (spec §2) — the opposite of
-every other bit reader in this package (flac/h264/hevc are MSB-first),
-so the reader/writer pair lives here.
+Vorbis packs bits LSB-FIRST within bytes (spec §2), like VP8L and GIF
+LZW; the reader/writer pair is bitio's LsbReader/LsbWriter.
 
 Containers: Ogg Vorbis (the page/lacing machinery is shared —
 opus._ogg_packets reads, mediameta.ogg_page writes, real CRCs both ways)
@@ -35,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from rta_registrations_pyspark_glue_spark.operators.bitio import LsbReader, LsbWriter
 from rta_registrations_pyspark_glue_spark.operators.legs import decode_leg, synth_leg
 from rta_registrations_pyspark_glue_spark.operators.mediameta import ogg_page
 from rta_registrations_pyspark_glue_spark.operators.opus import _ogg_packets
@@ -60,59 +60,6 @@ def _lookup1_values(entries: int, dims: int) -> int:
     while v > 0 and v**dims > entries:
         v -= 1
     return v
-
-
-class LsbReader:
-    """Vorbis I bit reader — LSB-first within bytes (spec §2)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # absolute bit position
-
-    def read(self, n: int) -> int:
-        if self.pos + n > len(self.data) * 8:
-            raise ValueError("Vorbis bitstream exhausted")
-        out = 0
-        got = 0
-        while got < n:
-            byte = self.data[self.pos >> 3]
-            off = self.pos & 7
-            take = min(8 - off, n - got)
-            out |= ((byte >> off) & ((1 << take) - 1)) << got
-            got += take
-            self.pos += take
-        return out
-
-    def s32(self) -> int:
-        x = self.read(32)
-        return x - (1 << 32) if x & 0x80000000 else x
-
-
-class LsbWriter:
-    """LsbReader's exact writer twin (fixture encoder)."""
-
-    def __init__(self):
-        self._done = bytearray()
-        self._acc = 0
-        self._n = 0
-
-    def write(self, value: int, n: int) -> None:
-        self._acc |= (value & ((1 << n) - 1)) << self._n
-        self._n += n
-        while self._n >= 8:
-            self._done.append(self._acc & 0xFF)
-            self._acc >>= 8
-            self._n -= 8
-
-    @property
-    def bit_length(self) -> int:
-        return len(self._done) * 8 + self._n
-
-    def getvalue(self) -> bytes:
-        out = bytes(self._done)
-        if self._n:
-            out += bytes([self._acc & 0xFF])
-        return out
 
 
 # ---------------------------------------------------------------------------

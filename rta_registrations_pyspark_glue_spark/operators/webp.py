@@ -27,56 +27,11 @@ from __future__ import annotations
 
 import struct
 
-# ------------------------------------------------------------------
-# bit I/O — VP8L reads bits LSB-first within each byte; prefix codes
-# are read one bit at a time, first-read bit = most significant bit of
-# the code (mirrored by the writer below).
-# ------------------------------------------------------------------
-
-
-class BitReader:
-    """LSB-first bit reader. r14: ``read(n)`` gathers just the bytes
-    the value spans with ONE little-endian int.from_bytes (bit i of
-    byte b sits at stream position 8b+i) instead of looping per bit —
-    the per-bit loop was the decoder's hottest line under profile
-    (70k+ read calls per 1k images). Windowed, not a whole-buffer int
-    view (that is O(stream) per read — quadratic on big images). Same
-    truncation semantics: reading past the last byte raises."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-        self._nbits = 8 * len(data)
-
-    def read(self, n: int) -> int:
-        pos = self.pos
-        if pos + n > self._nbits:
-            raise ValueError("VP8L: bitstream truncated")
-        self.pos = pos + n
-        start = pos >> 3
-        chunk = int.from_bytes(self.data[start : (pos + n + 7) >> 3], "little")
-        return (chunk >> (pos - 8 * start)) & ((1 << n) - 1)
-
-
-class BitWriter:
-    def __init__(self):
-        self.bytes = bytearray()
-        self.bit = 0
-
-    def write(self, value: int, n: int) -> None:
-        for i in range(n):
-            if self.bit == 0:
-                self.bytes.append(0)
-            if (value >> i) & 1:
-                self.bytes[-1] |= 1 << self.bit
-            self.bit = (self.bit + 1) & 7
-
-    def write_code(self, code: int, length: int) -> None:
-        """Prefix codes go MSB-first (the reader shifts bits in from
-        the left: code = code<<1 | next_bit)."""
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
+from rta_registrations_pyspark_glue_spark.operators.bitio import (
+    LsbReader,
+    LsbWriter,
+    Truncated,
+)
 
 # ------------------------------------------------------------------
 # canonical prefix codes (DEFLATE-style assignment, shared by decoder
@@ -124,7 +79,7 @@ class PrefixCode:
         self.table = {(l, c): s for s, (c, l) in codes.items()}
         self.max_len = max(l for l, _ in self.table)
 
-    def read(self, br: BitReader) -> int:
+    def read(self, br: LsbReader) -> int:
         if self.single is not None:
             return self.single
         # Inlined bit loop over the reader's buffer (r14): one symbol
@@ -136,7 +91,7 @@ class PrefixCode:
         code, length = 0, 0
         while True:
             if pos >= nbits:
-                raise ValueError("VP8L: bitstream truncated")
+                raise Truncated("bitstream truncated")
             code = (code << 1) | ((data[pos >> 3] >> (pos & 7)) & 1)
             pos += 1
             length += 1
@@ -148,7 +103,7 @@ class PrefixCode:
                 raise ValueError("VP8L: invalid prefix code in stream")
 
 
-def _read_prefix_code(br: BitReader, alphabet_size: int) -> PrefixCode:
+def _read_prefix_code(br: LsbReader, alphabet_size: int) -> PrefixCode:
     if br.read(1):  # simple code: 1 or 2 symbols
         num_symbols = br.read(1) + 1
         first_8bits = br.read(1)
@@ -207,7 +162,7 @@ def _read_prefix_code(br: BitReader, alphabet_size: int) -> PrefixCode:
 # ------------------------------------------------------------------
 
 
-def _read_prefix_coded_value(br: BitReader, symbol: int) -> int:
+def _read_prefix_coded_value(br: LsbReader, symbol: int) -> int:
     """length/distance value from its prefix symbol (+ extra bits)."""
     if symbol < 4:
         return symbol + 1
@@ -284,7 +239,7 @@ class ColorCache:
 _GREEN_BASE = 256 + 24  # literals + length codes (before cache extension)
 
 
-def _decode_image_stream(br: BitReader, w: int, h: int, level0: bool):
+def _decode_image_stream(br: LsbReader, w: int, h: int, level0: bool):
     """Returns (pixels as list of ARGB ints, transforms, final_width).
     Sub-images (level0=False) have no transforms and no meta-prefix
     recursion, but DO have their own color-cache flag, per spec."""
@@ -582,7 +537,7 @@ def decode_vp8l(payload: bytes):
 
     if not payload or payload[0] != 0x2F:
         raise ValueError("VP8L: bad signature byte")
-    br = BitReader(payload[1:])
+    br = LsbReader(payload[1:])
     w = br.read(14) + 1
     h = br.read(14) + 1
     br.read(1)  # alpha-used hint
@@ -633,7 +588,7 @@ def decode_alpha(body: bytes, w: int, h: int):
             raise ValueError("ALPH: raw plane truncated")
         a = np.frombuffer(body[1 : 1 + w * h], np.uint8).reshape(h, w).astype(np.int32)
     elif comp == 1:
-        br = BitReader(body[1:])
+        br = LsbReader(body[1:])
         pixels, transforms, cur_w = _decode_image_stream(br, w, h, True)
         for t in reversed(transforms):
             if t[0] == "predictor":
@@ -894,7 +849,7 @@ def _build_lengths(
     return lengths
 
 
-def _write_prefix_code(bw: BitWriter, lengths: list[int]) -> None:
+def _write_prefix_code(bw: LsbWriter, lengths: list[int]) -> None:
     nz = [(s, l) for s, l in enumerate(lengths) if l > 0]
     # simple codes carry symbols in 8-bit fields — symbols past 255
     # (length / cache codes in the green alphabet) need the normal form
@@ -929,7 +884,7 @@ def _write_prefix_code(bw: BitWriter, lengths: list[int]) -> None:
         bw.write_code(code, length)
 
 
-def _write_single_symbol(bw: BitWriter, symbol: int) -> None:
+def _write_single_symbol(bw: LsbWriter, symbol: int) -> None:
     lengths = [0] * (symbol + 1)
     lengths[symbol] = 1
     _write_prefix_code(bw, lengths)
@@ -954,7 +909,7 @@ def encode_vp8l(img, subtract_green: bool = False, palette: bool = False) -> byt
         | img[:, :, 2].astype(np.uint32)
     ).reshape(-1)
 
-    bw = BitWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
@@ -1001,7 +956,7 @@ def encode_vp8l(img, subtract_green: bool = False, palette: bool = False) -> byt
     bw.write(0, 1)  # no color cache
     bw.write(0, 1)  # no meta-prefix image
     _write_literal_image(bw, [int(p) for p in argb])
-    return bytes(bw.bytes)
+    return bw.getvalue()
 
 
 def _sub_pixels(a: int, b: int) -> int:
@@ -1013,7 +968,7 @@ def _sub_pixels(a: int, b: int) -> int:
     )
 
 
-def _write_literal_image(bw: BitWriter, pixels: list[int]) -> None:
+def _write_literal_image(bw: LsbWriter, pixels: list[int]) -> None:
     """One prefix-code group, all-literal encoding of an ARGB list —
     the entropy-coded-image writer shared by the main image and the
     palette sub-image. Callers write the per-image flag bits (cache,

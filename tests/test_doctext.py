@@ -143,6 +143,21 @@ def test_docx_roundtrip_and_metadata():
     assert (m["title"], m["author"]) == ("DT", "DA")
 
 
+def test_zip_fixtures_do_not_depend_on_the_clock(monkeypatch):
+    """A DOCX or EPUB encoded a day later has the same bytes: no zip
+    entry carries the wall-clock time."""
+    import time
+
+    out = []
+    for now in (1_700_000_000.0, 1_700_086_400.0):
+        monkeypatch.setattr(time, "time", lambda now=now: now)
+        out.append((
+            dt.encode_minimal_docx(["Para"], title="DT", author="DA"),
+            dt.encode_minimal_epub(["Chapter"], title="ET"),
+        ))
+    assert out[0] == out[1]
+
+
 def test_docx_tabs_and_breaks():
     import io
     import zipfile

@@ -14,7 +14,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from rta_registrations_pyspark_glue_spark.operators import flac
+from rta_registrations_pyspark_glue_spark.operators import bitio, flac
 
 
 def _sig(n=512, seed=0, amp=2000, ch=2):
@@ -30,28 +30,28 @@ def test_crc_check_values():
     """The standard check values pin the polynomials and bit order:
     CRC-8 (poly 0x07, init 0) of '123456789' is 0xF4; CRC-16/BUYPASS
     (poly 0x8005, init 0, unreflected) is 0xFEE8."""
-    assert flac.crc8(b"123456789") == 0xF4
-    assert flac.crc16(b"123456789") == 0xFEE8
+    assert bitio.crc8(b"123456789") == 0xF4
+    assert bitio.crc16(b"123456789") == 0xFEE8
 
 
 def test_rice_zigzag_hand_vector():
     """Encode residuals [0, -1, 1, -3] with rice parameter 1 and read
     the bits back: zigzag maps them to 0,1,2,5 -> (q,r) pairs
     (0,0),(0,1),(1,0),(2,1)."""
-    bw = flac.BitWriter()
+    bw = bitio.MsbWriter()
     flac._write_residual(bw, [0, -1, 1, -3], 0, 4, 1)
     bw.align()
-    br = flac.BitReader(bw.bytes())
+    br = bitio.MsbReader(bw.bytes())
     out = flac._read_residual(br, 4, 0)
     assert out == [0, -1, 1, -3]
 
 
 def test_utf8_number_roundtrip():
     for v in (0, 1, 0x7F, 0x80, 0x7FF, 0x800, 0xFFFF, 0x10FFFF, (1 << 30) + 5):
-        bw = flac.BitWriter()
+        bw = bitio.MsbWriter()
         flac._write_utf8_number(bw, v)
         bw.align()
-        br = flac.BitReader(bw.bytes())
+        br = bitio.MsbReader(bw.bytes())
         assert flac._read_utf8_number(br) == v, v
 
 
@@ -99,11 +99,11 @@ def test_roundtrip_rice_partitions_and_escape():
         out, _ = flac.decode_flac(data)
         assert np.array_equal(out, sig), po
     # raw-bits escape in the last partition
-    bw = flac.BitWriter()
+    bw = bitio.MsbWriter()
     flac._write_residual(bw, list(range(-8, 8)), 0, 16, 3,
                          partition_order=1, escape_raw=6)
     bw.align()
-    br = flac.BitReader(bw.bytes())
+    br = bitio.MsbReader(bw.bytes())
     assert flac._read_residual(br, 16, 0) == list(range(-8, 8))
 
 

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rta_registrations_pyspark_glue_spark.operators import h264, mp4
+from rta_registrations_pyspark_glue_spark.operators.bitio import MsbWriter
 
 
 def _fixture(d: int) -> tuple[bytes, dict]:
@@ -97,58 +98,58 @@ def test_scaling_list_skip_path():
     """An SPS with seq_scaling_matrix_present and one present list
     still parses to the right dims — the cursor math over delta_scale
     runs; values are never interpreted."""
-    w = h264.BitWriter()
-    w.u(100, 8).u(0, 8).u(31, 8)
+    w = MsbWriter()
+    w.write(100, 8).write(0, 8).write(31, 8)
     w.ue(0)  # sps_id
     w.ue(1)  # chroma 4:2:0
     w.ue(0).ue(0)
-    w.u(0, 1)  # qpprime
-    w.u(1, 1)  # scaling matrix PRESENT
+    w.write(0, 1)  # qpprime
+    w.write(1, 1)  # scaling matrix PRESENT
     for i in range(8):
         if i == 0:
-            w.u(1, 1)  # list 0 present
+            w.write(1, 1)  # list 0 present
             for _ in range(16):
                 w.se(1)  # delta_scale
         else:
-            w.u(0, 1)
+            w.write(0, 1)
     w.ue(0)  # log2_max_frame_num_minus4
     w.ue(0)  # poc_type 0
     w.ue(0)
     w.ue(2)
-    w.u(0, 1)
+    w.write(0, 1)
     w.ue(5 - 1)  # 80 px wide
     w.ue(3 - 1)  # 48 px tall
-    w.u(1, 1)
-    w.u(1, 1)
-    w.u(0, 1)  # no cropping
-    w.u(0, 1)  # no vui
-    nal = b"\x67" + h264.insert_emulation(w.rbsp())
+    w.write(1, 1)
+    w.write(1, 1)
+    w.write(0, 1)  # no cropping
+    w.write(0, 1)  # no vui
+    nal = b"\x67" + h264.insert_emulation(w.write(1, 1).align().bytes())
     info = h264.parse_sps(nal)
     assert (info["width"], info["height"]) == (80, 48)
 
 
 def test_poc_type_1_arm():
     """pic_order_cnt_type 1 (the cyclic arm) advances correctly."""
-    w = h264.BitWriter()
-    w.u(66, 8).u(0, 8).u(30, 8)
+    w = MsbWriter()
+    w.write(66, 8).write(0, 8).write(30, 8)
     w.ue(0)
     w.ue(0)  # log2_max_frame_num_minus4
     w.ue(1)  # poc_type 1
-    w.u(0, 1)
+    w.write(0, 1)
     w.se(0)
     w.se(0)
     w.ue(2)  # two cycle offsets
     w.se(1)
     w.se(-1)
     w.ue(2)
-    w.u(0, 1)
+    w.write(0, 1)
     w.ue(4 - 1)
     w.ue(4 - 1)
-    w.u(1, 1)
-    w.u(1, 1)
-    w.u(0, 1)
-    w.u(0, 1)
-    info = h264.parse_sps(b"\x67" + h264.insert_emulation(w.rbsp()))
+    w.write(1, 1)
+    w.write(1, 1)
+    w.write(0, 1)
+    w.write(0, 1)
+    info = h264.parse_sps(b"\x67" + h264.insert_emulation(w.write(1, 1).align().bytes()))
     assert (info["width"], info["height"]) == (64, 64)
     assert info["pic_order_cnt_type"] == 1
 

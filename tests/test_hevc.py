@@ -5,7 +5,7 @@ window, chroma/bit-depth), hvcC record roundtrip, the two-byte-header
 NAL walk with IRAP keyframe semantics, MP4 + Matroska track
 extraction, and the malformed-input envelope. Pytest-pinned (the gate
 covers the shared machinery via the 'h264' rows; HEVC reuses the same
-BitReader/Writer and container walks)."""
+bitio MSB-first reader/writer and container walks)."""
 
 from __future__ import annotations
 

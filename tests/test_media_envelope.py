@@ -2,7 +2,8 @@
 decode operator returns one row per input payload, with ``*_ok`` false
 and NULL features, for empty, one-byte, random and half-truncated
 payloads — and, on the audio leg, for a WAV whose sample rate does not
-fit the ``int`` column and a FLAC cut inside its frame CRC."""
+fit the ``int`` column and a FLAC cut inside its frame CRC; on the image
+leg, for JPEGs whose SOF0 or SOS segment length leaves an empty body."""
 
 from __future__ import annotations
 
@@ -33,6 +34,7 @@ from rta_registrations_pyspark_glue_spark.operators.flac import (
     decode_flac,
     encode_flac,
 )
+from rta_registrations_pyspark_glue_spark.operators.jpeg import encode_baseline_jpeg
 
 #: decode leg -> (decode operator, the synth leg whose doc-0 fixture it
 #: gets cut in half)
@@ -87,6 +89,15 @@ def _flac_short_crc() -> bytes:
     return bytes(flac)
 
 
+def _jpeg_short_segment(marker: int) -> bytes:
+    """A 16x16 baseline JPEG whose SOF0 (0xC0) or SOS (0xDA)
+    segment-length field says 2, leaving the segment body empty."""
+    jpg = bytearray(encode_baseline_jpeg(np.zeros((16, 16, 3), np.uint8)))
+    at = jpg.index(bytes([0xFF, marker]))
+    jpg[at + 2 : at + 4] = b"\x00\x02"
+    return bytes(jpg)
+
+
 @pytest.fixture(scope="module")
 def fixtures(spark):
     """Doc 0's fixture of every leg, from one Spark job."""
@@ -113,6 +124,8 @@ def test_malformed_payloads_land_in_the_envelope(spark, fixtures, leg):
     ]
     if leg == "audio":
         payloads += [_wav_rate_overflow(), _flac_short_crc()]
+    if leg == "image":
+        payloads += [_jpeg_short_segment(0xC0), _jpeg_short_segment(0xDA)]
     df = spark.createDataFrame(
         list(enumerate(payloads)), "doc_id bigint, content binary"
     )

@@ -1,7 +1,6 @@
-"""Vorbis structural extraction (r13, VERDICT r12 missing #4): the
-LSB-first bit pair, every header parser against its builder twin, the
-FULL setup walk across codebook/floor/residue/mapping/mode variants,
-the audio walk's lapped-window duration, the Ogg end-to-end against the
+"""Vorbis structural extraction (r13, VERDICT r12 missing #4): every
+header parser against its builder twin, the FULL setup walk across
+codebook/floor/residue/mapping/mode variants, the audio walk's lapped-window duration, the Ogg end-to-end against the
 closed-form plan, the Matroska A_VORBIS route, and the malformed-input
 envelope."""
 
@@ -10,29 +9,6 @@ from __future__ import annotations
 import pytest
 
 from rta_registrations_pyspark_glue_spark.operators import vorbis
-
-
-def test_lsb_bit_pair_roundtrip():
-    """LsbWriter/LsbReader are exact inverses at every width and
-    offset — Vorbis packs LSB-first (spec §2), the opposite of every
-    other reader in the package, so the pair is pinned on an
-    odd-width field sequence crossing many byte boundaries."""
-    fields = [(i % (1 << w), w) for i, w in enumerate(
-        [1, 3, 5, 8, 13, 24, 32, 7, 2, 6, 16, 4, 1, 31] * 3
-    )]
-    w = vorbis.LsbWriter()
-    for v, n in fields:
-        w.write(v, n)
-    r = vorbis.LsbReader(w.getvalue())
-    for v, n in fields:
-        assert r.read(n) == v
-    # the spec's own example (§2): 4-bit 12 then 4-bit 7 packs to 0x7C
-    w2 = vorbis.LsbWriter()
-    w2.write(12, 4)
-    w2.write(7, 4)
-    assert w2.getvalue() == bytes([0x7C])
-    with pytest.raises(ValueError, match="exhausted"):
-        vorbis.LsbReader(b"\x00").read(9)
 
 
 def test_ilog_and_lookup1_values():
