@@ -32,6 +32,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from rta_registrations_pyspark_glue_spark.caching import tracked_persist
 
@@ -818,6 +819,12 @@ def probe_cells_expr(
     )
 
 
+#: Cosine margin over the runner-up above which train_ivf_centroids
+#: accepts the numpy GEMM's winning cell; rows inside it are re-scored
+#: by the exact scalar fold, so the result stays bit-identical to it.
+_KMEANS_TIE_MARGIN = 1e-8
+
+
 def train_ivf_centroids(
     corpus: DataFrame,
     n_pivots: int = 8,
@@ -826,7 +833,6 @@ def train_ivf_centroids(
     corpus_vec: str = "cv",
     quant_scale: int = 1000,
     max_train_rows: int = 200_000,
-    use_numpy: bool = True,
 ) -> list[tuple[int, list[float]]]:
     """Deterministic spherical k-means for the IVF coarse quantizer:
     init = the ``n_pivots`` lowest-id vectors of ``corpus`` (pass a
@@ -863,14 +869,15 @@ def train_ivf_centroids(
     grow with N). The numpy fast path computes all cosines as one
     GEMM and keeps the result BIT-IDENTICAL to the scalar loop (which
     the DuckDB oracle mirrors): a row's numpy winner is accepted only
-    when its cosine margin over the runner-up exceeds 1e-8 — vastly
-    more than the ≤~1e-12 summation-order divergence between numpy's
-    pairwise dot and the strict left-to-right fold — and near-tie rows
-    fall back to the exact scalar loop. Centroid sums stay exact
-    integer arithmetic (int64, magnitude-guarded against overflow,
-    within float64's 2^53 exact range for the one final division).
-    ``use_numpy=False`` forces the scalar path;
-    test_kmeans_numpy_path_bit_identical pins equality.
+    when its cosine margin over the runner-up exceeds
+    _KMEANS_TIE_MARGIN — vastly more than the ≤~1e-12 summation-order
+    divergence between numpy's pairwise dot and the strict
+    left-to-right fold — and near-tie rows fall back to the exact
+    scalar loop. Centroid sums stay exact integer arithmetic (int64,
+    magnitude-guarded against overflow, within float64's 2^53 exact
+    range for the one final division). test_kmeans_numpy_path_bit_identical
+    pins equality by raising the margin to infinity, which sends every
+    row through the scalar loop.
 
     Returns [(cell, centroid)] sorted by cell; cell = init pivot's id."""
     import math
@@ -943,7 +950,7 @@ def train_ivf_centroids(
             return best_cell
 
         live = [(cell, pv, pn) for cell, pv, pn in pivots if pn != 0.0]
-        if use_numpy and live:
+        if live:
             pv_m = np.array([pv for _, pv, _ in live], dtype=np.float64)
             pn_v = np.array([pn for _, _, pn in live], dtype=np.float64)
             cos_m = (mat @ pv_m.T) / (sn_v[:, None] * pn_v[None, :])
@@ -958,21 +965,63 @@ def train_ivf_centroids(
             else:
                 margin = np.full(len(quant), np.inf)
             for i in range(len(quant)):
-                if margin[i] > 1e-8:
+                if margin[i] > _KMEANS_TIE_MARGIN:
                     accumulate(live[win[i]][0], i)
                 else:
                     cell = exact_best(quant[i][0], quant[i][1])
                     if cell is not None:
                         accumulate(cell, i)
-        else:
-            for i, (cv, sn, _q) in enumerate(quant):
-                cell = exact_best(cv, sn)
-                if cell is not None:
-                    accumulate(cell, i)
         cents = sorted(
             (cell, [s / counts[cell] for s in sums[cell]]) for cell in sums
         )
     return cents
+
+
+#: Per-cell partial rows both distributed trainers shuffle: exact int64
+#: sums of quantized components, so partition order cannot matter.
+_PARTIAL_SCHEMA = StructType(
+    [
+        StructField("cell", LongType()),
+        StructField("cnt", LongType()),
+        StructField("sums", ArrayType(LongType())),
+    ]
+)
+
+
+def _reduce_partials(pdf):
+    """applyInPandas reducer: one cell's partial rows -> one row."""
+    import numpy as np
+    import pandas as pd
+
+    arr = np.stack(pdf["sums"].map(np.asarray)).astype(np.int64)
+    return pd.DataFrame(
+        {
+            "cell": [int(pdf["cell"].iloc[0])],
+            "cnt": [int(pdf["cnt"].sum())],
+            "sums": [arr.sum(axis=0).tolist()],
+        }
+    )
+
+
+def _check_quant_bound(df: DataFrame, quant_scale: int, who: str) -> None:
+    """One pass over ``df``'s ``__cv`` computing n and the largest
+    |floor(x·quant_scale + 0.5)|; raises when max·n reaches 2^53, past
+    which int64 partial sums and the one float64 division per component
+    stop being exact. Callers run it before any aggregation, so int64
+    never silently wraps."""
+    qabs = F.array_max(
+        F.transform(
+            "__cv", lambda x: F.abs(F.floor(x * F.lit(float(quant_scale)) + 0.5))
+        )
+    )
+    stats = df.agg(
+        F.count(F.lit(1)).alias("n"), F.max(qabs).alias("maxq")
+    ).collect()[0]
+    if int(stats["maxq"] or 0) * int(stats["n"]) >= (1 << 53):
+        raise ValueError(
+            f"{who}: quantized magnitudes too large for exact int64/float64 "
+            "centroid math — lower quant_scale."
+        )
 
 
 def train_ivf_centroids_distributed(
@@ -1012,16 +1061,8 @@ def train_ivf_centroids_distributed(
     Overflow/exactness guard (same bound as the driver trainer, checked
     BEFORE any aggregation so int64 can never silently wrap):
     max|quantized| · n_rows must stay under 2^53."""
-    import math
-
     import numpy as np
     import pandas as pd  # noqa: F401  (mapInPandas contract)
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     base = (
         corpus.select(
@@ -1039,33 +1080,11 @@ def train_ivf_centroids_distributed(
         base, iters * 2.0 * n_pivots * estimate_plan_bytes(base) / 5.0
     )
     base = tracked_persist(base)
-    # Bound check first: one pass computing n and max|quantized q|.
-    qabs = F.array_max(
-        F.transform(
-            "__cv", lambda x: F.abs(F.floor(x * F.lit(float(quant_scale)) + 0.5))
-        )
-    )
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n"), F.max(qabs).alias("maxq")
-    ).collect()[0]
-    n_rows, max_q = int(stats["n"]), int(stats["maxq"] or 0)
-    if max_q * n_rows >= (1 << 53):
-        raise ValueError(
-            "train_ivf_centroids_distributed: quantized magnitudes too large "
-            "for exact int64/float64 centroid math — lower quant_scale."
-        )
+    _check_quant_bound(base, quant_scale, "train_ivf_centroids_distributed")
     init = base.orderBy("__id").limit(n_pivots).collect()
     cents = [(int(r["__id"]), [float(x) for x in r["__cv"]]) for r in init]
     if not cents:
         return []
-
-    partial_schema = StructType(
-        [
-            StructField("cell", LongType()),
-            StructField("cnt", LongType()),
-            StructField("sums", ArrayType(LongType())),
-        ]
-    )
 
     def make_partials(centroids):
         def op(batches):
@@ -1099,19 +1118,11 @@ def train_ivf_centroids_distributed(
 
         return op
 
-    def reduce_cell(pdf):
-        arr = np.stack(pdf["sums"].map(np.asarray)).astype(np.int64)
-        return pd.DataFrame(
-            {
-                "cell": [int(pdf["cell"].iloc[0])],
-                "cnt": [int(pdf["cnt"].sum())],
-                "sums": [arr.sum(axis=0).tolist()],
-            }
-        )
-
     for _ in range(iters):
-        partials = base.mapInPandas(make_partials(cents), partial_schema)
-        final = partials.groupBy("cell").applyInPandas(reduce_cell, partial_schema)
+        partials = base.mapInPandas(make_partials(cents), _PARTIAL_SCHEMA)
+        final = partials.groupBy("cell").applyInPandas(
+            _reduce_partials, _PARTIAL_SCHEMA
+        )
         rows = final.collect()
         cents = sorted(
             (int(r["cell"]), [int(s) / int(r["cnt"]) for s in r["sums"]])
@@ -1142,7 +1153,6 @@ def ivf_build(
     corpus_id: str = "cid",
     corpus_vec: str = "cv",
     centroids: list[tuple[int, list[float]]] | None = None,
-    distributed_training: bool | None = None,
 ) -> IvfIndex:
     """Build the IVF index: train the coarse quantizer, then assign every
     corpus vector to its nearest centroid — scan-side, zero shuffle.
@@ -1164,15 +1174,15 @@ def ivf_build(
     so reusing them across sessions/cache-releases is sound — the
     assignment is rebuilt against them lazily).
 
-    ``distributed_training``: route k-means through
+    Trainer dispatch: k-means routes through
     train_ivf_centroids_distributed — bit-identical centroids, but each
-    Lloyd iteration runs as a distributed job instead of driver flops.
-    The ≥10⁹-vector path, where sample and k both grow with N and the
-    in-RAM trainer's O(sample·k·d) becomes the wall (SCALING.md §5).
-    Default ``None`` AUTO-dispatches on estimated training flops
-    (sample plan bytes × k × iters — the spread_for_gemm estimate): the
-    r8 third-decade decomposition measured the sf15 driver trainer at
-    51s of single-process numpy (46 GFLOP) while the bit-identical
+    Lloyd iteration runs as a distributed job instead of driver flops —
+    once the estimated training flops (sample plan bytes × k × iters,
+    the spread_for_gemm estimate) pass _DIST_TRAIN_MIN_FLOPS. That is
+    the ≥10⁹-vector path, where sample and k both grow with N and the
+    in-RAM trainer's O(sample·k·d) becomes the wall (SCALING.md §5):
+    the r8 third-decade decomposition measured the sf15 driver trainer
+    at 51s of single-process numpy (46 GFLOP) while the bit-identical
     distributed twin spreads the same flops across the executor threads.
     The estimate ignores the sample filter's selectivity (basic Catalyst
     stats don't), which only errs toward dispatching distributed
@@ -1183,25 +1193,25 @@ def ivf_build(
         if train_sample_mod <= 1
         else corpus.filter(F.col(corpus_id) % train_sample_mod == 0)
     )
-    hierarchical_training = False
-    if distributed_training is None and train_iters > 0 and centroids is None:
+    distributed = hierarchical = False
+    if train_iters > 0 and centroids is None:
         from rta_registrations_pyspark_glue_spark.io import estimate_plan_bytes
 
         est_flops = train_iters * 2.0 * n_pivots * estimate_plan_bytes(train_src) / 5.0
-        distributed_training = est_flops > _DIST_TRAIN_MIN_FLOPS
+        distributed = est_flops > _DIST_TRAIN_MIN_FLOPS
         # past another decade of flops, even the distributed flat
         # trainer's sample·k·d is the N² build wall (sf15→sf45
         # measured 13.3× for 3× N) — route to the two-level N^1.5
         # trainer; the threshold keeps every corpus with a recorded
         # third-decade number (and every oracle corpus) on the flat
         # path the bit-identity tests pin
-        hierarchical_training = (
+        hierarchical = (
             est_flops > _HIER_TRAIN_MIN_FLOPS
             and n_pivots > _HIER_ASSIGN_MIN_CELLS
         )
     if centroids is not None:
         cents = centroids
-    elif train_iters > 0 and hierarchical_training:
+    elif hierarchical:
         cents = train_ivf_centroids_hierarchical(
             train_src,
             n_pivots=n_pivots,
@@ -1209,7 +1219,7 @@ def ivf_build(
             corpus_id=corpus_id,
             corpus_vec=corpus_vec,
         )
-    elif train_iters > 0 and distributed_training:
+    elif distributed:
         cents = train_ivf_centroids_distributed(
             train_src,
             n_pivots=n_pivots,
@@ -1290,7 +1300,6 @@ def ivf_search(
     query_id: str = "qid",
     query_vec: str = "qv",
     max_broadcast_queries: int = 100_000,
-    rank_mode: str = "auto",
 ) -> DataFrame:
     """Search a built IVF index; exact top-k within each query's
     ``nprobe`` nearest cells. Output: (qid, cid, rank, cosine) —
@@ -1315,24 +1324,15 @@ def ivf_search(
     fine to ~1e9 (e.g. 100k queries × 4k cells × 64 dims); past that,
     lower ``max_broadcast_queries`` to force the join path.
 
-    ``rank_mode`` (r12, VERDICT r11 #1): how the per-query top-nprobe
-    PROBE CELLS are ranked once k is large — "flat" always ranks all k
-    centroids exactly; "auto" (default) runs the decide_rank_mode
-    overlap validation on a ≤1024-query sample once k crosses
-    _HIER_RANK_MIN_CELLS and switches to the calibrated √k
-    hierarchical ranking only when the sampled probe-set recall clears
-    _HIER_RANK_OVERLAP within the _HIER_RANK_MAX_COST flop budget;
-    "hier" forces the hierarchical path at the calibrated (overlap-
-    target-meeting) super_probe — the A/B measurement hook. Below
-    _HIER_RANK_MIN_CELLS every mode is the exact flat ranking, so all
-    oracle-checked corpora are invariant to this parameter."""
+    Both strategies rank every query's probe cells EXACTLY against all
+    k centroids: the column fold up to _HIER_ASSIGN_MIN_CELLS cells,
+    the BLAS form (_negcos_order_gemm) past it. SCALING.md §17–§18
+    record why no approximate √k probe routing is used: its sampled
+    time gate refused it at every measured scale (sf405: flat 1.30s vs
+    routed 12.1s on the calibration sample)."""
     if 0 <= queries.limit(max_broadcast_queries + 1).count() <= max_broadcast_queries:
-        return _ivf_search_broadcast(
-            index, queries, k, nprobe, query_id, query_vec, rank_mode
-        )
-    return _ivf_search_join(
-        index, queries, k, nprobe, query_id, query_vec, rank_mode
-    )
+        return _ivf_search_broadcast(index, queries, k, nprobe, query_id, query_vec)
+    return _ivf_search_join(index, queries, k, nprobe, query_id, query_vec)
 
 
 #: Above this centroid count, cell assignment and probe ranking run as
@@ -1418,20 +1418,19 @@ def _topk_stable(np, negcos, nprobe):
 #: in float32 instead of float64 (r13, VERDICT r12 #2). The §17 sf405
 #: isolation showed the exact ranking is MEMORY-bound: the dominant
 #: cost is writing the (chunk, k) score matrix, and float32 halves
-#: exactly that traffic (plus sgemm doubles BLAS throughput). Same
-#: floor as the hierarchical ranking (_HIER_RANK_MIN_CELLS) and far
+#: exactly that traffic (plus sgemm doubles BLAS throughput). Far
 #: above every oracle-checked corpus, so gate results stay bit-exact;
 #: past it, a probe-order flip needs two centroid cosines within
 #: ~1e-7 of each other — and such near-ties only reshuffle which of
 #: two near-equidistant cells is probed, never the exact scoring of
 #: the candidates themselves. Enabled by measurement (r13 quiet-host
-#: A/B, tools/rank_dtype_ab.py, 3 passes each dtype): sf135 11.3s vs
-#: 14.3s (1.27×, 26997/27000 probe sets identical), sf405 358.6s vs
-#: 462.2s (1.29×, 80996/81000) — SCALING.md §18. None disables.
-_GEMM_SCORE_F32_MIN_CELLS: int | None = 4096
+#: A/B, 3 passes each dtype): sf135 11.3s vs 14.3s (1.27×, 26997/27000
+#: probe sets identical), sf405 358.6s vs 462.2s (1.29×, 80996/81000)
+#: — SCALING.md §18.
+_GEMM_SCORE_F32_MIN_CELLS = 4096
 
 
-def _negcos_order_gemm(np, mat, sqrtn, cent_m, cent_nrm, nprobe, score_dtype=None):
+def _negcos_order_gemm(np, mat, sqrtn, cent_m, cent_nrm, nprobe):
     """_negcos_order with the accumulation done by BLAS dgemm instead
     of the d-step column fold. Mathematically the same sum;
     floating-point rounding may differ in the last ulp, so the probe
@@ -1441,11 +1440,11 @@ def _negcos_order_gemm(np, mat, sqrtn, cent_m, cent_nrm, nprobe, score_dtype=Non
     bit-exact fold). The r9 study measured the fold loop at 18.7s for
     the sf15 ranking (30k×1200×64 — memory traffic, not flops: 64
     full Q×k temporaries); the dgemm form is sub-second for the same
-    arithmetic, against which the two-level-quantizer alternative
-    (rank_probe_hierarchical) measured BOTH slower (6.4s) and lossy
-    (0.54 search-result overlap on the near-uniform corpus) — exact
-    ranking via BLAS beats approximate ranking via routing at every
-    k this container can hold.
+    arithmetic, against which a two-level-quantizer probe ranking
+    measured BOTH slower (6.4s) and lossy (0.54 search-result overlap
+    on the near-uniform corpus) — exact ranking via BLAS beats
+    approximate ranking via routing at every measured k (SCALING.md
+    §17–§18).
 
     r12: the query axis is CHUNKED (the sf405 sixth decade made the
     unchunked form allocate two 81k×32400 float64 temporaries — 21 GB
@@ -1458,20 +1457,13 @@ def _negcos_order_gemm(np, mat, sqrtn, cent_m, cent_nrm, nprobe, score_dtype=Non
 
     r13: past _GEMM_SCORE_F32_MIN_CELLS the score matrix is computed
     in float32 (see the constant's note — §17 measured the ranking
-    memory-bound on exactly that matrix; ``score_dtype`` overrides the
-    dispatch for A/B runs). Cosines float32 cannot distinguish select
-    in ascending column order, the same rule exact ties follow."""
+    memory-bound on exactly that matrix). Cosines float32 cannot
+    distinguish select in ascending column order, the same rule exact
+    ties follow."""
     k = cent_m.shape[0]
     nprobe = min(nprobe, k)
     n = len(mat)
-    if score_dtype is None:
-        score_dtype = (
-            np.float32
-            if _GEMM_SCORE_F32_MIN_CELLS is not None
-            and k > _GEMM_SCORE_F32_MIN_CELLS
-            else np.float64
-        )
-    if score_dtype == np.float32:
+    if k > _GEMM_SCORE_F32_MIN_CELLS:
         # r13 (VERDICT r12 #2): halve the memory traffic that binds —
         # the inputs are downcast ONCE (Q·d + k·d, small next to Q·k)
         # and the GEMM writes a float32 score matrix. Tie semantics
@@ -1644,13 +1636,7 @@ def train_ivf_centroids_hierarchical(
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import DoubleType
 
     n_supers = max(2, int(math.ceil(math.sqrt(n_pivots))))
     sup_cents = train_ivf_centroids_distributed(
@@ -1703,22 +1689,8 @@ def train_ivf_centroids_hierarchical(
             )
 
     tagged = tracked_persist(base.mapInPandas(tag_super, sup_schema))
-
     # Overflow/exactness guard — the same bound as both flat trainers.
-    qabs = F.array_max(
-        F.transform(
-            "__cv", lambda x: F.abs(F.floor(x * F.lit(float(quant_scale)) + 0.5))
-        )
-    )
-    stats = tagged.agg(
-        F.count(F.lit(1)).alias("n"), F.max(qabs).alias("maxq")
-    ).collect()[0]
-    n_rows, max_q = int(stats["n"]), int(stats["maxq"] or 0)
-    if max_q * n_rows >= (1 << 53):
-        raise ValueError(
-            "train_ivf_centroids_hierarchical: quantized magnitudes too "
-            "large for exact int64/float64 centroid math — lower quant_scale."
-        )
+    _check_quant_bound(tagged, quant_scale, "train_ivf_centroids_hierarchical")
 
     counts = {
         int(r["__sup"]): int(r["cnt"])
@@ -1749,14 +1721,6 @@ def train_ivf_centroids_hierarchical(
         )
     for s in children:
         children[s].sort()
-
-    partial_schema = StructType(
-        [
-            StructField("cell", LongType()),
-            StructField("cnt", LongType()),
-            StructField("sums", ArrayType(LongType())),
-        ]
-    )
 
     def make_partials(child_map):
         arrays = {
@@ -1796,22 +1760,14 @@ def train_ivf_centroids_hierarchical(
 
         return op
 
-    def reduce_cell(pdf):
-        arr = np.stack(pdf["sums"].map(np.asarray)).astype(np.int64)
-        return pd.DataFrame(
-            {
-                "cell": [int(pdf["cell"].iloc[0])],
-                "cnt": [int(pdf["cnt"].sum())],
-                "sums": [arr.sum(axis=0).tolist()],
-            }
-        )
-
     cell_to_sup = {
         cid: s for s, cl in children.items() for cid, _ in cl
     }
     for _ in range(iters):
-        partials = tagged.mapInPandas(make_partials(children), partial_schema)
-        final = partials.groupBy("cell").applyInPandas(reduce_cell, partial_schema)
+        partials = tagged.mapInPandas(make_partials(children), _PARTIAL_SCHEMA)
+        final = partials.groupBy("cell").applyInPandas(
+            _reduce_partials, _PARTIAL_SCHEMA
+        )
         rows = final.collect()
         new_children: dict[int, list[tuple[int, list[float]]]] = {}
         for r in rows:
@@ -1921,368 +1877,6 @@ def assign_cells_hierarchical(
     return c.mapInPandas(op, schema=schema)
 
 
-def rank_probe_hierarchical(
-    np,
-    mat,
-    sqrtn,
-    centroids: list[tuple[int, list[float]]],
-    cent_m,
-    cent_nrm,
-    nprobe: int,
-    super_probe: int | None = None,
-    n_super: int | None = None,
-    quantizer=None,
-    score: str = "fold",
-):
-    """assign_cells_hierarchical's SEARCH-side twin (r9, VERDICT r8 #2):
-    rank a query batch's top-``nprobe`` PROBE cells through the same
-    two-level quantizer instead of scoring all k centroids per query,
-    cutting Q·k·d to ~Q·(√k + super_probe·√k)·d.
-
-    OPT-IN, not wired into any default path: the r9 sf15 A/B measured
-    it both SLOWER than the dgemm exact ranking the search paths now
-    dispatch to (6.4s vs sub-second — see _negcos_order_gemm) and
-    LOSSY on the near-uniform benchmark corpus (0.54 search-result
-    overlap vs flat at derived super_probe; near-uniform vectors are
-    the adversarial case — super-cells barely align with
-    neighborhoods). Retained, tested, for the regime where it is the
-    right tool: k ≫ 10⁴ on clustered corpora, where even one Q×k
-    dgemm row is prohibitive per worker and FAISS-IMI routing is the
-    standard answer.
-
-    Same exactness anchor as the build side: scoring is the identical
-    per-lane column fold (acc[q,c] = Σ_d mat[q,d]·cent[c,d], dim order
-    — grouping queries per super changes nothing per lane), the merge
-    order is (negcos ASC, position ASC) == the flat stable argsort's
-    (negcos, cell) order (supers PARTITION the children, so each
-    (query, cell) lane is scored exactly once), and ``super_probe >=
-    number of supers`` makes every lane present — BIT-IDENTICAL to the
-    flat ranking (test-pinned). A query whose routed supers carry fewer
-    than ``nprobe`` children falls back to exact flat ranking, so the
-    contract "returns exactly min(nprobe, k) cells per query" always
-    holds. Returns (Q, min(nprobe, k)) POSITIONS into the centroid
-    list. ``quantizer``: a precomputed ``_cluster_centroids`` result,
-    so batch-loop callers cluster the k children once, not per batch.
-
-    Shape note: scoring iterates PER SUPER (~√k numpy calls on
-    (|Q_j|, |children_j|) blocks), not per distinct super-combo — the
-    first cut grouped queries by routed-super combination and at sf15
-    (30k queries x C(35,6) possible combos) degenerated into ~10⁴
-    tiny GEMMs whose fixed numpy overhead measured 271s; the per-super
-    formulation runs the same flops in ~35 calls. The MERGE is a
-    dense scatter into a reused (chunk, k) matrix (missing lanes NaN —
-    exactly where flat ranking puts unrankable lanes) selected by the
-    same O(Q·k) _topk_stable the exact path uses. r12 replaced the
-    original global-lexsort merge after measuring it at sf405: the
-    lexsort materialized Q·sp·√k ≈ 715M (query, cell, score) rows —
-    1300s and ~17 GB for a ranking whose flat exact form runs in 207s.
-    The flop saving was real; the merge gave it all back and more.
-    Dense-scatter keeps the per-super flop cut and pays flat's
-    selection cost, never the global sort.
-
-    ``score``: "fold" (default) keeps the exact per-lane column fold —
-    the bit-identity anchor above holds against _negcos_order. "gemm"
-    runs each per-super block as one BLAS dgemm (and the short-query
-    fallback as _negcos_order_gemm) — same sums, last-ulp rounding
-    only; the r12 auto-enable path uses it because it only ever
-    engages past _HIER_RANK_MIN_CELLS, far beyond the bit-exact
-    oracle boundary."""
-    import math
-
-    k = len(centroids)
-    nprobe = min(nprobe, k)
-    if quantizer is None:
-        s = n_super or max(2, int(round(math.sqrt(k))))
-        quantizer = _cluster_centroids(np, centroids, s)
-    sup_m, children = quantizer
-    if super_probe is None:
-        # Unlike top-1 assignment (where only the argmax cell must
-        # survive routing, and super_probe=2 measures 0.8+ agreement),
-        # probe ranking must preserve a top-``nprobe`` SET — so derive
-        # enough supers that the candidate pool carries ~4x nprobe
-        # children (avg k/n_super children per super). At sf15 scale
-        # (k=1200, nprobe≈49, ~35 supers) this lands sp≈6: the Q·k·d
-        # flat term still drops ~5x, without the recall cliff a fixed
-        # sp=2 showed (0.6 top-k overlap on the gate corpus).
-        per = k / max(1, len(children))
-        super_probe = max(_HIER_SUPER_PROBE, math.ceil(4 * nprobe / per))
-    sp = min(super_probe, len(children))
-    n = len(mat)
-    out = np.empty((n, nprobe), dtype=np.int64)
-    rank_fn = _negcos_order_gemm if score == "gemm" else _negcos_order
-    chunk = _GEMM_QUERY_CHUNK
-    dense = None
-    for cs_ in range(0, n, chunk):
-        ce = min(cs_ + chunk, n)
-        cmat, csq = mat[cs_:ce], sqrtn[cs_:ce]
-        # routing: plain dgemm against unit supers (norms cancel
-        # per-row)
-        route = np.argsort(-(cmat @ sup_m.T), axis=1, kind="stable")[
-            :, :sp
-        ]
-        if dense is None or len(dense) != len(cmat):
-            dense = np.empty((len(cmat), k))
-        dense.fill(np.nan)
-        pool = np.zeros(len(cmat), dtype=np.int64)
-        for j in range(len(children)):
-            rows = np.nonzero((route == j).any(axis=1))[0]
-            if len(rows) == 0:
-                continue
-            cand = children[j]  # ascending original positions
-            if score == "gemm":
-                acc = cmat[rows] @ cent_m[cand].T
-            else:
-                acc = np.zeros((len(rows), len(cand)))
-                for d in range(cmat.shape[1]):
-                    acc += np.outer(cmat[rows, d], cent_m[cand, d])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                dense[np.ix_(rows, cand)] = -(
-                    acc / np.outer(csq[rows], cent_nrm[cand])
-                )
-            pool[rows] += len(cand)
-        enough = pool >= nprobe
-        if enough.any():
-            out[cs_:ce][enough] = _topk_stable(
-                np, dense[enough], nprobe
-            )
-        if not enough.all():
-            # exact flat fallback for queries whose routed supers carry
-            # fewer than nprobe children (tiny quantizers / lopsided
-            # maps)
-            short = np.nonzero(~enough)[0]
-            out[cs_:ce][short] = rank_fn(
-                np, cmat[short], csq[short], cent_m, cent_nrm, nprobe
-            )
-    return out
-
-
-#: Cell count past which ivf_search's "auto" rank mode CONSIDERS the
-#: √k hierarchical probe ranking (it still has to pass the sampled
-#: overlap validation below). Sits an order of magnitude above
-#: _HIER_ASSIGN_MIN_CELLS: at k ≤ ~4k the exact Q·k dgemm is
-#: sub-second (SCALING.md §10 measured it at sf15's k=1200) and
-#: nothing is gained by trading recall; past it the ranking term is
-#: the only super-linear term left in the search (§16: ~51% of sf405
-#: search flops, growing √N per decade). Every oracle-checked corpus
-#: (k=8/80/400 at sf0.01/0.1/1/5) sits far below, so gate results
-#: stay bit-exact under the default "auto".
-_HIER_RANK_MIN_CELLS = 4096
-
-#: Sampled probe-set recall the calibrated hierarchical ranking must
-#: reach before "auto" turns it on. Probe-set recall lower-bounds
-#: search-result recall (a flat-top-nprobe cell that IS in the routed
-#: candidate pool always survives into the hierarchical top-nprobe:
-#: scores are exact and the pool is a subset of all cells), so 0.95
-#: here is stricter than the r9 ≥0.8 search-overlap contract.
-_HIER_RANK_OVERLAP = 0.95
-
-#: Maximum (hierarchical flops / flat flops) ratio "auto" accepts:
-#: if meeting the overlap target needs so many probed supers that the
-#: ranking cost is back above half of flat, routing buys too little —
-#: stay exact.
-_HIER_RANK_MAX_COST = 0.5
-
-#: Queries sampled (driver-side) for the overlap calibration.
-_RANK_SAMPLE_MAX = 1024
-
-#: Measured-time gate for "auto": after the overlap validation passes,
-#: both ranking forms are TIMED on the calibration sample and the
-#: hierarchical path must beat the exact one by at least this factor
-#: to be enabled. The r12 sf405 isolation measured why flop ratios
-#: alone mislead here: at d=64 the exact chunked ranking is MEMORY-
-#: bound (writing the (chunk, k) score matrix dominates), and the
-#: dense-scatter hierarchical form writes the same matrix — 3.6× fewer
-#: flops, 265s vs 241s wall-clock. Routing wins when scoring is
-#: compute-bound (large d, k ≥ 10⁵); the sample A/B detects that on
-#: the actual host/shape instead of assuming it. Set to None to
-#: disable (tests; the forced "hier" mode never times).
-_HIER_RANK_TIME_RATIO: float | None = 0.8
-
-
-def decide_rank_mode(
-    np,
-    sample_mat,
-    sample_sqrtn,
-    centroids: list[tuple[int, list[float]]],
-    cent_m,
-    cent_nrm,
-    nprobe: int,
-    overlap_target: float = _HIER_RANK_OVERLAP,
-    max_cost_ratio: float = _HIER_RANK_MAX_COST,
-    n_super: int | None = None,
-    quantizer=None,
-    force: bool = False,
-) -> dict:
-    """The r12 overlap-validation protocol SCALING.md §16 called for
-    (VERDICT r11 #1): decide, from a bounded driver-side query sample,
-    whether the √k hierarchical probe ranking (rank_probe_hierarchical)
-    preserves enough of the exact probe set to be enabled — and at
-    which ``super_probe``.
-
-    The r9 rejection used the DERIVED super_probe (≈4·nprobe children,
-    sp=6 at sf15) and measured 0.54 search overlap on the near-uniform
-    corpus. The insight this protocol adds: sp is a dial, not a
-    constant. Routing costs √k·d per query and each probed super adds
-    ~√k·d of candidate scoring, so even sp in the tens keeps the
-    ranking ~5× under the flat Q·k·d at k≈32k — the question is the
-    SMALLEST sp whose sampled probe-set recall clears the target, and
-    whether that sp still clears the flop budget.
-
-    Method (one V×k dgemm + one V×√k dgemm, driver-side, V ≤ 1024):
-    compute the exact flat top-``nprobe`` probe cells per sample query;
-    compute each query's full super routing order; for every (query,
-    probe-slot) pair find the routing RANK of that cell's super. The
-    overlap curve over sp is then one cumulative histogram —
-    overlap(sp) = fraction of flat probe cells whose super routes
-    within the top sp. This is EXACT for the candidate-pool stage (a
-    pooled cell survives into the hierarchical top-nprobe by the
-    subset argument in _HIER_RANK_OVERLAP's note), so the curve is the
-    true probe-set recall of rank_probe_hierarchical at each sp, not a
-    proxy.
-
-    Returns {"mode": "hier"|"flat", "super_probe", "overlap",
-    "cost_ratio", "n_super", "k", "nprobe"} — mode "hier" with the
-    minimal qualifying sp, or "flat" with the overlap at the largest
-    affordable sp (the measured, documented reason routing stays off).
-    ``force=True`` drops the cost gate (pick the minimal sp meeting
-    the overlap target, else the full-recall sp = n_super) — the A/B
-    measurement hook."""
-    import math
-
-    k = len(centroids)
-    nprobe = min(nprobe, k)
-    if quantizer is None:
-        s = n_super or max(2, int(round(math.sqrt(k))))
-        quantizer = _cluster_centroids(np, centroids, s)
-    sup_m, children = quantizer
-    ns = len(children)
-    flat = _negcos_order_gemm(
-        np, sample_mat, sample_sqrtn, cent_m, cent_nrm, nprobe
-    )
-    route_order = np.argsort(
-        -(sample_mat @ sup_m.T), axis=1, kind="stable"
-    )
-    v = len(sample_mat)
-    rows = np.arange(v)[:, None]
-    super_rank = np.empty_like(route_order)
-    super_rank[rows, route_order] = np.arange(ns)[None, :]
-    super_of = np.empty(k, dtype=np.int64)
-    for j, ch in enumerate(children):
-        super_of[ch] = j
-    need_rank = super_rank[rows, super_of[flat]]
-    hist = np.bincount(need_rank.reshape(-1), minlength=ns)
-    overlap_at = np.cumsum(hist) / max(1, need_rank.size)
-    sp_arr = np.arange(1, ns + 1)
-    cost_at = (ns + sp_arr * (k / ns)) / k
-    meets = overlap_at >= overlap_target
-    ok = meets & (cost_at <= max_cost_ratio) if not force else meets
-    base = {"n_super": ns, "k": k, "nprobe": nprobe}
-    if ok.any():
-        i = int(ok.argmax())  # minimal sp: overlap_at is nondecreasing
-        return {
-            "mode": "hier",
-            "super_probe": int(sp_arr[i]),
-            "overlap": float(overlap_at[i]),
-            "cost_ratio": float(cost_at[i]),
-            **base,
-        }
-    if force:
-        # full-recall fallback: probing every super IS the flat set
-        return {
-            "mode": "hier",
-            "super_probe": ns,
-            "overlap": 1.0,
-            "cost_ratio": float(cost_at[-1]),
-            **base,
-        }
-    within = cost_at <= max_cost_ratio
-    if within.any():
-        i = int(np.nonzero(within)[0][-1])
-        return {
-            "mode": "flat",
-            "super_probe": int(sp_arr[i]),
-            "overlap": float(overlap_at[i]),
-            "cost_ratio": float(cost_at[i]),
-            **base,
-        }
-    return {
-        "mode": "flat", "super_probe": 0, "overlap": 0.0,
-        "cost_ratio": 1.0, **base,
-    }
-
-
-def _rank_sample(np, q_mat, q_sqrtn):
-    """Deterministic ≤_RANK_SAMPLE_MAX-row calibration sample: an even
-    stride over the query matrix (no RNG — same queries, same
-    decision)."""
-    v = len(q_mat)
-    if v <= _RANK_SAMPLE_MAX:
-        return q_mat, q_sqrtn
-    idx = np.linspace(0, v - 1, _RANK_SAMPLE_MAX).astype(np.int64)
-    return q_mat[idx], q_sqrtn[idx]
-
-
-#: Last ivf_search rank-mode decision made on this driver (None until
-#: a search crosses _HIER_RANK_MIN_CELLS) — observability for tests
-#: and the decompose tool; DataFrames can't carry metadata.
-_LAST_RANK_DECISION: dict | None = None
-
-
-def _decide_search_rank(
-    np, q_mat, q_sqrtn, centroids, cent_m, cent_nrm, nprobe, rank_mode
-):
-    """ivf_search's shared gatekeeper: returns a decide_rank_mode
-    decision dict (with the fitted quantizer attached under
-    "_quantizer") when the calibrated hierarchical ranking should run,
-    else None (exact flat ranking). Records the decision in
-    _LAST_RANK_DECISION either way once validation actually ran."""
-    global _LAST_RANK_DECISION
-    import math
-
-    if rank_mode not in ("auto", "hier", "flat"):
-        raise ValueError(f"rank_mode {rank_mode!r}: auto | hier | flat")
-    k = len(centroids)
-    if rank_mode == "flat" or k <= _HIER_RANK_MIN_CELLS or len(q_mat) == 0:
-        return None
-    quantizer = _cluster_centroids(
-        np, centroids, max(2, int(round(math.sqrt(k))))
-    )
-    smat, ssq = _rank_sample(np, q_mat, q_sqrtn)
-    decision = decide_rank_mode(
-        np, smat, ssq, centroids, cent_m, cent_nrm, nprobe,
-        quantizer=quantizer, force=(rank_mode == "hier"),
-    )
-    if (
-        rank_mode == "auto"
-        and decision["mode"] == "hier"
-        and _HIER_RANK_TIME_RATIO is not None
-    ):
-        # empirical time gate (see _HIER_RANK_TIME_RATIO): overlap
-        # passing only says routing is RECALL-safe; whether it is
-        # FASTER depends on whether ranking is compute- or memory-
-        # bound on this host/shape — measure, don't model.
-        import time as _time
-
-        t0 = _time.perf_counter()
-        _negcos_order_gemm(np, smat, ssq, cent_m, cent_nrm, nprobe)
-        t_flat = _time.perf_counter() - t0
-        t0 = _time.perf_counter()
-        rank_probe_hierarchical(
-            np, smat, ssq, centroids, cent_m, cent_nrm, nprobe,
-            super_probe=decision["super_probe"], quantizer=quantizer,
-            score="gemm",
-        )
-        t_hier = _time.perf_counter() - t0
-        decision["t_flat_sample"] = t_flat
-        decision["t_hier_sample"] = t_hier
-        if t_hier > _HIER_RANK_TIME_RATIO * t_flat:
-            decision["mode"] = "flat"
-            decision["refused"] = "time-gate"
-    decision["_quantizer"] = quantizer
-    _LAST_RANK_DECISION = decision
-    return decision if decision["mode"] == "hier" else None
-
-
 def probe_memberships_vectorized(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -2376,7 +1970,6 @@ def _ivf_search_broadcast(
     nprobe: int,
     query_id: str,
     query_vec: str,
-    rank_mode: str = "auto",
 ) -> DataFrame:
     """Broadcast-GEMM strategy (see ivf_search). Exactness notes: query
     norms use the driver fold (_py_dot — identical to the Spark fold);
@@ -2388,11 +1981,9 @@ def _ivf_search_broadcast(
     score >= the k-th best so boundary ties always reach the final
     window, which applies the same (cosine DESC, cid ASC) total
     order."""
-    import math
-
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    from pyspark.sql.types import DoubleType
 
     corpus_id = index.corpus_id
     q_rows = queries.select(query_id, query_vec).collect()
@@ -2421,27 +2012,8 @@ def _ivf_search_broadcast(
     q_ids, q_mat, qn = q_ids[keep], q_mat[keep], qn[keep]
     q_sqrtn = np.sqrt(qn)
 
-    cells = np.array([cell for cell, _ in index.centroids], dtype=np.int64)
-    cent_m = np.array([cv for _, cv in index.centroids], dtype=np.float64)
-    cent_nrm = np.array(
-        [math.sqrt(_py_dot(cv, cv)) for _, cv in index.centroids]
-    )
-    decision = _decide_search_rank(
-        np, q_mat, q_sqrtn, index.centroids, cent_m, cent_nrm, nprobe,
-        rank_mode,
-    )
-    if decision is not None and decision["mode"] == "hier":
-        # r12 (VERDICT r11 #1): the calibrated √k hierarchical ranking
-        # — enabled only because decide_rank_mode measured its sampled
-        # probe-set recall ≥ the target at this super_probe. Cuts the
-        # Q·k·d ranking term (~51% of sf405 search flops, §16) to
-        # Q·√k·(1+sp)·d.
-        order = rank_probe_hierarchical(
-            np, q_mat, q_sqrtn, index.centroids, cent_m, cent_nrm,
-            nprobe, super_probe=decision["super_probe"],
-            quantizer=decision["_quantizer"], score="gemm",
-        )
-    elif len(cells) > _HIER_ASSIGN_MIN_CELLS:
+    cells, cent_m, cent_nrm = _centroid_arrays(np, index.centroids)
+    if len(cells) > _HIER_ASSIGN_MIN_CELLS:
         # r9: past the same threshold as build-side assignment, probe
         # ranking switches to the BLAS dgemm form — the Q·k·d fold
         # loop SCALING.md §9 measured inside the sf15 search becomes
@@ -2452,19 +2024,8 @@ def _ivf_search_broadcast(
             np, q_mat, q_sqrtn, cent_m, cent_nrm, nprobe
         )
     else:
-        # negcos[q, c] = -(fold_dot(qv, cv) / (sqrt(qn) * nrm_c)) —
-        # column fold keeps every lane bit-identical to the SQL
-        # expression; division by a zero centroid norm yields ±inf/NaN
-        # exactly as SQL.
-        acc = np.zeros((len(q_mat), len(cells)))
-        for d in range(q_mat.shape[1]):
-            acc += np.outer(q_mat[:, d], cent_m[:, d])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            negcos = -(acc / np.outer(q_sqrtn, cent_nrm))
-        # Stable argsort on negcos over cell-ascending columns ==
-        # sorting (negcos, cell) ascending; NaN sorts last in numpy and
-        # Spark alike.
-        order = np.argsort(negcos, axis=1, kind="stable")[:, :nprobe]
+        # column fold: every lane bit-identical to the SQL expression
+        order = _negcos_order(np, q_mat, q_sqrtn, cent_m, cent_nrm, nprobe)
     # Invert (query -> probed cells) to (cell -> query positions)
     # vectorized (r12: the per-element Python loop was 20M dict appends
     # at sf405). The stable sort keeps query positions ascending within
@@ -2580,7 +2141,6 @@ def _ivf_search_join(
     nprobe: int = 2,
     query_id: str = "qid",
     query_vec: str = "qv",
-    rank_mode: str = "auto",
 ) -> DataFrame:
     """Per-pair-join strategy (see ivf_search): scan-side probe explode,
     cell equi-join against the persisted assignment, exact vectorized
@@ -2606,40 +2166,6 @@ def _ivf_search_join(
         )
         gemm = len(centroids) > _HIER_ASSIGN_MIN_CELLS  # driver-side
 
-        # r12 rank-mode validation: this path exists because the query
-        # set was too big to collect, so calibrate on a bounded SPREAD
-        # sample — order by a hash of the query id and take the first
-        # _RANK_SAMPLE_MAX (one TakeOrdered job: per-partition top-k,
-        # driver merge of ≤1024 rows — never a full collect). The r12
-        # form took a limit() PREFIX, which on a clustered or sorted
-        # query set measures one region of query space and can
-        # overestimate probe-set recall for the rest (ADVICE r12); the
-        # hash order is deterministic (same queries, same decision),
-        # the broadcast-path analogue of _rank_sample's even stride.
-        # The decision and the driver-fitted quantizer ride the
-        # closure into every task — workers never refit, so all tasks
-        # rank identically.
-        decision = None
-        if rank_mode != "flat" and len(centroids) > _HIER_RANK_MIN_CELLS:
-            s_rows = (
-                q.select(F.col(query_id), "__qv", "__qn")
-                .orderBy(F.xxhash64(F.col(query_id)), F.col(query_id))
-                .limit(_RANK_SAMPLE_MAX)
-                .collect()
-            )
-            if s_rows:
-                smat = np.array(
-                    [[float(x) for x in r["__qv"]] for r in s_rows]
-                )
-                ssq = np.sqrt(np.array([float(r["__qn"]) for r in s_rows]))
-                _, cent_m0, cent_nrm0 = _centroid_arrays(np, centroids)
-                decision = _decide_search_rank(
-                    np, smat, ssq, centroids, cent_m0, cent_nrm0, nprobe,
-                    rank_mode,
-                )
-        hier_sp = decision["super_probe"] if decision else None
-        hier_q = decision["_quantizer"] if decision else None
-
         def probe_op(batches):
             cells, cent_m, cent_nrm = _centroid_arrays(np, centroids)
             kk = min(nprobe, len(cells))
@@ -2648,13 +2174,7 @@ def _ivf_search_join(
                     continue
                 mat = np.stack(pdf["__qv"].map(np.asarray)).astype(np.float64)
                 sqrtn = np.sqrt(pdf["__qn"].to_numpy())
-                if hier_sp is not None:  # r12: calibrated √k ranking
-                    order = rank_probe_hierarchical(
-                        np, mat, sqrtn, centroids, cent_m, cent_nrm, kk,
-                        super_probe=hier_sp, quantizer=hier_q,
-                        score="gemm",
-                    )
-                elif gemm:  # r9: see _negcos_order_gemm
+                if gemm:  # r9: see _negcos_order_gemm
                     order = _negcos_order_gemm(
                         np, mat, sqrtn, cent_m, cent_nrm, kk
                     )

@@ -209,19 +209,23 @@ def test_ivf_search_strategies_identical(spark, sf_dir):
     assert len(fast) > 0
 
 
-def test_kmeans_numpy_path_bit_identical(spark, sf_dir):
+def test_kmeans_numpy_path_bit_identical(spark, sf_dir, monkeypatch):
     """The GEMM-vectorized Lloyd assignment must produce EXACTLY the
     scalar loop's centroids (the DuckDB oracle mirrors the scalar
-    semantics, so any divergence is a silent gate breaker). Run at two
-    cell counts to exercise both sparse and dense tie geometry."""
+    semantics, so any divergence is a silent gate breaker). An infinite
+    tie margin sends every row through the scalar fold, which makes it
+    the reference. Run at two cell counts to exercise both sparse and
+    dense tie geometry."""
+    import math
+
     emb = load_table(spark, "embeddings", sf_dir).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
     for k in (8, 40):
         fast = similarity.train_ivf_centroids(emb, n_pivots=k, iters=3)
-        slow = similarity.train_ivf_centroids(
-            emb, n_pivots=k, iters=3, use_numpy=False
-        )
+        with monkeypatch.context() as m:
+            m.setattr(similarity, "_KMEANS_TIE_MARGIN", math.inf)
+            slow = similarity.train_ivf_centroids(emb, n_pivots=k, iters=3)
         assert fast == slow, f"numpy/scalar k-means diverged at k={k}"
 
 
@@ -252,16 +256,25 @@ def test_kmeans_distributed_bit_identical(spark, sf_dir):
     assert dist == driver
 
 
-def test_ivf_build_distributed_training_same_index(spark, sf_dir):
-    """ivf_build(distributed_training=True) yields the same centroid
-    set, hence the same search results, as the driver-trained build."""
+def test_ivf_build_distributed_training_same_index(spark, sf_dir, monkeypatch):
+    """With the flop threshold at 0, ivf_build trains through the
+    distributed trainer and yields the same centroid set, hence the
+    same search results, as the driver-trained build."""
     emb = load_table(spark, "embeddings", sf_dir).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
     a = similarity.ivf_build(emb, n_pivots=8, train_iters=2)
-    b = similarity.ivf_build(
-        emb, n_pivots=8, train_iters=2, distributed_training=True
-    )
+    calls = {"n": 0}
+    orig = similarity.train_ivf_centroids_distributed
+
+    def counting(*args, **kw):
+        calls["n"] += 1
+        return orig(*args, **kw)
+
+    monkeypatch.setattr(similarity, "train_ivf_centroids_distributed", counting)
+    monkeypatch.setattr(similarity, "_DIST_TRAIN_MIN_FLOPS", 0)
+    b = similarity.ivf_build(emb, n_pivots=8, train_iters=2)
+    assert calls["n"] == 1
     assert a.centroids == b.centroids
 
 
@@ -1610,11 +1623,6 @@ def test_ivf_build_dispatches_hierarchical_past_threshold(spark, monkeypatch):
     }
     caching.release_tracked()
     monkeypatch.setattr(similarity, "_HIER_ASSIGN_MIN_CELLS", 16)
-    # Pin the SEARCH side exact (r9 added hierarchical probe ranking
-    # behind the same threshold; deriving sp >= n_supers recovers the
-    # flat probe set) so this test keeps measuring the ASSIGNMENT
-    # approximation alone — the search-side trade has its own test.
-    monkeypatch.setattr(similarity, "_HIER_SUPER_PROBE", 10_000)
     hier_idx = similarity.ivf_build(corpus, n_pivots=40)
     hier_out = {
         (r["qid"], r["cid"])
@@ -1624,63 +1632,6 @@ def test_ivf_build_dispatches_hierarchical_past_threshold(spark, monkeypatch):
     overlap = len(flat_out & hier_out) / len(flat_out)
     assert overlap >= 0.8, overlap
     caching.release_tracked()
-
-
-def test_rank_probe_hierarchical_exact_when_all_supers_probed():
-    """rank_probe_hierarchical (the r9 SEARCH-side twin): with
-    super_probe >= n_supers the candidate set is all k children in
-    original order, so the probed-cell matrix must be BIT-IDENTICAL to
-    the flat stable argsort — pins the routing/union/position-mapping
-    machinery without needing a >512-cell Spark corpus."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    k, d, Q, nprobe = 60, 16, 40, 6
-    cents = [(int(i * 3 + 1), rng.normal(size=d).tolist()) for i in range(k)]
-    cells, cent_m, cent_nrm = similarity._centroid_arrays(np, cents)
-    mat = rng.normal(size=(Q, d))
-    sqrtn = np.sqrt((mat * mat).sum(axis=1))
-    flat = similarity._negcos_order(np, mat, sqrtn, cent_m, cent_nrm, nprobe)
-    hier = similarity.rank_probe_hierarchical(
-        np, mat, sqrtn, cents, cent_m, cent_nrm, nprobe, super_probe=10_000
-    )
-    assert (hier == flat).all()
-    # Default routing is approximate but close: the TOP probe cell must
-    # agree for the overwhelming majority of queries (each query's best
-    # centroid is in its best super by construction most of the time).
-    approx = similarity.rank_probe_hierarchical(
-        np, mat, sqrtn, cents, cent_m, cent_nrm, nprobe
-    )
-    assert approx.shape == flat.shape
-    top_agree = (approx[:, 0] == flat[:, 0]).mean()
-    # uniform-random vectors are the documented adversarial case for
-    # any coarse quantizer; the real-corpus end-to-end test pins 0.8
-    assert top_agree >= 0.7, top_agree
-    # Deterministic
-    again = similarity.rank_probe_hierarchical(
-        np, mat, sqrtn, cents, cent_m, cent_nrm, nprobe
-    )
-    assert (approx == again).all()
-
-
-def test_rank_probe_hierarchical_small_combo_falls_back_exact():
-    """A super combo with fewer children than nprobe must fall back to
-    exact flat ranking for its rows (contract: always exactly
-    min(nprobe, k) cells per query, correctly ordered)."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    k, d, Q = 10, 8, 12
-    cents = [(i, rng.normal(size=d).tolist()) for i in range(k)]
-    cells, cent_m, cent_nrm = similarity._centroid_arrays(np, cents)
-    mat = rng.normal(size=(Q, d))
-    sqrtn = np.sqrt((mat * mat).sum(axis=1))
-    # nprobe == k with many supers: every combo has < nprobe children
-    out = similarity.rank_probe_hierarchical(
-        np, mat, sqrtn, cents, cent_m, cent_nrm, k, super_probe=1, n_super=5
-    )
-    flat = similarity._negcos_order(np, mat, sqrtn, cent_m, cent_nrm, k)
-    assert (out == flat).all()
 
 
 def test_ivf_search_gemm_probe_ranking(spark, monkeypatch):
@@ -1985,235 +1936,6 @@ def test_ivf_append_occupancy_incremental_no_tree_scan(
     caching.release_tracked()
 
 
-def _clustered_fixture(np, n_dirs=60, k=800, d=32, n_queries=200, seed=42):
-    """Synthetic CLUSTERED geometry (the regime hierarchical routing is
-    for): k child centroids scattered around n_dirs unit directions,
-    queries drawn from the same directions."""
-    rng = np.random.default_rng(seed)
-    dirs = rng.normal(size=(n_dirs, d))
-    dirs /= np.linalg.norm(dirs, axis=1, keepdims=True)
-    cc = dirs[rng.integers(0, n_dirs, size=k)] + 0.15 * rng.normal(
-        size=(k, d)
-    )
-    cents = [(i, cc[i].tolist()) for i in range(k)]
-    qm = dirs[rng.integers(0, n_dirs, size=n_queries)] + 0.15 * rng.normal(
-        size=(n_queries, d)
-    )
-    return cents, qm
-
-
-def test_decide_rank_mode_clustered_enables_uniform_refuses():
-    """The r12 overlap-validation protocol (VERDICT r11 #1): on a
-    clustered corpus the calibrated hierarchical ranking clears the
-    0.95 probe-set-recall target at a tiny super_probe (large flop
-    cut) -> mode 'hier'; on a NEAR-UNIFORM corpus (the documented
-    adversarial case that measured 0.54 overlap at the r9 derived sp)
-    no affordable sp reaches the target -> mode 'flat', with the
-    overlap it DID measure reported as the documented refusal reason."""
-    import numpy as np
-
-    cents, qm = _clustered_fixture(np, k=2000, n_queries=300)
-    cells, cm, cn = similarity._centroid_arrays(np, cents)
-    sq = np.sqrt((qm * qm).sum(axis=1))
-    dec = similarity.decide_rank_mode(np, qm, sq, cents, cm, cn, nprobe=45)
-    assert dec["mode"] == "hier"
-    assert dec["overlap"] >= similarity._HIER_RANK_OVERLAP
-    assert dec["cost_ratio"] <= similarity._HIER_RANK_MAX_COST
-    assert 1 <= dec["super_probe"] < dec["n_super"]
-
-    rng = np.random.default_rng(7)
-    ucents = [(i, rng.normal(size=64).tolist()) for i in range(8000)]
-    _, ucm, ucn = similarity._centroid_arrays(np, ucents)
-    uq = rng.normal(size=(300, 64))
-    usq = np.sqrt((uq * uq).sum(axis=1))
-    udec = similarity.decide_rank_mode(
-        np, uq, usq, ucents, ucm, ucn, nprobe=89
-    )
-    assert udec["mode"] == "flat"
-    assert 0.0 < udec["overlap"] < similarity._HIER_RANK_OVERLAP
-    assert udec["cost_ratio"] <= similarity._HIER_RANK_MAX_COST
-    # force=True (the A/B hook) always yields a runnable hier config
-    fdec = similarity.decide_rank_mode(
-        np, uq, usq, ucents, ucm, ucn, nprobe=89, force=True
-    )
-    assert fdec["mode"] == "hier" and fdec["overlap"] >= 0.95
-
-    # determinism: same inputs, same decision
-    again = similarity.decide_rank_mode(np, qm, sq, cents, cm, cn, nprobe=45)
-    assert again == dec
-
-
-def test_ivf_search_auto_rank_end_to_end(spark, monkeypatch):
-    """auto rank_mode end-to-end on a clustered Spark corpus, both
-    physical strategies: past the (monkeypatched) consideration
-    threshold the validation enables the calibrated hierarchical
-    ranking, the recorded decision says so, and the search results
-    stay >= 0.9 overlapped with the exact flat search — the r9
-    contract the fixed-sp variant failed at 0.54."""
-    import numpy as np
-
-    # 400 cells over 20 directions (k >> n_super >> directions is the
-    # geometry routing wins): corpus = 3 perturbed copies per centroid
-    cents, qm = _clustered_fixture(
-        np, n_dirs=20, k=400, d=16, n_queries=120, seed=3
-    )
-    rng = np.random.default_rng(5)
-    cm0 = np.array([cv for _, cv in cents])
-    corpus_m = np.repeat(cm0, 3, axis=0) + 0.05 * rng.normal(
-        size=(1200, 16)
-    )
-    corpus = spark.createDataFrame(
-        [(int(i), corpus_m[i].tolist()) for i in range(len(corpus_m))],
-        "cid long, cv array<double>",
-    )
-    queries = spark.createDataFrame(
-        [(int(10_000 + i), qm[i].tolist()) for i in range(len(qm))],
-        "qid long, qv array<double>",
-    )
-    idx = similarity.ivf_build(corpus, centroids=cents)
-    flat = {
-        (r.qid, r.cid)
-        for r in similarity.ivf_search(
-            idx, queries, k=5, nprobe=12, rank_mode="flat"
-        ).collect()
-    }
-    monkeypatch.setattr(similarity, "_HIER_RANK_MIN_CELLS", 16)
-    # disable the empirical time gate: at toy scale both rankings run
-    # in microseconds and the timing comparison is noise — this test
-    # pins the OVERLAP contract (the time gate has its own test)
-    monkeypatch.setattr(similarity, "_HIER_RANK_TIME_RATIO", None)
-    monkeypatch.setattr(similarity, "_LAST_RANK_DECISION", None)
-    auto = {
-        (r.qid, r.cid)
-        for r in similarity.ivf_search(
-            idx, queries, k=5, nprobe=12, rank_mode="auto"
-        ).collect()
-    }
-    dec = similarity._LAST_RANK_DECISION
-    assert dec is not None and dec["mode"] == "hier", dec
-    assert dec["overlap"] >= similarity._HIER_RANK_OVERLAP
-    overlap = len(flat & auto) / len(flat)
-    assert overlap >= 0.9, overlap
-
-    # join path (query set forced past the broadcast cap): the
-    # decision is calibrated driver-side from a bounded prefix sample
-    # and shipped to the workers — same contract
-    monkeypatch.setattr(similarity, "_LAST_RANK_DECISION", None)
-    joined = {
-        (r.qid, r.cid)
-        for r in similarity.ivf_search(
-            idx, queries, k=5, nprobe=12, rank_mode="auto",
-            max_broadcast_queries=10,
-        ).collect()
-    }
-    dec2 = similarity._LAST_RANK_DECISION
-    assert dec2 is not None and dec2["mode"] == "hier", dec2
-    overlap_j = len(flat & joined) / len(flat)
-    assert overlap_j >= 0.9, overlap_j
-    # the empirical time gate (re-enabled): whatever it measures at
-    # this scale, the decision must carry the sample timings and the
-    # search must still match flat results-wise — a time-gate refusal
-    # falls back to the EXACT ranking, never a worse one
-    monkeypatch.setattr(similarity, "_HIER_RANK_TIME_RATIO", 0.8)
-    monkeypatch.setattr(similarity, "_LAST_RANK_DECISION", None)
-    gated = {
-        (r.qid, r.cid)
-        for r in similarity.ivf_search(
-            idx, queries, k=5, nprobe=12, rank_mode="auto"
-        ).collect()
-    }
-    dec3 = similarity._LAST_RANK_DECISION
-    assert dec3 is not None
-    assert "t_flat_sample" in dec3 and "t_hier_sample" in dec3
-    if dec3["mode"] == "flat":
-        assert dec3["refused"] == "time-gate"
-        assert gated == flat
-    else:
-        assert len(flat & gated) / len(flat) >= 0.9
-    caching.release_tracked()
-
-
-def test_join_rank_calibration_uses_spread_sample(spark, monkeypatch):
-    """r13 (ADVICE r12 #4): the join path's rank-mode calibration
-    samples by a deterministic hash spread over the query ids, not a
-    limit() prefix. The r12 prefix sample of a sorted/clustered query
-    frame measured one region of query space; here the calibrator's
-    actual input is captured and must (a) span the whole id range —
-    not the first-64 prefix — and (b) be the same set on a repeated
-    run (the decision must stay deterministic). The search result
-    itself stays >= 0.9 overlapped with the exact flat search
-    whichever way the decision goes."""
-    import numpy as np
-
-    cents, qm = _clustered_fixture(
-        np, n_dirs=20, k=400, d=16, n_queries=400, seed=17
-    )
-    rng = np.random.default_rng(19)
-    cm0 = np.array([cv for _, cv in cents])
-    corpus_m = np.repeat(cm0, 3, axis=0) + 0.05 * rng.normal(size=(1200, 16))
-    corpus = spark.createDataFrame(
-        [(int(i), corpus_m[i].tolist()) for i in range(len(corpus_m))],
-        "cid long, cv array<double>",
-    )
-    # a SORTED single-partition query frame — the shape where a
-    # limit() prefix degenerates to "the first 64 ids"
-    queries = spark.createDataFrame(
-        [(int(i), qm[i].tolist()) for i in range(400)],
-        "qid long, qv array<double>",
-    ).coalesce(1)
-    # recover sampled ids from the captured sample matrix: the float64
-    # vectors round-trip Spark exactly, so the first-3-coords key is
-    # collision-free for this fixture
-    key2id = {tuple(qm[i][:3].tolist()): i for i in range(400)}
-    assert len(key2id) == 400
-    captured: list[list[int]] = []
-    real_decide = similarity._decide_search_rank
-
-    def capturing(np_, q_mat, q_sqrtn, *a, **kw):
-        captured.append(
-            sorted(key2id[tuple(row[:3].tolist())] for row in q_mat)
-        )
-        return real_decide(np_, q_mat, q_sqrtn, *a, **kw)
-
-    monkeypatch.setattr(similarity, "_decide_search_rank", capturing)
-    monkeypatch.setattr(similarity, "_HIER_RANK_MIN_CELLS", 16)
-    monkeypatch.setattr(similarity, "_HIER_RANK_TIME_RATIO", None)
-    monkeypatch.setattr(similarity, "_RANK_SAMPLE_MAX", 64)
-
-    idx = similarity.ivf_build(corpus, centroids=cents)
-    flat = {
-        (r.qid, r.cid)
-        for r in similarity.ivf_search(
-            idx, queries, k=5, nprobe=12, rank_mode="flat",
-            max_broadcast_queries=10,
-        ).collect()
-    }
-    assert captured == []  # flat mode never calibrates
-    auto = {
-        (r.qid, r.cid)
-        for r in similarity.ivf_search(
-            idx, queries, k=5, nprobe=12, rank_mode="auto",
-            max_broadcast_queries=10,
-        ).collect()
-    }
-    assert len(captured) == 1
-    ids = captured[0]
-    assert len(ids) == 64
-    # (a) spread, not prefix: the sample covers all four quartiles of
-    # the id range and is NOT the first-64 prefix the r12 limit() took
-    assert ids != list(range(64))
-    assert min(ids) < 100 and max(ids) >= 300
-    assert sum(1 for i in ids if i >= 200) >= 10
-    # (b) deterministic: the same query frame samples the same ids
-    similarity.ivf_search(
-        idx, queries, k=5, nprobe=12, rank_mode="auto",
-        max_broadcast_queries=10,
-    ).collect()
-    assert captured[1] == ids
-    assert len(flat & auto) / len(flat) >= 0.9
-    caching.release_tracked()
-
-
 def test_gemm_score_dtype_dispatch_and_tie_order(monkeypatch):
     """r13 float32 score matrix (VERDICT r12 #2). Pins: (a) at or
     below _GEMM_SCORE_F32_MIN_CELLS the dispatch stays float64 —
@@ -2222,22 +1944,33 @@ def test_gemm_score_dtype_dispatch_and_tie_order(monkeypatch):
     on non-pathological geometry; (c) a cosine gap real in float64 but
     below float32 resolution (~1e-11 here) becomes a TIE that resolves
     by ascending column — the same total-order rule exact ties follow;
-    (d) score_dtype explicitly overrides the dispatch both ways."""
+    (d) the threshold is strict: k equal to it stays float64, one
+    below it goes float32. The float64 and float32 references come
+    from patching the threshold, the only dtype switch."""
     import math
 
     import numpy as np
 
-    # (a) k=100 <= threshold: default == explicit float64, elementwise
+    def ranked(threshold, *args):
+        with monkeypatch.context() as m:
+            m.setattr(similarity, "_GEMM_SCORE_F32_MIN_CELLS", threshold)
+            return similarity._negcos_order_gemm(np, *args)
+
+    never, always = 1 << 62, 0  # float64 / float32 at any k
+
+    # (a) k=100 <= threshold: default == a float64 stable argsort of
+    # the same GEMM, elementwise
     rng = np.random.default_rng(29)
     cents = [(i, rng.normal(size=16).tolist()) for i in range(100)]
     _, cm, cn = similarity._centroid_arrays(np, cents)
     qm = rng.normal(size=(50, 16))
     sq = np.sqrt((qm * qm).sum(axis=1))
     default = similarity._negcos_order_gemm(np, qm, sq, cm, cn, 10)
-    f64 = similarity._negcos_order_gemm(
-        np, qm, sq, cm, cn, 10, score_dtype=np.float64
-    )
+    f64 = np.argsort(
+        -((qm @ cm.T) / np.outer(sq, cn)), axis=1, kind="stable"
+    )[:, :10]
     assert (default == f64).all()
+    assert (default == ranked(never, qm, sq, cm, cn, 10)).all()
 
     # (b) k=5000 > threshold: default engages float32; probe SETS
     # match the float64 reference (deterministic fixture — any
@@ -2247,18 +1980,13 @@ def test_gemm_score_dtype_dispatch_and_tie_order(monkeypatch):
     bq = rng.normal(size=(200, 24))
     bsq = np.sqrt((bq * bq).sum(axis=1))
     got32 = similarity._negcos_order_gemm(np, bq, bsq, bcm, bcn, 20)
-    got64 = similarity._negcos_order_gemm(
-        np, bq, bsq, bcm, bcn, 20, score_dtype=np.float64
-    )
+    got64 = ranked(never, bq, bsq, bcm, bcn, 20)
     same_rows = sum(
         1 for a, b in zip(got32, got64) if set(a.tolist()) == set(b.tolist())
     )
     assert same_rows >= 198, same_rows  # sets essentially identical
     # and the float32 default really is the float32 path
-    explicit32 = similarity._negcos_order_gemm(
-        np, bq, bsq, bcm, bcn, 20, score_dtype=np.float32
-    )
-    assert (got32 == explicit32).all()
+    assert (got32 == ranked(always, bq, bsq, bcm, bcn, 20)).all()
 
     # (c) float32-merged tie resolves by column ascending: column 0 is
     # the slightly-WORSE centroid in float64 (cos ≈ 1 - 5e-11), so
@@ -2275,14 +2003,12 @@ def test_gemm_score_dtype_dispatch_and_tie_order(monkeypatch):
     _, tcm, tcn = similarity._centroid_arrays(np, tie_cents)
     tq = np.array([[1.0, 0.0]])
     tsq = np.array([1.0])
-    o64 = similarity._negcos_order_gemm(
-        np, tq, tsq, tcm, tcn, 2, score_dtype=np.float64
-    )
-    o32 = similarity._negcos_order_gemm(
-        np, tq, tsq, tcm, tcn, 2, score_dtype=np.float32
-    )
-    assert o64[0].tolist() == [1, 0]
-    assert o32[0].tolist() == [0, 1]
+    assert ranked(never, tq, tsq, tcm, tcn, 2)[0].tolist() == [1, 0]
+    assert ranked(always, tq, tsq, tcm, tcn, 2)[0].tolist() == [0, 1]
+
+    # (d) the dispatch boundary, on the same 6-cell tie fixture
+    assert ranked(6, tq, tsq, tcm, tcn, 2)[0].tolist() == [1, 0]
+    assert ranked(5, tq, tsq, tcm, tcn, 2)[0].tolist() == [0, 1]
 
 
 def test_ivf_search_f32_ranking_end_to_end(spark, monkeypatch):

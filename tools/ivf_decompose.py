@@ -56,24 +56,6 @@ def main() -> None:
         i = args.index("--query-mod")
         query_mod = int(args[i + 1])
         del args[i : i + 2]
-    # --rank-mode flat|auto|hier (default auto, r12): the probe-ranking
-    # strategy ivf_search should use; the recorded decide_rank_mode
-    # decision (mode/sp/overlap/cost) is printed per search pass so the
-    # sidecar shows WHY routing engaged or refused.
-    rank_mode = "auto"
-    if "--rank-mode" in args:
-        i = args.index("--rank-mode")
-        rank_mode = args[i + 1]
-        del args[i : i + 2]
-    # --score-dtype auto|f32|f64 (default auto, r13): the GEMM
-    # ranking's score-matrix precision — f64 forces the pre-r13 path
-    # (disables _GEMM_SCORE_F32_MIN_CELLS), f32 forces float32 at any
-    # k, auto leaves the production dispatch. The §18 A/B knob.
-    score_dtype = "auto"
-    if "--score-dtype" in args:
-        i = args.index("--score-dtype")
-        score_dtype = args[i + 1]
-        del args[i : i + 2]
     # --stage-shuffles: per search pass, print every NEW completed
     # stage that moved shuffle data (write-records descending) so the
     # pass-level delta can be attributed to a specific exchange — the
@@ -82,12 +64,6 @@ def main() -> None:
     if "--stage-shuffles" in args:
         stage_shuffles = True
         args.remove("--stage-shuffles")
-    if score_dtype == "f64":
-        similarity._GEMM_SCORE_F32_MIN_CELLS = None
-    elif score_dtype == "f32":
-        similarity._GEMM_SCORE_F32_MIN_CELLS = 0
-    elif score_dtype != "auto":
-        raise SystemExit(f"--score-dtype {score_dtype!r}: auto | f32 | f64")
     dirs = args or ["/root/repo/.scale/sf5", "/root/repo/.scale/sf15"]
     spark = get_spark("ivf_decompose")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -155,15 +131,12 @@ def main() -> None:
         idx.assignment.write.format("noop").mode("overwrite").save()
         t2 = time.perf_counter()
         search_times = []
-        decisions = []
         shuffles = []
         for p in range(passes):
             st_before = completed_stages()
             s_before = shuffle_totals(st_before)
             ts = time.perf_counter()
-            out = similarity.ivf_search(
-                idx, q, k=5, nprobe=nprobe, rank_mode=rank_mode
-            )
+            out = similarity.ivf_search(idx, q, k=5, nprobe=nprobe)
             out.write.format("noop").mode("overwrite").save()
             search_times.append(time.perf_counter() - ts)
             st_after = completed_stages()
@@ -200,30 +173,21 @@ def main() -> None:
                         f"r_bytes={s.get('shuffleReadBytes', 0)} "
                         f"name={s.get('name', '')[:120]!r}"
                     )
-            d = similarity._LAST_RANK_DECISION
-            decisions.append(
-                {k_: v for k_, v in d.items() if not k_.startswith("_")}
-                if d
-                else None
-            )
         strategy = (
             "hierarchical"
             if k > similarity._HIER_ASSIGN_MIN_CELLS
             else ("vectorized" if k > similarity._VEC_ASSIGN_MIN_CELLS else "expression")
         )
         # --search-passes 0 is a legal train+assign-only run (the §18
-        # assign-stage A/B); there is no decision or shuffle to print.
-        last_decision = decisions[-1] if decisions else None
+        # assign-stage A/B); there is no shuffle to print.
         searches = " ".join(f"search{i + 1}={t:.1f}s" for i, t in enumerate(search_times))
         shuf = " ".join(
             f"shuffle{i + 1}={s}" for i, s in enumerate(shuffles)
         )
         print(
             f"{sf}: n={n} k={k} nprobe={nprobe} query_mod={query_mod} "
-            f"assign_strategy={strategy} rank_mode={rank_mode} "
-            f"score_dtype={score_dtype} "
-            f"train={t1 - t0:.1f}s assign={t2 - t1:.1f}s {searches} "
-            f"rank_decision={last_decision} {shuf}"
+            f"assign_strategy={strategy} "
+            f"train={t1 - t0:.1f}s assign={t2 - t1:.1f}s {searches} {shuf}"
         )
         caching.release_tracked()
     spark.stop()
