@@ -8,15 +8,13 @@ operators repeatedly (the two-pass bench loop, the driver gate, a
 notebook) accumulates cached plans until memory pressure.
 
 ``tracked_persist`` is a drop-in ``df.persist()`` that records the frame;
-``release_tracked`` unpersists everything recorded, plus any registered
-cleanup hooks (e.g. the similarity index memos). Call it when a batch
+``release_tracked`` unpersists everything recorded. Call it when a batch
 of query invocations is done — bench.py does so after every full pass.
 """
 
 from __future__ import annotations
 
 import threading
-from collections.abc import Callable
 from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
@@ -24,7 +22,6 @@ from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame
 
 _LIVE: list[DataFrame] = []
-_HOOKS: list[Callable[[], None]] = []
 
 
 class _Recordings(threading.local):
@@ -77,16 +74,10 @@ def record_persists():
         _RECORDINGS.stack.pop()
 
 
-def register_release_hook(hook: Callable[[], None]) -> None:
-    """Register extra cleanup to run on ``release_tracked`` (idempotent
-    hooks only — they run on every release)."""
-    _HOOKS.append(hook)
-
-
 def release_tracked() -> int:
-    """Unpersist every tracked frame and run release hooks. Returns the
-    number of frames released. Safe to call with active consumers — the
-    frames recompute from lineage if used again."""
+    """Unpersist every tracked frame. Returns the number of frames
+    released. Safe to call with active consumers — the frames recompute
+    from lineage if used again."""
     n = len(_LIVE)
     while _LIVE:
         df = _LIVE.pop()
@@ -97,6 +88,4 @@ def release_tracked() -> int:
             # release. Anything else propagates: a failing unpersist on a
             # live session is a cache-lifecycle bug, not cleanup noise.
             pass
-    for hook in _HOOKS:
-        hook()
     return n

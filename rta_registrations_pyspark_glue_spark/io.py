@@ -454,26 +454,23 @@ def delete_stale_keys(
     canonical_pred,
     keys: DataFrame,
     key_cols: list[str],
-    order_by: list[str] | None = None,
+    order_by: list[str],
 ) -> None:
     """After a partition-scoped write touched ``keys``, restore the
     table's one-row-per-key grain: a re-registered key that moved
     partitions left a row behind in its old partition.
 
-    With ``order_by`` (recency columns, e.g. the same ones the table's
-    keep-latest merge orders by), the KEY'S NEWEST ROW WINS regardless of
-    which run wrote it: per key, the single max-recency row across the
-    whole table survives (ties broken toward the ``canonical_pred``
-    partitions — updates beat current, matching ``merge_upsert`` — then
-    by partition values for determinism) and every other copy is
-    scrubbed, including a just-written canonical row that an OLDER
-    backfill produced for a key whose newer re-registration lives in a
-    later partition. Out-of-order ``--year/--month`` runs are therefore
-    safe: a backfill can never delete a newer row.
-
-    Without ``order_by`` the behavior is last-RUN-wins (the canonical
-    partitions are the truth and every outside row is scrubbed) — only
-    correct when scoped runs are issued in chronological order.
+    ``order_by`` names the recency columns (e.g. the same ones the
+    table's keep-latest merge orders by), and the KEY'S NEWEST ROW WINS
+    regardless of which run wrote it: per key, the single max-recency
+    row across the whole table survives (ties broken toward the
+    ``canonical_pred`` partitions — updates beat current, matching
+    ``merge_upsert`` — then by partition values for determinism) and
+    every other copy is scrubbed, including a just-written canonical
+    row that an OLDER backfill produced for a key whose newer
+    re-registration lives in a later partition. Out-of-order
+    ``--year/--month`` runs are therefore safe: a backfill can never
+    delete a newer row.
 
     Only partitions actually holding losing rows are rewritten (found
     with a column-pruned probe join); a partition emptied entirely is
@@ -486,23 +483,20 @@ def delete_stale_keys(
     if not table_exists(path):
         return
     current = spark.read.parquet(path)
-    if order_by is None:
-        losers = current.filter(~canonical_pred).join(keys, key_cols)
-    else:
-        # Total order per key: recency, then canonical-side flag (the
-        # fresh write wins exact-recency ties), then partition values.
-        rec = F.struct(
-            *[F.col(c) for c in order_by],
-            canonical_pred.cast("int").alias("__canon"),
-            *[F.col(c) for c in partition_by],
-        )
-        keyed = current.join(keys, key_cols).withColumn("__rec", rec)
-        winners = keyed.groupBy(*key_cols).agg(F.max("__rec").alias("__win"))
-        losers = (
-            keyed.join(winners, key_cols)
-            .filter(F.col("__rec") != F.col("__win"))
-            .drop("__rec", "__win")
-        )
+    # Total order per key: recency, then canonical-side flag (the fresh
+    # write wins exact-recency ties), then partition values.
+    rec = F.struct(
+        *[F.col(c) for c in order_by],
+        canonical_pred.cast("int").alias("__canon"),
+        *[F.col(c) for c in partition_by],
+    )
+    keyed = current.join(keys, key_cols).withColumn("__rec", rec)
+    winners = keyed.groupBy(*key_cols).agg(F.max("__rec").alias("__win"))
+    losers = (
+        keyed.join(winners, key_cols)
+        .filter(F.col("__rec") != F.col("__win"))
+        .drop("__rec", "__win")
+    )
     stale_parts = sorted(
         tuple(r[c] for c in partition_by)
         for r in losers.select(*partition_by).distinct().collect()
@@ -516,24 +510,16 @@ def delete_stale_keys(
             cl = F.col(c) == v
             clause = cl if clause is None else clause & cl
         pred = clause if pred is None else pred | clause
-    scoped = current.filter(pred)
-    if order_by is None:
-        remaining = scoped.join(keys, key_cols, "left_anti")
-    else:
-        # Keep a row iff its key is untouched or it IS the key's winner
-        # (__rec includes the partition values, so equality identifies
-        # exactly one surviving copy).
-        rec = F.struct(
-            *[F.col(c) for c in order_by],
-            canonical_pred.cast("int").alias("__canon"),
-            *[F.col(c) for c in partition_by],
-        )
-        remaining = (
-            scoped.withColumn("__rec", rec)
-            .join(winners, key_cols, "left")
-            .filter(F.col("__win").isNull() | (F.col("__rec") == F.col("__win")))
-            .drop("__rec", "__win")
-        )
+    # Keep a row iff its key is untouched or it IS the key's winner
+    # (__rec includes the partition values, so equality identifies
+    # exactly one surviving copy).
+    remaining = (
+        current.filter(pred)
+        .withColumn("__rec", rec)
+        .join(winners, key_cols, "left")
+        .filter(F.col("__win").isNull() | (F.col("__rec") == F.col("__win")))
+        .drop("__rec", "__win")
+    )
     remaining = remaining.persist()
     remaining_parts = {
         tuple(r[c] for c in partition_by)

@@ -45,10 +45,9 @@ from pyspark.sql.window import Window
 
 from rta_registrations_pyspark_glue_spark.operators.similarity import (
     _GEMM_QUERY_CHUNK,
-    _HIER_ASSIGN_MIN_CELLS,
-    _negcos_order,
+    _centroid_arrays,
+    _probe_ranker,
     _prune_topk_frame,
-    _negcos_order_gemm,
     _py_dot,
     IvfIndex,
     as_double,
@@ -107,6 +106,39 @@ def _validate_pq_shape(dim: int, m: int, n_codes: int) -> int:
     return dim // m
 
 
+def _unit_sample(np, src: DataFrame, id_col: str, sample_mod: int,
+                 max_train_rows: int, caller: str):
+    """The bounded driver sample every trainer here collects. ``src``
+    holds (id, __cv, __cn, *extra) rows: keep the ``id % sample_mod ==
+    0`` slice, raise past ``max_train_rows`` (counted before the
+    zero-norm filter) instead of OOMing the driver, drop zero-norm rows,
+    sort by id. Returns the L2-normalized (n, d) float64 matrix and the
+    sorted row tuples, so the caller can read its extra columns."""
+    if sample_mod > 1:
+        src = src.filter(F.col(id_col) % sample_mod == 0)
+    n = src.count()
+    if n > max_train_rows:
+        raise ValueError(
+            f"{caller} collects the training sample to the driver: "
+            f"{n} rows exceeds max_train_rows={max_train_rows}. Raise "
+            f"sample_mod (or the bound)."
+        )
+    rows = src.filter(F.col("__cn") > 0).collect()
+    if not rows:
+        raise ValueError(f"{caller}: empty training sample")
+    sample = sorted(tuple(r) for r in rows)
+    mat = np.array([r[1] for r in sample], dtype=np.float64)
+    mat /= np.sqrt(np.array([r[2] for r in sample]))[:, None]
+    return mat, sample
+
+
+def _vec_rows(corpus: DataFrame, corpus_id: str, corpus_vec: str) -> DataFrame:
+    """(id, __cv as double[], __cn = squared norm) rows of ``corpus``."""
+    return corpus.select(
+        F.col(corpus_id), as_double(corpus_vec).alias("__cv")
+    ).withColumn("__cn", dot("__cv", "__cv"))
+
+
 def train_pq_codebooks(
     corpus: DataFrame,
     m: int = 8,
@@ -135,29 +167,10 @@ def train_pq_codebooks(
     previous centroid. Two runs are bit-equal (test-pinned)."""
     import numpy as np
 
-    src = (
-        corpus
-        if sample_mod <= 1
-        else corpus.filter(F.col(corpus_id) % sample_mod == 0)
+    mat, _ = _unit_sample(
+        np, _vec_rows(corpus, corpus_id, corpus_vec), corpus_id, sample_mod,
+        max_train_rows, "train_pq_codebooks",
     )
-    n = src.count()
-    if n > max_train_rows:
-        raise ValueError(
-            f"train_pq_codebooks collects the training sample to the driver: "
-            f"{n} rows exceeds max_train_rows={max_train_rows}. Raise "
-            f"sample_mod (or the bound)."
-        )
-    rows = (
-        src.select(F.col(corpus_id), as_double(corpus_vec).alias("__cv"))
-        .withColumn("__cn", dot("__cv", "__cv"))
-        .filter(F.col("__cn") > 0)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("train_pq_codebooks: empty training sample")
-    sample = sorted((r[0], r["__cv"], r["__cn"]) for r in rows)
-    mat = np.array([cv for _, cv, _ in sample], dtype=np.float64)
-    mat /= np.sqrt(np.array([cn for _, _, cn in sample]))[:, None]
     dsub = _validate_pq_shape(mat.shape[1], m, n_codes)
 
     books = _lloyd_subspace_books(np, mat, m, dsub, n_codes, iters)
@@ -233,24 +246,11 @@ def train_pq_codebooks_residual(
     against the cell ivfpq_encode will encode it under."""
     import numpy as np
 
-    src = index.assignment.select(index.corpus_id, "__cv", "__cn", "__cell")
-    if sample_mod > 1:
-        src = src.filter(F.col(index.corpus_id) % sample_mod == 0)
-    n = src.count()
-    if n > max_train_rows:
-        raise ValueError(
-            f"train_pq_codebooks_residual collects the training sample: "
-            f"{n} rows exceeds max_train_rows={max_train_rows}. Raise "
-            f"sample_mod (or the bound)."
-        )
-    rows = src.collect()
-    if not rows:
-        raise ValueError("train_pq_codebooks_residual: empty training sample")
-    sample = sorted(
-        (r[index.corpus_id], r["__cv"], r["__cn"], r["__cell"]) for r in rows
+    mat, sample = _unit_sample(
+        np, index.assignment.select(index.corpus_id, "__cv", "__cn", "__cell"),
+        index.corpus_id, sample_mod, max_train_rows,
+        "train_pq_codebooks_residual",
     )
-    mat = np.array([cv for _, cv, _, _ in sample], dtype=np.float64)
-    mat /= np.sqrt(np.array([cn for _, _, cn, _ in sample]))[:, None]
     cmap = _unit_centroid_map(np, index.centroids)
     for i, (_, _, _, cell) in enumerate(sample):
         mat[i] -= cmap[int(cell)]
@@ -438,9 +438,7 @@ def _refine_exact(
     q = queries.select(
         F.col(query_id), as_double(query_vec).alias("__qv")
     ).withColumn("__qn", dot("__qv", "__qv"))
-    c = corpus.select(
-        F.col(corpus_id), as_double(corpus_vec).alias("__cv")
-    ).withColumn("__cn", dot("__cv", "__cv"))
+    c = _vec_rows(corpus, corpus_id, corpus_vec)
     pairs = (
         candidates.select(query_id, corpus_id)
         .join(c, corpus_id, "inner")
@@ -604,16 +602,14 @@ def ivfpq_search(
     tools/pq_recall_check.py measures both terms separately.
 
     Pass ``codes`` (from ivfpq_encode, persisted) to search many times
-    without re-encoding — the build-once/search-many discipline of
-    _IVF_MEMO applied to the compressed payload.
+    without re-encoding — the build-once/search-many discipline of the
+    memoized IVF index applied to the compressed payload.
 
     ``refine_factor=0`` skips the exact re-rank entirely and returns the
     pure compressed search — (qid, cid, rank, adc_ip), top-k by ADC
     score. That is the configuration whose scan reads ONLY code bytes
     (no raw-vector fetch at all); recall vs exact is what
     tools/pq_recall_check.py measures as adc_recall."""
-    import math
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -647,17 +643,8 @@ def ivfpq_search(
 
     # probe ranking: identical machinery to _ivf_search_broadcast, so
     # IVFPQ probes exactly the cells exact IVF would
-    cells = np.array([cell for cell, _ in index.centroids], dtype=np.int64)
-    cent_m = np.array([cv for _, cv in index.centroids], dtype=np.float64)
-    cent_nrm = np.array(
-        [math.sqrt(_py_dot(cv, cv)) for _, cv in index.centroids]
-    )
-    ranker = (
-        _negcos_order_gemm
-        if len(cells) > _HIER_ASSIGN_MIN_CELLS
-        else _negcos_order
-    )
-    order = ranker(np, q_mat, q_norm, cent_m, cent_nrm, nprobe)
+    cells, cent_m, cent_nrm = _centroid_arrays(np, index.centroids)
+    order = _probe_ranker(len(cells))(np, q_mat, q_norm, cent_m, cent_nrm, nprobe)
     cell2q: dict[int, list[int]] = {}
     for qi in range(len(q_ids)):
         for c in cells[order[qi]]:
@@ -853,29 +840,10 @@ def train_sq_params(
     id, pure numpy min/max) and the same OOM guard."""
     import numpy as np
 
-    src = (
-        corpus
-        if sample_mod <= 1
-        else corpus.filter(F.col(corpus_id) % sample_mod == 0)
+    mat, _ = _unit_sample(
+        np, _vec_rows(corpus, corpus_id, corpus_vec), corpus_id, sample_mod,
+        max_train_rows, "train_sq_params",
     )
-    n = src.count()
-    if n > max_train_rows:
-        raise ValueError(
-            f"train_sq_params collects the training sample to the driver: "
-            f"{n} rows exceeds max_train_rows={max_train_rows}. Raise "
-            f"sample_mod (or the bound)."
-        )
-    rows = (
-        src.select(F.col(corpus_id), as_double(corpus_vec).alias("__cv"))
-        .withColumn("__cn", dot("__cv", "__cv"))
-        .filter(F.col("__cn") > 0)
-        .collect()
-    )
-    if not rows:
-        raise ValueError("train_sq_params: empty training sample")
-    sample = sorted((r[0], r["__cv"], r["__cn"]) for r in rows)
-    mat = np.array([cv for _, cv, _ in sample], dtype=np.float64)
-    mat /= np.sqrt(np.array([cn for _, _, cn in sample]))[:, None]
     return SqParams(
         lo=tuple(float(x) for x in mat.min(axis=0)),
         hi=tuple(float(x) for x in mat.max(axis=0)),

@@ -28,6 +28,7 @@ ties break identically everywhere.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
@@ -1414,11 +1415,12 @@ def _topk_stable(np, negcos, nprobe):
     return out
 
 
-#: Cell count past which _negcos_order_gemm computes the score matrix
-#: in float32 instead of float64 (r13, VERDICT r12 #2). The §17 sf405
-#: isolation showed the exact ranking is MEMORY-bound: the dominant
-#: cost is writing the (chunk, k) score matrix, and float32 halves
-#: exactly that traffic (plus sgemm doubles BLAS throughput). Far
+#: Cell count past which _probe_ranker has _negcos_order_gemm compute
+#: the score matrix in float32 instead of float64 (r13, VERDICT r12
+#: #2). The §17 sf405 isolation showed the exact ranking is
+#: MEMORY-bound: the dominant cost is writing the (chunk, k) score
+#: matrix, and float32 halves exactly that traffic (plus sgemm doubles
+#: BLAS throughput). Far
 #: above every oracle-checked corpus, so gate results stay bit-exact;
 #: past it, a probe-order flip needs two centroid cosines within
 #: ~1e-7 of each other — and such near-ties only reshuffle which of
@@ -1430,7 +1432,7 @@ def _topk_stable(np, negcos, nprobe):
 _GEMM_SCORE_F32_MIN_CELLS = 4096
 
 
-def _negcos_order_gemm(np, mat, sqrtn, cent_m, cent_nrm, nprobe):
+def _negcos_order_gemm(np, mat, sqrtn, cent_m, cent_nrm, nprobe, *, f32):
     """_negcos_order with the accumulation done by BLAS dgemm instead
     of the d-step column fold. Mathematically the same sum;
     floating-point rounding may differ in the last ulp, so the probe
@@ -1455,15 +1457,15 @@ def _negcos_order_gemm(np, mat, sqrtn, cent_m, cent_nrm, nprobe):
     element-for-element; only dgemm blocking may shift the last ulp,
     exactly as before.
 
-    r13: past _GEMM_SCORE_F32_MIN_CELLS the score matrix is computed
-    in float32 (see the constant's note — §17 measured the ranking
-    memory-bound on exactly that matrix). Cosines float32 cannot
-    distinguish select in ascending column order, the same rule exact
-    ties follow."""
+    r13: with ``f32`` the score matrix is computed in float32 (see
+    _GEMM_SCORE_F32_MIN_CELLS — §17 measured the ranking memory-bound
+    on exactly that matrix). Cosines float32 cannot distinguish select
+    in ascending column order, the same rule exact ties follow. The
+    caller decides ``f32`` on the driver (_probe_ranker)."""
     k = cent_m.shape[0]
     nprobe = min(nprobe, k)
     n = len(mat)
-    if k > _GEMM_SCORE_F32_MIN_CELLS:
+    if f32:
         # r13 (VERDICT r12 #2): halve the memory traffic that binds —
         # the inputs are downcast ONCE (Q·d + k·d, small next to Q·k)
         # and the GEMM writes a float32 score matrix. Tie semantics
@@ -1487,6 +1489,20 @@ def _negcos_order_gemm(np, mat, sqrtn, cent_m, cent_nrm, nprobe):
             )
         out[s:e] = _topk_stable(np, negcos, nprobe)
     return out
+
+
+def _probe_ranker(n_cells: int):
+    """The probe ranking for ``n_cells`` centroids: the bit-exact column
+    fold (_negcos_order) up to _HIER_ASSIGN_MIN_CELLS, the BLAS form
+    past it, with float32 scores past _GEMM_SCORE_F32_MIN_CELLS. Call
+    it on the DRIVER and ship the result into worker closures: a worker
+    imports this module fresh, so a threshold read there never sees a
+    value patched on the driver."""
+    if n_cells <= _HIER_ASSIGN_MIN_CELLS:
+        return _negcos_order
+    return functools.partial(
+        _negcos_order_gemm, f32=n_cells > _GEMM_SCORE_F32_MIN_CELLS
+    )
 
 
 def assign_cells_vectorized(
@@ -1650,6 +1666,7 @@ def train_ivf_centroids_hierarchical(
     if not sup_cents:
         return []
     _, sup_m, sup_nrm = _centroid_arrays(np, sup_cents)
+    sup_f32 = len(sup_cents) > _GEMM_SCORE_F32_MIN_CELLS
 
     base = (
         corpus.select(
@@ -1678,7 +1695,9 @@ def train_ivf_centroids_hierarchical(
                 continue
             mat = np.stack(pdf["__cv"].map(np.asarray)).astype(np.float64)
             sqrtn = np.sqrt(pdf["__cn"].to_numpy())
-            order = _negcos_order_gemm(np, mat, sqrtn, sup_m, sup_nrm, 1)
+            order = _negcos_order_gemm(
+                np, mat, sqrtn, sup_m, sup_nrm, 1, f32=sup_f32
+            )
             yield pd.DataFrame(
                 {
                     "__id": pdf["__id"],
@@ -1900,10 +1919,11 @@ def probe_memberships_vectorized(
         ]
     )
 
-    # Dispatch decided DRIVER-side so the threshold stays
-    # patchable/testable (a worker-side module lookup would not see a
-    # monkeypatched value).
-    gemm = len(centroids) > _HIER_ASSIGN_MIN_CELLS
+    # r9: past _HIER_ASSIGN_MIN_CELLS the per-row ranking runs as one
+    # BLAS dgemm per Arrow batch — this op feeds the join search path
+    # AND multi-probe near-dup, both of which rank all rows against all
+    # k cells (N·k·d fold loop) on the exact path. Chosen driver-side.
+    rank = _probe_ranker(len(centroids))
 
     def op(batches):
         cells, cent_m, cent_nrm = _centroid_arrays(np, centroids)
@@ -1913,15 +1933,7 @@ def probe_memberships_vectorized(
                 continue
             mat = np.stack(pdf[vec_col].map(np.asarray)).astype(np.float64)
             sqrtn = np.sqrt(pdf[norm_col].to_numpy())
-            if gemm:
-                # r9: past the threshold the per-row ranking runs as
-                # one BLAS dgemm per Arrow batch — this op feeds the
-                # join search path AND multi-probe near-dup, both of
-                # which rank all rows against all k cells (N·k·d fold
-                # loop) on the exact path.
-                order = _negcos_order_gemm(np, mat, sqrtn, cent_m, cent_nrm, k)
-            else:
-                order = _negcos_order(np, mat, sqrtn, cent_m, cent_nrm, k)
+            order = rank(np, mat, sqrtn, cent_m, cent_nrm, k)
             ids = pdf[id_col].to_numpy()
             yield pd.DataFrame(
                 {
@@ -2013,19 +2025,16 @@ def _ivf_search_broadcast(
     q_sqrtn = np.sqrt(qn)
 
     cells, cent_m, cent_nrm = _centroid_arrays(np, index.centroids)
-    if len(cells) > _HIER_ASSIGN_MIN_CELLS:
-        # r9: past the same threshold as build-side assignment, probe
-        # ranking switches to the BLAS dgemm form — the Q·k·d fold
-        # loop SCALING.md §9 measured inside the sf15 search becomes
-        # sub-second with IDENTICAL probe sets (see _negcos_order_gemm
-        # for why this beats two-level routing here). Gate corpora
-        # (k=8) never take this branch.
-        order = _negcos_order_gemm(
-            np, q_mat, q_sqrtn, cent_m, cent_nrm, nprobe
-        )
-    else:
-        # column fold: every lane bit-identical to the SQL expression
-        order = _negcos_order(np, q_mat, q_sqrtn, cent_m, cent_nrm, nprobe)
+    # r9: past the same threshold as build-side assignment, probe
+    # ranking switches from the column fold (every lane bit-identical
+    # to the SQL expression) to the BLAS dgemm form — the Q·k·d fold
+    # loop SCALING.md §9 measured inside the sf15 search becomes
+    # sub-second with IDENTICAL probe sets (see _negcos_order_gemm for
+    # why this beats two-level routing here). Gate corpora (k=8) stay
+    # on the fold.
+    order = _probe_ranker(len(cells))(
+        np, q_mat, q_sqrtn, cent_m, cent_nrm, nprobe
+    )
     # Invert (query -> probed cells) to (cell -> query positions)
     # vectorized (r12: the per-element Python loop was 20M dict appends
     # at sf405). The stable sort keeps query positions ascending within
@@ -2164,7 +2173,7 @@ def _ivf_search_join(
         probe_schema = StructType(
             list(q.schema.fields) + [StructField("__cell", LongType())]
         )
-        gemm = len(centroids) > _HIER_ASSIGN_MIN_CELLS  # driver-side
+        rank = _probe_ranker(len(centroids))  # driver-side
 
         def probe_op(batches):
             cells, cent_m, cent_nrm = _centroid_arrays(np, centroids)
@@ -2174,12 +2183,7 @@ def _ivf_search_join(
                     continue
                 mat = np.stack(pdf["__qv"].map(np.asarray)).astype(np.float64)
                 sqrtn = np.sqrt(pdf["__qn"].to_numpy())
-                if gemm:  # r9: see _negcos_order_gemm
-                    order = _negcos_order_gemm(
-                        np, mat, sqrtn, cent_m, cent_nrm, kk
-                    )
-                else:
-                    order = _negcos_order(np, mat, sqrtn, cent_m, cent_nrm, kk)
+                order = rank(np, mat, sqrtn, cent_m, cent_nrm, kk)
                 rep = pdf.iloc[np.repeat(np.arange(len(pdf)), kk)].reset_index(
                     drop=True
                 )

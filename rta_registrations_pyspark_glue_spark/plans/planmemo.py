@@ -12,7 +12,7 @@ identical plan. ``perfbench/run.py --trace 1`` reports the split per
 query: ``plans.build_first_s`` (the first build), ``plans.build_s`` (a
 memoized build) and ``exec.s`` under each ``query.*`` span.
 
-Three callers share the store through ``memoized``:
+Four callers share the store through ``memoized``:
 
 * ``plan_memo`` — registered ``(spark, sf_dir)`` query builds; key
   (query, sf_dir), fingerprint of sf_dir.
@@ -20,20 +20,27 @@ Three callers share the store through ``memoized``:
   fingerprint of that path.
 * ``operators.spread._needs_spread`` — a partition-count probe; key
   (semanticHash, columns, target), no fingerprint.
+* ``plans.queries_similarity`` — the ANN index parts (``ivf_index``,
+  ``ivfpq_parts``, ``sq8_parts``); key the embeddings table path,
+  fingerprint of that path.
 
-The memoized value is a PLAN (or a decision about one), never data.
-Every action on a memoized plan still computes from the parquet inputs;
-nothing is result-cached across invocations or runs. Hence only
-ACTION-FREE builds may be wrapped in ``plan_memo``: a build that runs
-Spark actions bakes data-derived values into its plan, and memoizing it
-would carry computed results across invocations. The deliberately
-unwrapped builds and their actions: packed_sequences / packed_bins
-(driver-collected partition prefix sums), the cosine_topk_ivf/ivfpq/sq8
-family + semantic_dedup_survivors + embedding_near_dup_ivf (IVF/PQ
-training collects), near_dup_clusters / corpus_curation_pipeline
-(connected-components fixpoint actions, localCheckpoint), bpe_merges
-(iterative merge loop), embedding_pca_reduced (driver eigh on collected
-moments).
+The memoized value is a PLAN, a decision about one, or a MODEL trained
+from a fingerprinted input (IVF centroids, PQ codebooks, SQ ranges) —
+never result data. A trained model may be memoized because it is a
+deterministic function of its input, so the fingerprint says exactly
+when it goes stale; every action on a memoized plan still computes
+from the parquet inputs, and nothing is result-cached across
+invocations or runs. ``plan_memo`` query builds must still be
+ACTION-FREE: a build that runs Spark actions bakes data-derived values
+into its plan, and memoizing it would carry computed results across
+invocations. The deliberately unwrapped builds and their actions:
+packed_sequences / packed_bins (driver-collected partition prefix
+sums), the cosine_topk_ivf/ivfpq/sq8 family + semantic_dedup_survivors
++ embedding_near_dup_ivf (their trained index parts are memoized
+above; the searches are rebuilt per call), near_dup_clusters /
+corpus_curation_pipeline (connected-components fixpoint actions,
+localCheckpoint), bpe_merges (iterative merge loop),
+embedding_pca_reduced (driver eigh on collected moments).
 
 Persists: ``tracked_persist`` frames made during a build are recorded
 (``caching.record_persists``) and re-armed on every hit, so the persist

@@ -135,9 +135,10 @@ def test_load_table_memo_invalidates_on_rewrite(spark, tmp_path):
 def test_clear_hooks_exist_and_clear(spark, sf_dir):
     """planmemo.clear_plan_memo is the one in-process invalidation hook
     for tools/tests that rewrite inputs mid-application: it empties the
-    single store that load_table, plan_memo and the spread guard share."""
+    single store that load_table, plan_memo, the spread guard and the
+    ANN index parts share."""
     from rta_registrations_pyspark_glue_spark.operators import spread
-    from rta_registrations_pyspark_glue_spark.plans import planmemo
+    from rta_registrations_pyspark_glue_spark.plans import planmemo, queries_similarity
     from rta_registrations_pyspark_glue_spark.sources import testdata
 
     @planmemo.plan_memo
@@ -147,8 +148,9 @@ def test_clear_hooks_exist_and_clear(spark, sf_dir):
     planmemo.clear_plan_memo()
     spread.spread_ids(testdata.load_table(spark, "documents", sf_dir))
     fake_query(spark, sf_dir)
+    queries_similarity._ivf_index(spark, sf_dir)
     names = {name for name, _ in planmemo._MEMO}
-    assert {"load_table", "spread._needs_spread"} <= names
+    assert {"load_table", "spread._needs_spread", "ivf_index"} <= names
     assert any(n.endswith("fake_query") for n in names)
     planmemo.clear_plan_memo()
     assert planmemo._MEMO == {}
@@ -265,6 +267,61 @@ def test_pipeline_star_rebuilds_after_input_rewrite(spark, sf_dir, tmp_path):
         after = spark_rows()
         assert len(after) < len(before)
         assert after == oracle_rows()
+    finally:
+        caching.release_tracked()
+
+
+def test_ivf_index_rebuilds_after_input_rewrite(spark, sf_dir, tmp_path):
+    """Rewriting embeddings.parquet mid-application rebuilds the ANN
+    index parts: cosine_topk_ivf matches its DuckDB oracle on the NEW
+    file, and SQ8 and IVFPQ search only the new file's vectors (no stale
+    centroids, codebooks, ranges or persisted assignment/codes). The
+    SQ8 codes are read from the memo: the exact re-rank joins back to
+    the new corpus, so stale codes could still return the right rows."""
+    import os
+    import shutil
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from rta_registrations_pyspark_glue_spark import caching
+    from rta_registrations_pyspark_glue_spark.plans import planmemo, registry
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "embeddings.parquet")
+    shutil.copyfile(f"{sf_dir}/embeddings.parquet", path)
+    queries = registry.queries()
+    oracle = registry.oracle_sql()["cosine_topk_ivf"]
+
+    def spark_rows(name):
+        df = queries[name](spark, sf).select("qid", "cid", "rank", "cosine")
+        return sorted(tuple(r) for r in df.collect())
+
+    def oracle_rows():
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+        return sorted(
+            (int(q), int(c), int(r), float(x))
+            for q, c, r, x in con.execute(
+                f"SELECT qid, cid, rank, cosine FROM ({oracle})"
+            ).fetchall()
+        )
+
+    try:
+        before = spark_rows("cosine_topk_ivf")
+        assert before == oracle_rows()
+        assert spark_rows("cosine_topk_sq8") == spark_rows("cosine_topk_bruteforce")
+        spark_rows("cosine_topk_ivfpq")
+        emb = pq.read_table(path)
+        pq.write_table(emb.slice(0, emb.num_rows // 2), path)
+        kept = set(emb.column("vec_id").to_pylist()[: emb.num_rows // 2])
+        after = spark_rows("cosine_topk_ivf")
+        assert len(after) < len(before)
+        assert after == oracle_rows()
+        assert spark_rows("cosine_topk_sq8") == spark_rows("cosine_topk_bruteforce")
+        _, _, (_, sq_codes), _ = planmemo._MEMO[("sq8_parts", path)]
+        assert {r.cid for r in sq_codes.select("cid").collect()} <= kept
+        assert {r[1] for r in spark_rows("cosine_topk_ivfpq")} <= kept
     finally:
         caching.release_tracked()
 
