@@ -41,14 +41,18 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from rta_registrations_pyspark_glue_spark.operators.similarity import (
     _GEMM_QUERY_CHUNK,
-    _centroid_arrays,
-    _probe_ranker,
+    _MAX_TRAIN_ROWS,
+    _collect_queries,
+    _empty_topk,
+    _local_topk,
+    _probe_map,
     _prune_topk_frame,
     _py_dot,
+    _rank_topk,
+    _scored_schema,
     IvfIndex,
     as_double,
     dot,
@@ -107,21 +111,21 @@ def _validate_pq_shape(dim: int, m: int, n_codes: int) -> int:
 
 
 def _unit_sample(np, src: DataFrame, id_col: str, sample_mod: int,
-                 max_train_rows: int, caller: str):
+                 caller: str):
     """The bounded driver sample every trainer here collects. ``src``
     holds (id, __cv, __cn, *extra) rows: keep the ``id % sample_mod ==
-    0`` slice, raise past ``max_train_rows`` (counted before the
-    zero-norm filter) instead of OOMing the driver, drop zero-norm rows,
-    sort by id. Returns the L2-normalized (n, d) float64 matrix and the
-    sorted row tuples, so the caller can read its extra columns."""
+    0`` slice, raise past _MAX_TRAIN_ROWS (counted before the zero-norm
+    filter) instead of OOMing the driver, drop zero-norm rows, sort by
+    id. Returns the L2-normalized (n, d) float64 matrix and the sorted
+    row tuples, so the caller can read its extra columns."""
     if sample_mod > 1:
         src = src.filter(F.col(id_col) % sample_mod == 0)
     n = src.count()
-    if n > max_train_rows:
+    if n > _MAX_TRAIN_ROWS:
         raise ValueError(
             f"{caller} collects the training sample to the driver: "
-            f"{n} rows exceeds max_train_rows={max_train_rows}. Raise "
-            f"sample_mod (or the bound)."
+            f"{n} rows exceeds _MAX_TRAIN_ROWS={_MAX_TRAIN_ROWS}. Raise "
+            f"sample_mod."
         )
     rows = src.filter(F.col("__cn") > 0).collect()
     if not rows:
@@ -147,15 +151,14 @@ def train_pq_codebooks(
     corpus_id: str = "cid",
     corpus_vec: str = "cv",
     sample_mod: int = 1,
-    max_train_rows: int = 200_000,
 ) -> PqCodebooks:
     """Train per-subspace codebooks driver-side on a bounded sample —
     the FAISS shape (PQ training is always on an in-RAM sample; the
     codebooks are m·n_codes·dsub floats, trivially driver-sized).
 
     ``sample_mod=S`` trains on the deterministic ``id % S == 0`` slice;
-    ``max_train_rows`` raises instead of OOMing the driver (the same
-    guard as train_ivf_centroids). Vectors are L2-normalized before
+    past _MAX_TRAIN_ROWS it raises instead of OOMing the driver (the
+    same guard as train_ivf_centroids). Vectors are L2-normalized before
     quantization, so codebooks model the unit sphere and ADC inner
     products approximate cosine directly. Zero-norm vectors are
     excluded (consistent with every other similarity operator).
@@ -169,7 +172,7 @@ def train_pq_codebooks(
 
     mat, _ = _unit_sample(
         np, _vec_rows(corpus, corpus_id, corpus_vec), corpus_id, sample_mod,
-        max_train_rows, "train_pq_codebooks",
+        "train_pq_codebooks",
     )
     dsub = _validate_pq_shape(mat.shape[1], m, n_codes)
 
@@ -230,7 +233,6 @@ def train_pq_codebooks_residual(
     n_codes: int = 256,
     iters: int = 8,
     sample_mod: int = 1,
-    max_train_rows: int = 200_000,
 ) -> PqCodebooks:
     """Train codebooks on coarse-quantizer RESIDUALS xn - c_cell (the
     FAISS IndexIVFPQ form). On a clustered corpus the raw trainer's
@@ -248,8 +250,7 @@ def train_pq_codebooks_residual(
 
     mat, sample = _unit_sample(
         np, index.assignment.select(index.corpus_id, "__cv", "__cn", "__cell"),
-        index.corpus_id, sample_mod, max_train_rows,
-        "train_pq_codebooks_residual",
+        index.corpus_id, sample_mod, "train_pq_codebooks_residual",
     )
     cmap = _unit_centroid_map(np, index.centroids)
     for i, (_, _, _, cell) in enumerate(sample):
@@ -259,6 +260,19 @@ def train_pq_codebooks_residual(
     return PqCodebooks(
         m=m, dsub=dsub, n_codes=n_codes, codebooks=books, residual=True
     )
+
+
+def _unit_batches(np, batches):
+    """(rows, L2-normalized (n, d) float64 ``__cv`` matrix) of each
+    encode batch, zero-norm rows dropped and empty batches skipped."""
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        v = np.stack(pdf["__cv"].map(np.asarray)).astype(np.float64)
+        nrm = np.sqrt((v * v).sum(axis=1))
+        ok = nrm > 0
+        if ok.any():
+            yield pdf[ok], v[ok] / nrm[ok][:, None]
 
 
 def pq_encode(
@@ -305,16 +319,7 @@ def pq_encode(
     )
 
     def op(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack(pdf["__cv"].map(np.asarray)).astype(np.float64)
-            nrm = np.sqrt((v * v).sum(axis=1))
-            ok = nrm > 0
-            pdf, v, nrm = pdf[ok], v[ok], nrm[ok]
-            if not len(pdf):
-                continue
-            v = v / nrm[:, None]
+        for pdf, v in _unit_batches(np, batches):
             if cmap is not None:
                 cells = pdf["__cell"].to_numpy()
                 v = v - np.stack([cmap[int(c)] for c in cells])
@@ -346,7 +351,7 @@ def _adc_luts(np, q_mat, books, m, dsub):
     sum_s LUT[s][q, code_s] — m gathers + adds instead of d multiplies.
     Built per _GEMM_QUERY_CHUNK slice inside the scoring loops (never
     for the full collected query set), so per-task scratch is bounded
-    at CHUNK*m*n_codes*8 bytes regardless of max_queries — the same
+    at CHUNK*m*n_codes*8 bytes regardless of the query count — the same
     memory discipline as the exact path's chunked GEMM."""
     return [
         q_mat[:, s * dsub : (s + 1) * dsub] @ books[s].T for s in range(m)
@@ -363,59 +368,21 @@ def _adc_scores(np, luts, codes):
     return acc
 
 
-def _codes_matrix(np, pdf, m: int):
-    """(rows, m) uint8 view of the packed __code column, with an
-    explicit width check — a codes table encoded under a different m
-    (or corrupted bytes) must fail with the mismatch named, not with
-    numpy's bare reshape error deep inside an executor."""
-    buf = b"".join(pdf["__code"])
-    if len(buf) != len(pdf) * m:
-        widths = {len(c) for c in pdf["__code"][:100]}
+def _codes_matrix(np, pdf, width: int, col: str):
+    """(rows, width) uint8 view of a packed code column (``__code`` for
+    PQ, ``__sq`` for SQ8), with an explicit width check — codes encoded
+    under other codebooks/params (or corrupted bytes) must fail with the
+    mismatch named, not with numpy's bare reshape error deep inside an
+    executor."""
+    buf = b"".join(pdf[col])
+    if len(buf) != len(pdf) * width:
+        widths = {len(c) for c in pdf[col][:100]}
         raise ValueError(
-            f"PQ code width mismatch: expected {m} bytes/row, got widths "
-            f"{sorted(widths)} — codes were encoded with different "
-            f"codebooks than the ones passed to this search."
+            f"code width mismatch in {col}: expected {width} bytes/row, "
+            f"got widths {sorted(widths)} — codes were encoded with other "
+            f"codebooks/params than the ones passed to this search."
         )
-    return np.frombuffer(buf, dtype=np.uint8).reshape(len(pdf), m)
-
-
-def _collect_queries(queries: DataFrame, query_id: str, query_vec: str,
-                     max_queries: int):
-    import numpy as np
-
-    q_rows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"PQ search broadcasts the query set to the driver: more than "
-            f"max_queries={max_queries} rows. Swap sides or raise the bound."
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([[float(x) for x in r[1]] for r in q_rows], dtype=np.float64)
-    if len(q_rows) == 0:
-        q_mat = q_mat.reshape(0, 1)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    keep = q_norm > 0
-    return q_ids[keep], q_mat[keep], q_norm[keep]
-
-
-def _emit_local_topk(np, pd, scores, q_ids, qsel, c_ids, query_id,
-                     corpus_id, k):
-    """Local-prune helper shared by the ADC paths: keep every score >=
-    the k-th best non-self per query (boundary ties all survive to the
-    final window, same discipline as the exact paths)."""
-    self_mask = q_ids[qsel][:, None] == c_ids[None, :]
-    masked = np.where(self_mask, -np.inf, scores)
-    local_k = min(k, masked.shape[1])
-    kth = np.partition(masked, -local_k, axis=1)[:, -local_k]
-    keep_m = (masked >= kth[:, None]) & ~self_mask
-    qi, ci = np.nonzero(keep_m)
-    return pd.DataFrame(
-        {
-            query_id: q_ids[qsel][qi],
-            corpus_id: c_ids[ci],
-            "adc_ip": scores[qi, ci],
-        }
-    )
+    return np.frombuffer(buf, dtype=np.uint8).reshape(len(pdf), width)
 
 
 def _refine_exact(
@@ -448,14 +415,7 @@ def _refine_exact(
             "cosine", dot("__qv", "__cv") / (F.sqrt("__qn") * F.sqrt("__cn"))
         )
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id)
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", "cosine")
-    )
+    return _rank_topk(pairs, query_id, corpus_id, "cosine", k)
 
 
 def pq_topk_adc(
@@ -469,7 +429,6 @@ def pq_topk_adc(
     refine_with: DataFrame | None = None,
     corpus_vec: str = "cv",
     refine_factor: int = 8,
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """Compressed brute-force top-k: stream the CODES table (m bytes per
     row), score every row against every query by ADC lookup, merge local
@@ -486,7 +445,6 @@ def pq_topk_adc(
     point at 100 TB."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
     if cb.residual:
         raise ValueError(
@@ -494,9 +452,8 @@ def pq_topk_adc(
             "are cell-coupled — use ivfpq_search with the index they were "
             "trained against."
         )
-    q_ids, q_mat, q_norm = _collect_queries(queries, query_id, query_vec,
-                                            max_queries)
-    qn_mat = q_mat / q_norm[:, None] if len(q_ids) else q_mat
+    q_ids, q_mat = _collect_queries(queries, query_id, query_vec, "pq_topk_adc")
+    qn_mat = q_mat / np.sqrt((q_mat * q_mat).sum(axis=1))[:, None]
     books = cb.as_numpy()
     sc = codes.sparkSession.sparkContext
     bq = sc.broadcast((q_ids, qn_mat))
@@ -505,15 +462,6 @@ def pq_topk_adc(
     # silently computing a zero-candidate window
     do_refine = refine_with is not None and refine_factor >= 1
     cand_k = k * refine_factor if do_refine else k
-
-    out_schema = StructType(
-        [
-            StructField(query_id, queries.schema[query_id].dataType),
-            StructField(corpus_id, codes.schema[corpus_id].dataType),
-            StructField("adc_ip", DoubleType()),
-        ]
-    )
-
     m, dsub = cb.m, cb.dsub
 
     def op(batches):
@@ -524,35 +472,31 @@ def pq_topk_adc(
         # start offset -> per-chunk LUTs, each built once per task and
         # kept for every subsequent Arrow batch. Total memory across
         # chunks is len(ids) * n_codes * 8 bytes per subspace — the
-        # full-query LUT, bounded by the _collect_queries max_queries
-        # guard (ADVICE r10: the old single-entry replacement rebuilt
+        # full-query LUT, bounded by _collect_queries'
+        # _MAX_BROADCAST_QUERIES guard (ADVICE r10: the old single-entry replacement rebuilt
         # every chunk's LUT per batch once len(ids) > _GEMM_QUERY_CHUNK)
         chunk_luts = {}
         for pdf in batches:
             if not len(pdf):
                 continue
             c_ids = pdf[corpus_id].to_numpy()
-            code_m = _codes_matrix(np, pdf, m)
+            code_m = _codes_matrix(np, pdf, m, "__code")
             for start in range(0, len(ids), _GEMM_QUERY_CHUNK):
                 qc = allq[start : start + _GEMM_QUERY_CHUNK]
                 if start not in chunk_luts:
                     chunk_luts[start] = _adc_luts(np, qmat[qc], books, m, dsub)
                 scores = _adc_scores(np, chunk_luts[start], code_m)
-                yield _emit_local_topk(
-                    np, pd, scores, ids, qc, c_ids, query_id, corpus_id,
-                    cand_k,
+                yield _local_topk(
+                    np, pd, scores, ids[qc], c_ids, query_id, corpus_id,
+                    "adc_ip", cand_k,
                 )
 
-    partials = codes.mapInPandas(op, out_schema)
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("adc_ip").desc(), F.col(corpus_id)
+    partials = codes.mapInPandas(
+        op, _scored_schema(queries, query_id, codes, corpus_id, "adc_ip")
     )
-    ranked = (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= cand_k)
-    )
+    ranked = _rank_topk(partials, query_id, corpus_id, "adc_ip", cand_k)
     if not do_refine:
-        return ranked.select(query_id, corpus_id, "rank", "adc_ip")
+        return ranked
     return _refine_exact(
         ranked, refine_with, k, query_id, query_vec, corpus_id, corpus_vec,
         queries,
@@ -585,7 +529,6 @@ def ivfpq_search(
     query_vec: str = "qv",
     refine_factor: int = 8,
     codes: DataFrame | None = None,
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """IVFPQ(R) search: coarse-probe ``nprobe`` cells per query exactly
     as ivf_search does (same driver-side centroid ranking, bit-identical
@@ -612,44 +555,23 @@ def ivfpq_search(
     tools/pq_recall_check.py measures as adc_recall."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
     corpus_id = index.corpus_id
-    q_ids, q_mat, _ = _collect_queries(queries, query_id, query_vec,
-                                       max_queries)
-    # fold norms, not numpy pairwise: keeps the centroid ranking
-    # bit-identical to _ivf_search_broadcast's, so IVFPQ probes exactly
-    # the cells exact IVF would
-    q_norm = np.sqrt(np.array([_py_dot(list(v), list(v)) for v in q_mat]))
-    if codes is None:
-        codes = ivfpq_encode(index, cb)
+    q_ids, q_mat = _collect_queries(queries, query_id, query_vec, "ivfpq_search")
     if not len(q_ids):
-        from pyspark.sql.types import IntegerType
-
         # schema contract must be input-independent (ADVICE r10): the
         # non-empty result's score column is "cosine" after the exact
-        # refine but "adc_ip" in pure-ADC mode (refine_factor < 1), so
-        # the zero-query result mirrors that choice
-        score_col = "cosine" if refine_factor >= 1 else "adc_ip"
-        empty_schema = StructType(
-            [
-                StructField(query_id, queries.schema[query_id].dataType),
-                StructField(corpus_id, index.assignment.schema[corpus_id].dataType),
-                StructField("rank", IntegerType()),
-                StructField(score_col, DoubleType()),
-            ]
+        # refine but "adc_ip" in pure-ADC mode (refine_factor < 1)
+        return _empty_topk(
+            queries, query_id, index.assignment, corpus_id,
+            "cosine" if refine_factor >= 1 else "adc_ip",
         )
-        return queries.sparkSession.createDataFrame([], empty_schema)
-
-    # probe ranking: identical machinery to _ivf_search_broadcast, so
-    # IVFPQ probes exactly the cells exact IVF would
-    cells, cent_m, cent_nrm = _centroid_arrays(np, index.centroids)
-    order = _probe_ranker(len(cells))(np, q_mat, q_norm, cent_m, cent_nrm, nprobe)
-    cell2q: dict[int, list[int]] = {}
-    for qi in range(len(q_ids)):
-        for c in cells[order[qi]]:
-            cell2q.setdefault(int(c), []).append(qi)
-    cell2q_np = {c: np.array(v) for c, v in cell2q.items()}
+    if codes is None:
+        codes = ivfpq_encode(index, cb)
+    # fold norms, not numpy pairwise, and _ivf_search_broadcast's probe
+    # map: IVFPQ probes exactly the cells exact IVF would
+    q_norm = np.sqrt(np.array([_py_dot(list(v), list(v)) for v in q_mat]))
+    cell2q_np = _probe_map(np, index.centroids, q_mat, q_norm, nprobe)
 
     qn_mat = q_mat / q_norm[:, None]
     books = cb.as_numpy()
@@ -663,14 +585,6 @@ def ivfpq_search(
     cand_k = k * refine_factor if refine_factor >= 1 else k
     m, dsub = cb.m, cb.dsub
 
-    out_schema = StructType(
-        [
-            StructField(query_id, queries.schema[query_id].dataType),
-            StructField(corpus_id, index.assignment.schema[corpus_id].dataType),
-            StructField("adc_ip", DoubleType()),
-        ]
-    )
-
     def op(batches):
         ids, qmat, c2q, bmap = bq.value
         for pdf in batches:
@@ -680,7 +594,7 @@ def ivfpq_search(
                 if qsel is None or not len(grp):
                     continue
                 c_ids = grp[corpus_id].to_numpy()
-                code_m = _codes_matrix(np, grp, m)
+                code_m = _codes_matrix(np, grp, m, "__code")
                 for start in range(0, len(qsel), _GEMM_QUERY_CHUNK):
                     qc = qsel[start : start + _GEMM_QUERY_CHUNK]
                     luts = _adc_luts(np, qmat[qc], books, m, dsub)
@@ -688,9 +602,9 @@ def ivfpq_search(
                     if bmap is not None:
                         scores = scores + (qmat[qc] @ bmap[int(cell)])[:, None]
                     frames.append(
-                        _emit_local_topk(
-                            np, pd, scores, ids, qc, c_ids, query_id,
-                            corpus_id, cand_k,
+                        _local_topk(
+                            np, pd, scores, ids[qc], c_ids, query_id,
+                            corpus_id, "adc_ip", cand_k,
                         )
                     )
             if frames:
@@ -706,17 +620,14 @@ def ivfpq_search(
     partials = (
         codes.filter(F.col("__cell").isin(probed))
         .select(corpus_id, "__cell", "__code")
-        .mapInPandas(op, out_schema)
+        .mapInPandas(
+            op,
+            _scored_schema(queries, query_id, index.assignment, corpus_id, "adc_ip"),
+        )
     )
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("adc_ip").desc(), F.col(corpus_id)
-    )
-    cand = (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= cand_k)
-    )
+    cand = _rank_topk(partials, query_id, corpus_id, "adc_ip", cand_k)
     if refine_factor < 1:
-        return cand.select(query_id, corpus_id, "rank", "adc_ip")
+        return cand
     return _refine_exact(
         cand,
         index.assignment.select(
@@ -832,7 +743,6 @@ def train_sq_params(
     corpus_id: str = "cid",
     corpus_vec: str = "cv",
     sample_mod: int = 1,
-    max_train_rows: int = 200_000,
 ) -> SqParams:
     """Train the per-dimension ranges on a bounded sample — one
     distributed aggregate would also do, but the driver-side sample
@@ -842,7 +752,7 @@ def train_sq_params(
 
     mat, _ = _unit_sample(
         np, _vec_rows(corpus, corpus_id, corpus_vec), corpus_id, sample_mod,
-        max_train_rows, "train_sq_params",
+        "train_sq_params",
     )
     return SqParams(
         lo=tuple(float(x) for x in mat.min(axis=0)),
@@ -855,7 +765,6 @@ def sq_encode(
     sq: SqParams,
     corpus_id: str = "cid",
     corpus_vec: str = "cv",
-    keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Encode each L2-normalized vector as d uint8 codes packed into one
     BINARY column ``__sq`` (8x smaller than the float64 column).
@@ -866,35 +775,25 @@ def sq_encode(
 
     lo, scale = sq.as_numpy()
     out_schema = StructType(
-        [StructField(corpus_id, df.schema[corpus_id].dataType)]
-        + [StructField(c, df.schema[c].dataType) for c in keep]
-        + [StructField("__sq", BinaryType())]
+        [
+            StructField(corpus_id, df.schema[corpus_id].dataType),
+            StructField("__sq", BinaryType()),
+        ]
     )
 
     def op(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.stack(pdf["__cv"].map(np.asarray)).astype(np.float64)
-            nrm = np.sqrt((v * v).sum(axis=1))
-            ok = nrm > 0
-            pdf, v, nrm = pdf[ok], v[ok], nrm[ok]
-            if not len(pdf):
-                continue
-            v = v / nrm[:, None]
+        for pdf, v in _unit_batches(np, batches):
             codes = np.clip(
                 np.rint((v - lo) / scale * 255.0), 0, 255
             ).astype(np.uint8)
-            out = {corpus_id: pdf[corpus_id].to_numpy()}
-            for c in keep:
-                out[c] = pdf[c].to_numpy()
-            out["__sq"] = [r.tobytes() for r in codes]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {
+                    corpus_id: pdf[corpus_id].to_numpy(),
+                    "__sq": [r.tobytes() for r in codes],
+                }
+            )
 
-    src = df.select(
-        F.col(corpus_id), *[F.col(c) for c in keep],
-        as_double(corpus_vec).alias("__cv"),
-    )
+    src = df.select(F.col(corpus_id), as_double(corpus_vec).alias("__cv"))
     src = spread_for_gemm(src, 2.0 * estimated_rows(src, len(sq.lo)) * len(sq.lo))
     return src.mapInPandas(op, out_schema)
 
@@ -910,7 +809,6 @@ def sq_topk(
     refine_with: DataFrame | None = None,
     corpus_vec: str = "cv",
     refine_factor: int = 4,
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """Compressed brute-force top-k over SQ8 codes: each Arrow batch
     dequantizes its codes (one fused multiply-add) and scores ALL
@@ -923,25 +821,15 @@ def sq_topk(
     where PQ needs 16x (measured in tests/test_pq.py and SCALING §14)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    q_ids, q_mat, q_norm = _collect_queries(queries, query_id, query_vec,
-                                            max_queries)
-    qn_mat = q_mat / q_norm[:, None] if len(q_ids) else q_mat
+    q_ids, q_mat = _collect_queries(queries, query_id, query_vec, "sq_topk")
+    qn_mat = q_mat / np.sqrt((q_mat * q_mat).sum(axis=1))[:, None]
     lo, scale = sq.as_numpy()
     d = len(sq.lo)
     sc = codes.sparkSession.sparkContext
     bq = sc.broadcast((q_ids, qn_mat))
     do_refine = refine_with is not None and refine_factor >= 1
     cand_k = k * refine_factor if do_refine else k
-
-    out_schema = StructType(
-        [
-            StructField(query_id, queries.schema[query_id].dataType),
-            StructField(corpus_id, codes.schema[corpus_id].dataType),
-            StructField("sq_ip", DoubleType()),
-        ]
-    )
 
     def op(batches):
         ids, qmat = bq.value
@@ -952,23 +840,15 @@ def sq_topk(
             if not len(pdf):
                 continue
             c_ids = pdf[corpus_id].to_numpy()
-            buf = b"".join(pdf["__sq"])
-            if len(buf) != len(pdf) * d:
-                widths = {len(c) for c in pdf["__sq"][:100]}
-                raise ValueError(
-                    f"SQ code width mismatch: expected {d} bytes/row, got "
-                    f"widths {sorted(widths)} — codes were encoded under "
-                    f"different SqParams."
-                )
-            c8 = np.frombuffer(buf, dtype=np.uint8).reshape(len(pdf), d)
+            c8 = _codes_matrix(np, pdf, d, "__sq")
             c_mat = lo + c8.astype(np.float64) * (scale / 255.0)
             for start in range(0, len(ids), _GEMM_QUERY_CHUNK):
                 qc = allq[start : start + _GEMM_QUERY_CHUNK]
                 scores = qmat[qc] @ c_mat.T
-                yield _emit_local_topk(
-                    np, pd, scores, ids, qc, c_ids, query_id, corpus_id,
-                    cand_k,
-                ).rename(columns={"adc_ip": "sq_ip"})
+                yield _local_topk(
+                    np, pd, scores, ids[qc], c_ids, query_id, corpus_id,
+                    "sq_ip", cand_k,
+                )
 
     # the codes table is 8x denser than the float column it replaces —
     # a corpus whose GEMM work is multi-GFLOP can arrive as ONE scan
@@ -980,16 +860,12 @@ def sq_topk(
 
         n_est = max(1, estimate_plan_bytes(codes) // (d + 16))
         codes = spread_for_gemm(codes, 2.0 * len(q_ids) * n_est * d)
-    partials = codes.mapInPandas(op, out_schema)
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("sq_ip").desc(), F.col(corpus_id)
+    partials = codes.mapInPandas(
+        op, _scored_schema(queries, query_id, codes, corpus_id, "sq_ip")
     )
-    ranked = (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= cand_k)
-    )
+    ranked = _rank_topk(partials, query_id, corpus_id, "sq_ip", cand_k)
     if not do_refine:
-        return ranked.select(query_id, corpus_id, "rank", "sq_ip")
+        return ranked
     return _refine_exact(
         ranked, refine_with, k, query_id, query_vec, corpus_id, corpus_vec,
         queries,

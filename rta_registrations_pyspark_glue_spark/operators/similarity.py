@@ -217,6 +217,102 @@ def spread_for_gemm(df: DataFrame, flops: float) -> DataFrame:
     return df.repartition(target)
 
 
+#: Driver bound on a broadcast query set. The brute-force, PQ and SQ8
+#: searches raise past it instead of OOMing the driver on a
+#: corpus-sized frame; ivf_search takes its per-pair join path instead.
+_MAX_BROADCAST_QUERIES = 100_000
+
+#: Driver bound on a collected training sample (train_ivf_centroids and
+#: the PQ/SQ8 trainers): past it they raise and name the sample knob.
+_MAX_TRAIN_ROWS = 200_000
+
+
+def _collect_queries(queries: DataFrame, query_id: str, query_vec: str,
+                     caller: str | None):
+    """Collect the broadcast query set in ONE bounded action (at most
+    _MAX_BROADCAST_QUERIES + 1 rows ever materialize) and drop zero-norm
+    rows. Returns (ids, (n, d) float64 matrix); ids keep their natural
+    dtype (ints or strings), and zero collected rows give shape (0, 1).
+    Past the bound it raises naming ``caller`` — or, with ``caller=None``,
+    returns None so ivf_search can take its join path."""
+    import numpy as np
+
+    q_rows = (
+        queries.select(query_id, query_vec)
+        .limit(_MAX_BROADCAST_QUERIES + 1)
+        .collect()
+    )
+    if len(q_rows) > _MAX_BROADCAST_QUERIES:
+        if caller is None:
+            return None
+        raise ValueError(
+            f"{caller} broadcasts the query set to the driver: more than "
+            f"_MAX_BROADCAST_QUERIES={_MAX_BROADCAST_QUERIES} rows. Swap sides."
+        )
+    q_ids = np.array([r[0] for r in q_rows])
+    q_mat = np.array([[float(x) for x in r[1]] for r in q_rows], dtype=np.float64)
+    if not len(q_rows):
+        q_mat = q_mat.reshape(0, 1)
+    keep = (q_mat * q_mat).sum(axis=1) > 0
+    return q_ids[keep], q_mat[keep]
+
+
+def _scored_schema(queries: DataFrame, query_id: str, corpus: DataFrame,
+                   corpus_id: str, score_col: str) -> StructType:
+    """(query_id, corpus_id, score_col) — the partial-result schema of
+    every Arrow-batched search, id types taken from the input frames."""
+    from pyspark.sql.types import DoubleType
+
+    return StructType(
+        [
+            StructField(query_id, queries.schema[query_id].dataType),
+            StructField(corpus_id, corpus.schema[corpus_id].dataType),
+            StructField(score_col, DoubleType()),
+        ]
+    )
+
+
+def _empty_topk(queries: DataFrame, query_id: str, corpus: DataFrame,
+                corpus_id: str, score_col: str) -> DataFrame:
+    """The zero-query search result, with the search output schema."""
+    from pyspark.sql.types import IntegerType
+
+    fields = _scored_schema(queries, query_id, corpus, corpus_id, score_col).fields
+    schema = StructType(fields[:2] + [StructField("rank", IntegerType())] + fields[2:])
+    return queries.sparkSession.createDataFrame([], schema)
+
+
+def _local_topk(np, pd, scores, q_ids, c_ids, query_id: str, corpus_id: str,
+                score_col: str, k: int):
+    """The per-batch prune of every broadcast search: ``scores`` is the
+    (q_ids x c_ids) matrix; per query keep every score >= its k-th best
+    NON-SELF score and drop self-matches. Boundary ties all survive to
+    the final window, whose (score DESC, id ASC) order resolves them."""
+    self_mask = q_ids[:, None] == c_ids[None, :]
+    masked = np.where(self_mask, -np.inf, scores)
+    local_k = min(k, masked.shape[1])
+    kth = np.partition(masked, -local_k, axis=1)[:, -local_k]
+    qi, ci = np.nonzero((masked >= kth[:, None]) & ~self_mask)
+    return pd.DataFrame(
+        {query_id: q_ids[qi], corpus_id: c_ids[ci], score_col: scores[qi, ci]}
+    )
+
+
+def _rank_topk(frame: DataFrame, query_id: str, corpus_id: str,
+               score_col: str, k: int) -> DataFrame:
+    """The one top-k window: row_number over (score DESC, corpus id ASC),
+    a total order, so ties break identically on every path. Output
+    (query_id, corpus_id, rank, score_col)."""
+    w = Window.partitionBy(query_id).orderBy(
+        F.col(score_col).desc(), F.col(corpus_id)
+    )
+    return (
+        frame.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id, corpus_id, "rank", score_col)
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -241,12 +337,7 @@ def brute_force_topk(
             "cosine", dot("__qv", "__cv") / (F.sqrt("__qn") * F.sqrt("__cn"))
         )
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", "cosine")
-    )
+    return _rank_topk(pairs, query_id, corpus_id, "cosine", k)
 
 
 def brute_force_topk_fast(
@@ -257,7 +348,6 @@ def brute_force_topk_fast(
     query_vec: str = "qv",
     corpus_id: str = "cid",
     corpus_vec: str = "cv",
-    max_queries: int = 100_000,
 ) -> DataFrame:
     """BLAS-accelerated exact cosine top-k: the query matrix is broadcast
     to every partition; each Arrow batch of corpus vectors does ONE numpy
@@ -270,41 +360,23 @@ def brute_force_topk_fast(
     Id columns keep their input types (string ids work — the output
     schema is derived from the input schemas, and ids ride through numpy
     as objects). The query set is collected to the driver and broadcast
-    — that is the design (queries are the small side); ``max_queries``
-    bounds it explicitly and raises instead of silently OOMing the
-    driver when a caller passes a corpus-sized frame."""
+    — that is the design (queries are the small side);
+    _MAX_BROADCAST_QUERIES bounds it and raises instead of silently
+    OOMing the driver when a caller passes a corpus-sized frame."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    # One action, not count()+collect(): limit(max+1) bounds driver
-    # memory exactly as the count pre-check did (at most max_queries+1
-    # rows ever materialize) while saving a full scan of the query set.
-    q_rows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"brute_force_topk_fast broadcasts the query set to the driver: "
-            f"more than max_queries={max_queries} rows. Swap sides or raise "
-            f"max_queries if the driver has memory for it."
-        )
-    q_ids = np.array([r[0] for r in q_rows])  # natural dtype: ints or objects
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+    q_ids, q_mat = _collect_queries(
+        queries, query_id, query_vec, "brute_force_topk_fast"
+    )
     q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    keep = q_norm > 0
-    q_ids, q_mat, q_norm = q_ids[keep], q_mat[keep], q_norm[keep]
     sc = corpus.sparkSession.sparkContext
     bq = sc.broadcast((q_ids, q_mat, q_norm))
 
-    out_schema = StructType(
-        [
-            StructField(query_id, queries.schema[query_id].dataType),
-            StructField(corpus_id, corpus.schema[corpus_id].dataType),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
     def op(batches):
         ids, mat, norms = bq.value
+        if not len(ids):
+            return
         for pdf in batches:
             c_ids = pdf[corpus_id].to_numpy()
             c_mat = np.stack(pdf[corpus_vec].map(np.asarray)).astype(np.float64)
@@ -314,22 +386,9 @@ def brute_force_topk_fast(
             if len(c_ids) == 0:
                 continue
             cos = (mat @ c_mat.T) / np.outer(norms, c_norm)  # (Q, C)
-            local_k = min(k + 1, cos.shape[1])  # +1: self may be present
-            # Keep everything >= the k-th best score (not argpartition's
-            # arbitrary k): boundary TIES must all survive to the final
-            # window, whose (cosine desc, cid asc) order resolves them the
-            # same way the fold baseline does. Duplicate vectors (common
-            # in dedup corpora) make such ties real.
-            kth = -np.partition(-cos, local_k - 1, axis=1)[:, local_k - 1]
-            rows = {query_id: [], corpus_id: [], "cosine": []}
-            for qi in range(len(ids)):
-                for ci in np.nonzero(cos[qi] >= kth[qi])[0]:
-                    if c_ids[ci] == ids[qi]:
-                        continue
-                    rows[query_id].append(ids[qi])
-                    rows[corpus_id].append(c_ids[ci])
-                    rows["cosine"].append(cos[qi, ci])
-            yield pd.DataFrame(rows)
+            yield _local_topk(
+                np, pd, cos, ids, c_ids, query_id, corpus_id, "cosine", k
+            )
 
     c = corpus.select(corpus_id, corpus_vec)
     # Work-gated spread (see spread_for_gemm): Q is exact (just
@@ -338,13 +397,10 @@ def brute_force_topk_fast(
     if len(q_ids):
         d = int(q_mat.shape[1])
         c = spread_for_gemm(c, 2.0 * len(q_ids) * estimated_rows(c, d) * d)
-    partials = c.mapInPandas(op, out_schema)
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", "cosine")
+    partials = c.mapInPandas(
+        op, _scored_schema(queries, query_id, corpus, corpus_id, "cosine")
     )
+    return _rank_topk(partials, query_id, corpus_id, "cosine", k)
 
 
 @dataclass(frozen=True)
@@ -833,7 +889,6 @@ def train_ivf_centroids(
     corpus_id: str = "cid",
     corpus_vec: str = "cv",
     quant_scale: int = 1000,
-    max_train_rows: int = 200_000,
 ) -> list[tuple[int, list[float]]]:
     """Deterministic spherical k-means for the IVF coarse quantizer:
     init = the ``n_pivots`` lowest-id vectors of ``corpus`` (pass a
@@ -843,11 +898,11 @@ def train_ivf_centroids(
     Training runs DRIVER-SIDE on the collected sample — one Spark action
     total, not one per Lloyd iteration. That is the production shape for
     coarse-quantizer training (FAISS trains IVF on an in-RAM sample the
-    same way): the sample is bounded (``max_train_rows`` raises rather
-    than OOM the driver — count-checked before collecting, the same
-    guard as brute_force_topk_fast), k·dim centroids are trivially
-    RAM-sized, and each distributed Lloyd iteration would otherwise pay
-    a full job of fixed latency to aggregate a few thousand rows.
+    same way): the sample is bounded (_MAX_TRAIN_ROWS raises rather
+    than OOM the driver — count-checked before collecting), k·dim
+    centroids are trivially RAM-sized, and each distributed Lloyd
+    iteration would otherwise pay a full job of fixed latency to
+    aggregate a few thousand rows.
 
     Cross-engine determinism is built in so a SQL oracle can reproduce
     training exactly, even though it runs in Python here: elements are
@@ -886,11 +941,11 @@ def train_ivf_centroids(
     import numpy as np
 
     n = corpus.count()
-    if n > max_train_rows:
+    if n > _MAX_TRAIN_ROWS:
         raise ValueError(
             f"train_ivf_centroids collects the training sample to the driver: "
-            f"{n} rows exceeds max_train_rows={max_train_rows}. Pass a smaller "
-            f"sample (ivf_build's train_sample_mod), raise the bound, or use "
+            f"{n} rows exceeds _MAX_TRAIN_ROWS={_MAX_TRAIN_ROWS}. Raise "
+            f"ivf_build's train_sample_mod, or use "
             f"train_ivf_centroids_distributed (bit-identical, never collects "
             f"the sample)."
         )
@@ -913,7 +968,7 @@ def train_ivf_centroids(
     sn_v = np.array([sn for _, sn, _ in quant], dtype=np.float64)
     # Centroid sums stay exact Python ints; the one division per
     # component is exact IEEE only while |sum| < 2^53 — enormous slack
-    # at max_train_rows (|q| ~ quant_scale·O(1)), but guard, don't
+    # at _MAX_TRAIN_ROWS (|q| ~ quant_scale·O(1)), but guard, don't
     # assume: past it, Python's correctly-rounded big-int division and
     # an engine's double arithmetic could round differently.
     max_q = max((max(abs(x) for x in q) for _, _, q in quant), default=0)
@@ -1080,12 +1135,6 @@ def train_ivf_centroids_distributed(
     base = spread_for_gemm(
         base, iters * 2.0 * n_pivots * estimate_plan_bytes(base) / 5.0
     )
-    base = tracked_persist(base)
-    _check_quant_bound(base, quant_scale, "train_ivf_centroids_distributed")
-    init = base.orderBy("__id").limit(n_pivots).collect()
-    cents = [(int(r["__id"]), [float(x) for x in r["__cv"]]) for r in init]
-    if not cents:
-        return []
 
     def make_partials(centroids):
         def op(batches):
@@ -1119,17 +1168,26 @@ def train_ivf_centroids_distributed(
 
         return op
 
-    for _ in range(iters):
-        partials = base.mapInPandas(make_partials(cents), _PARTIAL_SCHEMA)
-        final = partials.groupBy("cell").applyInPandas(
-            _reduce_partials, _PARTIAL_SCHEMA
-        )
-        rows = final.collect()
-        cents = sorted(
-            (int(r["cell"]), [int(s) / int(r["cnt"]) for s in r["sums"]])
-            for r in rows
-        )
-    return cents
+    # A plain persist, released before returning: no search reads this
+    # frame, so it must not ride an index memo's re-armed persists.
+    base = base.persist()
+    try:
+        _check_quant_bound(base, quant_scale, "train_ivf_centroids_distributed")
+        init = base.orderBy("__id").limit(n_pivots).collect()
+        cents = [(int(r["__id"]), [float(x) for x in r["__cv"]]) for r in init]
+        for _ in range(iters if cents else 0):
+            partials = base.mapInPandas(make_partials(cents), _PARTIAL_SCHEMA)
+            final = partials.groupBy("cell").applyInPandas(
+                _reduce_partials, _PARTIAL_SCHEMA
+            )
+            rows = final.collect()
+            cents = sorted(
+                (int(r["cell"]), [int(s) / int(r["cnt"]) for s in r["sums"]])
+                for r in rows
+            )
+        return cents
+    finally:
+        base.unpersist()
 
 
 @dataclass
@@ -1300,14 +1358,13 @@ def ivf_search(
     nprobe: int = 2,
     query_id: str = "qid",
     query_vec: str = "qv",
-    max_broadcast_queries: int = 100_000,
 ) -> DataFrame:
     """Search a built IVF index; exact top-k within each query's
     ``nprobe`` nearest cells. Output: (qid, cid, rank, cosine) —
     approximate (recall < 1) by design. Two physical strategies, same
     bit-exact result (both mirror the oracle's fold arithmetic):
 
-    - BROADCAST-GEMM (default, query set ≤ ``max_broadcast_queries``):
+    - BROADCAST-GEMM (default, query set ≤ _MAX_BROADCAST_QUERIES):
       queries are collected once, probed cells computed driver-side,
       and the corpus ASSIGNMENT streams through mapInPandas — each
       Arrow batch runs one column-fold GEMM per resident cell against
@@ -1322,8 +1379,10 @@ def ivf_search(
       one shuffle, scanning ~nprobe/n_cells of the corpus per query.
 
     Driver-side probe ranking is O(n_q · n_cells) column-fold lanes —
-    fine to ~1e9 (e.g. 100k queries × 4k cells × 64 dims); past that,
-    lower ``max_broadcast_queries`` to force the join path.
+    fine to ~1e9 (e.g. 100k queries — the _MAX_BROADCAST_QUERIES bound —
+    × 4k cells × 64 dims). Choosing the strategy costs no extra job:
+    the bounded collect IS the broadcast path's query collect, and only
+    an over-bound query set takes the join path.
 
     Both strategies rank every query's probe cells EXACTLY against all
     k centroids: the column fold up to _HIER_ASSIGN_MIN_CELLS cells,
@@ -1331,9 +1390,10 @@ def ivf_search(
     record why no approximate √k probe routing is used: its sampled
     time gate refused it at every measured scale (sf405: flat 1.30s vs
     routed 12.1s on the calibration sample)."""
-    if 0 <= queries.limit(max_broadcast_queries + 1).count() <= max_broadcast_queries:
-        return _ivf_search_broadcast(index, queries, k, nprobe, query_id, query_vec)
-    return _ivf_search_join(index, queries, k, nprobe, query_id, query_vec)
+    collected = _collect_queries(queries, query_id, query_vec, None)
+    if collected is None:
+        return _ivf_search_join(index, queries, k, nprobe, query_id, query_vec)
+    return _ivf_search_broadcast(index, queries, *collected, k, nprobe, query_id)
 
 
 #: Above this centroid count, cell assignment and probe ranking run as
@@ -1707,40 +1767,6 @@ def train_ivf_centroids_hierarchical(
                 }
             )
 
-    tagged = tracked_persist(base.mapInPandas(tag_super, sup_schema))
-    # Overflow/exactness guard — the same bound as both flat trainers.
-    _check_quant_bound(tagged, quant_scale, "train_ivf_centroids_hierarchical")
-
-    counts = {
-        int(r["__sup"]): int(r["cnt"])
-        for r in tagged.groupBy("__sup").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    if not counts:
-        return []
-    shares = _apportion_shares(counts, n_pivots)
-
-    rn = F.row_number().over(
-        Window.partitionBy("__sup").orderBy(F.col("__id"))
-    )
-    share_col = F.create_map(
-        *[F.lit(x) for kv in shares.items() for x in kv]
-    )
-    init_rows = (
-        tagged.withColumn("__rn", rn)
-        .filter(F.col("__rn") <= share_col[F.col("__sup")])
-        .select("__sup", "__id", "__cv")
-        .collect()
-    )
-    # children per super, cell-ascending (cell id = init vector id —
-    # the flat trainer's labeling convention, distinct by construction)
-    children: dict[int, list[tuple[int, list[float]]]] = {}
-    for r in init_rows:
-        children.setdefault(int(r["__sup"]), []).append(
-            (int(r["__id"]), [float(x) for x in r["__cv"]])
-        )
-    for s in children:
-        children[s].sort()
-
     def make_partials(child_map):
         arrays = {
             s: _centroid_arrays(np, cl) for s, cl in child_map.items() if cl
@@ -1779,25 +1805,68 @@ def train_ivf_centroids_hierarchical(
 
         return op
 
-    cell_to_sup = {
-        cid: s for s, cl in children.items() for cid, _ in cl
-    }
-    for _ in range(iters):
-        partials = tagged.mapInPandas(make_partials(children), _PARTIAL_SCHEMA)
-        final = partials.groupBy("cell").applyInPandas(
-            _reduce_partials, _PARTIAL_SCHEMA
-        )
-        rows = final.collect()
-        new_children: dict[int, list[tuple[int, list[float]]]] = {}
-        for r in rows:
-            cid = int(r["cell"])
-            vec = [int(x) / int(r["cnt"]) for x in r["sums"]]
-            new_children.setdefault(cell_to_sup[cid], []).append((cid, vec))
-        for s in new_children:
-            new_children[s].sort()
-        children = new_children
+    # A plain persist, released before returning: no search reads this
+    # frame, so it must not ride an index memo's re-armed persists.
+    tagged = base.mapInPandas(tag_super, sup_schema).persist()
+    try:
+        # Overflow/exactness guard — the same bound as both flat trainers.
+        _check_quant_bound(tagged, quant_scale, "train_ivf_centroids_hierarchical")
 
-    return sorted(c for cl in children.values() for c in cl)
+        counts = {
+            int(r["__sup"]): int(r["cnt"])
+            for r in tagged.groupBy("__sup")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        }
+        if not counts:
+            return []
+        shares = _apportion_shares(counts, n_pivots)
+
+        rn = F.row_number().over(
+            Window.partitionBy("__sup").orderBy(F.col("__id"))
+        )
+        share_col = F.create_map(
+            *[F.lit(x) for kv in shares.items() for x in kv]
+        )
+        init_rows = (
+            tagged.withColumn("__rn", rn)
+            .filter(F.col("__rn") <= share_col[F.col("__sup")])
+            .select("__sup", "__id", "__cv")
+            .collect()
+        )
+        # children per super, cell-ascending (cell id = init vector id —
+        # the flat trainer's labeling convention, distinct by construction)
+        children: dict[int, list[tuple[int, list[float]]]] = {}
+        for r in init_rows:
+            children.setdefault(int(r["__sup"]), []).append(
+                (int(r["__id"]), [float(x) for x in r["__cv"]])
+            )
+        for s in children:
+            children[s].sort()
+
+        cell_to_sup = {
+            cid: s for s, cl in children.items() for cid, _ in cl
+        }
+        for _ in range(iters):
+            partials = tagged.mapInPandas(
+                make_partials(children), _PARTIAL_SCHEMA
+            )
+            final = partials.groupBy("cell").applyInPandas(
+                _reduce_partials, _PARTIAL_SCHEMA
+            )
+            rows = final.collect()
+            new_children: dict[int, list[tuple[int, list[float]]]] = {}
+            for r in rows:
+                cid = int(r["cell"])
+                vec = [int(x) / int(r["cnt"]) for x in r["sums"]]
+                new_children.setdefault(cell_to_sup[cid], []).append((cid, vec))
+            for s in new_children:
+                new_children[s].sort()
+            children = new_children
+
+        return sorted(c for cl in children.values() for c in cl)
+    finally:
+        tagged.unpersist()
 
 
 def _cluster_centroids(np, centroids, n_super: int, iters: int = 4):
@@ -1975,15 +2044,44 @@ def _prune_topk_frame(pd, np, frame, query_id: str, score_col: str, k: int):
     return srt[srt[score_col] >= thr]
 
 
+def _probe_map(np, centroids, q_mat, q_sqrtn, nprobe: int):
+    """{cell: ascending positions of the queries probing it}. Ranks each
+    query's ``nprobe`` cells with _probe_ranker (chosen here, on the
+    driver), then inverts query -> cells vectorized (r12: the
+    per-element Python loop was 20M dict appends at sf405); the stable
+    sort keeps query positions ascending within each cell."""
+    cells, cent_m, cent_nrm = _centroid_arrays(np, centroids)
+    # r9: past the same threshold as build-side assignment, probe
+    # ranking switches from the column fold (every lane bit-identical
+    # to the SQL expression) to the BLAS dgemm form — the Q·k·d fold
+    # loop SCALING.md §9 measured inside the sf15 search becomes
+    # sub-second with IDENTICAL probe sets (see _negcos_order_gemm for
+    # why this beats two-level routing here). Gate corpora (k=8) stay
+    # on the fold.
+    order = _probe_ranker(len(cells))(np, q_mat, q_sqrtn, cent_m, cent_nrm, nprobe)
+    flat_q = np.repeat(np.arange(len(q_mat)), order.shape[1])
+    flat_c = cells[order].reshape(-1)
+    o = np.argsort(flat_c, kind="stable")
+    fc, fq = flat_c[o], flat_q[o]
+    uniq, starts = np.unique(fc, return_index=True)
+    bounds = np.append(starts, len(fc))
+    return {
+        int(uniq[i]): fq[bounds[i] : bounds[i + 1]].copy()
+        for i in range(len(uniq))
+    }
+
+
 def _ivf_search_broadcast(
     index: IvfIndex,
     queries: DataFrame,
+    q_ids,
+    q_mat,
     k: int,
     nprobe: int,
     query_id: str,
-    query_vec: str,
 ) -> DataFrame:
-    """Broadcast-GEMM strategy (see ivf_search). Exactness notes: query
+    """Broadcast-GEMM strategy (see ivf_search) over the query set
+    ivf_search collected (_collect_queries). Exactness notes: query
     norms use the driver fold (_py_dot — identical to the Spark fold);
     probe ranking mirrors _cell_scores_sql bit-for-bit (column-fold
     cosine against the same centroid-norm literals, stable argsort on
@@ -1995,70 +2093,15 @@ def _ivf_search_broadcast(
     order."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType
 
     corpus_id = index.corpus_id
-    q_rows = queries.select(query_id, query_vec).collect()
-    if not q_rows:
-        # Zero queries: np.array([]) is 1-D, so the centroid GEMM's
-        # q_mat.shape[1] would raise; return the empty result with the
-        # search output schema directly (the join path did this
-        # naturally via an empty join).
-        from pyspark.sql.types import IntegerType
-
-        empty_schema = StructType(
-            [
-                StructField(query_id, queries.schema[query_id].dataType),
-                StructField(corpus_id, index.assignment.schema[corpus_id].dataType),
-                StructField("rank", IntegerType()),
-                StructField("cosine", DoubleType()),
-            ]
-        )
-        return queries.sparkSession.createDataFrame([], empty_schema)
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array(
-        [[float(x) for x in r[1]] for r in q_rows], dtype=np.float64
-    )
-    qn = np.array([_py_dot(list(v), list(v)) for v in q_mat])
-    keep = qn > 0
-    q_ids, q_mat, qn = q_ids[keep], q_mat[keep], qn[keep]
-    q_sqrtn = np.sqrt(qn)
-
-    cells, cent_m, cent_nrm = _centroid_arrays(np, index.centroids)
-    # r9: past the same threshold as build-side assignment, probe
-    # ranking switches from the column fold (every lane bit-identical
-    # to the SQL expression) to the BLAS dgemm form — the Q·k·d fold
-    # loop SCALING.md §9 measured inside the sf15 search becomes
-    # sub-second with IDENTICAL probe sets (see _negcos_order_gemm for
-    # why this beats two-level routing here). Gate corpora (k=8) stay
-    # on the fold.
-    order = _probe_ranker(len(cells))(
-        np, q_mat, q_sqrtn, cent_m, cent_nrm, nprobe
-    )
-    # Invert (query -> probed cells) to (cell -> query positions)
-    # vectorized (r12: the per-element Python loop was 20M dict appends
-    # at sf405). The stable sort keeps query positions ascending within
-    # each cell — same arrays the loop built.
-    flat_q = np.repeat(np.arange(len(q_ids)), order.shape[1])
-    flat_c = cells[order].reshape(-1)
-    o = np.argsort(flat_c, kind="stable")
-    fc, fq = flat_c[o], flat_q[o]
-    uniq, starts = np.unique(fc, return_index=True)
-    bounds = np.append(starts, len(fc))
-    cell2q_np = {
-        int(uniq[i]): fq[bounds[i] : bounds[i + 1]].copy()
-        for i in range(len(uniq))
-    }
+    if not len(q_ids):
+        return _empty_topk(queries, query_id, index.assignment, corpus_id, "cosine")
+    q_sqrtn = np.sqrt(np.array([_py_dot(list(v), list(v)) for v in q_mat]))
+    cell2q_np = _probe_map(np, index.centroids, q_mat, q_sqrtn, nprobe)
 
     sc = queries.sparkSession.sparkContext
     bq = sc.broadcast((q_ids, q_mat, q_sqrtn, cell2q_np))
-    out_schema = StructType(
-        [
-            StructField(query_id, queries.schema[query_id].dataType),
-            StructField(corpus_id, index.assignment.schema[corpus_id].dataType),
-            StructField("cosine", DoubleType()),
-        ]
-    )
 
     # r9: past the probe-ranking threshold the PAIR scoring also runs
     # as one BLAS dgemm per (cell, chunk) instead of the d-step fold —
@@ -2066,7 +2109,7 @@ def _ivf_search_broadcast(
     # oracle-checked corpus lives past the threshold (gate corpora
     # keep the bit-exact fold the SQL mirrors). Decided driver-side so
     # tests can patch it.
-    score_gemm = len(cells) > _HIER_ASSIGN_MIN_CELLS
+    score_gemm = len(index.centroids) > _HIER_ASSIGN_MIN_CELLS
 
     def op(batches):
         ids, mat, sqrtn, c2q = bq.value
@@ -2096,22 +2139,10 @@ def _ivf_search_broadcast(
                         for d in range(c_mat.shape[1]):
                             gacc += np.outer(mat[qc][:, d], c_mat[:, d])
                     cos = gacc / np.outer(sqrtn[qc], c_sqrtn)
-                    self_mask = ids[qc][:, None] == c_ids[None, :]
-                    # Local prune: keep >= the k-th best NON-SELF score
-                    # per query (boundary ties all survive; the final
-                    # window resolves them with the exact total order).
-                    masked = np.where(self_mask, -np.inf, cos)
-                    local_k = min(k, masked.shape[1])
-                    kth = np.partition(masked, -local_k, axis=1)[:, -local_k]
-                    keep_m = (masked >= kth[:, None]) & ~self_mask
-                    qi_idx, ci_idx = np.nonzero(keep_m)
                     frames.append(
-                        pd.DataFrame(
-                            {
-                                query_id: ids[qc][qi_idx],
-                                corpus_id: c_ids[ci_idx],
-                                "cosine": cos[qi_idx, ci_idx],
-                            }
+                        _local_topk(
+                            np, pd, cos, ids[qc], c_ids, query_id, corpus_id,
+                            "cosine", k,
                         )
                     )
             if frames:
@@ -2133,14 +2164,14 @@ def _ivf_search_broadcast(
     scored = (
         index.assignment.select(corpus_id, "__cv", "__cn", "__cell")
         .filter(F.col("__cell").isin(probed_cells))
-        .mapInPandas(op, schema=out_schema)
+        .mapInPandas(
+            op,
+            schema=_scored_schema(
+                queries, query_id, index.assignment, corpus_id, "cosine"
+            ),
+        )
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", "cosine")
-    )
+    return _rank_topk(scored, query_id, corpus_id, "cosine", k)
 
 
 def _ivf_search_join(
@@ -2161,7 +2192,6 @@ def _ivf_search_join(
         .filter(F.col("__qn") > 0)
     )
     import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     if len(index.centroids) > _VEC_ASSIGN_MIN_CELLS:
         # Arrow-GEMM probe ranking (bit-identical — see
@@ -2209,14 +2239,6 @@ def _ivf_search_join(
     # expression fold the oracle mirrors, ~100x cheaper per pair (the
     # r6 study measured the interpreted lambda fold as the entire 51s
     # search cost at sf1 — see _exact_fold_cosine_np).
-    out_schema = StructType(
-        [
-            StructField(query_id, cands.schema[query_id].dataType),
-            StructField(corpus_id, cands.schema[corpus_id].dataType),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
     def score(batches):
         import numpy as np
 
@@ -2249,42 +2271,10 @@ def _ivf_search_join(
                 k,
             )
 
-    scored = cands.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "rank", "cosine")
+    scored = cands.mapInPandas(
+        score, schema=_scored_schema(cands, query_id, cands, corpus_id, "cosine")
     )
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    n_pivots: int = 8,
-    train_iters: int = 0,
-    train_sample_mod: int = 1,
-    query_id: str = "qid",
-    query_vec: str = "qv",
-    corpus_id: str = "cid",
-    corpus_vec: str = "cv",
-) -> DataFrame:
-    """One-shot IVF ANN: ivf_build + ivf_search. Callers issuing repeated
-    searches should build once and reuse the index (queries_similarity
-    memoizes it per session)."""
-    index = ivf_build(
-        corpus,
-        n_pivots=n_pivots,
-        train_iters=train_iters,
-        train_sample_mod=train_sample_mod,
-        corpus_id=corpus_id,
-        corpus_vec=corpus_vec,
-    )
-    return ivf_search(
-        index, queries, k=k, nprobe=nprobe, query_id=query_id, query_vec=query_vec
-    )
+    return _rank_topk(scored, query_id, corpus_id, "cosine", k)
 
 
 def _assignment_quant_stats(index: IvfIndex) -> tuple[int, float]:

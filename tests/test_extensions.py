@@ -148,7 +148,9 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     }
     approx = {
         (r.qid, r.cid)
-        for r in similarity.ivf_topk(q, c.drop("label"), k=5, nprobe=4, n_pivots=8).collect()
+        for r in similarity.ivf_search(
+            similarity.ivf_build(c.drop("label"), n_pivots=8), q, k=5, nprobe=4
+        ).collect()
     }
     recall = len(exact & approx) / len(exact)
     # Geometric cell assignment + 4/8 probes must beat random cell
@@ -156,8 +158,9 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     assert recall >= 0.5, f"IVF recall too low: {recall:.2f}"
     trained = {
         (r.qid, r.cid)
-        for r in similarity.ivf_topk(
-            q, c.drop("label"), k=5, nprobe=4, n_pivots=8, train_iters=2
+        for r in similarity.ivf_search(
+            similarity.ivf_build(c.drop("label"), n_pivots=8, train_iters=2),
+            q, k=5, nprobe=4,
         ).collect()
     }
     trained_recall = len(exact & trained) / len(exact)
@@ -199,7 +202,7 @@ def test_ivf_search_strategies_identical(spark, sf_dir):
     idx = similarity.ivf_build(c, n_pivots=8, train_iters=2, train_sample_mod=4)
     fast = {
         (r.qid, r.cid, r.rank, r.cosine)
-        for r in similarity._ivf_search_broadcast(idx, q, 5, 4, "qid", "qv").collect()
+        for r in similarity.ivf_search(idx, q, k=5, nprobe=4).collect()
     }
     join = {
         (r.qid, r.cid, r.rank, r.cosine)
@@ -456,10 +459,10 @@ def test_fast_ann_matches_fold_pairs(spark, sf_dir):
     assert exact == fast
 
 
-def test_fast_ann_string_ids_and_query_bound(spark, sf_dir):
+def test_fast_ann_string_ids_and_query_bound(spark, sf_dir, monkeypatch):
     """The BLAS path must honor non-integer id types (schema derived
-    from inputs) and refuse an over-sized query set instead of
-    collecting it."""
+    from inputs), return an empty result for zero queries, and refuse
+    an over-sized query set instead of collecting it."""
     emb = load_table(spark, "embeddings", sf_dir)
     q = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.concat(F.lit("q-"), F.col("vec_id")).alias("qid"),
@@ -475,8 +478,10 @@ def test_fast_ann_string_ids_and_query_bound(spark, sf_dir):
     assert rows and all(r.qid.startswith("q-") and r.cid.startswith("c-") for r in rows)
     exact = {(r.qid, r.cid) for r in similarity.brute_force_topk(q, c, k=3).collect()}
     assert {(r.qid, r.cid) for r in rows} == exact
-    with pytest.raises(ValueError, match="max_queries"):
-        similarity.brute_force_topk_fast(q, c, k=3, max_queries=2)
+    assert similarity.brute_force_topk_fast(q.filter(F.lit(False)), c, k=3).count() == 0
+    monkeypatch.setattr(similarity, "_MAX_BROADCAST_QUERIES", 2)
+    with pytest.raises(ValueError, match="_MAX_BROADCAST_QUERIES"):
+        similarity.brute_force_topk_fast(q, c, k=3)
 
 
 def test_hyperplane_near_dup_recall_and_plan(spark, sf_dir):
@@ -1174,7 +1179,7 @@ def test_ivf_search_broadcast_empty_queries(spark, sf_dir):
         n_pivots=4,
         train_iters=1,
     )
-    assert similarity._ivf_search_broadcast(idx16, qz, 5, 2, "qid", "qv").count() == 0
+    assert similarity.ivf_search(idx16, qz, k=5, nprobe=2).count() == 0
 
 
 def test_ivf_search_broadcast_chunked_identical(spark, sf_dir, monkeypatch):
@@ -1190,13 +1195,62 @@ def test_ivf_search_broadcast_chunked_identical(spark, sf_dir, monkeypatch):
     idx = similarity.ivf_build(c, n_pivots=8, train_iters=2, train_sample_mod=4)
     fast = {
         (r.qid, r.cid, r.rank, r.cosine)
-        for r in similarity._ivf_search_broadcast(idx, q, 5, 4, "qid", "qv").collect()
+        for r in similarity.ivf_search(idx, q, k=5, nprobe=4).collect()
     }
     join = {
         (r.qid, r.cid, r.rank, r.cosine)
         for r in similarity._ivf_search_join(idx, q, k=5, nprobe=4).collect()
     }
     assert fast == join and len(fast) > 0
+
+
+def _ivf_fixture(spark, sf_dir):
+    emb = load_table(spark, "embeddings", sf_dir)
+    q = emb.filter(F.col("vec_id") % 10 == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+    c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
+    return q, similarity.ivf_build(c, n_pivots=8, train_iters=2, train_sample_mod=4)
+
+
+def test_ivf_search_join_dispatch_past_query_bound(spark, sf_dir, monkeypatch):
+    """A query set past _MAX_BROADCAST_QUERIES takes the per-pair join
+    path through the public entry, and returns the broadcast path's
+    rows bit-for-bit."""
+    q, idx = _ivf_fixture(spark, sf_dir)
+    default = similarity.ivf_search(idx, q, k=5, nprobe=4)
+    assert "Join" not in default._jdf.queryExecution().executedPlan().toString()
+    want = {tuple(r) for r in default.collect()}
+    monkeypatch.setattr(similarity, "_MAX_BROADCAST_QUERIES", 3)
+    joined = similarity.ivf_search(idx, q, k=5, nprobe=4)
+    assert "Join" in joined._jdf.queryExecution().executedPlan().toString()
+    assert {tuple(r) for r in joined.collect()} == want and len(want) > 0
+
+
+def test_ivf_search_build_runs_one_query_job(spark, sf_dir):
+    """Building ivf_search over a prebuilt index runs exactly the jobs
+    of ONE bounded collect of the query frame: the strategy choice
+    reuses the broadcast path's collect instead of a separate count."""
+    q, idx = _ivf_fixture(spark, sf_dir)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    bound = similarity._MAX_BROADCAST_QUERIES + 1
+    collect_jobs = jobs(
+        "ivf-one-collect", lambda: q.select("qid", "qv").limit(bound).collect()
+    )
+    build_jobs = jobs(
+        "ivf-search-build", lambda: similarity.ivf_search(idx, q, k=5, nprobe=4)
+    )
+    assert collect_jobs >= 1 and build_jobs == collect_jobs
 
 
 def test_cosine_verify_null_vs_nan_vector_semantics(spark):

@@ -94,10 +94,33 @@ def test_ragged_codebooks_when_sample_small(spark):
     assert out.count() == 12
 
 
-def test_max_train_rows_guard(emb):
-    with pytest.raises(ValueError, match="max_train_rows"):
-        pq.train_pq_codebooks(emb, corpus_id="vec_id", corpus_vec="embedding",
-                              max_train_rows=10)
+def test_max_train_rows_guard(emb, monkeypatch):
+    monkeypatch.setattr(pq, "_MAX_TRAIN_ROWS", 10)
+    with pytest.raises(ValueError, match="_MAX_TRAIN_ROWS=10. Raise sample_mod"):
+        pq.train_pq_codebooks(emb, corpus_id="vec_id", corpus_vec="embedding")
+    monkeypatch.setattr(similarity, "_MAX_TRAIN_ROWS", 10)
+    with pytest.raises(ValueError, match="_MAX_TRAIN_ROWS=10. Raise"):
+        similarity.train_ivf_centroids(emb, corpus_id="vec_id",
+                                       corpus_vec="embedding")
+
+
+def test_broadcast_query_bound_raises(emb, cb, codes, sq, sq_codes, ivf_idx,
+                                      monkeypatch):
+    """Every search that broadcasts its query set raises past
+    _MAX_BROADCAST_QUERIES, naming itself, instead of collecting it."""
+    monkeypatch.setattr(similarity, "_MAX_BROADCAST_QUERIES", 2)
+    q = _q(emb)
+    searches = {
+        "brute_force_topk_fast": lambda: similarity.brute_force_topk_fast(
+            q, emb.selectExpr("vec_id as cid", "embedding as cv")
+        ),
+        "pq_topk_adc": lambda: pq.pq_topk_adc(codes, cb, q, corpus_id="vec_id"),
+        "ivfpq_search": lambda: pq.ivfpq_search(ivf_idx, cb, q),
+        "sq_topk": lambda: pq.sq_topk(sq_codes, sq, q, corpus_id="vec_id"),
+    }
+    for name, search in searches.items():
+        with pytest.raises(ValueError, match=f"{name} broadcasts the query set"):
+            search()
 
 
 def test_refined_adc_equals_exact_bruteforce(emb, cb, codes):

@@ -156,6 +156,28 @@ def test_clear_hooks_exist_and_clear(spark, sf_dir):
     assert planmemo._MEMO == {}
 
 
+def test_ivf_index_memo_rearms_only_the_assignment(spark, sf_dir, monkeypatch):
+    """The IVF index memo records only the persisted cell assignment:
+    the distributed trainer's own persist is released before it returns,
+    so a memo hit never re-arms a frame no search reads."""
+    import os
+
+    from rta_registrations_pyspark_glue_spark import caching
+    from rta_registrations_pyspark_glue_spark.operators import similarity
+    from rta_registrations_pyspark_glue_spark.plans import planmemo, queries_similarity
+
+    monkeypatch.setattr(similarity, "_DIST_TRAIN_MIN_FLOPS", 0)
+    planmemo.clear_plan_memo()
+    try:
+        idx = queries_similarity._ivf_index(spark, sf_dir)
+        key = ("ivf_index", os.path.join(sf_dir, "embeddings.parquet"))
+        recorded = planmemo._MEMO[key][3]
+        assert len(recorded) == 1 and recorded[0] is idx.assignment
+    finally:
+        planmemo.clear_plan_memo()
+        caching.release_tracked()
+
+
 @pytest.mark.parametrize("name", ["simhash_suite", "rta_pipeline_star"])
 def test_plan_memo_reuses_plan_and_rearms_persists(spark, sf_dir, name):
     """A decorated action-free query build returns the IDENTICAL plan
