@@ -9,7 +9,7 @@ and sizes its output files with a driver-side boto3 two-pass
 - CSV scans take an explicit schema (inference is a full extra pass over
   100 TB of input — never at scale); a permissive all-string bronze schema
   helper is provided for dirty feeds.
-- Partitioned writes target a file size via ``maxRecordsPerFile`` computed
+- Writes target a file size by coalescing to a file count computed
   single-pass from the optimizer's size statistics — no second write, no
   object-store listing.
 """
@@ -213,8 +213,13 @@ def write_parquet(
     the fact table), we estimate bytes from the optimizer's plan statistics
     and coalesce the final stage to the target file count — one pass,
     still ~target_mb files. At cluster scale the double write is the
-    difference between 1x and 2x the job's I/O. (coalesce narrows only the
-    post-shuffle stage; upstream stages keep their parallelism.)
+    difference between 1x and 2x the job's I/O. coalesce narrows the
+    WHOLE final stage — every narrow operator since the last shuffle,
+    the post-shuffle tail included — to the file count; only the stages
+    before that shuffle keep their parallelism. Below target_mb/2 that
+    is one task, which at small sizes is the write's longest job; a
+    repartition to more tasks measured slower still, since per-file
+    Parquet writer set-up, not the rows, dominates there.
 
     ``bloom_filter_cols`` (r9): write parquet BLOOM FILTERS for the
     named columns (`parquet.bloom.filter.enabled#col` writer options —
@@ -383,7 +388,7 @@ def replace_partitions(
     path: str,
     partition_by: list[str],
     target_mb: float = TARGET_FILE_SIZE_MB,
-) -> None:
+) -> set[str]:
     """Rewrite ONLY the partition directories present in ``df``, leaving
     sibling partitions' files physically untouched — and, unlike a plain
     dynamic-overwrite, safe when ``df``'s plan READS from ``path`` (the
@@ -400,7 +405,9 @@ def replace_partitions(
     This is the portable stand-in for a lakehouse MERGE INTO + snapshot
     commit (Delta/Iceberg): on a cluster/object store the same shape is
     an output-committer rename; swap this for MERGE INTO when a table
-    format is available and keep the call sites."""
+    format is available and keep the call sites.
+
+    Returns the leaf directories it replaced."""
     import os
     import shutil
 
@@ -408,6 +415,7 @@ def replace_partitions(
     staging = path.rstrip("/") + ".__incoming__"
     shutil.rmtree(staging, ignore_errors=True)
     write_parquet(df, staging, partition_by=partition_by, target_mb=target_mb)
+    replaced = set()
     for leaf in _partition_leaf_dirs(staging, len(partition_by)):
         rel = os.path.relpath(leaf, staging)
         dest = os.path.join(path, rel)
@@ -417,8 +425,10 @@ def replace_partitions(
             os.replace(dest, aside)
         os.replace(leaf, dest)
         shutil.rmtree(aside, ignore_errors=True)
+        replaced.add(dest)
     shutil.rmtree(staging, ignore_errors=True)
     df.sparkSession.catalog.refreshByPath(path)
+    return replaced
 
 
 def replace_parquet(
@@ -460,6 +470,7 @@ def delete_stale_keys(
     table's one-row-per-key grain: a re-registered key that moved
     partitions left a row behind in its old partition.
 
+    ``keys`` may repeat a key (it only filters, as a semi join).
     ``order_by`` names the recency columns (e.g. the same ones the
     table's keep-latest merge orders by), and the KEY'S NEWEST ROW WINS
     regardless of which run wrote it: per key, the single max-recency
@@ -472,9 +483,9 @@ def delete_stale_keys(
     ``--year/--month`` runs are therefore safe: a backfill can never
     delete a newer row.
 
-    Only partitions actually holding losing rows are rewritten (found
-    with a column-pruned probe join); a partition emptied entirely is
-    dropped."""
+    One per-key aggregate finds both each key's winner and the
+    partitions holding its losing rows. Only those partitions are
+    rewritten; a partition emptied entirely is dropped."""
     import os
     import shutil
 
@@ -485,21 +496,23 @@ def delete_stale_keys(
     current = spark.read.parquet(path)
     # Total order per key: recency, then canonical-side flag (the fresh
     # write wins exact-recency ties), then partition values.
+    parts = [f"__p{i}" for i in range(len(partition_by))]
     rec = F.struct(
         *[F.col(c) for c in order_by],
         canonical_pred.cast("int").alias("__canon"),
-        *[F.col(c) for c in partition_by],
+        *[F.col(c).alias(p) for c, p in zip(partition_by, parts)],
     )
-    keyed = current.join(keys, key_cols).withColumn("__rec", rec)
-    winners = keyed.groupBy(*key_cols).agg(F.max("__rec").alias("__win"))
-    losers = (
-        keyed.join(winners, key_cols)
-        .filter(F.col("__rec") != F.col("__win"))
-        .drop("__rec", "__win")
+    per_key = (
+        current.join(keys, key_cols, "left_semi")
+        .groupBy(*key_cols)
+        .agg(F.max(rec).alias("__win"), F.collect_list(rec).alias("__recs"))
+    )
+    losers = per_key.filter(F.size("__recs") > 1).select(
+        F.explode(F.filter("__recs", lambda r: r != F.col("__win"))).alias("__lose")
     )
     stale_parts = sorted(
-        tuple(r[c] for c in partition_by)
-        for r in losers.select(*partition_by).distinct().collect()
+        tuple(r)
+        for r in losers.select(*[f"__lose.{p}" for p in parts]).distinct().collect()
     )
     if not stale_parts:
         return
@@ -516,23 +529,15 @@ def delete_stale_keys(
     remaining = (
         current.filter(pred)
         .withColumn("__rec", rec)
-        .join(winners, key_cols, "left")
+        .join(per_key.drop("__recs"), key_cols, "left")
         .filter(F.col("__win").isNull() | (F.col("__rec") == F.col("__win")))
         .drop("__rec", "__win")
     )
-    remaining = remaining.persist()
-    remaining_parts = {
-        tuple(r[c] for c in partition_by)
-        for r in remaining.select(*partition_by).distinct().collect()
-    }
-    replace_partitions(remaining, path, partition_by=partition_by)
+    replaced = replace_partitions(remaining, path, partition_by=partition_by)
     for part in stale_parts:
-        if part not in remaining_parts:
-            leaf = os.path.join(
-                path, *[f"{c}={v}" for c, v in zip(partition_by, part)]
-            )
+        leaf = os.path.join(path, *[f"{c}={v}" for c, v in zip(partition_by, part)])
+        if leaf not in replaced:
             shutil.rmtree(leaf, ignore_errors=True)
-    remaining.unpersist()
     spark.catalog.refreshByPath(path)
 
 

@@ -92,7 +92,7 @@ def run_etl1(
                 stage_path,
                 partition_by=["year", "month"],
                 canonical_pred=_scope_condition(year, month),
-                keys=staged.select("tempRegistrationNumber").distinct(),
+                keys=staged.select("tempRegistrationNumber"),
                 key_cols=["tempRegistrationNumber"],
                 order_by=["fromdate_parsed", "slno"],
             )
@@ -185,23 +185,25 @@ def run_etl2(
             keys=["TEMP_REGISTRATION_NUMBER"],
             order_by=["REGISTRATION_ISSUE_DATE_ID", "SLNO"],
         )
-    fact_new = fact_new.persist()
     io.replace_partitions(fact_new, fact_path, partition_by=["REGISTRATION_YEAR"])
     if had_fact:
         # A registration re-issued in a different year keeps the fact
         # grain only if exactly one row per key survives. Recency-aware:
         # the newest issue (same order as the merge above) wins, so a
-        # backfill of an older year cannot delete a newer row.
+        # backfill of an older year cannot delete a newer row. The keys
+        # come from the update side, the only keys this write can have
+        # moved: the swap's refreshByPath(fact_path) drops the cache of
+        # every frame that reads fact_path, so keys taken from the merge
+        # would re-run it over the swapped-in files.
         io.delete_stale_keys(
             spark,
             fact_path,
             partition_by=["REGISTRATION_YEAR"],
             canonical_pred=F.col("REGISTRATION_YEAR") == year,
-            keys=fact_new.select("TEMP_REGISTRATION_NUMBER").distinct(),
+            keys=out.fact.select("TEMP_REGISTRATION_NUMBER"),
             key_cols=["TEMP_REGISTRATION_NUMBER"],
             order_by=["REGISTRATION_ISSUE_DATE_ID", "SLNO"],
         )
-    fact_new.unpersist()
     return paths
 
 

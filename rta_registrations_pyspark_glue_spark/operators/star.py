@@ -82,43 +82,36 @@ def build_dim_rta(df: DataFrame) -> DataFrame:
     )
 
 
-def assemble_fact(df: DataFrame, resolution: DataFrame) -> DataFrame:
-    """fact_registrations (etl2:256-275): left-join the resolution map,
+def assemble_fact(resolved: DataFrame) -> DataFrame:
+    """fact_registrations (etl2:256-275): project the resolved keyed rows,
     encode yyyyMMdd date keys, keep only rows with a valid issue date
     (DDL NOT NULL, starschema_dw.txt:59).
 
-    ``resolution`` carries (tempRegistrationNumber, RESOLVED_ID, LEV_DIST,
-    IS_FUZZY_MATCH) from operators.resolve. The reference routes the
-    manufacturer id through a separate trn-keyed staging map (etl2:246,258);
-    here ``df`` IS that map — one row per registration number (the
-    keep-latest dedup contract, pipeline.clean_and_stage) with
-    MANUFACTURER_ID already attached — so the reference's map join would be
-    an identity self-join on the unique key: two shuffles that cannot
-    change a single value. We read the column directly instead."""
-    s = df.alias("s")
-    r = resolution.alias("r")
-    return (
-        s.join(r, on="tempRegistrationNumber", how="left")
-        .select(
-            F.coalesce(F.col("r.RESOLVED_ID"), F.col("s.VEHICLE_ID")).alias("VEHICLE_ID"),
-            F.col("s.MANUFACTURER_ID").alias("MANUFACTURER_ID"),
-            F.col("s.RTA_ID").alias("RTA_ID"),
-            date_key(F.col("s.fromdate_parsed")).alias("REGISTRATION_ISSUE_DATE_ID"),
-            date_key(F.col("s.todate_parsed")).alias("REGISTRATION_EXPIRY_DATE_ID"),
-            F.year(F.col("s.fromdate_parsed")).alias("REGISTRATION_YEAR"),
-            F.when(
-                F.col("s.makeYear_clean").rlike("^[0-9]{4}$"),
-                F.concat(F.col("s.makeYear_clean"), F.lit("0101")).cast("int"),
-            )
-            .otherwise(F.lit(None).cast("int"))
-            .alias("MANUFACTURER_DATE_ID"),
-            F.col("s.vehicleClass").alias("TRANSPORT_TYPE"),
-            F.col("s.tempRegistrationNumber").alias("TEMP_REGISTRATION_NUMBER"),
-            F.col("s.slno").alias("SLNO"),
-            F.coalesce(F.col("r.IS_FUZZY_MATCH"), F.lit(False)).alias("IS_FUZZY_MATCH"),
-            F.col("s.colour").alias("COLOUR"),
-            F.col("s.fuel_clean").alias("FUEL_TYPE"),
-            F.col("s.modelName").alias("MODEL_NAME"),
+    ``resolved`` is the keyed stage — one row per registration number
+    (the keep-latest dedup contract, pipeline.clean_and_stage) — with
+    operators.resolve.resolve_rows' RESOLVED_ID and IS_FUZZY_MATCH
+    attached in place. The reference left-joins a trn-keyed resolution
+    map and a trn-keyed manufacturer map back onto its stage
+    (etl2:246,256-258); on a frame already unique per trn both joins are
+    identity joins, so the fact is one projection."""
+    return resolved.select(
+        F.coalesce("RESOLVED_ID", "VEHICLE_ID").alias("VEHICLE_ID"),
+        "MANUFACTURER_ID",
+        "RTA_ID",
+        date_key(F.col("fromdate_parsed")).alias("REGISTRATION_ISSUE_DATE_ID"),
+        date_key(F.col("todate_parsed")).alias("REGISTRATION_EXPIRY_DATE_ID"),
+        F.year("fromdate_parsed").alias("REGISTRATION_YEAR"),
+        F.when(
+            F.col("makeYear_clean").rlike("^[0-9]{4}$"),
+            F.concat(F.col("makeYear_clean"), F.lit("0101")).cast("int"),
         )
-        .filter(F.col("REGISTRATION_ISSUE_DATE_ID").isNotNull())
-    )
+        .otherwise(F.lit(None).cast("int"))
+        .alias("MANUFACTURER_DATE_ID"),
+        F.col("vehicleClass").alias("TRANSPORT_TYPE"),
+        F.col("tempRegistrationNumber").alias("TEMP_REGISTRATION_NUMBER"),
+        F.col("slno").alias("SLNO"),
+        "IS_FUZZY_MATCH",
+        F.col("colour").alias("COLOUR"),
+        F.col("fuel_clean").alias("FUEL_TYPE"),
+        F.col("modelName").alias("MODEL_NAME"),
+    ).filter(F.col("REGISTRATION_ISSUE_DATE_ID").isNotNull())

@@ -62,7 +62,7 @@ class StarOutput:
 
 
 # Columns of the keyed (post-surrogate) frame that downstream consumers
-# (dims, probe, manufacturer map, fact) actually read. The full keyed
+# (dims, resolution, fact) actually read. The full keyed
 # frame is ~60 columns of bronze/cleaning intermediates; persisting THAT
 # blocked column pruning and measured 2.4x slower than recompute. The
 # pruned 19-column projection is what a stage layer would durably hold.
@@ -107,7 +107,7 @@ def build_star(staged: DataFrame) -> StarOutput:
     # Persist a PRUNED projection, not the raw keyed frame: the full frame
     # is ~60 columns of cleaning intermediates, and persisting it blocked
     # column pruning across the six consumers (measured 2.4x slower than
-    # recompute). The 19 columns below are exactly what dims, probe, and
+    # recompute). The 19 columns below are exactly what dims, resolution and
     # fact read — one codegen'd pass computes them, every consumer reuses
     # the cached narrow rows. Durable pipelines write this same projection
     # to parquet as the stage layer (jobs.py).
@@ -122,19 +122,13 @@ def build_star(staged: DataFrame) -> StarOutput:
     dim_manufacturer = star.build_dim_manufacturer(df)
     dim_rta = star.build_dim_rta(df)
 
-    # Vehicle resolution: probe = one row per registration with its
-    # normalized (model+variant) text; catalog = the CANONICAL subset of
-    # dim_vehicle — entries backed by at least MIN_CATALOG_SUPPORT
-    # registrations (etl2:195-244). Rare spellings (typos — see
-    # sources/bronze.py %53==17) stay out of the catalog, fail the exact
-    # stage, and resolve fuzzily to the canonical spelling; dim_vehicle
-    # itself keeps every entry, so an unresolved probe's fallback to its
-    # own VEHICLE_ID still lands on a dim row.
-    probe = df.select(
-        "tempRegistrationNumber",
-        F.concat_ws(" ", F.col("modelName"), F.col("variant")).alias("probe_text"),
-        "MAKE_YEAR_KEY",
-    )
+    # Vehicle resolution: every keyed row is a probe, resolved in place
+    # against the CANONICAL subset of dim_vehicle — entries backed by at
+    # least MIN_CATALOG_SUPPORT registrations (etl2:195-244). Rare
+    # spellings (typos — see sources/bronze.py %53==17) stay out of the
+    # catalog, fail the exact stage, and resolve fuzzily to the canonical
+    # spelling; dim_vehicle itself keeps every entry, so an unresolved
+    # row's fallback to its own VEHICLE_ID still lands on a dim row.
     catalog = (
         dim_vehicle_s
         .filter(F.col("__support") >= MIN_CATALOG_SUPPORT)
@@ -144,20 +138,15 @@ def build_star(staged: DataFrame) -> StarOutput:
             F.col("MAKE_YEAR").cast("string").alias("cat_year"),
         )
     )
-    resolution = resolve.resolve_exact_fuzzy(
-        probe,
+    resolved = resolve.resolve_rows(
+        df.withColumn("__probe_text", F.concat_ws(" ", F.col("modelName"), F.col("variant"))),
         catalog,
-        probe_key="tempRegistrationNumber",
-        probe_text="probe_text",
+        probe_text="__probe_text",
         catalog_id="VEHICLE_ID",
         catalog_text="cat_text",
         extra_exact_keys=[("MAKE_YEAR_KEY", "cat_year")],
-        # trn is unique post keep-latest dedup and dim_vehicle is keyed by
-        # VEHICLE_ID — skip the defensive dedup shuffles on both sides.
-        probe_key_unique=True,
-        catalog_id_unique=True,
     )
-    fact = star.assemble_fact(df, resolution)
+    fact = star.assemble_fact(resolved)
     # dim_date: Spark-native spine replacing the warehouse recursive CTE
     # (starschema_dw.txt:83-97; oracle-verified as date_spine_dim).
     # Spine range covers the synthesized bronze dates (1995-2002), unlike

@@ -264,3 +264,29 @@ def test_orc_scan_prunes_and_pushes_down(spark, tmp_path):
 def test_read_avro_raises_actionable_boundary(spark, tmp_path):
     with pytest.raises(RuntimeError, match="spark-avro"):
         io.read_avro(spark, str(tmp_path / "nothing.avro"))
+
+
+def test_delete_stale_keys_three_copies_keeps_newest(spark, tmp_path):
+    """A key with rows in three partitions, its newest row OUTSIDE the
+    canonical partition: exactly that row survives; of the two losing
+    partitions, the one still holding another key is rewritten and the
+    emptied one is dropped. ``keys`` may repeat a key."""
+    import os
+
+    root = str(tmp_path / "t")
+    spark.createDataFrame(
+        [("A", 1, 1), ("B", 5, 1), ("A", 2, 2), ("A", 3, 3), ("C", 1, 3)],
+        "k string, ts int, p int",
+    ).write.partitionBy("p").parquet(root)
+    io.delete_stale_keys(
+        spark,
+        root,
+        partition_by=["p"],
+        canonical_pred=F.col("p") == 1,
+        keys=spark.createDataFrame([("A",), ("A",)], "k string"),
+        key_cols=["k"],
+        order_by=["ts"],
+    )
+    rows = sorted(tuple(r) for r in spark.read.parquet(root).select("k", "ts", "p").collect())
+    assert rows == [("A", 3, 3), ("B", 5, 1), ("C", 1, 3)]
+    assert sorted(d for d in os.listdir(root) if "=" in d) == ["p=1", "p=3"]

@@ -20,6 +20,17 @@ def star(spark, sf_dir):
     return out
 
 
+def test_fact_plan_joins_only_by_broadcast(spark, sf_dir):
+    """Vehicle resolution runs in place on the keyed rows: the fact's
+    pre-AQE physical plan (cached inner plans included) has broadcast
+    joins only — no window and no shuffled join."""
+    fact = run_pipeline(synthesize_bronze(spark, sf_dir)).fact
+    plan = fact._jdf.queryExecution().sparkPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    for node in ("Window", "SortMergeJoin", "ShuffledHashJoin"):
+        assert node not in plan, node
+
+
 def test_fact_nonempty_and_issue_date_not_null(star):
     assert star.fact.count() > 0
     assert star.fact.filter(F.col("REGISTRATION_ISSUE_DATE_ID").isNull()).count() == 0

@@ -4,8 +4,8 @@ not key-determined."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from rta_registrations_pyspark_glue_spark.operators import dedup, resolve
 
@@ -120,3 +120,42 @@ def test_release_tracked_unpersists_but_pipeline_memo_survives(spark):
         assert fake_pipeline(spark, "dir") is plan
     finally:
         planmemo.clear_plan_memo()
+
+
+@pytest.mark.parametrize(
+    "catalog, text, expected",
+    [
+        # exact match: no distance, not fuzzy
+        ([(1, "alto lxi")], "Alto LXI", (1, None, False)),
+        # fuzzy distance tie (1 to both): the lowest catalog id wins
+        # (distance 2 to id 2, 4 to id 6: distance orders before id)
+        ([(7, "swift vxi"), (5, "swift lxi"), (2, "swift vx"), (6, "swift")],
+         "swift zxi", (5, 1, True)),
+        # a probe shorter than block_len resolves exactly ...
+        ([(3, "a")], "a", (3, None, False)),
+        # ... but never fuzzily, even within threshold
+        ([(4, "a"), (8, "bb")], "b", (None, None, False)),
+        # every candidate in the block exceeds the threshold
+        ([(1, "swift vdi")], "swxxxxxxx", (None, None, False)),
+    ],
+)
+def test_resolve_rows_cases(spark, catalog, text, expected):
+    """resolve_rows keeps every probe row and attaches (RESOLVED_ID,
+    LEV_DIST, IS_FUZZY_MATCH); resolve_exact_fuzzy keeps only the
+    matched keys."""
+    cat = spark.createDataFrame([Row(cid=i, text=t) for i, t in catalog])
+    probe = spark.createDataFrame([Row(pk=9, text=text, other="kept")])
+    kw = dict(catalog_id="cid", catalog_text="text")
+    rows = resolve.resolve_rows(probe, cat, probe_text="text", **kw).collect()
+    assert len(rows) == 1
+    assert rows[0].asDict() == {
+        "pk": 9, "text": text, "other": "kept",
+        **dict(zip(("RESOLVED_ID", "LEV_DIST", "IS_FUZZY_MATCH"), expected)),
+    }
+    out = resolve.resolve_exact_fuzzy(
+        probe, cat, probe_key="pk", probe_text="text", **kw
+    ).collect()
+    if expected[0] is None:
+        assert out == []
+    else:
+        assert [tuple(r) for r in out] == [(9, *expected)]
