@@ -21,6 +21,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from rta_registrations_pyspark_glue_spark.operators.upsert import merge_upsert
+
 TARGET_FILE_SIZE_MB = 128.0  # reference: etl2_advclean_and_dimcreatin.py:62
 MAX_OUTPUT_FILES = 100  # reference clamp: etl2_advclean_and_dimcreatin.py:308
 
@@ -394,7 +396,8 @@ def replace_partitions(
     dynamic-overwrite, safe when ``df``'s plan READS from ``path`` (the
     merge-into-own-table shape Spark's file source refuses to overwrite):
     the frame is fully materialized into a side directory first, then the
-    affected leaf dirs are swapped in.
+    affected leaf dirs are swapped in. With no partition columns the one
+    leaf is the whole table (``replace_parquet``).
 
     Crash-safe: a leaf's old copy is moved ASIDE (never deleted) before
     its replacement moves in, and asides are recovered on the next call
@@ -417,10 +420,9 @@ def replace_partitions(
     write_parquet(df, staging, partition_by=partition_by, target_mb=target_mb)
     replaced = set()
     for leaf in _partition_leaf_dirs(staging, len(partition_by)):
-        rel = os.path.relpath(leaf, staging)
-        dest = os.path.join(path, rel)
+        dest = os.path.normpath(os.path.join(path, os.path.relpath(leaf, staging)))
         aside = dest + ASIDE_SUFFIX
-        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
         if os.path.isdir(dest):
             os.replace(dest, aside)
         os.replace(leaf, dest)
@@ -437,24 +439,51 @@ def replace_parquet(
     target_mb: float = TARGET_FILE_SIZE_MB,
 ) -> None:
     """Full-table overwrite that is safe when ``df`` reads from ``path``
-    (e.g. merging new dim rows into the existing dim): materialize to a
-    side directory, move the old table ASIDE (never rmtree the only
-    copy), move the new one in, then drop the aside — a crash at any
-    point leaves at least one full copy, which ``_recover_asides`` (run
-    by table_exists/replace_* on the next invocation) restores."""
-    import os
-    import shutil
+    (e.g. merging new dim rows into the existing dim): a
+    ``replace_partitions`` with no partition columns."""
+    replace_partitions(df, path, [], target_mb)
 
-    _recover_asides(path)
-    staging = path.rstrip("/") + ".__incoming__"
-    aside = path.rstrip("/") + ASIDE_SUFFIX
-    shutil.rmtree(staging, ignore_errors=True)
-    write_parquet(df, staging, target_mb=target_mb)
-    if os.path.isdir(path):
-        os.replace(path, aside)
-    os.replace(staging, path)
-    shutil.rmtree(aside, ignore_errors=True)
-    df.sparkSession.catalog.refreshByPath(path)
+
+def upsert_partitions(
+    updates: DataFrame,
+    path: str,
+    partition_by: list[str],
+    scope,
+    keys: list[str],
+    order_by: list[str],
+) -> None:
+    """Keyed upsert of ``updates`` into the partitioned table at ``path``,
+    keeping one row per key across ALL partitions.
+
+    ``scope`` is a predicate on the partition columns that covers every
+    partition ``updates`` lands in. The table's scoped rows are merged
+    with the updates (``merge_upsert``: per key, the newest row under
+    ``order_by`` wins, updates win ties), the scoped partitions are
+    swapped in, and ``delete_stale_keys`` then scrubs the older copies of
+    the updated keys from partitions outside the scope — or the update
+    itself, when a newer row of its key lives there. A partition left
+    empty is dropped. With no table at ``path`` yet, ``updates`` is
+    written as it is."""
+    if not table_exists(path):
+        write_parquet(updates, path, partition_by=partition_by)
+        return
+    spark = updates.sparkSession
+    current = spark.read.parquet(path).filter(scope)
+    merged = merge_upsert(current, updates, keys=keys, order_by=order_by)
+    replace_partitions(merged, path, partition_by=partition_by)
+    # The keys come from the update side, the only keys this write can
+    # have moved: the swap's refreshByPath(path) drops the cache of every
+    # frame that reads path, so keys taken from the merge would re-run it
+    # over the swapped-in files.
+    delete_stale_keys(
+        spark,
+        path,
+        partition_by=partition_by,
+        canonical_pred=scope,
+        keys=updates.select(*keys),
+        key_cols=keys,
+        order_by=order_by,
+    )
 
 
 def delete_stale_keys(
@@ -536,7 +565,7 @@ def delete_stale_keys(
     replaced = replace_partitions(remaining, path, partition_by=partition_by)
     for part in stale_parts:
         leaf = os.path.join(path, *[f"{c}={v}" for c, v in zip(partition_by, part)])
-        if leaf not in replaced:
+        if os.path.normpath(leaf) not in replaced:
             shutil.rmtree(leaf, ignore_errors=True)
     spark.catalog.refreshByPath(path)
 

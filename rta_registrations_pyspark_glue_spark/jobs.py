@@ -25,7 +25,6 @@ from pyspark.sql import SparkSession
 
 from rta_registrations_pyspark_glue_spark import io
 from rta_registrations_pyspark_glue_spark.operators.dedup import dedup_deterministic
-from rta_registrations_pyspark_glue_spark.operators.upsert import merge_upsert
 from rta_registrations_pyspark_glue_spark.plans.pipeline import build_star, clean_and_stage
 from rta_registrations_pyspark_glue_spark.session import get_spark
 
@@ -78,25 +77,27 @@ def run_etl1(
     if year is not None:
         had_stage = io.table_exists(stage_path)
         staged = staged.filter(_scope_condition(year, month)).persist()
-        io.write_parquet(
-            staged, stage_path, partition_by=["year", "month"], dynamic_partitions=True
-        )
-        if had_stage:
-            # A re-registration in this drop may have MOVED from another
-            # (year, month): its stale row elsewhere would break the
-            # stage's one-row-per-trn grain. Keep each key's newest row
-            # (same recency order as the stage dedup) wherever it lives —
-            # an out-of-order backfill must not clobber a newer row.
-            io.delete_stale_keys(
-                spark,
-                stage_path,
-                partition_by=["year", "month"],
-                canonical_pred=_scope_condition(year, month),
-                keys=staged.select("tempRegistrationNumber"),
-                key_cols=["tempRegistrationNumber"],
-                order_by=["fromdate_parsed", "slno"],
+        try:
+            io.write_parquet(
+                staged, stage_path, partition_by=["year", "month"], dynamic_partitions=True
             )
-        staged.unpersist()
+            if had_stage:
+                # A re-registration in this drop may have MOVED from another
+                # (year, month): its stale row elsewhere would break the
+                # stage's one-row-per-trn grain. Keep each key's newest row
+                # (same recency order as the stage dedup) wherever it lives —
+                # an out-of-order backfill must not clobber a newer row.
+                io.delete_stale_keys(
+                    spark,
+                    stage_path,
+                    partition_by=["year", "month"],
+                    canonical_pred=_scope_condition(year, month),
+                    keys=staged.select("tempRegistrationNumber"),
+                    key_cols=["tempRegistrationNumber"],
+                    order_by=["fromdate_parsed", "slno"],
+                )
+        finally:
+            staged.unpersist()
     else:
         io.write_parquet(staged, stage_path, partition_by=["year", "month"])
     return stage_path
@@ -170,40 +171,17 @@ def run_etl2(
     # dim_date is a data-independent spine — idempotent full rewrite.
     io.write_parquet(out.dim_date, paths["dim_date"])
 
-    fact_path = paths["fact_registrations"]
-    fact_new = out.fact
-    had_fact = io.table_exists(fact_path)
-    if had_fact:
-        # Merge into the affected year partition(s) only: the read is
-        # partition-pruned to the scoped year, the upsert keys on the
-        # registration number (fact grain), and replace_partitions swaps
-        # just those REGISTRATION_YEAR dirs.
-        current = spark.read.parquet(fact_path).filter(F.col("REGISTRATION_YEAR") == year)
-        fact_new = merge_upsert(
-            current,
-            fact_new,
-            keys=["TEMP_REGISTRATION_NUMBER"],
-            order_by=["REGISTRATION_ISSUE_DATE_ID", "SLNO"],
-        )
-    io.replace_partitions(fact_new, fact_path, partition_by=["REGISTRATION_YEAR"])
-    if had_fact:
-        # A registration re-issued in a different year keeps the fact
-        # grain only if exactly one row per key survives. Recency-aware:
-        # the newest issue (same order as the merge above) wins, so a
-        # backfill of an older year cannot delete a newer row. The keys
-        # come from the update side, the only keys this write can have
-        # moved: the swap's refreshByPath(fact_path) drops the cache of
-        # every frame that reads fact_path, so keys taken from the merge
-        # would re-run it over the swapped-in files.
-        io.delete_stale_keys(
-            spark,
-            fact_path,
-            partition_by=["REGISTRATION_YEAR"],
-            canonical_pred=F.col("REGISTRATION_YEAR") == year,
-            keys=out.fact.select("TEMP_REGISTRATION_NUMBER"),
-            key_cols=["TEMP_REGISTRATION_NUMBER"],
-            order_by=["REGISTRATION_ISSUE_DATE_ID", "SLNO"],
-        )
+    # Merge into the affected year partition(s) only: a month-scoped run
+    # must keep the sibling months that share the year partition, and a
+    # registration re-issued in another year keeps one row, its newest.
+    io.upsert_partitions(
+        out.fact,
+        paths["fact_registrations"],
+        partition_by=["REGISTRATION_YEAR"],
+        scope=F.col("REGISTRATION_YEAR") == year,
+        keys=["TEMP_REGISTRATION_NUMBER"],
+        order_by=["REGISTRATION_ISSUE_DATE_ID", "SLNO"],
+    )
     return paths
 
 
@@ -217,7 +195,7 @@ def main(argv: list[str] | None = None) -> int:
         help="incremental: process only this registration year",
     )
     parser.add_argument(
-        "--month", type=int, default=None,
+        "--month", type=int, default=None, choices=range(1, 13), metavar="{1..12}",
         help="incremental: restrict --year to this month (requires --year)",
     )
     args = parser.parse_args(argv)

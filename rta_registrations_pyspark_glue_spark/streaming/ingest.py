@@ -4,17 +4,18 @@ The reference's ETL1 is a full-reload batch job (etl1_clean_and_stage.py);
 feeds like it actually arrive as monthly drops. This module runs the SAME
 cleaning pipeline incrementally: a file-source stream of bronze CSV
 micro-batches, each cleaned by ``plans.pipeline.clean_and_stage`` and
-merged into the (year, month)-partitioned stage table by key (newest
-registration wins) via ``operators.upsert.merge_upsert`` inside
-``foreachBatch``.
+upserted into the (year, month)-partitioned stage table by key (newest
+registration wins) via ``io.upsert_partitions`` inside ``foreachBatch``
+— the same keyed partition upsert ``jobs.run_etl2`` writes its fact
+with.
 
 The merge is PARTITION-SCOPED: a micro-batch rewrites only the stage
-partitions it touches — the partitions its own rows land in, plus any
-partition holding a previous row of a re-registered key (detected with a
-column-pruned key probe against the stage), so a registration that moves
-months deletes cleanly from its old partition. Per-batch cost is
-proportional to the affected months, not to history — the property that
-makes continuous ingestion viable at 100 TB.
+partitions its own rows land in. A re-registered key whose older row
+lives in another month is scrubbed from there afterwards (a partition
+left empty is dropped), and a late batch carrying an older row than the
+stage's loses to it. Per-batch cost is proportional to the affected
+months, not to history — the property that makes continuous ingestion
+viable at 100 TB.
 
 foreachBatch is the exactly-once-ish sink pattern for non-idempotent
 targets: the checkpoint replays a batch after a crash, and the merge is
@@ -26,14 +27,11 @@ becomes MERGE INTO; the dataflow shape is identical.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rta_registrations_pyspark_glue_spark import io
 from rta_registrations_pyspark_glue_spark.jobs import BRONZE_COLUMNS
-from rta_registrations_pyspark_glue_spark.operators.upsert import merge_upsert
 from rta_registrations_pyspark_glue_spark.plans.pipeline import clean_and_stage
 
 
@@ -66,63 +64,22 @@ def stream_clean_and_stage(
     )
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        staged_new = clean_and_stage(batch_df)
-        # table_exists also finishes any swap a crashed run left half-done
-        # (aside recovery) before we decide fresh-write vs merge.
-        if not io.table_exists(stage_path):
-            io.write_parquet(staged_new, stage_path, partition_by=["year", "month"])
-            return
-        staged_new = staged_new.persist()
+        staged_new = clean_and_stage(batch_df).persist()
         try:
-            current = spark.read.parquet(stage_path)
-            # Affected partitions = where the batch's rows land, plus any
-            # partition holding an older row of a batch key (the probe
-            # reads only 3 columns — parquet-pruned — so finding moved
-            # keys never scans row data across history).
-            batch_parts = {
-                (r["year"], r["month"])
-                for r in staged_new.select("year", "month").distinct().collect()
-            }
-            moved_parts = {
-                (r["year"], r["month"])
-                for r in current.join(
-                    staged_new.select("tempRegistrationNumber").distinct(),
-                    "tempRegistrationNumber",
-                )
-                .select("year", "month")
-                .distinct()
-                .collect()
-            }
-            affected = sorted(batch_parts | moved_parts)
-            if not affected:  # batch contributed no stageable rows
+            scope = None
+            for r in staged_new.select("year", "month").distinct().collect():
+                clause = (F.col("year") == r["year"]) & (F.col("month") == r["month"])
+                scope = clause if scope is None else scope | clause
+            if scope is None:  # batch contributed no stageable rows
                 return
-            pred = None
-            for y, m in affected:
-                clause = (F.col("year") == y) & (F.col("month") == m)
-                pred = clause if pred is None else pred | clause
-            merged = merge_upsert(
-                current.filter(pred),
+            io.upsert_partitions(
                 staged_new,
+                stage_path,
+                partition_by=["year", "month"],
+                scope=scope,
                 keys=["tempRegistrationNumber"],
                 order_by=["fromdate_parsed", "slno"],
-            ).persist()
-            merged_parts = {
-                (r["year"], r["month"])
-                for r in merged.select("year", "month").distinct().collect()
-            }
-            io.replace_partitions(merged, stage_path, partition_by=["year", "month"])
-            # A partition whose only rows were re-registered into another
-            # month ends up empty: nothing was written for it, so drop
-            # the stale directory explicitly.
-            for y, m in affected:
-                if (y, m) not in merged_parts:
-                    shutil.rmtree(
-                        os.path.join(stage_path, f"year={y}", f"month={m}"),
-                        ignore_errors=True,
-                    )
-            merged.unpersist()
+            )
             if compact_every and (batch_id + 1) % compact_every == 0:
                 io.compact_partitions(spark, stage_path, ["year", "month"])
         finally:

@@ -290,3 +290,39 @@ def test_delete_stale_keys_three_copies_keeps_newest(spark, tmp_path):
     rows = sorted(tuple(r) for r in spark.read.parquet(root).select("k", "ts", "p").collect())
     assert rows == [("A", 3, 3), ("B", 5, 1), ("C", 1, 3)]
     assert sorted(d for d in os.listdir(root) if "=" in d) == ["p=1", "p=3"]
+
+
+def test_replace_parquet_merges_into_itself_and_recovers_asides(spark, tmp_path):
+    """replace_parquet swaps a whole table for a frame that READS it (the
+    dim merge shape), and finishes a swap an earlier process died in:
+    a stale aside next to the table is dropped, and an aside with no
+    table beside it is restored before the frame is read."""
+    import os
+
+    path = str(tmp_path / "dim")
+    schema = "id int, v string"
+    spark.createDataFrame([(1, "a"), (2, "b")], schema).write.parquet(path)
+
+    def merge(*rows):
+        return spark.read.parquet(path).unionByName(spark.createDataFrame(rows, schema))
+
+    def table():
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    io.replace_parquet(merge((3, "c")), path)
+    assert table() == [(1, "a"), (2, "b"), (3, "c")]
+    assert os.listdir(tmp_path) == ["dim"]
+
+    # Died after the swap, before dropping the aside: the table is whole.
+    os.makedirs(path + io.ASIDE_SUFFIX)
+    io.replace_parquet(merge((4, "d")), path)
+    assert table() == [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
+    assert os.listdir(tmp_path) == ["dim"]
+
+    # Died between the two renames: only the aside holds the rows. The
+    # merge was planned before, so it reads the table's files by name.
+    frame = merge((5, "e"))
+    os.replace(path, path + io.ASIDE_SUFFIX)
+    io.replace_parquet(frame, path)
+    assert table() == [(1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")]
+    assert os.listdir(tmp_path) == ["dim"]

@@ -5,48 +5,45 @@ surface), plus extractor filename derivation."""
 from __future__ import annotations
 
 import glob
-import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from rta_registrations_pyspark_glue_spark import jobs
 from rta_registrations_pyspark_glue_spark.sources import extractor
 from rta_registrations_pyspark_glue_spark.sources.bronze import synthesize_bronze
 
-ROOT = "/root/repo/.tmp/jobs_test"
 
-
-def test_etl1_etl2_end_to_end(spark, sf_dir):
-    shutil.rmtree(ROOT, ignore_errors=True)
+def test_etl1_etl2_end_to_end(spark, sf_dir, tmp_path):
+    root = str(tmp_path)
     # Materialize dirty bronze as CSV — exercising the real CSV scan (S1).
     bronze = synthesize_bronze(spark, sf_dir)
-    bronze.coalesce(2).write.mode("overwrite").option("header", True).csv(f"{ROOT}/bronze")
+    bronze.coalesce(2).write.mode("overwrite").option("header", True).csv(f"{root}/bronze")
 
-    assert jobs.main(["etl1", "--input", f"{ROOT}/bronze", "--output", f"{ROOT}/out"]) == 0
-    stage = spark.read.parquet(f"{ROOT}/out/stage_clean_source")
+    assert jobs.main(["etl1", "--input", f"{root}/bronze", "--output", f"{root}/out"]) == 0
+    stage = spark.read.parquet(f"{root}/out/stage_clean_source")
     assert stage.count() > 0
-    assert glob.glob(f"{ROOT}/out/stage_clean_source/year=*"), "partitioned layout"
+    assert glob.glob(f"{root}/out/stage_clean_source/year=*"), "partitioned layout"
 
     assert jobs.main(
-        ["etl2", "--input", f"{ROOT}/out/stage_clean_source", "--output", f"{ROOT}/out"]
+        ["etl2", "--input", f"{root}/out/stage_clean_source", "--output", f"{root}/out"]
     ) == 0
-    fact = spark.read.parquet(f"{ROOT}/out/gold_fact_registrations")
-    dim_v = spark.read.parquet(f"{ROOT}/out/gold_dim_vehicle")
+    fact = spark.read.parquet(f"{root}/out/gold_fact_registrations")
+    dim_v = spark.read.parquet(f"{root}/out/gold_dim_vehicle")
     assert fact.count() > 0 and dim_v.count() > 0
     # FK closure survives the round trip through disk.
     assert fact.join(dim_v, on="VEHICLE_ID", how="left_anti").count() == 0
-    assert glob.glob(f"{ROOT}/out/gold_fact_registrations/REGISTRATION_YEAR=*")
+    assert glob.glob(f"{root}/out/gold_fact_registrations/REGISTRATION_YEAR=*")
     # Issue-date NOT NULL invariant (DDL starschema_dw.txt:59).
     assert fact.filter(F.col("REGISTRATION_ISSUE_DATE_ID").isNull()).count() == 0
     # Date-key FK closure into the written dim_date spine.
-    dim_date = spark.read.parquet(f"{ROOT}/out/gold_dim_date")
+    dim_date = spark.read.parquet(f"{root}/out/gold_dim_date")
     dangling = fact.join(
         dim_date.select(F.col("DATE_ID").alias("REGISTRATION_ISSUE_DATE_ID")),
         on="REGISTRATION_ISSUE_DATE_ID",
         how="left_anti",
     ).count()
     assert dangling == 0
-    shutil.rmtree(ROOT, ignore_errors=True)
 
 
 def _fingerprint(root: str) -> dict[str, tuple[int, int]]:
@@ -62,14 +59,13 @@ def _fingerprint(root: str) -> dict[str, tuple[int, int]]:
     return out
 
 
-def test_incremental_month_rerun_touches_only_scoped_partitions(spark, sf_dir):
+def test_incremental_month_rerun_touches_only_scoped_partitions(spark, sf_dir, tmp_path):
     """--year/--month reruns must rewrite ONLY the scoped partitions:
     every other stage (year, month) partition and fact REGISTRATION_YEAR
     partition keeps its exact files (size + mtime), the month-scoped fact
     merge preserves the year partition's sibling-month rows, and dims are
     merged (never shrunk)."""
-    root = "/root/repo/.tmp/jobs_incr_test"
-    shutil.rmtree(root, ignore_errors=True)
+    root = str(tmp_path)
     bronze = synthesize_bronze(spark, sf_dir)
     bronze.coalesce(2).write.mode("overwrite").option("header", True).csv(f"{root}/bronze")
     assert jobs.main(["etl1", "--input", f"{root}/bronze", "--output", f"{root}/out"]) == 0
@@ -126,43 +122,23 @@ def test_incremental_month_rerun_touches_only_scoped_partitions(spark, sf_dir):
     dim_v = spark.read.parquet(f"{root}/out/gold_dim_vehicle")
     assert dim_v.count() == dimv_count
     assert fact_after.join(dim_v, on="VEHICLE_ID", how="left_anti").count() == 0
-    shutil.rmtree(root, ignore_errors=True)
 
 
-def test_incremental_rerun_scrubs_moved_keys(spark):
+def test_incremental_rerun_scrubs_moved_keys(spark, tmp_path, write_bronze):
     """A registration re-issued in a different month/year must not leave
     its old row behind: the incremental etl1/etl2 runs scrub the moved
     key from unscoped partitions, preserving the one-row-per-key grain
     of both the stage and the fact."""
     import os
 
-    root = "/root/repo/.tmp/jobs_move_test"
-    shutil.rmtree(root, ignore_errors=True)
-    cols = jobs.BRONZE_COLUMNS
-
-    def bronze_row(reg, fromdate, slno):
-        base = dict.fromkeys(cols)
-        base.update(
-            slno=slno, tempRegistrationNumber=reg, fromdate=fromdate,
-            todate="01/01/2030", OfficeCd="RTA HYDERABAD", makerName="MARUTI",
-            modelDesc="SWIFT VDI 2019", fuel="PETROL", makeYear="2019",
-            colour="WHITE", vehicleClass="MOTOR CAR", seatCapacity="5",
-        )
-        return tuple(base[c] for c in cols)
-
-    schema = ", ".join(f"{c} string" for c in cols)
-    b1 = spark.createDataFrame(
-        [bronze_row("TR001", "10/01/2023", "1"), bronze_row("TR002", "11/03/2022", "2")],
-        schema,
-    )
-    b1.coalesce(1).write.mode("overwrite").option("header", True).csv(f"{root}/b1")
+    root = str(tmp_path)
+    write_bronze(f"{root}/b1", ("TR001", "10/01/2023", "1"), ("TR002", "11/03/2022", "2"))
     stage_path = f"{root}/out/stage_clean_source"
     assert jobs.main(["etl1", "--input", f"{root}/b1", "--output", f"{root}/out"]) == 0
     assert jobs.main(["etl2", "--input", stage_path, "--output", f"{root}/out"]) == 0
 
     # TR001 re-registers in June 2024 — a different month AND year.
-    b2 = spark.createDataFrame([bronze_row("TR001", "15/06/2024", "3")], schema)
-    b2.coalesce(1).write.mode("overwrite").option("header", True).csv(f"{root}/b2")
+    write_bronze(f"{root}/b2", ("TR001", "15/06/2024", "3"))
     assert jobs.main(
         ["etl1", "--input", f"{root}/b2", "--output", f"{root}/out",
          "--year", "2024", "--month", "6"]
@@ -183,11 +159,23 @@ def test_incremental_rerun_scrubs_moved_keys(spark):
         f"{root}/out/gold_fact_registrations/REGISTRATION_YEAR=2023"
     ), "stale fact year partition kept"
     assert fact.count() == 2
-    shutil.rmtree(root, ignore_errors=True)
 
 
-def test_job_failure_exit_code(spark):
-    assert jobs.main(["etl2", "--input", "/nonexistent/path", "--output", f"{ROOT}/x"]) == 1
+def test_job_failure_exit_code(spark, tmp_path):
+    assert jobs.main(["etl2", "--input", "/nonexistent/path", "--output", f"{tmp_path}/x"]) == 1
+
+
+@pytest.mark.parametrize("month", ["0", "13"])
+def test_out_of_range_month_is_rejected(tmp_path, month):
+    """--month outside 1..12 is a usage error (argparse exits 2) before
+    any session starts or any table is touched."""
+    with pytest.raises(SystemExit) as exc:
+        jobs.main(
+            ["etl2", "--input", f"{tmp_path}/in", "--output", f"{tmp_path}/out",
+             "--year", "2023", "--month", month]
+        )
+    assert exc.value.code == 2
+    assert not (tmp_path / "out").exists()
 
 
 def test_extractor_filename_derivation():
@@ -208,7 +196,7 @@ def test_extractor_distribution_listing():
     assert extractor.list_distribution_urls(payload) == ["https://x/a.csv", "https://x/b.csv"]
 
 
-def test_backfill_of_older_month_keeps_newer_row(spark):
+def test_backfill_of_older_month_keeps_newer_row(spark, tmp_path, write_bronze):
     """Out-of-order incremental runs: backfilling an OLDER --year/--month
     for a key that re-registered in a LATER partition must NOT delete the
     newer row — the recency-aware scrub keeps the newest registration
@@ -216,34 +204,15 @@ def test_backfill_of_older_month_keeps_newer_row(spark):
     scrubbed."""
     import os
 
-    root = "/root/repo/.tmp/jobs_backfill_test"
-    shutil.rmtree(root, ignore_errors=True)
-    cols = jobs.BRONZE_COLUMNS
-
-    def bronze_row(reg, fromdate, slno):
-        base = dict.fromkeys(cols)
-        base.update(
-            slno=slno, tempRegistrationNumber=reg, fromdate=fromdate,
-            todate="01/01/2030", OfficeCd="RTA HYDERABAD", makerName="MARUTI",
-            modelDesc="SWIFT VDI 2019", fuel="PETROL", makeYear="2019",
-            colour="WHITE", vehicleClass="MOTOR CAR", seatCapacity="5",
-        )
-        return tuple(base[c] for c in cols)
-
-    schema = ", ".join(f"{c} string" for c in cols)
+    root = str(tmp_path)
     # Current truth: TR001 registered June 2024 (the NEWER row).
-    b_new = spark.createDataFrame(
-        [bronze_row("TR001", "15/06/2024", "3"), bronze_row("TR002", "11/03/2022", "2")],
-        schema,
-    )
-    b_new.coalesce(1).write.mode("overwrite").option("header", True).csv(f"{root}/b_new")
+    write_bronze(f"{root}/b_new", ("TR001", "15/06/2024", "3"), ("TR002", "11/03/2022", "2"))
     stage_path = f"{root}/out/stage_clean_source"
     assert jobs.main(["etl1", "--input", f"{root}/b_new", "--output", f"{root}/out"]) == 0
     assert jobs.main(["etl2", "--input", stage_path, "--output", f"{root}/out"]) == 0
 
     # A late-arriving drop backfills January 2023 with TR001's OLD row.
-    b_old = spark.createDataFrame([bronze_row("TR001", "10/01/2023", "1")], schema)
-    b_old.coalesce(1).write.mode("overwrite").option("header", True).csv(f"{root}/b_old")
+    write_bronze(f"{root}/b_old", ("TR001", "10/01/2023", "1"))
     assert jobs.main(
         ["etl1", "--input", f"{root}/b_old", "--output", f"{root}/out",
          "--year", "2023", "--month", "1"]
@@ -272,15 +241,13 @@ def test_backfill_of_older_month_keeps_newer_row(spark):
         f"{root}/out/gold_fact_registrations/REGISTRATION_YEAR=2023"
     ), "backfill's stale fact partition should be scrubbed and dropped"
     assert fact.count() == 2
-    shutil.rmtree(root, ignore_errors=True)
 
 
-def test_incremental_dim_merge_matches_full_rebuild(spark, sf_dir):
+def test_incremental_dim_merge_matches_full_rebuild(spark, sf_dir, tmp_path):
     """Incremental dim merges must converge to the same rows a full
     rebuild over the union of inputs produces (same min-struct winner
     rule), so replaying history incrementally is reproducible."""
-    root = "/root/repo/.tmp/jobs_dimconv_test"
-    shutil.rmtree(root, ignore_errors=True)
+    root = str(tmp_path)
     bronze = synthesize_bronze(spark, sf_dir)
     bronze.coalesce(2).write.mode("overwrite").option("header", True).csv(f"{root}/bronze")
     assert jobs.main(["etl1", "--input", f"{root}/bronze", "--output", f"{root}/out"]) == 0
@@ -300,4 +267,3 @@ def test_incremental_dim_merge_matches_full_rebuild(spark, sf_dir):
         full = spark.read.parquet(f"{root}/full/{dim}")
         incr = spark.read.parquet(f"{root}/incr/{dim}")
         assert sorted(map(tuple, full.collect())) == sorted(map(tuple, incr.collect())), dim
-    shutil.rmtree(root, ignore_errors=True)

@@ -1,69 +1,41 @@
-"""Incremental ETL1 ingestion test: two bronze micro-batches streamed
-through foreachBatch + merge; the later batch's re-registration must win."""
+"""Incremental ETL1 ingestion tests: bronze micro-batches streamed
+through foreachBatch + keyed partition upsert; a key's newest
+registration must win, whichever batch carries it. Also the streaming
+IVF index maintenance tests."""
 
 from __future__ import annotations
 
-import shutil
+import glob
+import os
 
-from pyspark.sql import Row
-
-from rta_registrations_pyspark_glue_spark.jobs import BRONZE_COLUMNS
 from rta_registrations_pyspark_glue_spark.streaming.ingest import stream_clean_and_stage
 
-ROOT = "/root/repo/.tmp/stream_ingest"
 
-
-def _bronze_row(reg, fromdate, slno, model="SWIFT VDI 2019"):
-    base = {c: None for c in BRONZE_COLUMNS}
-    base.update(
-        slno=slno,
-        tempRegistrationNumber=reg,
-        fromdate=fromdate,
-        todate="01/01/2030",
-        OfficeCd="RTA HYDERABAD",
-        makerName="MARUTI",
-        modelDesc=model,
-        fuel="PETROL",
-        makeYear="2019",
-        colour="WHITE",
-        vehicleClass="MOTOR CAR",
-        seatCapacity="5",
+def test_incremental_ingest_latest_wins(spark, tmp_path, write_bronze):
+    root = str(tmp_path)
+    write_bronze(
+        f"{root}/in/b1",
+        ("TR001", "10/01/2023", "1"),
+        ("TR002", "11/01/2023", "2"),
+        ("TR009", "05/03/2022", "9"),  # untouched by batch 2
     )
-    return Row(**{c: base[c] for c in BRONZE_COLUMNS})
-
-
-def test_incremental_ingest_latest_wins(spark):
-    shutil.rmtree(ROOT, ignore_errors=True)
-    schema = ", ".join(f"{c} string" for c in BRONZE_COLUMNS)
-    batch1 = spark.createDataFrame(
-        [
-            _bronze_row("TR001", "10/01/2023", "1"),
-            _bronze_row("TR002", "11/01/2023", "2"),
-            _bronze_row("TR009", "05/03/2022", "9"),  # untouched by batch 2
-        ],
-        schema,
-    )
-    batch2 = spark.createDataFrame(
-        [
-            _bronze_row("TR001", "15/06/2023", "3", model="SWIFT ZDI 2020"),
-            _bronze_row("TR003", "16/06/2023", "4"),
-        ],
-        schema,
+    write_bronze(
+        f"{root}/in/b2",
+        ("TR001", "15/06/2023", "3", "SWIFT ZDI 2020"),
+        ("TR003", "16/06/2023", "4"),
     )
     # Two CSV files → two micro-batches (maxFilesPerTrigger=1).
-    batch1.coalesce(1).write.option("header", True).csv(f"{ROOT}/in/b1")
-    batch2.coalesce(1).write.option("header", True).csv(f"{ROOT}/in/b2")
     # File source needs a flat glob of csv files:
     q = stream_clean_and_stage(
         spark,
-        input_dir=f"{ROOT}/in/*/",
-        stage_path=f"{ROOT}/stage",
-        checkpoint_dir=f"{ROOT}/ckpt",
+        input_dir=f"{root}/in/*/",
+        stage_path=f"{root}/stage",
+        checkpoint_dir=f"{root}/ckpt",
         compact_every=1,  # exercise the per-batch compaction hook
     )
     assert q.awaitTermination(120), "stream did not drain within 120s"
 
-    stage = spark.read.parquet(f"{ROOT}/stage")
+    stage = spark.read.parquet(f"{root}/stage")
     collected = stage.collect()
     rows = {r.tempRegistrationNumber: r for r in collected}
     assert set(rows) == {"TR001", "TR002", "TR003", "TR009"}
@@ -80,37 +52,56 @@ def test_incremental_ingest_latest_wins(spark):
     # partitioned; TR001's old row is gone from year=2023/month=1 (TR002
     # keeps that partition alive), and the 2022 partition was never
     # rewritten by batch 2.
-    jan = spark.read.parquet(f"{ROOT}/stage/year=2023/month=1")
+    jan = spark.read.parquet(f"{root}/stage/year=2023/month=1")
     assert {r.tempRegistrationNumber for r in jan.collect()} == {"TR002"}
-    import glob as _glob
-
-    assert _glob.glob(f"{ROOT}/stage/year=2022/month=3/*.parquet")
-    shutil.rmtree(ROOT, ignore_errors=True)
+    assert glob.glob(f"{root}/stage/year=2022/month=3/*.parquet")
 
 
-def test_incremental_ingest_moved_key_empties_partition(spark):
+def test_incremental_ingest_moved_key_empties_partition(spark, tmp_path, write_bronze):
     """When a re-registration moves the ONLY row out of a partition, the
     stale partition directory is dropped, not left behind."""
-    shutil.rmtree(ROOT, ignore_errors=True)
-    schema = ", ".join(f"{c} string" for c in BRONZE_COLUMNS)
-    b1 = spark.createDataFrame([_bronze_row("TR100", "10/01/2021", "1")], schema)
-    b2 = spark.createDataFrame([_bronze_row("TR100", "20/02/2021", "2")], schema)
-    b1.coalesce(1).write.option("header", True).csv(f"{ROOT}/in/b1")
-    b2.coalesce(1).write.option("header", True).csv(f"{ROOT}/in/b2")
+    root = str(tmp_path)
+    write_bronze(f"{root}/in/b1", ("TR100", "10/01/2021", "1"))
+    write_bronze(f"{root}/in/b2", ("TR100", "20/02/2021", "2"))
     q = stream_clean_and_stage(
         spark,
-        input_dir=f"{ROOT}/in/*/",
-        stage_path=f"{ROOT}/stage",
-        checkpoint_dir=f"{ROOT}/ckpt",
+        input_dir=f"{root}/in/*/",
+        stage_path=f"{root}/stage",
+        checkpoint_dir=f"{root}/ckpt",
     )
     assert q.awaitTermination(120)
-    import os
 
-    stage = spark.read.parquet(f"{ROOT}/stage")
+    stage = spark.read.parquet(f"{root}/stage")
     rows = stage.collect()
     assert len(rows) == 1 and rows[0].month == 2
-    assert not os.path.exists(f"{ROOT}/stage/year=2021/month=1")
-    shutil.rmtree(ROOT, ignore_errors=True)
+    assert not os.path.exists(f"{root}/stage/year=2021/month=1")
+
+
+def test_late_batch_with_older_row_keeps_newer_row(spark, tmp_path, write_bronze):
+    """Out-of-order arrival: a batch carrying an OLDER registration of a
+    key arrives after the newer one is staged. The newer row survives,
+    the late batch's own row is scrubbed, and no stale ``year=/month=``
+    directory is left for it."""
+    root = str(tmp_path)
+    write_bronze(f"{root}/in/b1", ("TR001", "15/06/2024", "3"), ("TR002", "11/03/2022", "2"))
+    write_bronze(f"{root}/in/b2", ("TR001", "10/01/2023", "1"))
+    q = stream_clean_and_stage(
+        spark,
+        input_dir=f"{root}/in/*/",
+        stage_path=f"{root}/stage",
+        checkpoint_dir=f"{root}/ckpt",
+    )
+    assert q.awaitTermination(120)
+
+    stage = spark.read.parquet(f"{root}/stage")
+    rows = {r.tempRegistrationNumber: r for r in stage.collect()}
+    assert stage.count() == 2 and set(rows) == {"TR001", "TR002"}
+    assert (rows["TR001"].year, rows["TR001"].month) == (2024, 6)
+    assert rows["TR001"].fromdate_parsed.isoformat() == "2024-06-15"
+    leaves = sorted(
+        os.path.relpath(p, f"{root}/stage") for p in glob.glob(f"{root}/stage/year=*/month=*")
+    )
+    assert leaves == ["year=2022/month=3", "year=2024/month=6"]
 
 
 def test_stream_ivf_ingest_bit_equal_and_idempotent(spark, tmp_path):
