@@ -381,7 +381,10 @@ def measure_scaling(
     reported exponents are conservative."""
     import math
 
-    scale_dir = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/root/repo/.scale/sf1")
+    scale_dir = os.environ.get(
+        "SPARK_GRAFT_SCALE_DIR",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scale", "sf1"),
+    )
     if os.environ.get("SPARK_GRAFT_SKIP_SCALING") or not os.path.isdir(scale_dir):
         return None
 

@@ -514,7 +514,8 @@ def delete_stale_keys(
 
     One per-key aggregate finds both each key's winner and the
     partitions holding its losing rows. Only those partitions are
-    rewritten; a partition emptied entirely is dropped."""
+    rewritten; a partition emptied entirely is dropped, together with
+    each parent partition directory it leaves empty."""
     import os
     import shutil
 
@@ -563,10 +564,17 @@ def delete_stale_keys(
         .drop("__rec", "__win")
     )
     replaced = replace_partitions(remaining, path, partition_by=partition_by)
+    root = os.path.normpath(path)
     for part in stale_parts:
-        leaf = os.path.join(path, *[f"{c}={v}" for c, v in zip(partition_by, part)])
-        if os.path.normpath(leaf) not in replaced:
+        leaf = os.path.join(root, *[f"{c}={v}" for c, v in zip(partition_by, part)])
+        if leaf not in replaced:
             shutil.rmtree(leaf, ignore_errors=True)
+            # Its emptied ancestors go too (a year whose last month moved
+            # out), up to but not including the table root.
+            parent = os.path.dirname(leaf)
+            while parent != root and os.path.isdir(parent) and not os.listdir(parent):
+                os.rmdir(parent)
+                parent = os.path.dirname(parent)
     spark.catalog.refreshByPath(path)
 
 

@@ -20,8 +20,10 @@ from __future__ import annotations
 import argparse
 import logging
 import sys
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from rta_registrations_pyspark_glue_spark import io
 from rta_registrations_pyspark_glue_spark.operators.dedup import dedup_deterministic
@@ -44,6 +46,30 @@ BRONZE_COLUMNS = [
     "vehicleClass",
     "seatCapacity",
 ]
+
+
+# At most one driver thread per ETL2 table write (three dims, dim_date
+# and the fact).
+MAX_WRITE_THREADS = 5
+
+
+def _concurrently(spark: SparkSession, *calls) -> None:
+    """Run the zero-argument ``calls`` on driver threads, wait for all of
+    them, then re-raise the first failure in call order.
+
+    Every Spark call costs driver time (planning, file commit,
+    ``refreshByPath``) during which its own job is not running; calls
+    with no data dependence on one another overlap that time with each
+    other's jobs. Each call is wrapped on its own with the session form
+    of ``inheritable_thread_target``, so its thread runs with the
+    caller's job group, job description and session tags, and with its
+    own copy of the caller's local properties (with one shared copy,
+    concurrent queries would overwrite each other's local properties,
+    such as the SQL execution id)."""
+    with ThreadPoolExecutor(max_workers=min(len(calls), MAX_WRITE_THREADS)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
+    for future in futures:
+        future.result()
 
 
 def _scope_condition(year: int, month: int | None):
@@ -125,7 +151,17 @@ def run_etl2(
     partition — then swapped in, leaving every other year partition's
     files untouched. Caveat (inherent to incremental runs, reference
     included): the fuzzy-resolution catalog sees only the scoped rows, so
-    a spelling's canonical-support count is computed within the scope."""
+    a spelling's canonical-support count is computed within the scope.
+
+    The table writes run concurrently on driver threads (``_concurrently``):
+    the five ``write_parquet`` calls of a full rebuild, and the three dim
+    merges, the ``dim_date`` write and the fact upsert of an incremental
+    run. No write reads another's output, and each has its own table
+    directory, staging directory and aside; the fact upsert's merge, swap
+    and stale-key scrub stay in order within its own call. A failed write
+    no longer stops the others: they all finish, then the first failure
+    (in the order above) is raised. Each table write is crash-safe on its
+    own; the star schema as a whole never had cross-table atomicity."""
     from pyspark.sql import functions as F
 
     root = output_root.rstrip("/")
@@ -142,12 +178,15 @@ def run_etl2(
         "fact_registrations": f"{root}/gold_fact_registrations",
     }
     if not incremental:
-        io.write_parquet(out.dim_vehicle, paths["dim_vehicle"])
-        io.write_parquet(out.dim_manufacturer, paths["dim_manufacturer"])
-        io.write_parquet(out.dim_rta, paths["dim_rta"])
-        io.write_parquet(out.dim_date, paths["dim_date"])
-        io.write_parquet(
-            out.fact, paths["fact_registrations"], partition_by=["REGISTRATION_YEAR"]
+        _concurrently(
+            spark,
+            lambda: io.write_parquet(out.dim_vehicle, paths["dim_vehicle"]),
+            lambda: io.write_parquet(out.dim_manufacturer, paths["dim_manufacturer"]),
+            lambda: io.write_parquet(out.dim_rta, paths["dim_rta"]),
+            lambda: io.write_parquet(out.dim_date, paths["dim_date"]),
+            lambda: io.write_parquet(
+                out.fact, paths["fact_registrations"], partition_by=["REGISTRATION_YEAR"]
+            ),
         )
         return paths
 
@@ -165,22 +204,25 @@ def run_etl2(
             merged = new_dim
         io.replace_parquet(merged, path)
 
-    merge_dim(out.dim_vehicle, paths["dim_vehicle"], "VEHICLE_ID")
-    merge_dim(out.dim_manufacturer, paths["dim_manufacturer"], "MANUFACTURER_ID")
-    merge_dim(out.dim_rta, paths["dim_rta"], "RTA_ID")
-    # dim_date is a data-independent spine — idempotent full rewrite.
-    io.write_parquet(out.dim_date, paths["dim_date"])
-
-    # Merge into the affected year partition(s) only: a month-scoped run
-    # must keep the sibling months that share the year partition, and a
-    # registration re-issued in another year keeps one row, its newest.
-    io.upsert_partitions(
-        out.fact,
-        paths["fact_registrations"],
-        partition_by=["REGISTRATION_YEAR"],
-        scope=F.col("REGISTRATION_YEAR") == year,
-        keys=["TEMP_REGISTRATION_NUMBER"],
-        order_by=["REGISTRATION_ISSUE_DATE_ID", "SLNO"],
+    _concurrently(
+        spark,
+        lambda: merge_dim(out.dim_vehicle, paths["dim_vehicle"], "VEHICLE_ID"),
+        lambda: merge_dim(out.dim_manufacturer, paths["dim_manufacturer"], "MANUFACTURER_ID"),
+        lambda: merge_dim(out.dim_rta, paths["dim_rta"], "RTA_ID"),
+        # dim_date is a data-independent spine — idempotent full rewrite.
+        lambda: io.write_parquet(out.dim_date, paths["dim_date"]),
+        # Merge into the affected year partition(s) only: a month-scoped
+        # run must keep the sibling months that share the year partition,
+        # and a registration re-issued in another year keeps one row, its
+        # newest.
+        lambda: io.upsert_partitions(
+            out.fact,
+            paths["fact_registrations"],
+            partition_by=["REGISTRATION_YEAR"],
+            scope=F.col("REGISTRATION_YEAR") == year,
+            keys=["TEMP_REGISTRATION_NUMBER"],
+            order_by=["REGISTRATION_ISSUE_DATE_ID", "SLNO"],
+        ),
     )
     return paths
 

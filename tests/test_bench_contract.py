@@ -19,9 +19,12 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench
+
+SCALE_DIR = os.path.join(REPO, ".scale", "sf1")
 
 
 def _fake_legs():
@@ -53,7 +56,7 @@ def _fake_scaling():
     return {
         "multimodal_legs_base": _fake_legs(),
         "scale_factor_ratio": 10,
-        "big_dir": "/root/repo/.scale/sf1",
+        "big_dir": SCALE_DIR,
         "queries": {
             name: {"t_base": 1.0, "t_big": 10.0, "exponent": 1.0,
                    "passes": 1, "t_passes": [10.0]}
@@ -94,7 +97,7 @@ def test_measure_scaling_emits_per_pass_times(monkeypatch):
     now passes repeat while the best improves >15%, capped at 5
     extra), so the flagged row gets a longer list and the loop stops
     once a pass stops improving."""
-    if not os.path.isdir("/root/repo/.scale/sf1"):
+    if not os.path.isdir(SCALE_DIR):
         import pytest
 
         pytest.skip("no scaled replica dir")
@@ -130,7 +133,7 @@ def test_measure_scaling_converges_on_improving_passes(monkeypatch):
     a scripted timer: 10 -> 9.5 (strike 1) -> 5.0 (improves, strikes
     RESET) -> 4.9 (strike 1) -> 4.95 (strike 2, stop) — ends at pass
     5, below the 6-pass cap, so the stop is strike-driven."""
-    if not os.path.isdir("/root/repo/.scale/sf1"):
+    if not os.path.isdir(SCALE_DIR):
         import pytest
 
         pytest.skip("no scaled replica dir")

@@ -11,15 +11,14 @@ from pyspark.sql import functions as F
 
 from rta_registrations_pyspark_glue_spark.sources.testdata import load_table
 
-WAREHOUSE = "/root/repo/.tmp/spark-warehouse"
-
 
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     orders = load_table(spark, "orders", sf_dir)
     lineitem = load_table(spark, "lineitem", sf_dir)
     for t in ("b_orders", "b_lineitem"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{WAREHOUSE}/{t}", ignore_errors=True)
+        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
     (
         orders.write.mode("overwrite")
         .bucketBy(8, "o_orderkey")
@@ -51,4 +50,4 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         for t in ("b_orders", "b_lineitem"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(f"{WAREHOUSE}/{t}", ignore_errors=True)
+            shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)

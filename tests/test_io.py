@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import glob
-import shutil
 
 import pytest
 
@@ -12,9 +11,6 @@ from pyspark.sql import functions as F
 
 from rta_registrations_pyspark_glue_spark import io
 from rta_registrations_pyspark_glue_spark.sources.testdata import load_table
-
-OUT = "/root/repo/.tmp/io_test"
-
 
 def test_target_file_count_policy():
     mb = 1024 * 1024
@@ -27,24 +23,23 @@ def test_target_file_count_policy():
     assert io.target_file_count(int(100_000 * mb)) == 100  # clamped
 
 
-def test_partitioned_write_roundtrip(spark, sf_dir):
-    shutil.rmtree(OUT, ignore_errors=True)
+def test_partitioned_write_roundtrip(spark, sf_dir, tmp_path):
+    out = str(tmp_path / "io_test")
     orders = load_table(spark, "orders", sf_dir).withColumn(
         "order_year", F.year("o_orderdate")
     )
-    io.write_parquet(orders, OUT, partition_by=["order_year"])
-    back = spark.read.parquet(OUT)
+    io.write_parquet(orders, out, partition_by=["order_year"])
+    back = spark.read.parquet(out)
     assert back.count() == orders.count()
     # Hive-style layout exists (partition pruning works off directories).
-    assert glob.glob(f"{OUT}/order_year=*"), "expected partitioned layout"
+    assert glob.glob(f"{out}/order_year=*"), "expected partitioned layout"
     # Partition pruning: reading one partition scans only its directory.
     one_year = back.filter(F.col("order_year") == 1996).count()
     assert one_year == orders.filter(F.col("order_year") == 1996).count()
     # Small data → policy collapses to one file per partition directory.
-    for d in glob.glob(f"{OUT}/order_year=*"):
+    for d in glob.glob(f"{out}/order_year=*"):
         files = [f for f in glob.glob(f"{d}/*.parquet")]
         assert len(files) >= 1
-    shutil.rmtree(OUT, ignore_errors=True)
 
 
 def test_estimate_plan_bytes_positive(spark, sf_dir):

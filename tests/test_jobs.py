@@ -9,7 +9,7 @@ import glob
 import pytest
 from pyspark.sql import functions as F
 
-from rta_registrations_pyspark_glue_spark import jobs
+from rta_registrations_pyspark_glue_spark import io, jobs
 from rta_registrations_pyspark_glue_spark.sources import extractor
 from rta_registrations_pyspark_glue_spark.sources.bronze import synthesize_bronze
 
@@ -224,6 +224,7 @@ def test_backfill_of_older_month_keeps_newer_row(spark, tmp_path, write_bronze):
     assert not os.path.exists(f"{stage_path}/year=2023/month=1"), (
         "backfill's own stale partition should be scrubbed and dropped"
     )
+    assert not os.path.exists(f"{stage_path}/year=2023"), "emptied year dir kept"
     assert stage.count() == 2
 
     # Same out-of-order protection on the fact: feed etl2 a stage that
@@ -267,3 +268,75 @@ def test_incremental_dim_merge_matches_full_rebuild(spark, sf_dir, tmp_path):
         full = spark.read.parquet(f"{root}/full/{dim}")
         incr = spark.read.parquet(f"{root}/incr/{dim}")
         assert sorted(map(tuple, full.collect())) == sorted(map(tuple, incr.collect())), dim
+
+
+def _last_job_id(spark) -> int:
+    """Run one tiny job under its own group; return its job id (job ids
+    grow by one per job)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("probe", "probe")
+    spark.range(1).collect()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    return max(sc.statusTracker().getJobIdsForGroup("probe"))
+
+
+def test_etl2_writes_inherit_job_group_and_tags(spark, tmp_path, write_bronze):
+    """The concurrent table writes run on driver threads that inherit
+    the caller's job group and session tags: every job a full or an
+    incremental run_etl2 launches is in the caller's group."""
+    root = str(tmp_path)
+    write_bronze(f"{root}/b", ("TR001", "10/01/2023", "1"), ("TR002", "11/03/2022", "2"))
+    stage = jobs.run_etl1(spark, f"{root}/b", f"{root}/out")
+    sc = spark.sparkContext
+    for year in (None, 2023):
+        group = f"etl2-{year}"
+        start = _last_job_id(spark)
+        sc.setJobGroup(group, "etl2 under test")
+        spark.addTag("etl2-test")
+        try:
+            jobs.run_etl2(spark, stage, f"{root}/out", year=year)
+            seen = []
+            jobs._concurrently(
+                spark,
+                lambda: seen.append(
+                    (sc.getLocalProperty("spark.jobGroup.id"), spark.getTags())
+                ),
+            )
+        finally:
+            spark.removeTag("etl2-test")
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        end = _last_job_id(spark)
+        launched = set(range(start + 1, end))
+        assert launched, "run_etl2 launched no Spark job"
+        assert launched <= set(sc.statusTracker().getJobIdsForGroup(group)), year
+        assert seen == [(group, {"etl2-test"})]
+
+
+def test_failed_etl2_write_lets_the_others_finish(spark, tmp_path, write_bronze, monkeypatch):
+    """One failing table write does not stop the others: run_etl2 raises
+    its error after every other table is written, main() returns 1, and
+    no staging directory is left for a table whose write succeeded."""
+    root = str(tmp_path)
+    write_bronze(f"{root}/b", ("TR001", "10/01/2023", "1"), ("TR002", "11/03/2022", "2"))
+    stage = jobs.run_etl1(spark, f"{root}/b", f"{root}/out")
+    write_parquet = io.write_parquet
+
+    def failing(df, path, *args, **kwargs):
+        if "gold_dim_rta" in path:
+            raise RuntimeError("dim_rta write failed")
+        return write_parquet(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(io, "write_parquet", failing)
+    others = ["gold_dim_vehicle", "gold_dim_manufacturer", "gold_dim_date",
+              "gold_fact_registrations"]
+    # A fresh full rebuild first (no table exists yet), then an
+    # incremental run that merges into the tables it left.
+    for scope in ([], ["--year", "2023"]):
+        year = int(scope[1]) if scope else None
+        with pytest.raises(RuntimeError, match="dim_rta write failed"):
+            jobs.run_etl2(spark, stage, f"{root}/out", year=year)
+        assert jobs.main(["etl2", "--input", stage, "--output", f"{root}/out", *scope]) == 1
+        for name in others:
+            assert spark.read.parquet(f"{root}/out/{name}").count() > 0, (scope, name)
+        left = glob.glob(f"{root}/out/*.__incoming__")
+        assert all("gold_dim_rta" in p for p in left), left

@@ -11,7 +11,15 @@ import pytest
 
 from rta_registrations_pyspark_glue_spark import snapshot
 
-ROOT = "/root/repo/.tmp/snapshot_test"
+# Table roots: each test gets fresh ones under its tmp_path (_table_roots).
+ROOT = STORE = DSTORE = ""
+
+
+@pytest.fixture(autouse=True)
+def _table_roots(tmp_path):
+    # Set directly, not through monkeypatch: tests call monkeypatch.undo().
+    for name in ("ROOT", "STORE", "DSTORE"):
+        globals()[name] = str(tmp_path / name.lower())
 
 
 def _mk(spark, rows):
@@ -26,7 +34,6 @@ def _read_rows(spark):
 
 
 def test_commit_read_replace_and_carry_forward(spark):
-    shutil.rmtree(ROOT, ignore_errors=True)
     v0 = snapshot.snapshot_commit(
         _mk(spark, [(1, "a", 2023), (2, "b", 2024)]), ROOT, ["year"]
     )
@@ -55,7 +62,6 @@ def test_commit_read_replace_and_carry_forward(spark):
 
 
 def test_kill_mid_commit_readers_see_old_never_mixed(spark, monkeypatch):
-    shutil.rmtree(ROOT, ignore_errors=True)
     snapshot.snapshot_commit(
         _mk(spark, [(1, "a", 2023), (2, "b", 2024), (3, "c", 2025)]), ROOT, ["year"]
     )
@@ -103,7 +109,6 @@ def test_kill_mid_commit_readers_see_old_never_mixed(spark, monkeypatch):
 
 
 def test_drop_partitions_and_source_is_own_table(spark):
-    shutil.rmtree(ROOT, ignore_errors=True)
     snapshot.snapshot_commit(
         _mk(spark, [(1, "a", 2023), (2, "b", 2024)]), ROOT, ["year"]
     )
@@ -124,7 +129,6 @@ def test_drop_partitions_and_source_is_own_table(spark):
 
 
 def test_vacuum_keeps_current_and_linked_files_survive(spark):
-    shutil.rmtree(ROOT, ignore_errors=True)
     snapshot.snapshot_commit(_mk(spark, [(1, "a", 2023)]), ROOT, ["year"])
     snapshot.snapshot_commit(
         _mk(spark, [(2, "b", 2024)]), ROOT, ["year"], replace_only=True
@@ -141,15 +145,11 @@ def test_vacuum_keeps_current_and_linked_files_survive(spark):
 
 
 def test_empty_table_read_raises(spark):
-    shutil.rmtree(ROOT, ignore_errors=True)
     with pytest.raises(FileNotFoundError):
         snapshot.snapshot_read(spark, ROOT)
 
 
 # ---------------- object-store mode (manifest-list + put-if-absent) ----
-
-
-STORE = "/root/repo/.tmp/snapshot_store_test"
 
 
 def _store_rows(spark):
@@ -160,7 +160,6 @@ def _store_rows(spark):
 
 
 def test_store_commit_read_carry_forward_by_reference(spark):
-    shutil.rmtree(STORE, ignore_errors=True)
     v0 = snapshot.store_commit(
         _mk(spark, [(1, "a", 2023), (2, "b", 2024)]), STORE, ["year"]
     )
@@ -199,7 +198,6 @@ def test_store_commit_read_carry_forward_by_reference(spark):
 
 
 def test_store_kill_mid_commit_readers_see_old_never_mixed(spark, monkeypatch):
-    shutil.rmtree(STORE, ignore_errors=True)
     snapshot.store_commit(
         _mk(spark, [(1, "a", 2023), (2, "b", 2024), (3, "c", 2025)]),
         STORE,
@@ -238,7 +236,6 @@ def test_store_cas_loss_retries_against_winner(spark, monkeypatch):
     documented lost-update caveat, closed by CAS)."""
     import json
 
-    shutil.rmtree(STORE, ignore_errors=True)
     snapshot.store_commit(_mk(spark, [(1, "a", 2023), (2, "b", 2024)]), STORE, ["year"])
 
     real_put = snapshot._put_if_absent
@@ -297,7 +294,6 @@ def test_store_racing_writers_cannot_delete_or_claim_each_others_files(
     Writer-unique prefixes make the interleaving safe: every retained
     manifest references only files that exist, both updates land, and
     time travel to the intermediate snapshot stays whole."""
-    shutil.rmtree(STORE, ignore_errors=True)
     snapshot.store_commit(
         _mk(spark, [(1, "a", 2023), (2, "b", 2024)]), STORE, ["year"]
     )
@@ -338,7 +334,6 @@ def test_store_vacuum_orphan_gc_age_gated(spark):
     """Crashed writers leave unreferenced candidate prefixes; vacuum —
     and only vacuum — reclaims them, and only past the age TTL (a young
     orphan is indistinguishable from an in-flight writer's prefix)."""
-    shutil.rmtree(STORE, ignore_errors=True)
     snapshot.store_commit(_mk(spark, [(1, "a", 2023)]), STORE, ["year"])
     snapshot.store_commit(
         _mk(spark, [(2, "b", 2024)]), STORE, ["year"], replace_only=True
@@ -359,7 +354,6 @@ def test_store_vacuum_orphan_gc_age_gated(spark):
 
 
 def test_store_vacuum_keeps_referenced_files(spark):
-    shutil.rmtree(STORE, ignore_errors=True)
     snapshot.store_commit(_mk(spark, [(1, "a", 2023), (2, "b", 2024)]), STORE, ["year"])
     snapshot.store_commit(
         _mk(spark, [(2, "B", 2024)]), STORE, ["year"], replace_only=True
@@ -381,12 +375,8 @@ def test_store_vacuum_keeps_referenced_files(spark):
 
 
 def test_store_empty_read_raises(spark):
-    shutil.rmtree(STORE, ignore_errors=True)
     with pytest.raises(FileNotFoundError):
         snapshot.store_read(spark, STORE)
-
-
-DSTORE = "/root/repo/.tmp/snapshot_store_del_test"
 
 
 def _dstore_rows(spark):
@@ -397,7 +387,6 @@ def _dstore_rows(spark):
 
 
 def test_store_equality_delete_merge_on_read(spark):
-    shutil.rmtree(DSTORE, ignore_errors=True)
     snapshot.store_commit(
         _mk(spark, [(1, "a", 2023), (2, "b", 2024), (3, "c", 2024)]),
         DSTORE,
@@ -419,7 +408,6 @@ def test_store_equality_delete_merge_on_read(spark):
 
 
 def test_store_delete_sequence_rows_reinserted_later_survive(spark):
-    shutil.rmtree(DSTORE, ignore_errors=True)
     snapshot.store_commit(_mk(spark, [(1, "a", 2023), (2, "b", 2024)]), DSTORE, ["year"])
     snapshot.store_delete(spark, DSTORE, "k = 2", ["k"])
     # re-insert k=2 AFTER the delete: the delete's sequence number is
@@ -431,7 +419,6 @@ def test_store_delete_sequence_rows_reinserted_later_survive(spark):
 
 
 def test_store_delete_nothing_matched_no_commit(spark):
-    shutil.rmtree(DSTORE, ignore_errors=True)
     v0 = snapshot.store_commit(_mk(spark, [(1, "a", 2023)]), DSTORE, ["year"])
     assert snapshot.store_delete(spark, DSTORE, "k = 99", ["k"]) is None
     assert snapshot.store_current(DSTORE) == v0
@@ -439,7 +426,6 @@ def test_store_delete_nothing_matched_no_commit(spark):
 
 
 def test_store_rewrite_compacts_deletes_away(spark):
-    shutil.rmtree(DSTORE, ignore_errors=True)
     snapshot.store_commit(
         _mk(spark, [(1, "a", 2023), (2, "b", 2024), (3, "c", 2024)]),
         DSTORE,
@@ -457,7 +443,6 @@ def test_store_rewrite_compacts_deletes_away(spark):
 
 
 def test_store_vacuum_retains_live_delete_files(spark):
-    shutil.rmtree(DSTORE, ignore_errors=True)
     snapshot.store_commit(_mk(spark, [(1, "a", 2023), (2, "b", 2024)]), DSTORE, ["year"])
     snapshot.store_delete(spark, DSTORE, "k = 1", ["k"])
     # a later data commit keeps the delete entry alive (carry-forward)
@@ -470,7 +455,6 @@ def test_store_vacuum_retains_live_delete_files(spark):
 
 
 def test_store_time_travel_reads(spark):
-    shutil.rmtree(DSTORE, ignore_errors=True)
     v0 = snapshot.store_commit(_mk(spark, [(1, "a", 2023)]), DSTORE, ["year"])
     v1 = snapshot.store_commit(
         _mk(spark, [(2, "b", 2024)]), DSTORE, ["year"], replace_only=True
@@ -491,7 +475,6 @@ def test_store_time_travel_reads(spark):
 
 
 def test_store_schema_evolution_add_column(spark):
-    shutil.rmtree(DSTORE, ignore_errors=True)
     snapshot.store_commit(_mk(spark, [(1, "a", 2023)]), DSTORE, ["year"])
     evolved = spark.createDataFrame(
         [(9, "z", 2024, "extra")], "k long, val string, year int, note string"
@@ -506,7 +489,6 @@ def test_store_schema_evolution_add_column(spark):
 
 
 def test_store_diff_change_data_feed(spark):
-    shutil.rmtree(DSTORE, ignore_errors=True)
     v0 = snapshot.store_commit(
         _mk(spark, [(1, "a", 2023), (2, "b", 2024), (3, "c", 2024)]),
         DSTORE,
@@ -535,7 +517,6 @@ def test_store_vacuum_spares_inflight_reserved_prefix(spark):
     _new_data_prefix (makedirs) BEFORE writing any file; vacuum's
     orphan sweep must not rmdir that fresh empty directory — doing so
     would void the exclusive-reservation guarantee."""
-    shutil.rmtree(STORE, ignore_errors=True)
     snapshot.store_commit(_mk(spark, [(1, "a", 2023)]), STORE, ["year"])
     reserved = snapshot._new_data_prefix(STORE)  # fresh, still empty
     assert os.path.isdir(os.path.join(STORE, reserved))
@@ -552,7 +533,6 @@ def test_store_vacuum_keeps_side_files_in_live_prefixes(spark):
     """Unreferenced side files (_SUCCESS markers) inside a prefix that
     holds ANY referenced data file are part of the commit, not orphans
     — they survive the sweep even when older than the TTL."""
-    shutil.rmtree(STORE, ignore_errors=True)
     snapshot.store_commit(_mk(spark, [(1, "a", 2023)]), STORE, ["year"])
     man = snapshot._store_manifest(STORE, snapshot.store_current(STORE))
     prefix = man["files"][0]["path"].split(os.sep, 1)[0]

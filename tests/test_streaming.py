@@ -5,7 +5,6 @@ against its batch equivalent on the same rows."""
 
 from __future__ import annotations
 
-import shutil
 import uuid
 
 import pytest
@@ -14,19 +13,16 @@ from pyspark.sql import functions as F
 from rta_registrations_pyspark_glue_spark.sources.testdata import load_table
 from rta_registrations_pyspark_glue_spark.streaming import windows as sw
 
-STREAM_DIR = "/root/repo/.tmp/events_stream"
-
 
 @pytest.fixture(scope="module")
-def stream_path(spark, sf_dir):
+def stream_path(spark, sf_dir, tmp_path_factory):
     # File-source streams need a directory; re-materialize events (with
-    # the µs-timestamp fix applied by the loader) under the repo.
-    shutil.rmtree(STREAM_DIR, ignore_errors=True)
+    # the µs-timestamp fix applied by the loader) under a temp dir.
+    path = str(tmp_path_factory.mktemp("events_stream"))
     load_table(spark, "events", sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value"
-    ).write.mode("overwrite").parquet(STREAM_DIR)
-    yield STREAM_DIR
-    shutil.rmtree(STREAM_DIR, ignore_errors=True)
+    ).write.mode("overwrite").parquet(path)
+    return path
 
 
 def _run(spark, stream_df, mode="append"):
@@ -131,20 +127,9 @@ def test_stream_dedup_drops_replayed_events(spark, stream_path, tmp_path):
 
 # ------------------------------------------------- streaming dedup ingest
 
-DEDUP_ROOT = "/root/repo/.tmp/stream_dedup"
-
-
-def _dedup_paths():
-    import os
-
-    shutil.rmtree(DEDUP_ROOT, ignore_errors=True)
-    os.makedirs(f"{DEDUP_ROOT}/in", exist_ok=True)
-    return (
-        f"{DEDUP_ROOT}/in",
-        f"{DEDUP_ROOT}/corpus",
-        f"{DEDUP_ROOT}/fp",
-        f"{DEDUP_ROOT}/ckpt",
-    )
+def _dedup_paths(root):
+    (root / "in").mkdir()
+    return (f"{root}/in", f"{root}/corpus", f"{root}/fp", f"{root}/ckpt")
 
 
 def _drop_jsonl(indir: str, name: str, docs: list[tuple[int, str]]) -> None:
@@ -165,8 +150,8 @@ def _drain(spark, indir, corpus, fp, ckpt):
     q.awaitTermination(120)
 
 
-def test_stream_dedup_ingest_across_batches(spark):
-    indir, corpus, fp, ckpt = _dedup_paths()
+def test_stream_dedup_ingest_across_batches(spark, tmp_path):
+    indir, corpus, fp, ckpt = _dedup_paths(tmp_path)
     # Drop 1: an in-batch duplicate pair (2 vs 3 — min id 2 wins).
     _drop_jsonl(indir, "d1.jsonl", [(1, "alpha"), (2, "beta"), (3, "beta")])
     _drain(spark, indir, corpus, fp, ckpt)
@@ -182,10 +167,10 @@ def test_stream_dedup_ingest_across_batches(spark):
     assert len(fps) == 3 and {r.batch_id for r in fps} == {0, 1}
 
 
-def test_stream_dedup_replay_is_idempotent(spark):
+def test_stream_dedup_replay_is_idempotent(spark, tmp_path):
     from rta_registrations_pyspark_glue_spark.streaming.dedup import ingest_dedup_batch
 
-    indir, corpus, fp, ckpt = _dedup_paths()
+    indir, corpus, fp, ckpt = _dedup_paths(tmp_path)
     b0 = spark.createDataFrame([(1, "alpha"), (2, "beta")], ["doc_id", "text"])
     b1 = spark.createDataFrame([(3, "beta"), (4, "gamma")], ["doc_id", "text"])
     ingest_dedup_batch(spark, b0, 0, corpus, fp)
@@ -203,12 +188,9 @@ def test_stream_dedup_replay_is_idempotent(spark):
         (r.doc_id, r.text) for r in spark.read.parquet(corpus).collect()
     } == want_corpus
     assert {(r.doc_id, r.fp_md5) for r in spark.read.parquet(fp).collect()} == want_fp
-    shutil.rmtree(DEDUP_ROOT, ignore_errors=True)
 
 
 # -------------------------------------------- streaming NEAR-dup ingest
-
-NEAR_ROOT = "/root/repo/.tmp/stream_near_dedup"
 
 _T_FOX = "the quick brown fox jumps over the lazy dog in the sunny garden today"
 _T_FOX_NEAR = "the quick brown fox jumps over the lazy cat in the sunny garden today"
@@ -217,17 +199,9 @@ _T_NEWS = "markets rallied sharply this morning after the central bank held rate
 _T_WEATHER = "heavy rain and strong winds are expected across the northern coast tonight"
 
 
-def _near_paths():
-    import os
-
-    shutil.rmtree(NEAR_ROOT, ignore_errors=True)
-    os.makedirs(f"{NEAR_ROOT}/in", exist_ok=True)
-    return (
-        f"{NEAR_ROOT}/in",
-        f"{NEAR_ROOT}/corpus",
-        f"{NEAR_ROOT}/buckets",
-        f"{NEAR_ROOT}/ckpt",
-    )
+def _near_paths(root):
+    (root / "in").mkdir()
+    return (f"{root}/in", f"{root}/corpus", f"{root}/buckets", f"{root}/ckpt")
 
 
 def _near_drain(spark, indir, corpus, buckets, ckpt):
@@ -240,8 +214,8 @@ def _near_drain(spark, indir, corpus, buckets, ckpt):
     q.awaitTermination(120)
 
 
-def test_stream_near_dedup_ingest_across_batches(spark):
-    indir, corpus, buckets, ckpt = _near_paths()
+def test_stream_near_dedup_ingest_across_batches(spark, tmp_path):
+    indir, corpus, buckets, ckpt = _near_paths(tmp_path)
     # Drop 1: docs 2 and 3 are near-dups (one word differs) — min id 2
     # survives; doc 1 is unrelated.
     _drop_jsonl(indir, "d1.jsonl", [(1, _T_NEWS), (2, _T_FOX), (3, _T_FOX_NEAR)])
@@ -262,12 +236,12 @@ def test_stream_near_dedup_ingest_across_batches(spark):
     assert {r.doc_id for r in b.collect()} == {1, 2, 5}
 
 
-def test_stream_near_dedup_replay_is_idempotent(spark):
+def test_stream_near_dedup_replay_is_idempotent(spark, tmp_path):
     from rta_registrations_pyspark_glue_spark.streaming.dedup import (
         ingest_near_dedup_batch,
     )
 
-    _indir, corpus, buckets, _ckpt = _near_paths()
+    _indir, corpus, buckets, _ckpt = _near_paths(tmp_path)
     b0 = spark.createDataFrame([(1, _T_NEWS), (2, _T_FOX)], ["doc_id", "text"])
     b1 = spark.createDataFrame(
         [(3, _T_FOX_NEAR), (4, _T_WEATHER)], ["doc_id", "text"]
@@ -291,10 +265,9 @@ def test_stream_near_dedup_replay_is_idempotent(spark):
         (r.doc_id, r.band_idx, r.band_key)
         for r in spark.read.parquet(buckets).collect()
     } == want_buckets
-    shutil.rmtree(NEAR_ROOT, ignore_errors=True)
 
 
-def test_near_dedup_bucket_store_compacts(spark):
+def test_near_dedup_bucket_store_compacts(spark, tmp_path):
     """The streaming near-dup bucket store accumulates one small
     partition per micro-batch; io.compact_partitions must be applicable
     as the maintenance pass (same as the exact variant's fingerprint
@@ -304,7 +277,7 @@ def test_near_dedup_bucket_store_compacts(spark):
         ingest_near_dedup_batch,
     )
 
-    _indir, corpus, buckets, _ckpt = _near_paths()
+    _indir, corpus, buckets, _ckpt = _near_paths(tmp_path)
     texts = [_T_NEWS, _T_FOX, _T_WEATHER,
              "completely different sentence about gardening tools and soil quality",
              "a final unrelated sentence describing mountain trails and weather maps"]
@@ -337,21 +310,16 @@ def test_near_dedup_bucket_store_compacts(spark):
     )
     got = {r.doc_id for r in spark.read.parquet(corpus).collect()}
     assert 99 not in got
-    shutil.rmtree(NEAR_ROOT, ignore_errors=True)
-
-
-SIGNUP_DIR = "/root/repo/.tmp/signups_stream"
 
 
 @pytest.fixture(scope="module")
-def signup_path(spark, sf_dir):
+def signup_path(spark, sf_dir, tmp_path_factory):
     # anchor stream: each user's first event as their "signup"
-    shutil.rmtree(SIGNUP_DIR, ignore_errors=True)
+    path = str(tmp_path_factory.mktemp("signups_stream"))
     load_table(spark, "events", sf_dir).groupBy("user_id").agg(
         F.min("ts").alias("signup_ts")
-    ).write.mode("overwrite").parquet(SIGNUP_DIR)
-    yield SIGNUP_DIR
-    shutil.rmtree(SIGNUP_DIR, ignore_errors=True)
+    ).write.mode("overwrite").parquet(path)
+    return path
 
 
 def test_stream_stream_interval_join_matches_batch(spark, stream_path, signup_path):

@@ -102,6 +102,7 @@ def test_late_batch_with_older_row_keeps_newer_row(spark, tmp_path, write_bronze
         os.path.relpath(p, f"{root}/stage") for p in glob.glob(f"{root}/stage/year=*/month=*")
     )
     assert leaves == ["year=2022/month=3", "year=2024/month=6"]
+    assert not os.path.exists(f"{root}/stage/year=2023"), "emptied year dir kept"
 
 
 def test_stream_ivf_ingest_bit_equal_and_idempotent(spark, tmp_path):
