@@ -85,12 +85,7 @@ def write_jsonl(df: DataFrame, path: str, target_mb: float = TARGET_FILE_SIZE_MB
     ~2-4× over parquet, which estimate_plan_bytes' plan-stats basis
     already reflects less precisely; file-count math still beats the
     1-file-per-task default by orders of magnitude)."""
-    df.coalesce(
-        target_file_count(estimate_plan_bytes(df), target_mb)
-    ).write.mode("overwrite").json(path)
-    # Same staleness guard as write_parquet: a reader created after an
-    # overwrite must see the new files, not the session's cached listing.
-    df.sparkSession.catalog.refreshByPath(path)
+    _sized_write(df, path, "json", target_mb)
 
 
 def read_orc(
@@ -112,7 +107,6 @@ def write_orc(
     path: str,
     partition_by: list[str] | None = None,
     target_mb: float = TARGET_FILE_SIZE_MB,
-    mode: str = "overwrite",
     bloom_filter_cols: list[str] | None = None,
 ) -> None:
     """ORC sink through the same single-pass size-adaptive writer policy
@@ -120,18 +114,10 @@ def write_orc(
     use ORC's native writer option (``orc.bloom.filter.columns`` — a
     comma-separated column list, the ORC spec's equivalent of the
     per-column parquet-mr flags write_parquet sets)."""
-    total_bytes = estimate_plan_bytes(df)
-    n_files = target_file_count(total_bytes, target_mb) if total_bytes > 0 else 1
-    df = df.coalesce(n_files)
-    writer = df.write.mode(mode)
+    options = {}
     if bloom_filter_cols:
-        writer = writer.option(
-            "orc.bloom.filter.columns", ",".join(bloom_filter_cols)
-        )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-    df.sparkSession.catalog.refreshByPath(path)
+        options["orc.bloom.filter.columns"] = ",".join(bloom_filter_cols)
+    _sized_write(df, path, "orc", target_mb, partition_by, options)
 
 
 def read_avro(spark: SparkSession, path: str) -> DataFrame:
@@ -199,13 +185,39 @@ def target_file_count(
     return min(max_files, max(1, math.ceil(total_bytes / target_bytes)))
 
 
+def _sized_write(
+    df: DataFrame,
+    path: str,
+    fmt: str,
+    target_mb: float,
+    partition_by: list[str] | None = None,
+    options: dict[str, str] | None = None,
+) -> None:
+    """The one sizing step every sink shares: estimate the plan's bytes,
+    coalesce to ``target_file_count`` of them, overwrite ``path`` in
+    ``fmt``, then refresh the session's listing of ``path``.
+
+    coalesce is shuffle-free and a no-op when the plan already has fewer
+    partitions, so it is applied unconditionally. Deliberately NOT
+    consulting df.rdd.getNumPartitions(): under AQE that call
+    materializes every upstream stage — a full extra execution of the
+    plan, the very double-pass this writer exists to avoid."""
+    df = df.coalesce(target_file_count(estimate_plan_bytes(df), target_mb))
+    writer = df.write.mode("overwrite").options(**(options or {}))
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.format(fmt).save(path)
+    # Drop any stale leaf-file listing for this path from the session's
+    # shared FileStatusCache: a reader created after an overwrite must
+    # see the new files, not cached pre-overwrite names.
+    df.sparkSession.catalog.refreshByPath(path)
+
+
 def write_parquet(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
     target_mb: float = TARGET_FILE_SIZE_MB,
-    mode: str = "overwrite",
-    dynamic_partitions: bool = False,
     bloom_filter_cols: list[str] | None = None,
     bloom_filter_ndv: int | None = None,
 ) -> None:
@@ -223,6 +235,9 @@ def write_parquet(
     repartition to more tasks measured slower still, since per-file
     Parquet writer set-up, not the rows, dominates there.
 
+    The write replaces the whole table at ``path``. To replace only some
+    of its partitions, use ``replace_partitions``.
+
     ``bloom_filter_cols`` (r9): write parquet BLOOM FILTERS for the
     named columns (`parquet.bloom.filter.enabled#col` writer options —
     standard parquet-mr metadata, readable by any engine). At 100 TB
@@ -233,35 +248,12 @@ def write_parquet(
     anti-join); a bloom filter skips row groups the key cannot be in.
     ``bloom_filter_ndv`` sizes them (expected distinct values per row
     group) — parquet-mr derives the bitset size from it."""
-    total_bytes = estimate_plan_bytes(df)
-    n_files = target_file_count(total_bytes, target_mb) if total_bytes > 0 else 1
-    # coalesce is shuffle-free and a no-op when the plan already has fewer
-    # partitions, so it can be applied unconditionally. Deliberately NOT
-    # consulting df.rdd.getNumPartitions(): under AQE that call
-    # materializes every upstream stage — a full extra execution of the
-    # plan, the very double-pass this writer exists to avoid.
-    df = df.coalesce(n_files)
-    writer = df.write.mode(mode)
-    if dynamic_partitions:
-        # Dynamic partition overwrite, scoped to THIS write (a writer
-        # option, not a session conf): only partitions present in df are
-        # replaced; sibling partitions' files are left untouched. The
-        # incremental-run primitive (jobs.py --year/--month).
-        writer = writer.option("partitionOverwriteMode", "dynamic")
+    options = {}
     for col in bloom_filter_cols or []:
-        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
+        options[f"parquet.bloom.filter.enabled#{col}"] = "true"
         if bloom_filter_ndv:
-            writer = writer.option(
-                f"parquet.bloom.filter.expected.ndv#{col}",
-                str(bloom_filter_ndv),
-            )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    # Drop any stale leaf-file listing for this path from the session's
-    # shared FileStatusCache: a reader created after an overwrite must
-    # see the new files, not cached pre-overwrite names.
-    df.sparkSession.catalog.refreshByPath(path)
+            options[f"parquet.bloom.filter.expected.ndv#{col}"] = str(bloom_filter_ndv)
+    _sized_write(df, path, "parquet", target_mb, partition_by, options)
 
 
 ASIDE_SUFFIX = ".__old__"
@@ -392,18 +384,23 @@ def replace_partitions(
     target_mb: float = TARGET_FILE_SIZE_MB,
 ) -> set[str]:
     """Rewrite ONLY the partition directories present in ``df``, leaving
-    sibling partitions' files physically untouched — and, unlike a plain
-    dynamic-overwrite, safe when ``df``'s plan READS from ``path`` (the
-    merge-into-own-table shape Spark's file source refuses to overwrite):
-    the frame is fully materialized into a side directory first, then the
-    affected leaf dirs are swapped in. With no partition columns the one
-    leaf is the whole table (``replace_parquet``).
+    sibling partitions' files physically untouched — the one partial-write
+    path for plain tables (incremental stage runs, keyed upserts, the
+    streaming sinks' replay-overwrites-its-own-``batch=N`` writes). Safe
+    when ``df``'s plan READS from ``path`` (the merge-into-own-table shape
+    Spark's file source refuses to overwrite): the frame is fully
+    materialized into a side directory first, then the affected leaf dirs
+    are swapped in. With no partition columns the one leaf is the whole
+    table (``replace_parquet``). A missing table is created.
 
     Crash-safe: a leaf's old copy is moved ASIDE (never deleted) before
     its replacement moves in, and asides are recovered on the next call
     (``_recover_asides``) — at no instant does a partition have zero
-    copies on disk. On a failed swap the staging directory is left in
-    place for inspection; the next invocation clears it.
+    copies on disk. Spark's own dynamic partition overwrite has no such
+    guarantee: its job commit deletes each overwritten partition
+    directory before it renames the staged one in. On a failed swap the
+    staging directory is left in place for inspection; the next
+    invocation clears it.
 
     This is the portable stand-in for a lakehouse MERGE INTO + snapshot
     commit (Delta/Iceberg): on a cluster/object store the same shape is

@@ -92,9 +92,10 @@ def run_etl1(
     (year, month) — the reference's ETL1 (etl1_clean_and_stage.py:59-145).
 
     With ``year`` (and optionally ``month``) set, the run is INCREMENTAL:
-    staged rows are filtered to the scope and the write is a dynamic
-    partition overwrite — only the scoped (year, month) partitions are
-    replaced, every other partition's files stay untouched. This is how
+    staged rows are filtered to the scope and written through
+    ``io.replace_partitions`` — only the scoped (year, month) partitions
+    are replaced (crash-safely, old leaf aside until the new one is in),
+    every other partition's files stay untouched. This is how
     the reference's partitioned stage layout (etl1:145) is actually
     operated: a monthly drop re-stages one month, not history."""
     stage_path = f"{output_root.rstrip('/')}/stage_clean_source"
@@ -104,9 +105,7 @@ def run_etl1(
         had_stage = io.table_exists(stage_path)
         staged = staged.filter(_scope_condition(year, month)).persist()
         try:
-            io.write_parquet(
-                staged, stage_path, partition_by=["year", "month"], dynamic_partitions=True
-            )
+            io.replace_partitions(staged, stage_path, partition_by=["year", "month"])
             if had_stage:
                 # A re-registration in this drop may have MOVED from another
                 # (year, month): its stale row elsewhere would break the

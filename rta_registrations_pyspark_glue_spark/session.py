@@ -108,11 +108,19 @@ def get_spark(
         # rebased on write.
         .config("spark.sql.legacy.timeParserPolicy", "LEGACY")
         .config("spark.sql.parquet.datetimeRebaseModeInWrite", "LEGACY")
-        # Catalog tables (incl. bucketed ones) live under the repo's
-        # scratch dir locally; on a cluster this is the shared warehouse.
+        # Catalog tables (incl. bucketed ones) live under the checkout's
+        # scratch dir locally; on a cluster SPARK_GRAFT_WAREHOUSE names
+        # the shared warehouse.
         .config(
             "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", "/root/repo/.tmp/spark-warehouse"),
+            os.environ.get(
+                "SPARK_GRAFT_WAREHOUSE",
+                os.path.join(
+                    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                    ".tmp",
+                    "spark-warehouse",
+                ),
+            ),
         )
         # Quiet local runs; harmless on a cluster.
         .config("spark.ui.showConsoleProgress", "false")

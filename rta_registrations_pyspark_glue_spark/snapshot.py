@@ -1,5 +1,5 @@
-"""Atomic multi-partition commits without a table format: a manifest
-pointer over immutable snapshot directories.
+"""Atomic multi-partition commits without a table format: immutable
+data files named by manifest lists, committed with put-if-absent.
 
 ``io.replace_partitions`` swaps partition leaf dirs one rename at a
 time — each swap is atomic and crash-recoverable, but a crash MID-RUN
@@ -11,31 +11,31 @@ in the README roadmap, closed with no Delta/Iceberg dependency.
 Layout::
 
     table_root/
-      _manifest        <- text file holding the current snapshot id
-      v000000/         <- immutable snapshot: partitioned parquet
-      v000001/
+      _manifests/v000000.json   <- manifest list of snapshot 0
+      _manifests/v000001.json
+      d-<uuid>/year=2023/...    <- one writer's immutable data prefix
 
-- READERS resolve ``_manifest`` then scan ``root/<id>`` — one snapshot,
-  never a mix.
-- WRITERS build the NEXT snapshot directory completely aside (changed
-  partitions written fresh; unchanged partitions carried forward as
-  hard links to the previous snapshot's immutable files — metadata-only,
-  no data copy), then publish with a single atomic ``os.replace`` of
-  the manifest. A crash anywhere before the publish leaves the manifest
-  — and therefore every reader — on the old snapshot; the half-built
-  directory is inert garbage the next commit clears.
+The protocol uses only operations every object store offers:
 
-This is exactly the shape lakehouse formats use (snapshot = immutable
-file set, commit = atomic pointer swap, unchanged files REFERENCED not
-copied); hard links are the local-FS stand-in for Iceberg's manifest
-reuse. Vacuum deletes old snapshot dirs; shared files survive until
-their last referencing snapshot goes (link count), so readers mid-scan
-on the previous snapshot are never yanked.
+- data files are written once under their writer's own prefix and
+  NEVER renamed, linked, or rewritten;
+- a snapshot is a MANIFEST LIST (``_manifests/vNNNNNN.json``) naming
+  every data file in the snapshot; unchanged partitions are carried
+  forward by REFERENCE — their manifest entries keep pointing at the
+  older snapshot's files (Iceberg's manifest reuse), zero data
+  movement;
+- the COMMIT POINT is creating the manifest object with put-if-absent
+  (locally: open(O_CREAT|O_EXCL) — the stand-in for S3 If-None-Match /
+  GCS x-goog-if-generation-match:0). There is no mutable "current"
+  pointer at all: the committed snapshot IS the highest manifest id
+  that exists, so a crash before the put leaves readers on the old
+  snapshot and a half-written data prefix as inert garbage — and two
+  RACING writers can't lose updates: the loser's put fails and it
+  retries its commit against the winner's snapshot.
 
-The OBJECT-STORE commit mode (``store_commit``/``store_read``/
-``store_vacuum``, round 7) implements the same API with manifest-list
-reuse in place of hard links and put-if-absent in place of
-``os.replace`` — see the section comment below for the full contract.
+Readers resolve one manifest and scan exactly its files — one snapshot,
+never a mix. Retained manifests stay readable (time travel); vacuum
+drops old manifests and every file no retained manifest references.
 """
 
 from __future__ import annotations
@@ -51,143 +51,6 @@ from rta_registrations_pyspark_glue_spark.io import (
     write_parquet,
 )
 
-MANIFEST = "_manifest"
-
-
-def snapshot_current(root: str) -> str | None:
-    """The committed snapshot id, or None for an empty/new table."""
-    try:
-        with open(os.path.join(root, MANIFEST)) as f:
-            return f.read().strip() or None
-    except FileNotFoundError:
-        return None
-
-
-def snapshot_path(root: str) -> str | None:
-    sid = snapshot_current(root)
-    return os.path.join(root, sid) if sid else None
-
-
-def snapshot_read(spark: SparkSession, root: str) -> DataFrame:
-    """Scan the CURRENT snapshot. The resolved directory is immutable,
-    so a long-running job keeps a consistent view even across
-    concurrent commits (they only move the pointer)."""
-    path = snapshot_path(root)
-    if path is None:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    return spark.read.option("basePath", path).parquet(path)
-
-
-def _next_snapshot_id(root: str) -> str:
-    cur = snapshot_current(root)
-    return f"v{(int(cur[1:]) + 1 if cur else 0):06d}"
-
-
-def _publish(root: str, sid: str) -> None:
-    """THE commit point: fsync'd temp write + one atomic rename. Every
-    byte of the snapshot is durable and complete before the pointer
-    moves; a crash on either side of the rename leaves a valid table."""
-    tmp = os.path.join(root, MANIFEST + ".__tmp__")
-    with open(tmp, "w") as f:
-        f.write(sid)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(root, MANIFEST))
-
-
-def _carry_forward(prev_dir: str, new_dir: str, depth: int) -> None:
-    """Hard-link every partition leaf of ``prev_dir`` that ``new_dir``
-    did not write — unchanged partitions join the new snapshot as
-    metadata-only references to the previous snapshot's immutable
-    files."""
-    written = {
-        os.path.relpath(p, new_dir) for p in _partition_leaf_dirs(new_dir, depth)
-    }
-    for leaf in _partition_leaf_dirs(prev_dir, depth):
-        rel = os.path.relpath(leaf, prev_dir)
-        if rel in written:
-            continue
-        dest = os.path.join(new_dir, rel)
-        os.makedirs(dest, exist_ok=True)
-        for name in sorted(os.listdir(leaf)):
-            if name.endswith(".parquet") and not name.startswith((".", "_")):
-                os.link(os.path.join(leaf, name), os.path.join(dest, name))
-
-
-def snapshot_commit(
-    df: DataFrame,
-    root: str,
-    partition_by: list[str] | None = None,
-    replace_only: bool = False,
-    drop_partitions: list[tuple] | None = None,
-    target_mb: float = TARGET_FILE_SIZE_MB,
-) -> str:
-    """Commit ``df`` as the next snapshot; returns its id.
-
-    ``replace_only=False`` (default): ``df`` IS the new table — a full
-    overwrite as one snapshot.
-
-    ``replace_only=True``: MERGE-shaped commit — the partitions present
-    in ``df`` are replaced, every other partition of the current
-    snapshot is carried forward (hard links, no copy), and partitions
-    listed in ``drop_partitions`` (tuples of partition values, e.g. a
-    month whose last row moved away) are dropped — all visible to
-    readers in ONE atomic manifest move, unlike replace_partitions'
-    partition-at-a-time swaps. ``df`` may read from the current
-    snapshot: the build writes into a separate directory and the source
-    snapshot is immutable.
-
-    Crash-safety: a died run leaves a half-built ``v``-dir the next
-    commit removes; the manifest only ever points at completed
-    snapshots. Lost-update caveat (same as every filesystem table
-    without a CAS): two WRITERS racing the same table can drop one
-    writer's partitions — single-writer-per-table is the contract,
-    exactly as for replace_partitions."""
-    if replace_only and not partition_by:
-        raise ValueError("replace_only commits need partition_by")
-    os.makedirs(root, exist_ok=True)
-    cur = snapshot_current(root)
-    sid = _next_snapshot_id(root)
-    sdir = os.path.join(root, sid)
-    shutil.rmtree(sdir, ignore_errors=True)  # a crashed attempt's leftovers
-    write_parquet(df, sdir, partition_by=partition_by, target_mb=target_mb)
-    if replace_only and cur:
-        _carry_forward(os.path.join(root, cur), sdir, len(partition_by))
-    for part in drop_partitions or []:
-        leaf = os.path.join(
-            sdir, *[f"{c}={v}" for c, v in zip(partition_by, part)]
-        )
-        shutil.rmtree(leaf, ignore_errors=True)
-    _publish(root, sid)
-    df.sparkSession.catalog.refreshByPath(root)
-    return sid
-
-
-#: ------------------------------------------------------------------
-#: Object-store commit variant: manifest-list reuse + put-if-absent.
-#:
-#: The posix mode above leans on two filesystem powers object stores
-#: don't have — atomic rename (os.replace) and hard links. This
-#: variant uses only operations every store offers:
-#:
-#: - data files are written once under their snapshot's own prefix and
-#:   NEVER renamed, linked, or rewritten;
-#: - a snapshot is a MANIFEST LIST (``_manifests/vNNNNNN.json``)
-#:   naming every data file in the snapshot; unchanged partitions are
-#:   carried forward by REFERENCE — their manifest entries keep
-#:   pointing at the older snapshot's files (Iceberg's manifest
-#:   reuse), zero data movement;
-#: - the COMMIT POINT is creating the manifest object with
-#:   put-if-absent (locally: open(O_CREAT|O_EXCL) — the stand-in for
-#:   S3 If-None-Match / GCS x-goog-if-generation-match:0). There is no
-#:   mutable "current" pointer at all: the committed snapshot IS the
-#:   highest manifest id that exists, so a crash before the put leaves
-#:   readers on the old snapshot and a half-written data prefix as
-#:   inert garbage — and two RACING writers can't lose updates (the
-#:   posix mode's documented caveat): the loser's put fails and it
-#:   retries its commit against the winner's snapshot.
-#: ------------------------------------------------------------------
-
 MANIFEST_DIR = "_manifests"
 
 
@@ -196,12 +59,11 @@ def _put_if_absent(path: str, data: str) -> bool:
     stand-in for an object store's conditional PUT. Returns False when
     the object already exists (CAS loss), True on success.
 
-    Durability matches the posix mode's fsync'd rename: the file's
-    bytes are fsync'd AND its parent directory entry is fsync'd before
-    returning, because manifest EXISTENCE is the commit point — a
-    power failure after store_commit returned success must not unlink
-    the manifest (object stores give this for free; local directories
-    need the explicit parent fsync)."""
+    Durability: the file's bytes are fsync'd AND its parent directory
+    entry is fsync'd before returning, because manifest EXISTENCE is
+    the commit point — a power failure after store_commit returned
+    success must not unlink the manifest (object stores give this for
+    free; local directories need the explicit parent fsync)."""
     try:
         fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     except FileExistsError:
@@ -219,18 +81,9 @@ def _put_if_absent(path: str, data: str) -> bool:
 
 
 def store_current(root: str) -> str | None:
-    """The committed snapshot id in store mode: the highest manifest
-    that EXISTS (existence is the commit, there is no pointer)."""
-    mdir = os.path.join(root, MANIFEST_DIR)
-    try:
-        names = os.listdir(mdir)
-    except FileNotFoundError:
-        return None
-    ids = sorted(
-        n[: -len(".json")]
-        for n in names
-        if n.endswith(".json") and n.startswith("v") and n[1:-5].isdigit()
-    )
+    """The committed snapshot id: the highest manifest that EXISTS
+    (existence is the commit, there is no pointer)."""
+    ids = store_history(root)
     return ids[-1] if ids else None
 
 
@@ -305,8 +158,21 @@ def store_commit(
     target_mb: float = TARGET_FILE_SIZE_MB,
     max_retries: int = 5,
 ) -> str:
-    """snapshot_commit with object-store semantics — same API, same
-    old-or-new-never-mixed guarantee, no renames/links on data paths.
+    """Commit ``df`` as the next snapshot; returns its id. Readers see
+    the old snapshot or the new one, never a mix, and no data path is
+    ever renamed or linked.
+
+    ``replace_only=False`` (default): ``df`` IS the new table — a full
+    overwrite as one snapshot.
+
+    ``replace_only=True``: MERGE-shaped commit — the partitions present
+    in ``df`` are replaced, every other partition of the current
+    snapshot is carried forward by reference, and partitions listed in
+    ``drop_partitions`` (tuples of partition values, e.g. a month whose
+    last row moved away) are dropped — all visible to readers in ONE
+    manifest put, unlike replace_partitions' partition-at-a-time swaps.
+    ``df`` may read from the current snapshot: its files are immutable
+    and the commit writes under a fresh prefix.
 
     The new/changed partitions are written ONCE under this writer's
     own uuid data prefix (_new_data_prefix — never shared, never
@@ -443,10 +309,9 @@ def store_vacuum(
     root: str, keep: int = 2, orphan_ttl_sec: float | None = 86400.0
 ) -> list[str]:
     """Store-mode vacuum: drop all but the newest ``keep`` manifests,
-    then delete every data file no RETAINED manifest references — the
-    object-store analogue of the posix mode's link-count survival
-    (manifest reference counting instead of inode counting). Returns
-    the removed snapshot ids.
+    then delete every data file no RETAINED manifest references
+    (manifest reference counting: a file shared with a retained
+    snapshot survives). Returns the removed snapshot ids.
 
     Victim-referenced files are removed by following the victim
     MANIFESTS (not by assuming a prefix is named after the snapshot —
@@ -461,14 +326,9 @@ def store_vacuum(
     import time
 
     mdir = os.path.join(root, MANIFEST_DIR)
-    cur = store_current(root)
-    if cur is None:
+    ids = store_history(root)
+    if not ids:
         return []
-    ids = sorted(
-        n[:-5]
-        for n in os.listdir(mdir)
-        if n.endswith(".json") and n.startswith("v") and n[1:-5].isdigit()
-    )
     victims = ids[:-keep] if keep > 0 else ids[:-1]
     retained = ids[len(victims):]
 
@@ -540,29 +400,6 @@ def store_vacuum(
                         os.remove(full)
                 if not os.listdir(dirpath) and pre_mtimes[dirpath] < cutoff:
                     os.rmdir(dirpath)
-    return victims
-
-
-def snapshot_vacuum(root: str, keep: int = 2) -> list[str]:
-    """Delete all but the newest ``keep`` snapshot directories AT OR
-    BELOW the committed id (a half-built higher id is left for the next
-    commit to reclaim, never vacuumed out from under it). Returns the
-    removed ids. Hard-linked files shared with retained snapshots
-    survive via link count."""
-    cur = snapshot_current(root)
-    if cur is None:
-        return []
-    snaps = sorted(
-        d
-        for d in os.listdir(root)
-        if d.startswith("v")
-        and d[1:].isdigit()
-        and os.path.isdir(os.path.join(root, d))
-        and d <= cur
-    )
-    victims = snaps[:-keep] if keep > 0 else snaps[:-1]
-    for d in victims:
-        shutil.rmtree(os.path.join(root, d), ignore_errors=True)
     return victims
 
 
@@ -658,13 +495,12 @@ def store_rewrite(
 def store_history(root: str) -> list[str]:
     """All still-readable snapshot ids, oldest first — the time-travel
     index (pair with ``store_read(..., at=sid)``)."""
-    mdir = os.path.join(root, MANIFEST_DIR)
     try:
-        names = os.listdir(mdir)
+        names = os.listdir(os.path.join(root, MANIFEST_DIR))
     except FileNotFoundError:
         return []
     return sorted(
-        n[:-5]
+        n[: -len(".json")]
         for n in names
         if n.endswith(".json") and n.startswith("v") and n[1:-5].isdigit()
     )

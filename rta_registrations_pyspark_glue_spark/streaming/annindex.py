@@ -8,7 +8,7 @@ wrote (``assignment/cell=*``); streamed batches land in a SIBLING
 ``assignment_stream/batch=<id>/cell=*`` tree. Two reasons:
 
 - REPLAY IDEMPOTENCE: foreachBatch re-delivers a batch after failure;
-  writing with dynamic partition overwrite means a replayed batch
+  writing through ``io.replace_partitions`` means a replayed batch
   OVERWRITES its own ``batch=<id>`` partitions instead of appending
   duplicates (pinned by test). A bare append into the base tree could
   not distinguish replay from growth.
@@ -44,10 +44,11 @@ def ingest_ivf_batch(
 ) -> dict:
     """Assign ONE micro-batch against the durable index's frozen
     centroids and write it into the streaming sibling tree,
-    idempotently (dynamic partition overwrite of ``batch=<id>``).
+    idempotently (``io.replace_partitions`` of ``batch=<id>``).
     Module-level so batch replay semantics are testable without a
     running stream (the streaming/dedup.py convention). Returns the
     health dict it also writes."""
+    from rta_registrations_pyspark_glue_spark import io
     from rta_registrations_pyspark_glue_spark.operators.similarity import (
         _assignment_quant_stats,
         _cell_counts,
@@ -83,17 +84,15 @@ def ingest_ivf_batch(
     )
     n_new, new_err = _assignment_quant_stats(part)
     batch_counts = _cell_counts(part.assignment)
-    (
+    io.replace_partitions(
         part.assignment.select(
             F.col(corpus_id),
             F.col("__cv").alias("vec"),
             F.lit(int(batch_id)).alias("batch"),
             F.col("__cell").alias("cell"),
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "cell")
-        .parquet(os.path.join(index_path, "assignment_stream"))
+        ),
+        os.path.join(index_path, "assignment_stream"),
+        partition_by=["batch", "cell"],
     )
     base = meta.get("stats") or {}
     baseline = base.get("build_mean_quant_err") or base.get("mean_quant_err")

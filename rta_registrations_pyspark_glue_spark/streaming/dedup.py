@@ -80,9 +80,10 @@ def ingest_dedup_batch(
 
     EXACTLY-ONCE-ish under replay, by construction rather than luck:
 
-    - both writes are dynamic-partition overwrites of the batch's OWN
-      ``batch_id=N`` partition — a replayed batch overwrites what its
-      crashed predecessor wrote instead of appending twice;
+    - both writes replace only the batch's OWN ``batch_id=N``
+      partition (``io.replace_partitions``) — a replayed batch
+      overwrites what its crashed predecessor wrote instead of
+      appending twice;
     - the probe reads the store WHERE ``batch_id < N`` (partition-
       pruned), so a replay whose predecessor already wrote batch N's
       fingerprints recomputes the SAME survivor set (the crashed
@@ -109,13 +110,10 @@ def ingest_dedup_batch(
         existing_key_col="fp_md5",
     ).withColumn("batch_id", F.lit(batch_id)).persist()
     try:
-        io.write_parquet(
-            survivors.drop("content_key"),
-            corpus_path,
-            partition_by=["batch_id"],
-            dynamic_partitions=True,
+        io.replace_partitions(
+            survivors.drop("content_key"), corpus_path, partition_by=["batch_id"]
         )
-        io.write_parquet(
+        io.replace_partitions(
             survivors.select(
                 F.col(id_col),
                 F.col("content_key").alias("fp_md5"),
@@ -123,7 +121,6 @@ def ingest_dedup_batch(
             ),
             fingerprint_path,
             partition_by=["batch_id"],
-            dynamic_partitions=True,
         )
     finally:
         survivors.unpersist()
@@ -206,9 +203,10 @@ def ingest_near_dedup_batch(
        (first-committed-wins is the streaming rule; min-id is only a
        within-batch tiebreak);
     4. remaining survivors land in ``corpus_path`` and their bucket
-       rows in ``bucket_store_path``, both dynamic-partition overwrites
-       of the batch's OWN ``batch_id=N`` partition — replays converge
-       to identical state (same argument as ingest_dedup_batch).
+       rows in ``bucket_store_path``, both replacing only the batch's
+       OWN ``batch_id=N`` partition (``io.replace_partitions``) —
+       replays converge to identical state (same argument as
+       ingest_dedup_batch).
 
     Scale shape: per-batch work is the batch's own shingling plus one
     equi-join probe whose build side (the batch's buckets) broadcasts;
@@ -304,18 +302,13 @@ def ingest_near_dedup_batch(
             pinned.append(survivors)
         # 4: land survivors + their bucket rows under batch_id=N.
         out = survivors.withColumn("batch_id", F.lit(batch_id))
-        io.write_parquet(
-            out, corpus_path, partition_by=["batch_id"], dynamic_partitions=True
-        )
+        io.replace_partitions(out, corpus_path, partition_by=["batch_id"])
         out_buckets = (
             new_buckets.join(survivors.select(id_col), id_col, "left_semi")
             .withColumn("batch_id", F.lit(batch_id))
         )
-        io.write_parquet(
-            out_buckets,
-            bucket_store_path,
-            partition_by=["batch_id"],
-            dynamic_partitions=True,
+        io.replace_partitions(
+            out_buckets, bucket_store_path, partition_by=["batch_id"]
         )
     finally:
         for frame in pinned:

@@ -244,6 +244,44 @@ def test_backfill_of_older_month_keeps_newer_row(spark, tmp_path, write_bronze):
     assert fact.count() == 2
 
 
+def test_incremental_stage_crash_mid_swap_keeps_old_partition(
+    spark, tmp_path, write_bronze, monkeypatch
+):
+    """An incremental etl1 run that dies mid-swap — the old partition
+    leaf already moved aside, its replacement not yet renamed in — loses
+    no rows: the next table_exists restores the aside, and the stage
+    reads back exactly as it was before the run."""
+    import os
+
+    root = str(tmp_path)
+    write_bronze(f"{root}/b1", ("TR001", "10/01/2023", "1"), ("TR002", "11/03/2022", "2"))
+    stage_path = jobs.run_etl1(spark, f"{root}/b1", f"{root}/out")
+
+    def rows():
+        spark.catalog.refreshByPath(stage_path)
+        return sorted(map(tuple, spark.read.parquet(stage_path).collect()))
+
+    before = rows()
+    write_bronze(f"{root}/b2", ("TR003", "20/01/2023", "4"))
+    leaf = f"{stage_path}/year=2023/month=1"
+    real_replace = os.replace
+
+    def crash_moving_new_leaf_in(src, dst):
+        if ".__incoming__" in str(src) and os.path.isdir(str(dst) + io.ASIDE_SUFFIX):
+            raise OSError("killed mid-swap")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_moving_new_leaf_in)
+    with pytest.raises(OSError, match="killed mid-swap"):
+        jobs.run_etl1(spark, f"{root}/b2", f"{root}/out", year=2023, month=1)
+    monkeypatch.undo()
+    assert not os.path.isdir(leaf) and os.path.isdir(leaf + io.ASIDE_SUFFIX)
+
+    assert io.table_exists(stage_path)
+    assert os.path.isdir(leaf) and not os.path.isdir(leaf + io.ASIDE_SUFFIX)
+    assert rows() == before
+
+
 def test_incremental_dim_merge_matches_full_rebuild(spark, sf_dir, tmp_path):
     """Incremental dim merges must converge to the same rows a full
     rebuild over the union of inputs produces (same min-struct winner

@@ -1,6 +1,8 @@
-"""Snapshot-table tests: atomic multi-partition commit semantics —
-readers see old-or-new, never mixed (the kill-mid-commit proof), hard-
-link carry-forward, partition drops, vacuum retention."""
+"""Snapshot-table tests: atomic multi-partition commits through
+manifest lists and put-if-absent — readers see old-or-new, never mixed
+(the kill-mid-commit proof), carry-forward by reference, partition
+drops and self-reading commits, CAS retry against a racing writer,
+equality deletes, time travel, change data feed and vacuum retention."""
 
 from __future__ import annotations
 
@@ -12,144 +14,18 @@ import pytest
 from rta_registrations_pyspark_glue_spark import snapshot
 
 # Table roots: each test gets fresh ones under its tmp_path (_table_roots).
-ROOT = STORE = DSTORE = ""
+STORE = DSTORE = ""
 
 
 @pytest.fixture(autouse=True)
 def _table_roots(tmp_path):
     # Set directly, not through monkeypatch: tests call monkeypatch.undo().
-    for name in ("ROOT", "STORE", "DSTORE"):
+    for name in ("STORE", "DSTORE"):
         globals()[name] = str(tmp_path / name.lower())
 
 
 def _mk(spark, rows):
     return spark.createDataFrame(rows, ["k", "val", "year"])
-
-
-def _read_rows(spark):
-    return {
-        (r["k"], r["val"], r["year"])
-        for r in snapshot.snapshot_read(spark, ROOT).collect()
-    }
-
-
-def test_commit_read_replace_and_carry_forward(spark):
-    v0 = snapshot.snapshot_commit(
-        _mk(spark, [(1, "a", 2023), (2, "b", 2024)]), ROOT, ["year"]
-    )
-    assert v0 == "v000000"
-    assert _read_rows(spark) == {(1, "a", 2023), (2, "b", 2024)}
-    # Merge-shaped commit: replace 2024, carry 2023 forward untouched.
-    v1 = snapshot.snapshot_commit(
-        _mk(spark, [(2, "B", 2024), (3, "c", 2024)]),
-        ROOT,
-        ["year"],
-        replace_only=True,
-    )
-    assert v1 == "v000001"
-    assert _read_rows(spark) == {(1, "a", 2023), (2, "B", 2024), (3, "c", 2024)}
-    # The carried 2023 files are HARD LINKS into v000000 (metadata-only
-    # carry — no data copy), byte-identical by inode.
-    old_leaf = os.path.join(ROOT, "v000000", "year=2023")
-    new_leaf = os.path.join(ROOT, "v000001", "year=2023")
-    old_files = sorted(f for f in os.listdir(old_leaf) if f.endswith(".parquet"))
-    new_files = sorted(f for f in os.listdir(new_leaf) if f.endswith(".parquet"))
-    assert old_files == new_files and old_files
-    for f in old_files:
-        a = os.stat(os.path.join(old_leaf, f))
-        b = os.stat(os.path.join(new_leaf, f))
-        assert a.st_ino == b.st_ino and a.st_nlink >= 2
-
-
-def test_kill_mid_commit_readers_see_old_never_mixed(spark, monkeypatch):
-    snapshot.snapshot_commit(
-        _mk(spark, [(1, "a", 2023), (2, "b", 2024), (3, "c", 2025)]), ROOT, ["year"]
-    )
-    before = _read_rows(spark)
-
-    # Crash AFTER the multi-partition write, BEFORE the pointer move —
-    # the worst instant for replace_partitions (mixed table); here the
-    # manifest never moved, so readers still see the old snapshot whole.
-    def die(root, sid):
-        raise RuntimeError("killed before manifest publish")
-
-    monkeypatch.setattr(snapshot, "_publish", die)
-    with pytest.raises(RuntimeError):
-        snapshot.snapshot_commit(
-            _mk(spark, [(2, "B", 2024), (9, "z", 2025)]),
-            ROOT,
-            ["year"],
-            replace_only=True,
-        )
-    assert snapshot.snapshot_current(ROOT) == "v000000"
-    assert _read_rows(spark) == before  # old, complete, not mixed
-
-    # Crash even earlier — mid-carry-forward (half-built directory).
-    monkeypatch.undo()
-    monkeypatch.setattr(
-        snapshot, "_carry_forward", lambda *a: (_ for _ in ()).throw(OSError("died"))
-    )
-    with pytest.raises(OSError):
-        snapshot.snapshot_commit(
-            _mk(spark, [(2, "C", 2024)]), ROOT, ["year"], replace_only=True
-        )
-    assert _read_rows(spark) == before
-
-    # Recovery needs no special tooling: the next commit reuses the id,
-    # clears the debris, and lands atomically.
-    monkeypatch.undo()
-    v1 = snapshot.snapshot_commit(
-        _mk(spark, [(2, "B", 2024), (9, "z", 2025)]),
-        ROOT,
-        ["year"],
-        replace_only=True,
-    )
-    assert v1 == "v000001"
-    assert _read_rows(spark) == {(1, "a", 2023), (2, "B", 2024), (9, "z", 2025)}
-
-
-def test_drop_partitions_and_source_is_own_table(spark):
-    snapshot.snapshot_commit(
-        _mk(spark, [(1, "a", 2023), (2, "b", 2024)]), ROOT, ["year"]
-    )
-    # df reads FROM the current snapshot (merge-into-own-table shape):
-    # legal because the build writes aside and snapshots are immutable.
-    cur = snapshot.snapshot_read(spark, ROOT)
-    moved = cur.filter("year = 2023").withColumn(
-        "year", cur["year"] + 1
-    )  # the 2023 row re-registers into 2024
-    merged = moved.unionByName(cur.filter("year = 2024"))
-    snapshot.snapshot_commit(
-        merged, ROOT, ["year"], replace_only=True, drop_partitions=[(2023,)]
-    )
-    assert _read_rows(spark) == {(1, "a", 2024), (2, "b", 2024)}
-    assert not os.path.isdir(
-        os.path.join(ROOT, snapshot.snapshot_current(ROOT), "year=2023")
-    )
-
-
-def test_vacuum_keeps_current_and_linked_files_survive(spark):
-    snapshot.snapshot_commit(_mk(spark, [(1, "a", 2023)]), ROOT, ["year"])
-    snapshot.snapshot_commit(
-        _mk(spark, [(2, "b", 2024)]), ROOT, ["year"], replace_only=True
-    )
-    snapshot.snapshot_commit(
-        _mk(spark, [(3, "c", 2025)]), ROOT, ["year"], replace_only=True
-    )
-    removed = snapshot.snapshot_vacuum(ROOT, keep=1)
-    assert removed == ["v000000", "v000001"]
-    # year=2023's file was written in v000000 and only ever hard-linked
-    # since; after vacuuming its origin dir the current snapshot still
-    # reads it (link count keeps the inode alive).
-    assert _read_rows(spark) == {(1, "a", 2023), (2, "b", 2024), (3, "c", 2025)}
-
-
-def test_empty_table_read_raises(spark):
-    with pytest.raises(FileNotFoundError):
-        snapshot.snapshot_read(spark, ROOT)
-
-
-# ---------------- object-store mode (manifest-list + put-if-absent) ----
 
 
 def _store_rows(spark):
@@ -197,6 +73,27 @@ def test_store_commit_read_carry_forward_by_reference(spark):
                     assert os.stat(os.path.join(dirpath, f)).st_nlink == 1
 
 
+def test_store_drop_partitions_and_source_is_own_table(spark):
+    snapshot.store_commit(
+        _mk(spark, [(1, "a", 2023), (2, "b", 2024)]), STORE, ["year"]
+    )
+    # df reads FROM the current snapshot (merge-into-own-table shape):
+    # legal because its files are immutable and the commit writes under
+    # a fresh prefix.
+    cur = snapshot.store_read(spark, STORE)
+    moved = cur.filter("year = 2023").withColumn(
+        "year", cur["year"] + 1
+    )  # the 2023 row re-registers into 2024
+    merged = moved.unionByName(cur.filter("year = 2024"))
+    snapshot.store_commit(
+        merged, STORE, ["year"], replace_only=True, drop_partitions=[(2023,)]
+    )
+    assert _store_rows(spark) == {(1, "a", 2024), (2, "b", 2024)}
+    man = snapshot._store_manifest(STORE, snapshot.store_current(STORE))
+    assert man["files"]
+    assert not [e for e in man["files"] if e["partition"] == {"year": "2023"}]
+
+
 def test_store_kill_mid_commit_readers_see_old_never_mixed(spark, monkeypatch):
     snapshot.store_commit(
         _mk(spark, [(1, "a", 2023), (2, "b", 2024), (3, "c", 2025)]),
@@ -232,8 +129,8 @@ def test_store_kill_mid_commit_readers_see_old_never_mixed(spark, monkeypatch):
 def test_store_cas_loss_retries_against_winner(spark, monkeypatch):
     """A racing writer's manifest appearing between our write and our
     put must NOT be lost: the loser recomputes carry-forward against
-    the winner's snapshot and commits on top (the posix mode's
-    documented lost-update caveat, closed by CAS)."""
+    the winner's snapshot and commits on top (CAS closes the
+    lost-update race of a plain pointer swap)."""
     import json
 
     snapshot.store_commit(_mk(spark, [(1, "a", 2023), (2, "b", 2024)]), STORE, ["year"])

@@ -17,7 +17,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from rta_registrations_pyspark_glue_spark import caching
 from rta_registrations_pyspark_glue_spark.operators import similarity
@@ -64,7 +65,7 @@ def main() -> None:
     if "--stage-shuffles" in args:
         stage_shuffles = True
         args.remove("--stage-shuffles")
-    dirs = args or ["/root/repo/.scale/sf5", "/root/repo/.scale/sf15"]
+    dirs = args or [os.path.join(REPO, ".scale", sf) for sf in ("sf5", "sf15")]
     spark = get_spark("ivf_decompose")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 

@@ -8,7 +8,7 @@ This tool prints measured recall@k of ``ivf_search`` (derived sizing,
 nprobe as in the registered query) vs ``brute_force_topk_fast`` at any
 SF directory, so SCALING.md can state the quality impact as a number.
 
-Usage: python tools/ivf_recall_check.py [--dir /root/repo/.scale/sf1]
+Usage: python tools/ivf_recall_check.py [--dir <checkout>/.scale/sf1]
            [--nprobe 4] [--k 5]
 """
 
@@ -19,7 +19,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -31,7 +32,7 @@ from rta_registrations_pyspark_glue_spark.sources.testdata import load_table
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--dir", default="/root/repo/.scale/sf1")
+    ap.add_argument("--dir", default=os.path.join(REPO, ".scale", "sf1"))
     ap.add_argument("--nprobe", type=int, default=4)
     ap.add_argument("--k", type=int, default=5)
     ap.add_argument(

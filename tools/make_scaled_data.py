@@ -28,7 +28,7 @@ has:
 
 Usage:
     python tools/make_scaled_data.py [--base /root/testdata/sf0.1] \
-        [--k 10] [--out /root/repo/.scale/sf1]
+        [--k 10] [--out <checkout>/.scale/sf1]
 
 Pure pyarrow/numpy — no Spark needed; sf1 is ~170 MB.
 """
@@ -192,7 +192,12 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--out", default="/root/repo/.scale/sf1")
+    ap.add_argument(
+        "--out",
+        default=os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale", "sf1"
+        ),
+    )
     ap.add_argument(
         "--tables", default=None,
         help="comma-separated subset to build (partial dir; fixed dims ride along)",

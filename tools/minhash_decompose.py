@@ -41,7 +41,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from rta_registrations_pyspark_glue_spark import caching
 from rta_registrations_pyspark_glue_spark.operators import textdedup
@@ -67,7 +68,7 @@ def main() -> None:
         i = args.index("--stride")
         stride = int(args[i + 1])
         del args[i : i + 2]
-    dirs = args or ["/root/testdata/sf0.1", "/root/repo/.scale/sf1"]
+    dirs = args or ["/root/testdata/sf0.1", os.path.join(REPO, ".scale", "sf1")]
     spark = get_spark("minhash_decompose")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 

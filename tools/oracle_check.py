@@ -12,13 +12,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 TABLES = (

@@ -19,7 +19,7 @@ passes per query per scale, tracked caches released between passes.
 
 Usage:
     python tools/scaling_study.py [--base /root/testdata/sf0.1]
-        [--big /root/repo/.scale/sf1] [--base-sf 0.1] [--big-sf 1.0]
+        [--big <checkout>/.scale/sf1] [--base-sf 0.1] [--big-sf 1.0]
         [--out scaling.json] [--queries name1,name2]
 """
 
@@ -32,7 +32,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from rta_registrations_pyspark_glue_spark import caching
 from rta_registrations_pyspark_glue_spark.plans import registry
@@ -58,7 +59,7 @@ def main() -> None:
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", default="/root/testdata/sf0.1")
-    ap.add_argument("--big", default="/root/repo/.scale/sf1")
+    ap.add_argument("--big", default=os.path.join(REPO, ".scale", "sf1"))
     ap.add_argument("--base-sf", type=float, default=0.1)
     ap.add_argument("--big-sf", type=float, default=1.0)
     ap.add_argument("--out", default="scaling.json")
